@@ -891,36 +891,6 @@ def _partition_values_frame(spark, files, adds, pcols, ptypes,
           for c in pcols])
 
 
-def _stamp_provenance(spark, df, rows, path_col: str,
-                      stamp_name: str, stamp_type: str, ctype: str):
-    """Shared tail of the three coalesced-insert-run builders (Delta
-    CDF / Hudi incremental / Iceberg CDF — the round-10 N-way-union
-    fix): join a broadcast (path → stamp) map onto the combined scan
-    and project (data…, _change_type, stamp). ``rows`` is
-    [(path key, stamp)]; the path keys MUST come from the SAME
-    normalizer that produced ``df[path_col]`` (os.path.abspath for
-    the Delta/Hudi scans' _plain_path_col, iceberg_local._py_norm
-    for manifests that may store file:/ URIs) — single-sourcing this
-    join is the point, a diverged key silently drops every row of
-    the run (inner join). ``ctype=None`` keeps the scan's OWN
-    ``_change_type`` column (the coalesced cdc-file path, round 13 —
-    cdc files carry the literal change type per row; only the commit
-    version is stamped per file)."""
-    from pyspark.sql import functions as F
-    m = spark.createDataFrame(
-        rows, f"{path_col} string, __qs_stamp__ {stamp_type}")
-    out = df.join(F.broadcast(m), path_col).drop(path_col)
-    if ctype is None:
-        data_cols = [c for c in out.columns
-                     if c not in ("__qs_stamp__", "_change_type")]
-        return out.select(*data_cols, "_change_type",
-                          F.col("__qs_stamp__").alias(stamp_name))
-    data_cols = [c for c in out.columns if c != "__qs_stamp__"]
-    return out.select(*data_cols,
-                      F.lit(ctype).alias("_change_type"),
-                      F.col("__qs_stamp__").alias(stamp_name))
-
-
 def _plain_path_col():
     """``_metadata.file_path`` (a percent-encoded URI) → the plain
     filesystem path the log/map uses. A literal '+' in a path is a
@@ -3603,6 +3573,26 @@ def version_at_or_after_timestamp(table: str, ts) -> int:
     return best
 
 
+def _cancel_survivors(rows, group_cols):
+    """The Delta count step in front of the shared update pairing
+    (sources/changes.py). A rewrite re-sends every row it keeps, so
+    per distinct row value (and version) with pre-multiplicity a and
+    post-multiplicity b only max(a-b,0) pre / max(b-a,0) post copies
+    changed — the exceptAll multiset in one aggregate; byte-identical
+    survivors cancel."""
+    from pyspark.sql import functions as F
+
+    from .changes import _POST_N, _PRE, _PRE_N
+    m = rows.groupBy(*group_cols).agg(
+        F.sum(_PRE).alias("__qs_npre__"),
+        F.sum(F.lit(1) - F.col(_PRE)).alias("__qs_npost__"))
+    diff = F.col("__qs_npre__") - F.col("__qs_npost__")
+    m = m.select(*group_cols,
+                 F.greatest(diff, F.lit(0)).cast("int").alias(_PRE_N),
+                 F.greatest(-diff, F.lit(0)).cast("int").alias(_POST_N))
+    return m.where((F.col(_PRE_N) > 0) | (F.col(_POST_N) > 0))
+
+
 def read_delta_changes(spark, table: str,
                        from_version: int | None = None,
                        to_version: int | None = None,
@@ -3650,6 +3640,8 @@ def read_delta_changes(spark, table: str,
     import json as _json
 
     from pyspark.sql import functions as F
+
+    from .changes import ChangeFeed
 
     # timestamp bounds (round 10 — the jar's startingTimestamp /
     # endingTimestamp): start resolves to the EARLIEST commit at or
@@ -3759,6 +3751,20 @@ def read_delta_changes(spark, table: str,
     def _abs(k):
         return k if os.path.isabs(k) else os.path.join(root, k)
 
+    def _rejoin(df, files_, adds_, st, on="__qs_path__"):
+        """Join the typed partition values of ``files_`` (from their
+        actions, keyed by physical name on mapped tables) back onto
+        ``df`` by its plain-path column ``on``."""
+        if not st["pcols"]:
+            return df
+        pv_key = ({c: id_phys[c] for c in st["pcols"]} if idmap
+                  else {c: (cmap[c] if cmap else c) for c in st["pcols"]})
+        mapping = _partition_values_frame(
+            spark, files_, adds_, st["pcols"], st["ptypes"], pv_key)
+        if on != "__qs_path__":
+            mapping = mapping.withColumnRenamed("__qs_path__", on)
+        return df.join(F.broadcast(mapping), on)
+
     def _part(files_, adds_, st, keep_path=False):
         """One change part: DV filter FIRST (it reads _metadata off
         the raw scan), then the name-mapping rename and the partition
@@ -3771,80 +3777,39 @@ def read_delta_changes(spark, table: str,
         insert path's per-file version stamping."""
         if idmap:
             # id mode: per-file field-id resolution (DVs applied per
-            # layout group inside the scan), then the partition
-            # rejoin keyed by the schema's stable physicalName
+            # layout group inside the scan)
             data_idmap = {i: nd for i, nd in idmap.items()
                           if nd[0] not in st["pcols"]}
             df = _id_mode_scan(spark, files_, adds_, data_idmap,
                                root, with_path=True)
-            if st["pcols"]:
-                mapping = _partition_values_frame(
-                    spark, files_, adds_, st["pcols"], st["ptypes"],
-                    {c: id_phys[c] for c in st["pcols"]})
-                df = df.join(F.broadcast(mapping), "__qs_path__")
-            if keep_path:
-                return (df.select("__qs_path__", *schema_cols)
-                        if schema_cols else df)
-            df = df.drop("__qs_path__")
-            return df.select(*schema_cols) if schema_cols else df
-        df = _apply_deletion_vectors(spark, _scan_raw(files_, st),
-                                     files_, adds_, root)
-        if not st["pcols"] and not cmap:
-            return (df.withColumn("__qs_path__", _plain_path_col())
-                    if keep_path else df)
-        df = df.withColumn("__qs_path__", _plain_path_col())
-        if cmap:
-            df = df.select("__qs_path__",
-                           *[F.col(cmap[l]).alias(l) for l in cmap
-                             if l not in st["pcols"]])
-        if st["pcols"]:
-            pv_key = {c: (cmap[c] if cmap else c)
-                      for c in st["pcols"]}
-            mapping = _partition_values_frame(
-                spark, files_, adds_, st["pcols"], st["ptypes"],
-                pv_key)
-            df = df.join(F.broadcast(mapping), "__qs_path__")
+        else:
+            df = _apply_deletion_vectors(spark, _scan_raw(files_, st),
+                                         files_, adds_, root)
+            if not st["pcols"] and not cmap:
+                return (df.withColumn("__qs_path__", _plain_path_col())
+                        if keep_path else df)
+            df = df.withColumn("__qs_path__", _plain_path_col())
+            if cmap:
+                df = df.select("__qs_path__",
+                               *[F.col(cmap[l]).alias(l) for l in cmap
+                                 if l not in st["pcols"]])
+        df = _rejoin(df, files_, adds_, st)
         if keep_path:
             return (df.select("__qs_path__", *schema_cols)
                     if schema_cols else df)
         df = df.drop("__qs_path__")
         return df.select(*schema_cols) if schema_cols else df
 
-    parts = []
-
-    def _tag(df, ctype, v):
-        return df.select(
-            "*", F.lit(ctype).alias("_change_type"),
-            F.lit(v).cast("long").alias("_commit_version"))
-
-    # COALESCED insert runs (round 10, tier-3 probe finding):
-    # a streaming sink's history is hundreds of consecutive pure-
-    # insert commits, and one union branch PER VERSION makes the
-    # plan an N-way union whose Catalyst analysis cost grows
-    # super-linearly (probe: 13 ms/commit marginal at 50 commits,
-    # 50 ms at 100). Consecutive insert-only versions under an
-    # UNCHANGED table state instead scan as ONE part, with
-    # _commit_version stamped per row from a broadcast file→version
-    # map — the same trick as the partition rejoin, O(#files)
-    # driver rows.
-    pending: list = []           # [(version, files, adds)]
-
-    def _flush_inserts():
-        if not pending:
-            return
-        if len(pending) == 1:
-            v, fs, ads = pending[0]
-            parts.append(_tag(_part(fs, ads, state), "insert", v))
-        else:
-            fs = [f for _, fls, _ in pending for f in fls]
-            ads = [a for _, _, als in pending for a in als]
-            df = _part(fs, ads, state, keep_path=True)
-            parts.append(_stamp_provenance(
-                spark, df,
-                [(os.path.abspath(f), v)
-                 for v, fls, _ in pending for f in fls],
-                "__qs_path__", "_commit_version", "long", "insert"))
-        pending.clear()
+    feed = ChangeFeed(spark, "_commit_version", "long",
+                      cancel=_cancel_survivors)
+    # a streaming sink's history is hundreds of consecutive pure-insert
+    # commits: they coalesce into one run (changes.py), items are
+    # (path, add) pairs
+    inserts = feed.run(
+        lambda items, keep: _part([f for f, _ in items],
+                                  [a for _, a in items], state,
+                                  keep_path=keep),
+        "__qs_path__", lambda item: os.path.abspath(item[0]))
 
     def _dv_delta_rows(v, pairs, st):
         """pairs: [(path key, new add, old add|None)] → 'delete' rows
@@ -3907,63 +3872,39 @@ def read_delta_changes(spark, table: str,
             "__qs_dfp__ string, __qs_dpos__ long, __qs_kind__ string")
         files = [r[0] for r in rows]
 
-        def _kind_tag(df):
-            cols = (schema_cols if schema_cols
-                    else [c for c in df.columns
-                          if c != "__qs_kind__"])
-            return df.select(
-                *cols, F.col("__qs_kind__").alias("_change_type"),
-                F.lit(v).cast("long").alias("_commit_version"))
-
+        new_adds = [na for _, na, _ in pairs]
+        at_pos = ((F.col("__qs_fp__") == F.col("__qs_dfp__"))
+                  & (F.col("__qs_pos__") == F.col("__qs_dpos__")))
         if idmap:
             # id mode: RAW per-file-resolved rows (apply_dv=False —
             # the join below picks exactly the DV-delta positions,
             # tagged delete/insert), then the same rejoin as _part
             data_idmap = {i: nd for i, nd in idmap.items()
                           if nd[0] not in st["pcols"]}
-            new_adds = [na for _, na, _ in pairs]
             scan = (_id_mode_scan(spark, files, new_adds, data_idmap,
                                   root, with_path=True, with_pos=True,
                                   apply_dv=False)
                     .withColumnRenamed("__qs_path__", "__qs_fp__")
-                    .join(positions,
-                          (F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                          & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                          "inner"))
-            if st["pcols"]:
-                mapping = _partition_values_frame(
-                    spark, files, new_adds, st["pcols"], st["ptypes"],
-                    {c: id_phys[c] for c in st["pcols"]}
-                ).withColumnRenamed("__qs_path__", "__qs_fp__")
-                scan = scan.join(F.broadcast(mapping), "__qs_fp__")
-            scan = scan.drop("__qs_fp__", "__qs_pos__", "__qs_dfp__",
-                             "__qs_dpos__")
-            parts.append(_kind_tag(scan))
-            return
-        scan = (_scan_raw(files, st)
-                .withColumn("__qs_fp__", _plain_path_col())
-                .withColumn("__qs_pos__", F.col("_metadata.row_index"))
-                .join(positions,
-                      (F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                      & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                      "inner"))
-        if cmap:
-            scan = scan.select(
-                "__qs_fp__", "__qs_kind__",
-                *[F.col(cmap[l]).alias(l) for l in cmap
-                  if l not in st["pcols"]])
-        if st["pcols"]:
-            pv_key = {c: (cmap[c] if cmap else c) for c in st["pcols"]}
-            mapping = _partition_values_frame(
-                spark, files, [na for _, na, _ in pairs],
-                st["pcols"], st["ptypes"], pv_key).withColumnRenamed(
-                    "__qs_path__", "__qs_fp__")
-            scan = scan.join(F.broadcast(mapping), "__qs_fp__")
-        scan = scan.drop("__qs_fp__", "__qs_pos__", "__qs_dfp__",
-                         "__qs_dpos__")
-        parts.append(_kind_tag(scan))
+                    .join(positions, at_pos, "inner"))
+        else:
+            scan = (_scan_raw(files, st)
+                    .withColumn("__qs_fp__", _plain_path_col())
+                    .withColumn("__qs_pos__", F.col("_metadata.row_index"))
+                    .join(positions, at_pos, "inner"))
+            if cmap:
+                scan = scan.select(
+                    "__qs_fp__", "__qs_kind__",
+                    *[F.col(cmap[l]).alias(l) for l in cmap
+                      if l not in st["pcols"]])
+        scan = _rejoin(scan, files, new_adds, st, "__qs_fp__").drop(
+            "__qs_fp__", "__qs_pos__", "__qs_dfp__", "__qs_dpos__")
+        cols = (schema_cols if schema_cols
+                else [c for c in scan.columns if c != "__qs_kind__"])
+        feed.add(scan.select(*cols,
+                             F.col("__qs_kind__").alias("_change_type")),
+                 None, v)
 
-    def _cdc_scan(v, cdcs, st, keep_path=False):
+    def _cdc_scan(cdcs, st, keep_path=False):
         """Change Data Files of ONE commit (protocol ``cdc`` actions,
         round 10 — CDF-writer interop): the files under _change_data/
         already carry the exact change rows plus a literal
@@ -3972,9 +3913,8 @@ def read_delta_changes(spark, table: str,
         per file by field ids; _change_type is NOT a schema field and
         reads by name), partition values rejoin from the cdc actions'
         partitionValues exactly like adds. ``keep_path`` (round 13)
-        returns ``__qs_path__`` + rows WITHOUT the version stamp for
-        the coalesced multi-commit path, which stamps
-        ``_commit_version`` per file from a broadcast map instead."""
+        also returns ``__qs_path__`` for the coalesced run's per-file
+        version stamp."""
         from pyspark.sql.types import StringType, StructField, StructType
         files_ = [_abs(c["path"]) for c in cdcs]
         ct = [("_change_type", StringType())]
@@ -3998,52 +3938,28 @@ def read_delta_changes(spark, table: str,
                     "__qs_path__", "_change_type",
                     *[F.col(cmap[l]).alias(l) for l in cmap
                       if l not in st["pcols"]])
-        if st["pcols"]:
-            pv_key = ({c: id_phys[c] for c in st["pcols"]} if idmap
-                      else {c: (cmap[c] if cmap else c)
-                            for c in st["pcols"]})
-            mapping = _partition_values_frame(
-                spark, files_, cdcs, st["pcols"], st["ptypes"], pv_key)
-            df = df.join(F.broadcast(mapping), "__qs_path__")
-        if keep_path:
-            cols = (schema_cols if schema_cols
-                    else [c for c in df.columns
-                          if c not in ("_change_type", "__qs_path__")])
-            return df.select("__qs_path__", *cols, "_change_type")
-        df = df.drop("__qs_path__")
+        df = _rejoin(df, files_, cdcs, st)
         cols = (schema_cols if schema_cols
-                else [c for c in df.columns if c != "_change_type"])
-        return df.select(
-            *cols, "_change_type",
-            F.lit(v).cast("long").alias("_commit_version"))
+                else [c for c in df.columns
+                      if c not in ("_change_type", "__qs_path__")])
+        return df.select(*(["__qs_path__"] if keep_path else []), *cols,
+                         "_change_type")
 
-    # Deferred-flush coalescing (round 13, guide §1/§2.4 — measured:
-    # ~55% of this read's wall time was DRIVER plan construction,
-    # ~2700 py4j round trips at 100 commits): a pending insert run /
-    # cdc run only needs to flush when the TABLE STATE its scan was
-    # built under changes (a metaData action), NOT on every
-    # interrupting upsert/delete commit — interleaved commits build
-    # their own parts from their own files, and the union is
-    # order-free. A 100-commit mixed history (90 appends + 10
-    # upserts) now builds 1 insert part + 1 cdc part instead of
-    # 10 + 10.
-    pending_cdc: list = []       # [(version, cdc actions)]
+    # Change Data Files coalesce like inserts; the run keeps each
+    # file's literal _change_type and stamps only the version
+    cdc_run = feed.run(lambda cs, keep: _cdc_scan(cs, state, keep),
+                       "__qs_path__",
+                       lambda c: os.path.abspath(_abs(c["path"])),
+                       keep_ctype=True)
 
-    def _flush_cdc():
-        if not pending_cdc:
-            return
-        if len(pending_cdc) == 1:
-            v0, cs = pending_cdc[0]
-            parts.append(_cdc_scan(v0, cs, state))
-        else:
-            all_cs = [c for _, cs in pending_cdc for c in cs]
-            df = _cdc_scan(None, all_cs, state, keep_path=True)
-            parts.append(_stamp_provenance(
-                spark, df,
-                [(os.path.abspath(_abs(c["path"])), v0)
-                 for v0, cs in pending_cdc for c in cs],
-                "__qs_path__", "_commit_version", "long", None))
-        pending_cdc.clear()
+    def _roll(adds, removes):
+        # the pre-state moves forward by the commit's file actions
+        # (removes before adds, the per-commit reconcile rule;
+        # dataChange=false actions still change the live set)
+        for k in removes:
+            pre_live.pop(k, None)
+        for k, a in adds.items():
+            pre_live[k] = a
 
     for v in range(from_version, to_version + 1):
         # fold this commit's metaData forward BEFORE scanning it (a
@@ -4055,9 +3971,10 @@ def read_delta_changes(spark, table: str,
         adds, removes, commit_md, commit_ci, cdcs = _commit_parsed(
             table, v)
         if commit_md is not None:
-            # the pending runs were written under the PRE-change state
-            _flush_inserts()
-            _flush_cdc()
+            # a run stays open across interrupting commits (their own
+            # parts read their own files) until the table state its
+            # scan reads under changes
+            feed.flush()
         _set_meta(commit_md)
         if cdcs:
             # Change Data Files are AUTHORITATIVE for their commit
@@ -4066,11 +3983,8 @@ def read_delta_changes(spark, table: str,
             # would double-count (the writer records both the file
             # actions AND the cdc rows). The live-set fold below
             # still applies the commit's file actions.
-            pending_cdc.append((v, cdcs))
-            for k in removes:
-                pre_live.pop(k, None)
-            for k, a in adds.items():
-                pre_live[k] = a
+            cdc_run.add(v, cdcs)
+            _roll(adds, removes)
             continue
         ins_files, ins_adds = [], []
         dv_pairs = []
@@ -4094,28 +4008,17 @@ def read_delta_changes(spark, table: str,
             del_files.append(_abs(k))
             del_adds.append(old)
         if ins_files and not del_files and not dv_pairs:
-            # pure-insert version: join the coalesced run (roll the
-            # pre-state forward exactly like the general path —
-            # dataChange=false removes still change the live set)
-            pending.append((v, ins_files, ins_adds))
-            for k in removes:
-                pre_live.pop(k, None)
-            for k, a in adds.items():
-                pre_live[k] = a
+            inserts.add(v, zip(ins_files, ins_adds))
+            _roll(adds, removes)
             continue
         ins_df = _part(ins_files, ins_adds, state) if ins_files \
             else None
         del_df = _part(del_files, del_adds, prev_state) if del_files \
             else None
-        # UPDATE pairing (round 9): when the commit declares its
-        # MERGE key columns (commitInfo.operationParameters.
-        # keyColumns — upsert_delta_local stamps them) and the
-        # version both removes and adds rows, refine the raw
-        # delete+insert decomposition: byte-identical survivor rows
-        # (a rewrite re-transmits them) cancel via exceptAll; rows
-        # whose key appears on BOTH remaining sides pair as
-        # update_preimage/update_postimage; the rest stay
-        # delete/insert. All distributed set ops — no driver rows.
+        # UPDATE pairing (round 9): a rewrite that declares its MERGE
+        # key columns (commitInfo.operationParameters.keyColumns —
+        # upsert_delta_local stamps them) queues for the shared
+        # pairing pass; without them it stays delete + insert
         kc = None
         if ins_df is not None and del_df is not None:
             raw = (commit_ci.get("operationParameters")
@@ -4128,104 +4031,24 @@ def read_delta_changes(spark, table: str,
                 if kc and not all(k in ins_df.columns for k in kc):
                     kc = None          # schema drift: fall back
         if kc:
-            # Single-aggregation CDC pairing (optimization round 13,
-            # guide §2.3/§2.4). The former formulation —
-            # exceptAll×2 + key intersect + 4 semi/anti joins — cost
-            # ~8 exchanges of tiny data per upsert commit and
-            # re-scanned both sides up to 4×. The identical multiset
-            # falls out of ONE union + count-by-row aggregate:
-            # per distinct row value with pre-multiplicity a and
-            # post-multiplicity b, exceptAll leaves max(a-b,0) /
-            # max(b-a,0) copies (byte-identical survivor
-            # re-transmissions cancel), and a key pairs as
-            # update_pre/postimage exactly when it keeps survivors
-            # on BOTH sides (the old intersect) — a per-key window
-            # flag. 2 exchanges total, one scan per side; the row
-            # multiset is pinned unchanged by
-            # test_delta_changes_upsert_* and the CDF oracle gates.
-            # Rows with any NULL merge-key column always stay
-            # delete/insert: the old semi/anti equi-joins were
-            # null-rejecting, while the window below groups NULL
-            # keys together — the __qs_keyed__ guard preserves the
-            # old (and MERGE-ON-semantics) behavior.
-            from pyspark.sql.window import Window
-            cols = ins_df.columns
-            tagged = (del_df.select(*cols, F.lit(1).alias("__qs_pre__"))
-                      .unionAll(ins_df.select(
-                          *cols, F.lit(0).alias("__qs_pre__"))))
-            m = tagged.groupBy(*cols).agg(
-                F.sum("__qs_pre__").alias("__qs_npre__"),
-                F.sum(F.lit(1) - F.col("__qs_pre__"))
-                .alias("__qs_npost__"))
-            m = m.select(
-                *cols,
-                F.greatest(F.col("__qs_npre__") - F.col("__qs_npost__"),
-                           F.lit(0)).cast("int").alias("__qs_pre_n__"),
-                F.greatest(F.col("__qs_npost__") - F.col("__qs_npre__"),
-                           F.lit(0)).cast("int").alias("__qs_post_n__"))
-            m = m.where((F.col("__qs_pre_n__") > 0)
-                        | (F.col("__qs_post_n__") > 0))
-            keyed = F.lit(True)
-            for k in kc:
-                keyed = keyed & F.col(k).isNotNull()
-            # NULL-key rows never read their window flags (the keyed
-            # guard routes them straight to delete/insert), so give
-            # them a per-row-value salt: a commit with many NULL or
-            # hot-NULL merge keys would otherwise funnel every such
-            # row through ONE window task (round-13 advisor finding,
-            # guide §2.5). Deterministic (xxhash64 of the row value,
-            # never rand — task retries must re-derive the same
-            # partition), and keyed rows keep salt 0 so their
-            # grouping is untouched.
-            m = m.withColumn(
-                "__qs_salt__",
-                F.when(keyed, F.lit(0)).otherwise(F.xxhash64(*cols)))
-            w = Window.partitionBy(*kc, "__qs_salt__")
-            m = (m.withColumn("__qs_has_pre__",
-                              F.max(F.col("__qs_pre_n__")).over(w) > 0)
-                 .withColumn("__qs_has_post__",
-                             F.max(F.col("__qs_post_n__")).over(w) > 0))
-            side_pre = F.col("__qs_pre_n__") > 0
-            ctype = (F.when(side_pre & keyed & F.col("__qs_has_post__"),
-                            "update_preimage")
-                     .when(side_pre, "delete")
-                     .when(keyed & F.col("__qs_has_pre__"),
-                           "update_postimage")
-                     .otherwise("insert"))
-            reps = (F.when(side_pre, F.col("__qs_pre_n__"))
-                    .otherwise(F.col("__qs_post_n__")))
-            parts.append(m.select(
-                *cols, ctype.alias("_change_type"),
-                F.lit(v).cast("long").alias("_commit_version"),
-                F.explode(F.sequence(F.lit(1), reps))
-                .alias("__qs_rep__")).drop("__qs_rep__"))
+            feed.pair(v, kc, del_df, ins_df)
         else:
             if ins_df is not None:
-                parts.append(_tag(ins_df, "insert", v))
+                feed.add(ins_df, "insert", v)
             if del_df is not None:
-                parts.append(_tag(del_df, "delete", v))
+                feed.add(del_df, "delete", v)
         if dv_pairs:
             _dv_delta_rows(v, dv_pairs, prev_state)
-        # roll the pre-state forward (removes before adds, the
-        # per-commit reconcile rule)
-        for k in removes:
-            pre_live.pop(k, None)
-        for k, a in adds.items():
-            pre_live[k] = a
-    _flush_inserts()
-    _flush_cdc()
-    if not parts:
-        # typed empty frame: data schema + the two change columns —
-        # built from the LOG's schema when it has one (a metadata-only
-        # range has no live files for a scan to type from)
+        _roll(adds, removes)
+
+    def _empty():
+        # the LOG's schema when it has one (a metadata-only range has
+        # no live files for a scan to type from)
         try:
             from pyspark.sql.types import StructType
-            base = spark.createDataFrame([], StructType.fromJson(
+            return spark.createDataFrame([], StructType.fromJson(
                 json.loads(meta["schemaString"])))
         except (KeyError, ValueError, TypeError):
-            base = read_delta_local(spark, table, to_version)
-        return _tag(base, "insert", 0).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            return read_delta_local(spark, table, to_version)
+
+    return feed.result(_empty)

@@ -994,6 +994,9 @@ def read_hudi_incremental(spark, table: str, begin: str,
     steps are native parquet scans and the distributed Avro log scan."""
     from pyspark.sql import functions as F
 
+    from .changes import ChangeFeed
+    from .delta_local import _plain_path_col
+
     instants = completed_instants(table)
     if not instants:
         raise ValueError(f"{table}: empty timeline")
@@ -1004,54 +1007,18 @@ def read_hudi_incremental(spark, table: str, begin: str,
                          "reversed range would silently return no "
                          "changes")
     live_groups: set = set()
-    parts = []
+    feed = ChangeFeed(spark, "_commit_instant", "string",
+                      insert_type="upsert")
 
-    def _tag(df, ts, ctype_col):
-        return df.select(
-            "*", ctype_col.alias("_change_type"),
-            F.lit(ts).alias("_commit_instant"))
+    # instants whose contribution is ONLY new base files coalesce into
+    # one run (changes.py); no timeline state changes the base scan,
+    # so the run stays open across log-bearing instants
+    def _bases(files, keep_path):
+        df = spark.read.parquet(*sorted(files))
+        return df.withColumn("__qs_bf__", _plain_path_col()) \
+            if keep_path else df
 
-    # COALESCED base-file runs (round 10, tier-3 probe): an
-    # append-heavy timeline contributes one upsert part per instant,
-    # and an N-way union's Catalyst analysis cost grows super-
-    # linearly with N (same finding as the Delta CDF). Consecutive
-    # instants whose contribution is ONLY new base files scan as ONE
-    # part with _commit_instant stamped per row from a broadcast
-    # file→instant map.
-    #
-    # DEFERRED flush (optimization round 14 — the round-13 Delta CDF
-    # rule, guide §1/§2.4): a pending run only has to flush when the
-    # table state its scan was built under changes, and this timeline
-    # carries no such state transitions — log-bearing deltacommits
-    # build their own Avro-scan parts from their own files, and the
-    # final union is order-free. The base run therefore stays open
-    # across them and flushes ONCE after the loop; ``pending_at``
-    # pins the coalesced part back at the position of the run's first
-    # instant so the emitted part order (and with it the union's
-    # type-alignment target, parts[0]) is exactly what the
-    # per-interruption flush produced.
-    pending: list = []            # [(ts, [files])]
-    pending_at = [0]              # parts-index where the run lands
-
-    def _flush_bases():
-        if not pending:
-            return
-        if len(pending) == 1:
-            ts0, fs = pending[0]
-            parts.insert(pending_at[0],
-                         _tag(spark.read.parquet(*sorted(fs)),
-                              ts0, F.lit("upsert")))
-        else:
-            from .delta_local import _plain_path_col, _stamp_provenance
-            fs = sorted(f for _, fls in pending for f in fls)
-            df = (spark.read.parquet(*fs)
-                  .withColumn("__qs_bf__", _plain_path_col()))
-            parts.insert(pending_at[0], _stamp_provenance(
-                spark, df,
-                [(os.path.abspath(f), ts0)
-                 for ts0, fls in pending for f in fls],
-                "__qs_bf__", "_commit_instant", "string", "upsert"))
-        pending.clear()
+    bases = feed.run(_bases, "__qs_bf__", os.path.abspath)
 
     for ts, action, path in instants:
         if int(ts) > int(end):
@@ -1098,16 +1065,10 @@ def read_hudi_incremental(spark, table: str, begin: str,
                 "carry no _hoodie_commit_time meta column to filter "
                 "by")
         if new_bases and not logs:
-            # join the coalesced run (stays open across log-bearing
-            # instants — deferred-flush note above; the single flush
-            # happens after the loop)
-            if not pending:
-                pending_at[0] = len(parts)
-            pending.append((ts, new_bases))
+            bases.add(ts, new_bases)
             continue
         if new_bases:
-            df = spark.read.parquet(*sorted(new_bases))
-            parts.append(_tag(df, ts, F.lit("upsert")))
+            feed.add(spark.read.parquet(*sorted(new_bases)), "upsert", ts)
         if logs:
             from .avro_source import spark_read_avro
             # key_fields let delete-block tombstones decode into
@@ -1123,19 +1084,8 @@ def read_hudi_incremental(spark, table: str, begin: str,
                 if "_hoodie_is_deleted" in lg.columns else F.lit("upsert")
             # one select: the tombstone flag must evaluate BEFORE the
             # meta columns drop
-            parts.append(lg.select(
-                *data_cols, ctype.alias("_change_type"),
-                F.lit(ts).alias("_commit_instant")))
-    _flush_bases()
-    if not parts:
-        # typed empty: current schema + the two change columns
-        cur = read_hudi_local(spark, table, as_of=end)
-        return _tag(cur, "", F.lit("upsert")).limit(0)
+            feed.add(lg.select(*data_cols, ctype.alias("_change_type")),
+                     None, ts)
     # align log-record types to the base schema where both appear
-    out = parts[0]
-    for p in parts[1:]:
-        tgt = {f.name: f.dataType for f in out.schema.fields}
-        p = p.select(*[F.col(c).cast(tgt[c]).alias(c)
-                       if c in tgt else F.col(c) for c in p.columns])
-        out = out.unionByName(p)
-    return out
+    return feed.result(lambda: read_hudi_local(spark, table, as_of=end),
+                       align=True)

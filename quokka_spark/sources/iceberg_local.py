@@ -2898,6 +2898,8 @@ def read_iceberg_changes(spark, table_path: str,
     ``to_timestamp`` the latest at-or-before (clamps at newest)."""
     from pyspark.sql import functions as F
 
+    from .changes import ChangeFeed
+
     if (from_snapshot is None) == (from_timestamp is None):
         raise ValueError(
             "pass exactly one of from_snapshot / from_timestamp")
@@ -2925,12 +2927,7 @@ def read_iceberg_changes(spark, table_path: str,
         raise ValueError(f"from_snapshot {from_snapshot} is newer than "
                          f"to_snapshot {to_snapshot}")
     names = _field_names_of(meta)
-    parts = []
-
-    def _tag(df, ctype, sid):
-        return df.select(
-            "*", F.lit(ctype).alias("_change_type"),
-            F.lit(int(sid)).cast("long").alias("_snapshot_id"))
+    feed = ChangeFeed(spark, "_snapshot_id", "long")
 
     def _scan(paths):
         # the TABLE read schema, not per-file inference: pre-evolution
@@ -2950,48 +2947,26 @@ def read_iceberg_changes(spark, table_path: str,
         return _apply_initial_defaults(
             out, meta, fs, _norm_path(F.col("_metadata.file_path")))
 
-    # COALESCED insert runs (round 10, tier-3 probe — same finding as
-    # the Delta CDF): one union branch per snapshot makes Catalyst
-    # analysis grow super-linearly with the range length. Consecutive
-    # insert-only snapshots scan as ONE part, _snapshot_id stamped
-    # per row from a broadcast file→snapshot map.
-    #
-    # DEFERRED flush (optimization round 14 — the round-13 Delta CDF
-    # rule, guide §1/§2.4): a pending run only has to flush when the
-    # TABLE STATE its scan was built under changes, and here it never
-    # does — every ``_scan`` reads through the SAME latest table
-    # metadata (read schema + initial defaults resolved once at the
-    # top), and interrupting upsert/delete snapshots build their own
-    # parts from their own files, so the union is order-free. The run
-    # therefore stays open across interruptions and flushes ONCE at
-    # the end; ``pending_at`` pins the coalesced part back at the
-    # position of the run's first snapshot so the emitted part order
-    # stays chronological (a 100-snapshot mixed history builds 1
-    # insert part instead of one per inter-upsert run).
-    pending: list = []            # [(sid, [paths])]
-    pending_at = [0]              # parts-index where the run lands
+    def _scan_at(paths):
+        # raw rows addressed by (file, position) for delete matching
+        return (_scan(paths)
+                .withColumn("__qs_fp__", _norm_path(
+                    F.col("_metadata.file_path")))
+                .withColumn("__qs_pos__", F.col("_metadata.row_index")))
 
-    def _flush_inserts():
-        if not pending:
-            return
-        if len(pending) == 1:
-            sid0, paths = pending[0]
-            parts.insert(pending_at[0], _tag(_scan(paths), "insert", sid0))
-        else:
-            from .delta_local import _stamp_provenance
-            all_paths = [p for _, ps in pending for p in ps]
-            # THIS module's path convention (_py_norm/_norm_path), not
-            # abspath: externally-written manifests may store file:/
-            # single-slash URIs, which abspath would mangle and the
-            # inner join would then silently drop the whole run
-            df = _scan(all_paths).withColumn(
-                "__qs_if__", _norm_path(F.col("_metadata.file_path")))
-            parts.insert(pending_at[0], _stamp_provenance(
-                spark, df,
-                [(_py_norm(_local(p)), int(sid0))
-                 for sid0, ps in pending for p in ps],
-                "__qs_if__", "_snapshot_id", "long", "insert"))
-        pending.clear()
+    # consecutive insert-only snapshots coalesce into one run
+    # (changes.py). It never has to flush early: every ``_scan`` reads
+    # through the same latest table metadata, so the run stays open
+    # across interrupting snapshots. The path keys follow THIS
+    # module's convention (_py_norm/_norm_path), not abspath:
+    # externally-written manifests may store file:/ single-slash URIs.
+    def _run_scan(paths, keep_path):
+        df = _scan(paths)
+        return (df.withColumn("__qs_if__", _norm_path(
+            F.col("_metadata.file_path"))) if keep_path else df)
+
+    inserts = feed.run(_run_scan, "__qs_if__",
+                       lambda p: _py_norm(_local(p)))
 
     for pos in range(i0, i1 + 1):
         sid = ids[pos]
@@ -3045,21 +3020,14 @@ def read_iceberg_changes(spark, table_path: str,
                 "resurrected rows have no change-stream shape")
         if added and not removed and not new_pos and not new_eq \
                 and not new_dvs:
-            # pure-insert snapshot: join the coalesced run (the run
-            # stays open across interrupting snapshots — see the
-            # deferred-flush note above; no flush happens here or at
-            # any interruption, only once after the loop)
-            if not pending:
-                pending_at[0] = len(parts)
-            pending.append((sid, added))
+            inserts.add(int(sid), added)
             continue
         # UPDATE pairing (round 9): an upsert snapshot that declares
         # its MERGE keys in the summary (upsert_iceberg_local stamps
         # "merge-keys") pairs its position-delete rows with its new
-        # rows by key — update_preimage/update_postimage instead of
-        # the raw delete+insert. Only the clean upsert shape
-        # (adds + position deletes, nothing else) pairs; anything
-        # mixed keeps the raw decomposition.
+        # rows by key in the shared pairing pass (changes.py). Only
+        # the clean upsert shape (adds + position deletes, nothing
+        # else) pairs; anything mixed keeps the raw decomposition.
         pair_kc = None
         mk_raw = (snaps[pos].get("summary") or {}).get("merge-keys")
         if mk_raw and added and new_pos and not removed \
@@ -3078,9 +3046,9 @@ def read_iceberg_changes(spark, table_path: str,
                     "parent carries delete files — reconstructing "
                     "each removed file's surviving rows is not "
                     "supported here (compact first)")
-            parts.append(_tag(_scan(removed), "delete", sid))
+            feed.add(_scan(removed), "delete", int(sid))
         if added and not pair_kc:
-            parts.append(_tag(ins_df, "insert", sid))
+            feed.add(ins_df, "insert", int(sid))
         # parent LIVE rows (full delete stack applied) are the match
         # target whenever the parent carries delete files — matching
         # raw files would re-report rows already deleted earlier
@@ -3128,22 +3096,12 @@ def read_iceberg_changes(spark, table_path: str,
                     old_files = [p for p in par_paths
                                  if _py_norm(_local(p)) in old_refs]
                     if old_files:
-                        targets.append(
-                            _scan(old_files)
-                            .withColumn("__qs_fp__", _norm_path(
-                                F.col("_metadata.file_path")))
-                            .withColumn("__qs_pos__",
-                                        F.col("_metadata.row_index")))
+                        targets.append(_scan_at(old_files))
             new_refs = [added_norm[n] for n in ref_norm
                         if n in added_norm]
             if new_refs:
                 # brand-new files can carry no prior deletes: raw scan
-                targets.append(
-                    _scan(new_refs)
-                    .withColumn("__qs_fp__", _norm_path(
-                        F.col("_metadata.file_path")))
-                    .withColumn("__qs_pos__",
-                                F.col("_metadata.row_index")))
+                targets.append(_scan_at(new_refs))
             if targets:
                 tgt = targets[0]
                 for t in targets[1:]:
@@ -3153,87 +3111,15 @@ def read_iceberg_changes(spark, table_path: str,
                     & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
                     "left_semi").drop("__qs_fp__", "__qs_pos__"))
                 if pair_kc:
-                    # Single-window CDC pairing (optimization round
-                    # 13, guide §2.3 — the Delta CDF shape): the
-                    # former key-intersect + 4 semi/anti joins
-                    # re-scanned both sides twice and shuffled 4 tiny
-                    # joins per upsert snapshot. A key pairs as
-                    # update exactly when it keeps rows on BOTH
-                    # sides, which is one window flag over the tagged
-                    # union — each row keeps its own multiplicity
-                    # (position deletes are exact; no exceptAll
-                    # cancellation exists on this path, unlike
-                    # Delta's). Rows with any NULL merge-key column
-                    # stay delete/insert: the old semi/anti
-                    # equi-joins were null-rejecting.
-                    from pyspark.sql.window import Window
-                    kc = pair_kc
-                    cols = ins_df.columns
-                    pre_f = F.col("__qs_cdc_pre__")
-                    tagged = (scan.select(
-                        *cols, F.lit(True).alias("__qs_cdc_pre__"))
-                        .unionAll(ins_df.select(
-                            *cols,
-                            F.lit(False).alias("__qs_cdc_pre__"))))
-                    keyed = F.lit(True)
-                    for k in kc:
-                        keyed = keyed & F.col(k).isNotNull()
-                    # NULL-key rows never read their window flags
-                    # (the keyed guard routes them to delete/insert)
-                    # — salt them per row value so a snapshot with
-                    # many NULL/hot-NULL merge keys does not funnel
-                    # through ONE window task (round-13 advisor
-                    # finding, guide §2.5); keyed rows keep salt 0.
-                    # Hash only hashable columns: xxhash64 rejects
-                    # MAP anywhere in a type (unlike the window's
-                    # own partitioning, which never sees non-key
-                    # payloads) — the delta twin is covered upstream
-                    # by its groupBy's identical constraint.
-                    def _hashable(dt):
-                        from pyspark.sql.types import (ArrayType,
-                                                       MapType,
-                                                       StructType)
-                        if isinstance(dt, MapType):
-                            return False
-                        if isinstance(dt, ArrayType):
-                            return _hashable(dt.elementType)
-                        if isinstance(dt, StructType):
-                            return all(_hashable(f.dataType)
-                                       for f in dt.fields)
-                        return True
-                    hcols = [f.name for f in ins_df.schema.fields
-                             if _hashable(f.dataType)] or list(kc)
-                    tagged = tagged.withColumn(
-                        "__qs_salt__",
-                        F.when(keyed, F.lit(0))
-                        .otherwise(F.xxhash64(*hcols)))
-                    w = Window.partitionBy(*kc, "__qs_salt__")
-                    t = (tagged
-                         .withColumn(
-                             "__qs_has_pre__",
-                             F.max(pre_f.cast("int")).over(w) > 0)
-                         .withColumn(
-                             "__qs_has_post__",
-                             F.min(pre_f.cast("int")).over(w) < 1))
-                    ctype = (
-                        F.when(pre_f & keyed & F.col("__qs_has_post__"),
-                               "update_preimage")
-                        .when(pre_f, "delete")
-                        .when(keyed & F.col("__qs_has_pre__"),
-                              "update_postimage")
-                        .otherwise("insert"))
-                    parts.append(t.select(
-                        *cols, ctype.alias("_change_type"),
-                        F.lit(int(sid)).cast("long")
-                        .alias("_snapshot_id")))
+                    feed.pair(int(sid), pair_kc, scan, ins_df)
                     pair_kc = None     # consumed
                 else:
-                    parts.append(_tag(scan, "delete", sid))
+                    feed.add(scan, "delete", int(sid))
         if pair_kc:
             # pairing armed but the delete side produced no target
             # scan (e.g. every referenced file vanished) — fall back
             # to the plain insert so no rows are lost
-            parts.append(_tag(ins_df, "insert", sid))
+            feed.add(ins_df, "insert", int(sid))
         for d in new_eq:
             older = {_py_norm(_local(e["path"])) for e in par_d
                      if int(e["seq"]) < int(d["seq"])}
@@ -3249,24 +3135,12 @@ def read_iceberg_changes(spark, table_path: str,
                 tgt = par_live.where(F.col("__qs_fp__")
                                      .isin(sorted(older)))
             else:
-                tgt = (_scan([p for p in par_paths
-                              if _py_norm(_local(p)) in older])
-                       .withColumn("__qs_fp__", _norm_path(
-                           F.col("_metadata.file_path")))
-                       .withColumn("__qs_pos__",
-                                   F.col("_metadata.row_index")))
+                tgt = _scan_at([p for p in par_paths
+                                if _py_norm(_local(p)) in older])
             cond = None
             for c in cols:
                 eq = F.col(c).eqNullSafe(F.col(f"__qs_eq_{c}__"))
                 cond = eq if cond is None else cond & eq
-            parts.append(_tag(
-                tgt.join(dd, cond, "left_semi")
-                .drop("__qs_fp__", "__qs_pos__"), "delete", sid))
-    _flush_inserts()
-    if not parts:
-        cur = _live_df(spark, table_path, to_snapshot)
-        return _tag(cur, "insert", 0).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            feed.add(tgt.join(dd, cond, "left_semi")
+                     .drop("__qs_fp__", "__qs_pos__"), "delete", int(sid))
+    return feed.result(lambda: _live_df(spark, table_path, to_snapshot))

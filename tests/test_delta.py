@@ -1899,22 +1899,30 @@ def test_delta_timestamp_time_travel(spark, qc, tmp_path):
         version_at_timestamp(tbl, ci_ts + 60_000)
 
 
-def test_delta_changes_upsert_pairs_updates(spark, qc, tmp_path):
+@pytest.mark.parametrize("schema", [
+    "id long, v double", "id long, m map<string,int>, v double"],
+    ids=["plain", "map"])
+def test_delta_changes_upsert_pairs_updates(spark, qc, tmp_path, schema):
     """Round 9: an upsert commit (keyColumns stamped in commitInfo's
     operationParameters) surfaces as PAIRED update_preimage/
     update_postimage rows for changed keys and plain inserts for new
     keys — byte-identical survivor re-transmissions cancel entirely
-    (exceptAll), so the rewrite artifact never reaches consumers."""
+    (exceptAll), so the rewrite artifact never reaches consumers.
+    The ``map`` input pins the pairing's NULL-key salt to hashable
+    columns: xxhash64 rejects a MAP column with HASH_MAP_TYPE."""
     from quokka_spark.sources.delta_local import (upsert_delta_local,
                                                   write_delta_local)
+
+    def batch(pairs):
+        return spark.createDataFrame(
+            [(i, {"v": int(x)}, x) if "map<" in schema else (i, x)
+             for i, x in pairs], schema)
+
     tbl = str(tmp_path / "updt")
-    write_delta_local(
-        spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)],
-                              "id long, v double").coalesce(1), tbl)
-    v = upsert_delta_local(
-        spark, tbl,
-        spark.createDataFrame([(2, 99.0), (7, 70.0)],
-                              "id long, v double"), "id")
+    write_delta_local(batch([(1, 10.0), (2, 20.0), (3, 30.0)])
+                      .coalesce(1), tbl)
+    v = upsert_delta_local(spark, tbl, batch([(2, 99.0), (7, 70.0)]),
+                           "id")
     ch = qc.read_delta_changes(tbl, v, v).df.collect()
     rows = sorted((r["_change_type"], r["id"], r["v"]) for r in ch)
     assert rows == [("insert", 7, 70.0),
@@ -1925,22 +1933,24 @@ def test_delta_changes_upsert_pairs_updates(spark, qc, tmp_path):
     assert sorted(r["id"] for r in v0) == [1, 2, 3]
     assert {r["_change_type"] for r in v0} == {"insert"}
     # an upsert that changes NOTHING (same values) emits no rows
-    v2 = upsert_delta_local(
-        spark, tbl,
-        spark.createDataFrame([(3, 30.0)], "id long, v double"), "id")
+    v2 = upsert_delta_local(spark, tbl, batch([(3, 30.0)]), "id")
     assert qc.read_delta_changes(tbl, v2, v2).df.count() == 0
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
 def test_delta_changes_upsert_null_keys_stay_delete_insert(
-        spark, qc, tmp_path):
+        spark, qc, tmp_path, fmt):
     """Round 13 (optimization): the single-window CDC pairing must
     keep NULL merge-key rows as delete/insert — the pre-round-13
     semi/anti equi-joins were null-rejecting, and MERGE ON key never
     matches NULL either, while an unguarded window partition groups
     NULL keys together. A real writer cannot produce a
     non-cancelling NULL-key preimage (survivors rewrite
-    byte-identical and cancel), so the MERGE commit is forged
-    directly from remove+add+commitInfo actions."""
+    byte-identical and cancel; an Iceberg upsert never matches a
+    NULL key), so the MERGE commit is forged directly: Delta from
+    remove+add+commitInfo actions, Iceberg from position deletes of
+    both rows plus the rewritten file under a merge-keys summary.
+    Both readers share one pairing pass (sources/changes.py)."""
     import glob
     import json
     import time
@@ -1949,30 +1959,51 @@ def test_delta_changes_upsert_null_keys_stay_delete_insert(
                                                   _commit_parsed,
                                                   _footer_stats,
                                                   write_delta_local)
+    from quokka_spark.sources.iceberg_local import (
+        commit_snapshot, create_local_iceberg_table)
+
+    def staged(name, v):
+        # one parquet file holding (NULL, v), (2, v)
+        sdir = str(tmp_path / f"{name}stage")
+        spark.createDataFrame([(None, v), (2, v)],
+                              "id long, v double").coalesce(1) \
+            .write.parquet(sdir)
+        return glob.glob(os.path.join(sdir, "*.parquet"))[0]
+
     tbl = str(tmp_path / "nullkey")
-    write_delta_local(
-        spark.createDataFrame([(None, 20.0), (2, 20.0)],
-                              "id long, v double").coalesce(1), tbl)
-    adds0, _, _, _, _ = _commit_parsed(tbl, 0)
-    (apath,) = adds0
-    # the "rewritten" file: both rows changed, so NOTHING cancels and
-    # the NULL-key preimage survives into the pairing
-    bdir = str(tmp_path / "bstage")
-    spark.createDataFrame([(None, 99.0), (2, 99.0)],
-                          "id long, v double").coalesce(1) \
-        .write.parquet(bdir)
-    bdst = os.path.join(tbl, "part-b.parquet")
-    os.replace(glob.glob(os.path.join(bdir, "*.parquet"))[0], bdst)
-    ts = int(time.time() * 1000)
-    _commit(tbl, 1, [
-        {"commitInfo": {"timestamp": ts, "operation": "MERGE",
-                        "operationParameters":
-                        {"keyColumns": json.dumps(["id"])}}},
-        {"remove": {"path": apath, "deletionTimestamp": ts,
-                    "dataChange": True}},
-        _add_action(tbl, bdst, None, stats=_footer_stats(bdst)),
-    ])
-    ch = qc.read_delta_changes(tbl, 1, 1).df.collect()
+    if fmt == "iceberg":
+        a = staged("a", 20.0)
+        create_local_iceberg_table(
+            tbl, [[a]], schema_fields=[(1, "id", "long"),
+                                       (2, "v", "double")])
+        pos = str(tmp_path / "pos.parquet")
+        spark.createDataFrame([(a, 0), (a, 1)],
+                              "file_path string, pos long") \
+            .toPandas().to_parquet(pos)
+        sid = commit_snapshot(tbl, [staged("b", 99.0)], [pos],
+                              summary_extra={"merge-keys":
+                                             json.dumps(["id"])})
+        ch = qc.read_iceberg_changes(tbl, sid, sid).df.collect()
+    else:
+        write_delta_local(
+            spark.createDataFrame([(None, 20.0), (2, 20.0)],
+                                  "id long, v double").coalesce(1), tbl)
+        adds0, _, _, _, _ = _commit_parsed(tbl, 0)
+        (apath,) = adds0
+        # the "rewritten" file: both rows changed, so NOTHING cancels
+        # and the NULL-key preimage survives into the pairing
+        bdst = os.path.join(tbl, "part-b.parquet")
+        os.replace(staged("b", 99.0), bdst)
+        ts = int(time.time() * 1000)
+        _commit(tbl, 1, [
+            {"commitInfo": {"timestamp": ts, "operation": "MERGE",
+                            "operationParameters":
+                            {"keyColumns": json.dumps(["id"])}}},
+            {"remove": {"path": apath, "deletionTimestamp": ts,
+                        "dataChange": True}},
+            _add_action(tbl, bdst, None, stats=_footer_stats(bdst)),
+        ])
+        ch = qc.read_delta_changes(tbl, 1, 1).df.collect()
     rows = sorted(((r["_change_type"], r["id"], r["v"]) for r in ch),
                   key=lambda t: (t[0], t[1] is None, t[1] or 0))
     assert rows == [("delete", None, 20.0),

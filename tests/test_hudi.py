@@ -1185,7 +1185,7 @@ def test_hudi_incremental_deferred_flush_coalesces_across_logs(
     nothing changes the base scan's state — so a mixed timeline
     builds ONE provenance-stamped coalesced base scan instead of one
     per inter-log run. Values and per-instant stamps are unchanged."""
-    from quokka_spark.sources import delta_local
+    from quokka_spark.sources import changes
     from quokka_spark.sources.hudi_local import (upsert_hudi_mor_local,
                                                  write_hudi_mor_local)
 
@@ -1205,19 +1205,19 @@ def test_hudi_incremental_deferred_flush_coalesces_across_logs(
                               recordkey="id")
 
     calls = []
-    orig = delta_local._stamp_provenance
+    orig = changes._stamp_provenance
 
     def counted(*a, **kw):
         calls.append(1)
         return orig(*a, **kw)
 
-    delta_local._stamp_provenance = counted
+    changes._stamp_provenance = counted
     try:
         ch = qc.read_hudi_incremental(tbl, t0).df
         rows = sorted((r["_commit_instant"], r["_change_type"],
                        r["id"], r["v"]) for r in ch.collect())
     finally:
-        delta_local._stamp_provenance = orig
+        changes._stamp_provenance = orig
     # ONE coalesced base run for {t0,t1,t3,t4} (pre-round-14: two
     # runs, split at the t2 log instant — a second call)
     assert len(calls) == 1

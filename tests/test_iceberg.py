@@ -1973,26 +1973,39 @@ def test_iceberg_timestamp_time_travel(spark, qc, tmp_path):
                                  + 60_000) == s3
 
 
-def test_iceberg_changes_upsert_pairs_updates(spark, qc, tmp_path):
+@pytest.mark.parametrize("schema", [
+    "id long, v double", "id long, m map<string,int>, v double"],
+    ids=["plain", "map"])
+def test_iceberg_changes_upsert_pairs_updates(spark, qc, tmp_path,
+                                              schema):
     """Round 9: an upsert snapshot (merge-keys stamped in the
     snapshot summary) surfaces as PAIRED update_preimage/
     update_postimage rows for matched keys and plain inserts for new
     keys; a keyless commit of the same shape keeps the raw
     delete+insert decomposition (pinned above in the lifecycle
-    test)."""
+    test). The ``map`` input pins the pairing's NULL-key salt to
+    hashable columns (xxhash64 rejects MAP)."""
     from quokka_spark.sources.iceberg_local import upsert_iceberg_local
+
+    def batch(pairs):
+        return spark.createDataFrame(
+            [(i, {"v": int(x)}, x) if "map<" in schema else (i, x)
+             for i, x in pairs], schema)
+
     a = str(tmp_path / "a.parquet")
-    spark.createDataFrame([(1, 10.0), (2, 20.0), (3, 30.0)],
-                          "id long, v double") \
-        .coalesce(1).toPandas().to_parquet(a)
+    batch([(1, 10.0), (2, 20.0), (3, 30.0)]).coalesce(1) \
+        .write.parquet(str(tmp_path / "a"))
+    import glob
+    os.replace(glob.glob(str(tmp_path / "a" / "*.parquet"))[0], a)
+    m_type = {"type": "map", "key-id": 4, "key": "string",
+              "value-id": 5, "value": "int", "value-required": False}
     tbl = str(tmp_path / "tbl")
     create_local_iceberg_table(
         tbl, [[a]], schema_fields=[(1, "id", "long"),
-                                   (2, "v", "double")])
-    sid = upsert_iceberg_local(
-        spark, tbl,
-        spark.createDataFrame([(2, 99.0), (7, 70.0)],
-                              "id long, v double"), "id")
+                                   (2, "v", "double")]
+        + ([(3, "m", m_type)] if "map<" in schema else []))
+    sid = upsert_iceberg_local(spark, tbl, batch([(2, 99.0), (7, 70.0)]),
+                               "id")
     ch = qc.read_iceberg_changes(tbl, sid, sid).df.collect()
     rows = sorted((r["_change_type"], r["id"], r["v"]) for r in ch)
     assert rows == [("insert", 7, 70.0),
@@ -2017,7 +2030,7 @@ def test_iceberg_changes_deferred_flush_coalesces_across_upsert(
     metadata, so nothing forces a flush — and the whole mixed history
     builds ONE provenance-stamped coalesced scan instead of one per
     inter-upsert run. Values and per-snapshot stamps are unchanged."""
-    from quokka_spark.sources import delta_local
+    from quokka_spark.sources import changes
     from quokka_spark.sources.iceberg_local import (append_snapshot,
                                                     upsert_iceberg_local)
 
@@ -2041,19 +2054,19 @@ def test_iceberg_changes_deferred_flush_coalesces_across_upsert(
     s5 = append_snapshot(tbl, [f("d", 8, 9)])
 
     calls = []
-    orig = delta_local._stamp_provenance
+    orig = changes._stamp_provenance
 
     def counted(*a, **kw):
         calls.append(1)
         return orig(*a, **kw)
 
-    delta_local._stamp_provenance = counted
+    changes._stamp_provenance = counted
     try:
         ch = qc.read_iceberg_changes(tbl, s1, s5).df
         rows = sorted((r["_snapshot_id"], r["_change_type"], r["id"],
                        r["v"]) for r in ch.collect())
     finally:
-        delta_local._stamp_provenance = orig
+        changes._stamp_provenance = orig
     # ONE coalesced run for {s1,s2,s4,s5} (pre-round-14: two runs,
     # split at the s3 upsert — the second _stamp_provenance call)
     assert len(calls) == 1

@@ -79,9 +79,9 @@ def test_wide_quantile_10k_columns_completes(spark):
     """BASELINE.md row 4 at the PUBLISHED width (blog/approxquant.md:
     19-31 claims Spark 'always crashes' at 10k columns — the WIDTH is
     the published failure axis; the row count was already scaled from
-    the blog's 1M and round 14 trims it 100k -> 25k to fit the
-    driver's pytest capture window, keeping >1 buffer flush per
-    partition; the sketch's rank-error contract is pinned separately
+    the blog's 1M and round 14 trims it 100k -> 10k to fit the
+    suite's time budget, ~310 rows in each of 32 partitions; the
+    sketch's rank-error contract is pinned separately
     by the accuracy tests in test_functions): 10k cols through the
     NumPy order-stat sketch, bounded
     per-partition memory (buffer caps at ~400 rows x 10k cols ~ 32 MB;
