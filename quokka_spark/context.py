@@ -8,33 +8,57 @@ implements in dataset/*_readers.py is Spark-native here.
 
 from __future__ import annotations
 
-import functools
+import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .datastream import DataStream
+from .memo import MISS, Memo
 from .orderedstream import OrderedStream
 from .session import build_spark
 from .sqldialect import duckdb_to_spark_sql
 
 
-@functools.lru_cache(maxsize=256)
+# footer probes of read_parquet inputs, keyed by (path, stat signature)
+_NANOS_COLUMNS = Memo("context.nanos_columns", cap=256)
+
+
+def _stat_signature(path: str):
+    """(inode, size, mtime, ctime) of a local path, None when it
+    cannot be stat'ed (remote URI, glob). ctime moves on any rewrite,
+    even one that restores mtime with os.utime. A directory's
+    signature moves when entries are added, removed or renamed in,
+    not when a file inside it is rewritten in place."""
+    try:
+        st = os.stat(path.removeprefix("file://"))
+    except (OSError, ValueError):
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
 def _nanos_timestamp_columns(path: str) -> list:
     """Columns stored as parquet TIMESTAMP(NANOS) (footer inspection;
     local paths only — remote stores return [] and rely on the writer
-    using µs, the common case). Cached per path: the footer schema is
-    immutable for a given dataset version, and re-probing it on every
-    read_parquet call costs a filesystem round-trip per query."""
+    using µs, the common case). Memoized per (path, stat signature):
+    re-probing the footer on every read_parquet call costs a
+    filesystem round-trip per query, and a file rewritten at the same
+    path re-probes."""
+    key = (path, _stat_signature(path))
+    cols = _NANOS_COLUMNS.get(key)
+    if cols is not MISS:
+        return cols
     try:
         import pyarrow.dataset as pads
         import pyarrow as pa
         schema = pads.dataset(path, format="parquet").schema
-        return [f.name for f in schema
+        cols = [f.name for f in schema
                 if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"]
     except Exception:
-        return []
+        cols = []
+    _NANOS_COLUMNS.put(key, cols)
+    return cols
 
 
 class LocalCluster:

@@ -22,10 +22,13 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..memo import Memo
 from .text import fingerprint, normalize_text_sql, word_ngrams
 
-# memoized broadcast matrices for embedding_near_pairs_lsh (per semantic plan)
-_EMB_BROADCASTS: dict = {}
+# memoized broadcast matrices for embedding_near_pairs_lsh (per semantic
+# plan); an evicted matrix is unpersisted from the executors
+_EMB_BROADCASTS = Memo("dedup.embedding_broadcasts", cap=8,
+                       on_evict=lambda bc: bc.unpersist())
 
 # large Mersenne prime for minhash permutations
 _MERSENNE = (1 << 61) - 1
@@ -530,8 +533,7 @@ def embedding_near_pairs_lsh(df: DataFrame, vec_col: str = "embedding",
         memo_key = (df.semanticHash(), vec_col, id_col, dim)
     except Exception:  # noqa: BLE001
         pass
-    cached = _EMB_BROADCASTS.get(memo_key) if memo_key is not None else None
-    bc = cached
+    bc = _EMB_BROADCASTS.get(memo_key, None)
     if bc is None and \
             df.select(F.count(F.lit(1))).first()[0] * dim * 8 <= broadcast_bytes:
         pdf = v.toPandas()
@@ -546,11 +548,7 @@ def embedding_near_pairs_lsh(df: DataFrame, vec_col: str = "embedding",
                             for x in vals])[order]
             bc = df.sparkSession.sparkContext.broadcast((sorted_ids, mat))
             if memo_key is not None:
-                if len(_EMB_BROADCASTS) > 8:
-                    for old in _EMB_BROADCASTS.values():
-                        old.unpersist()
-                    _EMB_BROADCASTS.clear()
-                _EMB_BROADCASTS[memo_key] = bc
+                _EMB_BROADCASTS.put(memo_key, bc)
     if bc is not None:
         def cos_lookup(it):
             import pyarrow as pa

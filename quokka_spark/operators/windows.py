@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..memo import MISS, Memo
 from ..sqldialect import duckdb_to_spark_sql
 from ..windowtypes import (HoppingWindow, OnCompletionTrigger, OnEventTrigger,
                            SessionWindow, SlidingWindow, TumblingWindow, Trigger)
@@ -121,7 +122,7 @@ def _over(sql: str, w) -> "F.Column":
     return build(sql)
 
 
-_BUCKET_DECISIONS: dict = {}
+_BUCKET_DECISIONS = Memo("windows.bucket_decisions", cap=512)
 
 
 def choose_bucket(df: DataFrame, time_col: str, by: list,
@@ -155,8 +156,9 @@ def choose_bucket(df: DataFrame, time_col: str, by: list,
                      str(size_before), cores)
     except Exception:  # noqa: BLE001 — hash is best-effort (connect mode etc.)
         pass
-    if cache_key in _BUCKET_DECISIONS:
-        return _BUCKET_DECISIONS[cache_key]
+    cached = _BUCKET_DECISIONS.get(cache_key)
+    if cached is not MISS:
+        return cached
     is_ts = "timestamp" in dict(df.dtypes)[time_col]
     tsnum = epoch_us(time_col) if is_ts else F.col(time_col)
     key = F.concat_ws("\x00", *[F.col(c).cast("string") for c in by]) \
@@ -197,9 +199,7 @@ def choose_bucket(df: DataFrame, time_col: str, by: list,
             last_bucket_probe.update(mode="sampled",
                                      rows_aggregated=int(srow["n"]))
             if cache_key is not None:
-                if len(_BUCKET_DECISIONS) > 512:
-                    _BUCKET_DECISIONS.clear()
-                _BUCKET_DECISIONS[cache_key] = result
+                _BUCKET_DECISIONS.put(cache_key, result)
             return result
     row = df.select(F.approx_count_distinct(key).alias("k"),
                     F.min(tsnum).alias("lo"),
@@ -215,13 +215,11 @@ def choose_bucket(df: DataFrame, time_col: str, by: list,
         bucket = max(floor, span / (4 * cores), 1.0)
         result = bucket / 1_000_000 if is_ts else bucket
     if cache_key is not None:
-        if len(_BUCKET_DECISIONS) > 512:
-            _BUCKET_DECISIONS.clear()
-        _BUCKET_DECISIONS[cache_key] = result
+        _BUCKET_DECISIONS.put(cache_key, result)
     return result
 
 
-_HOT_KEY_DECISIONS: dict = {}
+_HOT_KEY_DECISIONS = Memo("windows.hot_key_decisions", cap=512)
 
 # introspection for tests/diagnostics: how the LAST (uncached)
 # choose_bucket probe decided
@@ -282,8 +280,9 @@ def choose_hot_keys(df: DataFrame, time_col: str, by: list,
                      tuple(by or []), cores)
     except Exception:  # noqa: BLE001 — hash is best-effort
         pass
-    if cache_key in _HOT_KEY_DECISIONS:
-        return _HOT_KEY_DECISIONS[cache_key]
+    cached = _HOT_KEY_DECISIONS.get(cache_key)
+    if cached is not MISS:
+        return cached
     is_ts = "timestamp" in dict(df.dtypes)[time_col]
     tsnum = epoch_us(time_col) if is_ts else F.col(time_col)
     slim = df.select(skew_key_expr(by).alias("__k__"),
@@ -357,9 +356,7 @@ def choose_hot_keys(df: DataFrame, time_col: str, by: list,
             counts.unpersist()
 
     if cache_key is not None:
-        if len(_HOT_KEY_DECISIONS) > 512:
-            _HOT_KEY_DECISIONS.clear()
-        _HOT_KEY_DECISIONS[cache_key] = result
+        _HOT_KEY_DECISIONS.put(cache_key, result)
     return result
 
 

@@ -35,7 +35,10 @@ def _listing_threshold(input_root: str | None) -> int:
     Spark's default so distributed listing still amortizes
     object-store LIST latency without requiring an override.
     SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD stays as the explicit
-    escape hatch for mixed deployments."""
+    escape hatch for mixed deployments. The choice is made once per
+    session from $SPARK_GRAFT_SF_DIR: a session whose root is local
+    but which also scans remote paths lists those on the driver too
+    (serial LIST calls) unless the env var lowers the threshold."""
     env = os.environ.get("SPARK_GRAFT_PARALLEL_DISCOVERY_THRESHOLD")
     if env is not None:
         return int(env)

@@ -67,6 +67,8 @@ import re
 import time
 import uuid
 
+from ..memo import MISS, Memo
+
 
 def _log_dir(table: str) -> str:
     return os.path.join(table.removeprefix("file://"), "_delta_log")
@@ -682,25 +684,25 @@ def _id_mapping(meta: dict):
         meta, "id", "delta.columnMapping.id")}
 
 
-# session-scoped memo of each data file's resolved field-id layout,
-# keyed by (absolute path, mtime_ns, size) so an overwritten file
-# re-resolves: at extreme file counts the per-file driver footer read
-# is the id-mode scan's only super-constant metadata term, and Delta
-# data files are immutable once committed — a repeat scan (time
-# travel, retries, dashboards) should pay one os.stat per file, not
-# one footer read. Entries are a handful of (int, str) pairs — KBs
-# per 10k files, no eviction needed driver-side.
-_ID_LAYOUT_CACHE: dict = {}
+# each data file's resolved field-id layout, keyed by (absolute path,
+# mtime_ns, size) so an overwritten file re-resolves: at extreme file
+# counts the per-file driver footer read is the id-mode scan's only
+# super-constant metadata term, and Delta data files are immutable
+# once committed — a repeat scan (time travel, retries, dashboards)
+# should pay one os.stat per file, not one footer read. Entries are a
+# handful of (int, str) pairs; past the cap the least recently
+# scanned files re-read their footers.
+_ID_LAYOUT = Memo("delta.id_layout", cap=16384)
 
 
 def _file_id_layout(f: str) -> dict:
     """{parquet field id: column name} for one data file, memoized
-    per session (see _ID_LAYOUT_CACHE)."""
+    (see _ID_LAYOUT)."""
     import pyarrow.parquet as pq
     st = os.stat(f)
     key = (os.path.abspath(f), st.st_mtime_ns, st.st_size)
-    hit = _ID_LAYOUT_CACHE.get(key)
-    if hit is not None:
+    hit = _ID_LAYOUT.get(key)
+    if hit is not MISS:
         return hit
     id2name = {}
     for fld in pq.read_schema(f):
@@ -708,7 +710,7 @@ def _file_id_layout(f: str) -> dict:
         fid = md.get(b"PARQUET:field_id")
         if fid is not None:
             id2name[int(fid)] = fld.name
-    _ID_LAYOUT_CACHE[key] = id2name
+    _ID_LAYOUT.put(key, id2name)
     return id2name
 
 
@@ -716,7 +718,7 @@ def _id_mode_scan(spark, files, adds, idmap, root, with_path=False,
                   with_pos=False, apply_dv=True, extra_cols=()):
     """id-mode scan: resolve each file's columns by the PARQUET FIELD
     IDS in its footer (one KB-scale footer read per file on FIRST
-    touch — repeat scans hit the session layout cache and pay only an
+    touch — repeat scans hit the bounded layout memo and pay only an
     os.stat), group files sharing a resolved id→name layout, scan
     each group natively, rename to the logical schema and union.
     Files may legitimately disagree on physical names (id mode exists
@@ -1115,7 +1117,7 @@ def read_delta_local(spark, table: str, version: int | None = None,
         # id-mode data skipping (round 13): stats keys are each
         # file's OWN physical names, so the logical filter column
         # resolves per file — logical name → schema field id → that
-        # file's footer layout (already read + session-cached for
+        # file's footer layout (already read + memoized for
         # the scan's grouping). Missing layouts/stats keep the file;
         # the row-level filter below keeps semantics exact either way
         if scan_filter:
@@ -1322,38 +1324,41 @@ def _commit(table: str, version: int, actions: list) -> None:
 
 
 CHECKPOINT_INTERVAL_DEFAULT = 10  # the jar's delta.checkpointInterval
-_interval_cache: dict = {}
+# {absolute log dir: delta.checkpointInterval}
+_INTERVALS = Memo("delta.checkpoint_interval", cap=1024)
 
 
 def _checkpoint_interval(table: str, version: int, actions: list) -> int:
     """The table's effective ``delta.checkpointInterval`` (default 10,
-    like the jar; ≤0 disables). Cached per log directory so the
-    common no-metaData commit costs a dict lookup; any ``metaData``
-    action flowing through _commit refreshes the cache (config
+    like the jar; ≤0 disables). Memoized per log directory so the
+    common no-metaData commit costs a lookup; any ``metaData``
+    action flowing through _commit refreshes the entry (config
     changes only ever enter the log that way). First sight of an
-    existing table resolves via one bounded _replay — bounded because
-    replay itself starts from the newest checkpoint."""
+    existing table (or of one evicted since) resolves via one bounded
+    _replay — bounded because replay itself starts from the newest
+    checkpoint."""
     key = os.path.abspath(_log_dir(table))
     for a in actions:
         m = a.get("metaData")
         if m is not None:
-            conf = m.get("configuration") or {}
-            try:
-                _interval_cache[key] = int(
-                    conf.get("delta.checkpointInterval",
-                             CHECKPOINT_INTERVAL_DEFAULT))
-            except (TypeError, ValueError):
-                _interval_cache[key] = CHECKPOINT_INTERVAL_DEFAULT
-    if key not in _interval_cache:
+            _INTERVALS.put(key, _interval_of(m))
+    interval = _INTERVALS.get(key)
+    if interval is MISS:
         try:
-            _, meta, _, _ = _replay(table, version)
-            conf = meta.get("configuration") or {}
-            _interval_cache[key] = int(
-                conf.get("delta.checkpointInterval",
-                         CHECKPOINT_INTERVAL_DEFAULT))
+            interval = _interval_of(_replay(table, version)[1])
         except Exception:
             return CHECKPOINT_INTERVAL_DEFAULT
-    return _interval_cache[key]
+        _INTERVALS.put(key, interval)
+    return interval
+
+
+def _interval_of(meta: dict) -> int:
+    conf = meta.get("configuration") or {}
+    try:
+        return int(conf.get("delta.checkpointInterval",
+                            CHECKPOINT_INTERVAL_DEFAULT))
+    except (TypeError, ValueError):
+        return CHECKPOINT_INTERVAL_DEFAULT
 
 
 def _maybe_checkpoint(table: str, version: int, actions: list) -> None:
@@ -1413,27 +1418,34 @@ def _meta_actions(schema_json: str | None,
     ]
 
 
-# Incremental fold memo for _txn_state (round 14, guide §1.2 step 1:
-# the sink handshake re-read the WHOLE trailing JSON history on every
-# probe — a 50-batch sink run paid O(n^2) commit-file reads, and a
-# long-running exactly-once sink pays its full history per batch).
-# Keyed by table path; an entry records (folded version, stat
-# signature of that version's commit file, txns). A later call folds
-# only the commits AFTER the cached version. Correct under: log
-# cleanup (txn state at v is immutable — removing older files cannot
-# change it), table recreation (the recorded signature of the folded
-# commit no longer matches -> full rebuild), gaps (the gapless tail
-# check runs on the incremental range too), and new checkpoints (the
-# cached state already covers their range).
-_txn_fold_cache: dict = {}
+# Incremental fold memo for _txn_state (the sink handshake would
+# otherwise re-read the WHOLE trailing JSON history on every probe — a
+# 50-batch sink run paid O(n^2) commit-file reads, and a long-running
+# exactly-once sink pays its full history per batch). Keyed by
+# (absolute table path, commit 0's metaData.id): the table's identity,
+# so a table dropped and recreated at the same path is a new key
+# whatever its commit files' inodes, sizes and mtimes. An entry is
+# (folded version, txns); a later probe folds only the commits AFTER
+# the folded version. Correct under: log cleanup (txn state at v is
+# immutable — removing older files cannot change it), gaps (the
+# gapless tail check runs on the incremental range too), and new
+# checkpoints (the cached state already covers their range).
+_TXN_FOLDS = Memo("delta.txn_folds", cap=64)
 
 
-def _commit_sig(table: str, v: int):
+def _table_id(table: str):
+    """metaData.id of commit 0 (the table's identity), or None when
+    commit 0 is unreadable or carries no metaData."""
     try:
-        st = os.stat(_version_path(table, v))
-    except OSError:
-        return None
-    return (st.st_ino, st.st_mtime_ns, st.st_size)
+        with open(_version_path(table, 0)) as fh:
+            for line in fh:
+                if '"metaData"' in line:
+                    md = json.loads(line).get("metaData")
+                    if md is not None:
+                        return md.get("id")
+    except (OSError, ValueError):
+        pass
+    return None
 
 
 def _fold_txn_commit(table: str, v: int, txns: dict) -> None:
@@ -1468,26 +1480,26 @@ def _txn_state(table: str, version: int | None = None,
         return {}
     if version is None:
         version = versions[-1]
-    cached = _txn_fold_cache.get(table)
-    if cached is not None:
-        cv, sig, ctxns = cached
-        # Hit ONLY in the checkpoint-free, fully-gapless case — the
-        # one where the old path re-read the whole history and where
-        # its loud-gap / foreign-checkpoint contracts cannot be in
-        # play, so cached and uncached behavior are identical by
-        # construction (a gap, a checkpoint, or a recreated table all
-        # fall through to the full path).
-        if cv <= version and sig is not None \
-                and not any(c <= version for c in checkpoints) \
-                and commits[:version + 1] == list(range(version + 1)) \
-                and _commit_sig(table, cv) == sig:
-            txns = dict(ctxns)
-            for v in range(cv + 1, version + 1):
-                _fold_txn_commit(table, v, txns)
-            if version > cv:
-                _txn_fold_cache[table] = (
-                    version, _commit_sig(table, version), dict(txns))
-            return txns
+    # The memo serves ONLY the checkpoint-free, fully-gapless case —
+    # the one where the full path re-reads the whole history and
+    # where its loud-gap / foreign-checkpoint contracts cannot be in
+    # play, so memoized and full behavior are identical by
+    # construction (a gap or a checkpoint falls through to the full
+    # path, a recreated table has a new key).
+    memo_key = cached = None
+    if not any(c <= version for c in checkpoints) \
+            and commits[:version + 1] == list(range(version + 1)):
+        tid = _table_id(table)
+        if tid is not None:
+            memo_key = (os.path.abspath(table), tid)
+            cached = _TXN_FOLDS.get(memo_key)
+            if cached is not MISS and cached[0] <= version:
+                cv, txns = cached[0], dict(cached[1])
+                for v in range(cv + 1, version + 1):
+                    _fold_txn_commit(table, v, txns)
+                if version > cv:
+                    _TXN_FOLDS.put(memo_key, (version, dict(txns)))
+                return txns
     txns: dict = {}
     usable = [v for v in checkpoints if v <= version]
     base = -1
@@ -1560,13 +1572,10 @@ def _txn_state(table: str, version: int | None = None,
             "JSON commits are missing and no checkpoint covers them")
     for v in tail:
         _fold_txn_commit(table, v, txns)
-    # memoize only when ``version``'s own commit file exists (its stat
-    # signature is the recreation guard); a checkpoint-only version
-    # has nothing to sign and stays uncached
-    sig = _commit_sig(table, version)
-    if sig is not None and (tail and tail[-1] == version
-                            or version in commits):
-        _txn_fold_cache[table] = (version, sig, dict(txns))
+    # a memoized fold newer than ``version`` (an older-version probe
+    # missed it) stays
+    if memo_key is not None and cached is MISS:
+        _TXN_FOLDS.put(memo_key, (version, dict(txns)))
     return txns
 
 
@@ -2153,7 +2162,7 @@ def delete_rows_delta_local(table: str, deletes: dict,
             # parquet field ids; a file without them (foreign writer)
             # would only fail inside _delete_cdc_actions, AFTER the
             # bins were written (review finding) — check the KB-scale
-            # footers now (cached per session)
+            # footers now (memoized, see _ID_LAYOUT)
             for p in deletes:
                 if not _file_id_layout(os.path.abspath(p)):
                     raise ValueError(

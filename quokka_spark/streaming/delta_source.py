@@ -258,7 +258,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         # identity (no mapping), the schema's physicalName metadata
         # (name mode), or this file's parquet field ids (id mode —
         # files may legitimately disagree on physical names; the
-        # batch reader's per-process layout cache is shared, so a
+        # batch reader's per-process layout memo is shared, so a
         # file's footer ids resolve once per executor, not per
         # micro-batch)
         data_fields = [c for c in self.fields if c not in pvals]

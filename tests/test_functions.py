@@ -370,6 +370,17 @@ def test_bench_final_query_lines_contract():
     # empty timings still yields one parseable line
     d = json.loads(bench._final_query_lines({})[0])
     assert d["queries"] == {} and d["n"] == 1
+    # multi-digit chunk indexes and counts (>=10 and >=100 chunks)
+    # still fit: sizing must assume the widest index, not two digits
+    for n_items, max_bytes in ((60, 130), (600, 120)):
+        many = {f"q{i:04d}": 1.0 + i / 1000 for i in range(n_items)}
+        lines = bench._final_query_lines(many, max_bytes=max_bytes)
+        assert len(lines) >= 10
+        assert all(len(ln) <= max_bytes for ln in lines)
+        merged = {}
+        for ln in lines:
+            merged.update(json.loads(ln)["queries"])
+        assert merged == many
 
 
 def test_listing_threshold_scheme_aware(spark, monkeypatch):
