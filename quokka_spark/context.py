@@ -9,6 +9,7 @@ implements in dataset/*_readers.py is Spark-native here.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -21,44 +22,59 @@ from .session import build_spark
 from .sqldialect import duckdb_to_spark_sql
 
 
-# footer probes of read_parquet inputs, keyed by (path, stat signature)
-_NANOS_COLUMNS = Memo("context.nanos_columns", cap=256)
+# what read_parquet learned from an input's footer: (Spark-inferred
+# schema, or None for anything but a local regular file; its
+# TIMESTAMP(NANOS) columns), keyed by (path, stat signature, reader
+# options, _SCHEMA_CONFS values)
+_PARQUET_FOOTERS = Memo("context.parquet_footers", cap=256)
+
+# the SQL confs Spark 4.1's parquet schema inference reads: the eight
+# flags of ParquetToSparkSchemaConverter, then ParquetOptions' merge
+# default, the summary-file rule and the shredded-variant gate. Read
+# with one conf.get each: conf.getAll costs ~50x more.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.variant.allowReadingShredded",
+)
 
 
 def _stat_signature(path: str):
-    """(inode, size, mtime, ctime) of a local path, None when it
-    cannot be stat'ed (remote URI, glob). ctime moves on any rewrite,
-    even one that restores mtime with os.utime. A directory's
-    signature moves when entries are added, removed or renamed in,
-    not when a file inside it is rewritten in place."""
+    """(inode, size, mtime, ctime, is a regular file) of a local path,
+    None when it cannot be stat'ed (remote URI, glob). ctime moves on
+    any rewrite, even one that restores mtime with os.utime. A
+    directory's signature moves when entries are added, removed or
+    renamed in, not when a file inside it is rewritten in place."""
     try:
         st = os.stat(path.removeprefix("file://"))
     except (OSError, ValueError):
         return None
-    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns,
+            stat.S_ISREG(st.st_mode))
 
 
 def _nanos_timestamp_columns(path: str) -> list:
     """Columns stored as parquet TIMESTAMP(NANOS) (footer inspection;
     local paths only — remote stores return [] and rely on the writer
-    using µs, the common case). Memoized per (path, stat signature):
-    re-probing the footer on every read_parquet call costs a
-    filesystem round-trip per query, and a file rewritten at the same
-    path re-probes."""
-    key = (path, _stat_signature(path))
-    cols = _NANOS_COLUMNS.get(key)
-    if cols is not MISS:
-        return cols
+    using µs, the common case). read_parquet memoizes the answer in
+    ``_PARQUET_FOOTERS`` next to the inferred schema, so a file
+    rewritten at the same path re-probes."""
     try:
         import pyarrow.dataset as pads
         import pyarrow as pa
         schema = pads.dataset(path, format="parquet").schema
-        cols = [f.name for f in schema
-                if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"]
     except Exception:
-        cols = []
-    _NANOS_COLUMNS.put(key, cols)
-    return cols
+        return []
+    return [f.name for f in schema
+            if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"]
 
 
 class LocalCluster:
@@ -101,9 +117,30 @@ class QuokkaContext:
     def read_parquet(self, path: str, name_column: str | None = None,
                      **options) -> DataStream:
         """Parquet file/dir/prefix (reference df.py:413-562).
-        ``name_column`` adds the originating filename per row."""
-        df = self.spark.read.options(**options).parquet(path)
-        for c in _nanos_timestamp_columns(path):
+        ``name_column`` adds the originating filename per row.
+
+        Spark infers a parquet schema with a footer-reading job. For a
+        local regular file that job runs once: the inferred schema is
+        memoized (``_PARQUET_FOOTERS``, with the file's TIMESTAMP(NANOS)
+        columns) and a later read of the unchanged file under the same
+        options and schema confs passes it to the reader, which then
+        runs no job. Directories, globs and remote URIs let Spark
+        infer on every read."""
+        sig = _stat_signature(path)
+        key = (path, sig, tuple(sorted(options.items())),
+               tuple(self.spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+        footer = _PARQUET_FOOTERS.get(key)
+        schema = None if footer is MISS else footer[0]
+        reader = self.spark.read.options(**options)
+        df = (reader if schema is None else reader.schema(schema)).parquet(path)
+        if footer is MISS:
+            # a copy: df.schema is the caller's, and StructType.add
+            # mutates in place
+            schema = (T.StructType.fromJson(df.schema.jsonValue())
+                      if sig is not None and sig[-1] else None)
+            footer = (schema, _nanos_timestamp_columns(path))
+            _PARQUET_FOOTERS.put(key, footer)
+        for c in footer[1]:
             # nanosAsLong read the column as int64 nanos; restore a
             # timestamp (µs truncation — matches DuckDB/Arrow semantics)
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

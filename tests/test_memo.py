@@ -1,20 +1,24 @@
 """The one driver-side cache policy (quokka_spark/memo.py).
 
 Every driver cache is a bounded LRU ``Memo`` whose key names what the
-value depends on: a file's stat signature for parquet footer probes,
-the table's identity (commit 0's ``metaData.id``) for the Delta sink
-handshake's txn fold. Pinned here: the memo's own semantics, the two
-stale results the old ad-hoc caches returned (a parquet file rewritten
-at the same path; a Delta log rewritten in place with restored
-inodes, sizes and mtimes), the fold's older-probe rule, the cap under
-a many-table soak, and an ast guard that keeps new module-level dict
-caches and functools caches out of the package.
+value depends on: for read_parquet's footer entries (inferred schema
+and TIMESTAMP(NANOS) columns) the file's stat signature, the reader
+options and the schema confs; for the Delta sink handshake's txn fold
+the table's identity (commit 0's ``metaData.id``). Pinned here: the
+memo's own semantics, the two stale results the old ad-hoc caches
+returned (a parquet file rewritten at the same path; a Delta log
+rewritten in place with restored inodes, sizes and mtimes), the
+re-read of an unchanged parquet file that runs no inference job, the
+fold's older-probe rule, the cap under a many-table soak, and an ast
+guard that keeps new module-level dict caches and functools caches
+out of the package.
 """
 import ast
 import os
 import pathlib
 import sys
 import threading
+import uuid
 
 import pytest
 
@@ -112,6 +116,99 @@ def test_read_parquet_rewritten_file_reprobes_nanos_columns(qc, tmp_path):
     assert dtype == "timestamp"
     write("ns")
     assert read() == ("timestamp", micros)
+
+
+def _jobs_run_by(spark, fn):
+    """(fn(), ids of the Spark jobs it ran), counted by job group once
+    the listener bus has delivered every job start."""
+    sc = spark.sparkContext
+    group = f"read_parquet_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_parquet probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _footer_hits():
+    from quokka_spark import memo
+    return memo.stats().get("context.parquet_footers", {}).get("hits")
+
+
+def test_read_parquet_reread_runs_no_inference_job(spark, qc, tmp_path):
+    """The first read of a local file lets Spark infer the schema (a
+    footer-reading job); a re-read of the unchanged file hits the
+    footer memo and hands Spark that schema, so it runs no job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3], "s": ["a", "b", "c"]}), p)
+    first, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(p).df)
+    assert jobs, "the first read should infer the schema with a job"
+    hits = _footer_hits()
+    again, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(p).df)
+    assert jobs == []
+    assert again.schema == first.schema
+    assert _footer_hits() == hits + 1
+    assert sorted(again.collect()) == sorted(first.collect())
+    # the memo holds its own copy: a caller's in-place edit of a
+    # returned schema (StructType.add) must not reach later reads
+    first.schema.add("not_in_file", "integer")
+    assert qc.read_parquet(p).df.columns == ["id", "s"]
+
+
+def test_read_parquet_schema_memo_follows_file_and_confs(spark, qc,
+                                                        tmp_path):
+    """The memoized schema is only reused for the same bytes under the
+    same schema confs: a rewrite with an extra column (mtime restored)
+    shows the column, binaryAsString flips a binary column's type both
+    ways, and directory and glob reads still infer with a job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), p)
+    assert qc.read_parquet(p).df.columns == ["id"]
+    mtime = os.stat(p).st_mtime_ns
+    pq.write_table(pa.table({"id": [1, 2], "extra": [3.0, 4.0]}), p)
+    os.utime(p, ns=(mtime, mtime))
+    df = qc.read_parquet(p).df
+    assert df.columns == ["id", "extra"]
+    assert sorted(r["extra"] for r in df.collect()) == [3.0, 4.0]
+
+    b = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"payload": pa.array([b"x", b"y"],
+                                                 pa.binary())}), b)
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key, None)
+
+    def payload_type():
+        return dict(qc.read_parquet(b).df.dtypes)["payload"]
+
+    try:
+        spark.conf.set(key, "false")
+        assert payload_type() == "binary"
+        spark.conf.set(key, "true")
+        assert payload_type() == "string"
+        spark.conf.set(key, "false")
+        assert payload_type() == "binary"
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    pq.write_table(pa.table({"id": [1, 2]}), str(d / "part-0.parquet"))
+    for path in (str(d), str(d / "*.parquet")):
+        qc.read_parquet(path)
+        df, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(path).df)
+        assert jobs, f"{path}: a re-read should still infer with a job"
+        assert df.columns == ["id"]
 
 
 # ----------------------------------------------------------------------
@@ -270,7 +367,7 @@ def test_every_memo_is_capped():
     from quokka_spark import memo
 
     stats = memo.stats()
-    for name in ("context.nanos_columns", "delta.id_layout",
+    for name in ("context.parquet_footers", "delta.id_layout",
                  "delta.checkpoint_interval", "delta.txn_folds",
                  "windows.bucket_decisions", "windows.hot_key_decisions",
                  "dedup.embedding_broadcasts"):
