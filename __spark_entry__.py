@@ -7522,9 +7522,9 @@ def src_iceberg_refs(spark, sf_dir):
     References; iceberg_local.set_iceberg_ref / snapshot_for_ref):
     supplier loads in two snapshots (low keys, then the rest); a TAG
     pins the first; read_iceberg(ref=) must serve exactly the tagged
-    snapshot's rows even after a later rebuild commit (a position
-    delete against the CURRENT snapshot) — refs survive the rebuild
-    and time travel to the tag ignores the later delete."""
+    snapshot's rows even after a later commit (a position delete
+    against the CURRENT snapshot) — refs survive the commit and time
+    travel to the tag ignores the later delete."""
     import os
     import tempfile
 
@@ -7560,7 +7560,7 @@ def src_iceberg_refs(spark, sf_dir):
                            (3, "s_acctbal", "double")])
         append_snapshot(tbl, [hi])
         set_iceberg_ref(tbl, "v1", s1, kind="tag")
-        # later rebuild commit: deletes the first row of lo from the
+        # later commit: deletes the first row of lo from the
         # CURRENT snapshot — the tag must still see it
         add_position_deletes(tbl, {lo: [0]})
         with open(done, "w") as fh:
@@ -7590,7 +7590,7 @@ def src_iceberg_lineage(spark, sf_dir):
     key-sorted so each row's position is its key rank; a v3 DELETION
     VECTOR then kills the even c_custkey % 7 = 0 rows — survivors
     must keep their ORIGINAL row ids (lineage is stable under
-    deletes and the DV rebuild commit). Aggregates sum the lineage
+    deletes and the DV commit). Aggregates sum the lineage
     columns per key group so any renumbering or seq drift
     hash-mismatches."""
     import os

@@ -1631,65 +1631,136 @@ def _manifest_entry_schema(partition_spec: list | None) -> dict:
     return sch
 
 
+def _manifest_entry(item, content: int, sid: int, first_row_id=None,
+                    record_count: int = 0) -> dict:
+    """One ADDED manifest entry for a file item: a plain path, or a
+    dict with ``path`` and optional ``seq`` (the entry's data
+    sequence number, default ``sid`` — carried files keep theirs so
+    equality-delete scoping holds), ``partition`` (raw avro values),
+    ``lower_bounds``/``upper_bounds`` (``{field-id: bytes}``) and
+    ``equality_ids``. A deletion-vector dict also carries
+    ``referenced_data_file``/``content_offset``/
+    ``content_size_in_bytes`` and becomes a PUFFIN entry."""
+    d = item if isinstance(item, dict) else {"path": item}
+
+    def kv(m):
+        return ([{"key": int(k), "value": v}
+                 for k, v in sorted(_bounds_map(m).items())]
+                if m else None)
+    f = {"content": content, "file_path": d["path"],
+         "file_format": "PARQUET", "record_count": int(record_count or 0),
+         "file_size_in_bytes": os.path.getsize(_local(d["path"])),
+         "partition": d.get("partition"), "first_row_id": first_row_id,
+         "lower_bounds": kv(d.get("lower_bounds")),
+         "upper_bounds": kv(d.get("upper_bounds")),
+         "equality_ids": ([int(x) for x in d["equality_ids"]]
+                          if d.get("equality_ids") else None)}
+    if "referenced_data_file" in d:
+        f.update({"file_format": "PUFFIN",
+                  "referenced_data_file": d["referenced_data_file"],
+                  "content_offset": int(d["content_offset"]),
+                  "content_size_in_bytes": int(d["content_size_in_bytes"])})
+    return {"status": 1, "snapshot_id": d.get("seq") or sid, "data_file": f}
+
+
+def _row_range(item, next_row_id: int) -> tuple:
+    """v3 row lineage of one data item (spec §Row Lineage):
+    ``(first_row_id, record_count, advanced next-row-id)``. An item
+    carrying an explicit ``first_row_id`` (and ``record_count``) keeps
+    it; any other takes the next range. The count defaults to the
+    parquet footer's — one KB read per file."""
+    d = item if isinstance(item, dict) else {"path": item}
+    rc = d.get("record_count")
+    if not rc:
+        import pyarrow.parquet as _pq
+        rc = _pq.ParquetFile(_local(d["path"])).metadata.num_rows
+    rc = int(rc)
+    if d.get("first_row_id") is None:
+        return next_row_id, rc, next_row_id + rc
+    frid = int(d["first_row_id"])
+    return frid, rc, max(next_row_id, frid + rc)
+
+
+def _write_manifest(path: str, entry_schema: dict, spec_id: int,
+                    entries: list, content: int, sid: int,
+                    first_row_id=None) -> dict:
+    """Write one manifest; returns its manifest-list row."""
+    from .avro_lite import write_container
+    write_container(path, entry_schema, entries,
+                    extra_meta={"partition-spec-id": spec_id})
+    return {"manifest_path": path, "manifest_length": os.path.getsize(path),
+            "partition_spec_id": spec_id, "content": content,
+            "added_snapshot_id": sid, "first_row_id": first_row_id}
+
+
+def _copy_manifest(row: dict, mmeta: dict, entries: list,
+                   path: str) -> dict:
+    """Write ``entries`` as a copy of the manifest of list ``row``
+    (same avro schema and header) under the NEW file ``path``; the
+    original, which older snapshots still list, is left as it is.
+    Returns the copy's manifest-list row."""
+    from .avro_lite import write_container
+    write_container(path, json.loads(mmeta["avro.schema"]), entries,
+                    extra_meta={k: v for k, v in mmeta.items()
+                                if not k.startswith("avro.")})
+    return {**row, "manifest_path": path,
+            "manifest_length": os.path.getsize(path)}
+
+
 def create_local_iceberg_table(table_dir: str, snapshots: list,
                                schema_fields: list | None = None,
                                partition_spec: list | None = None,
                                collect_bounds: list | None = None,
                                partition_specs: list | None = None,
                                default_spec_id: int | None = None,
-                               min_last_column_id: int = 0,
                                meta_extra: dict | None = None,
                                format_version: int | None = None
                                ) -> list[int]:
-    """Write a spec-shaped Iceberg v2 table whose snapshot N contains
-    ``snapshots[N]`` — either a plain list of parquet data-file paths,
-    or a dict ``{"data": [...], "deletes": [...], "eq_deletes":
-    [...], "dvs": [...]}`` where ``deletes`` are position-delete
-    parquet files (columns file_path, pos), ``eq_deletes`` are
-    ``{"path": ..., "equality_ids": [...], "seq": N}``
-    equality-delete parquet files (``seq`` defaults to the snapshot
-    that introduces them; existing files keep their original seq when
-    carried forward by commit_snapshot), and ``dvs`` (round 11) are
-    v3 deletion-vector dicts ``{"path", "referenced_data_file",
-    "content_offset", "content_size_in_bytes"}`` — any dvs stamp the
-    table format-version 3. Files are referenced in place, not
+    """Write a NEW spec-shaped Iceberg table (fixtures, snapshotting
+    existing parquet into a time-travelable layout, and the first
+    commit of commit_snapshot) whose snapshot N (1-based id) contains
+    ``snapshots[N-1]`` — either a plain list of parquet data-file
+    paths, or a dict ``{"data": [...], "deletes": [...],
+    "eq_deletes": [...], "dvs": [...]}``. Every snapshot gets ONE
+    data manifest listing all its data files, plus one delete
+    manifest when it has deletes. Files are referenced in place, not
     copied — KB of metadata around existing data.
-    ``format_version`` (round 12) pins the stamped version explicitly
-    — rebuild commits pass the SOURCE table's version so a v3 table
-    whose current snapshot happens to carry no DVs is never
-    downgraded to v2 (which would also drop v3-only metadata).
-    Format-version 3 tables get spec §Row Lineage metadata: every
-    data file is assigned a stable ``first_row_id`` range (explicit
-    per entry, so rebuilds never renumber a file), snapshots carry
-    ``first-row-id``, manifest-list rows ``first_row_id``, data
-    entries their REAL parquet ``record_count`` (the inheritance
-    arithmetic foreign readers run), and the table metadata the
-    advancing ``next-row-id`` mark. A ``next-row-id`` in
-    ``meta_extra`` (carried from a rebuilt table) seeds the
-    allocation so new files continue past the source's mark; spec
-    dict items may carry ``first_row_id``/``record_count`` to keep
-    prior assignments (snapshot_files_full returns them).
+    Items (see _manifest_entry): data files are paths or ``{"path",
+    "seq"?, "partition"?}`` (``seq``: the data sequence number of a
+    file carried from an earlier snapshot, default this snapshot);
+    ``deletes`` are position-delete parquet paths (columns file_path,
+    pos); ``eq_deletes`` are ``{"path", "equality_ids", "seq"?}``
+    equality-delete parquet files; ``dvs`` are v3 deletion-vector
+    dicts ``{"path", "referenced_data_file", "content_offset",
+    "content_size_in_bytes"}``. A snapshot dict may also carry
+    ``operation``, ``summary_extra`` and ``timestamp_ms``.
+    ``format_version`` defaults to 3 when any snapshot carries DVs,
+    else 2. Format-version 3 tables get spec §Row Lineage metadata:
+    each data file gets an explicit ``first_row_id`` range on first
+    appearance (reused when carried) and its real ``record_count``,
+    snapshots ``first-row-id``, data manifest-list rows
+    ``first_row_id``, and the table the ``next-row-id`` mark.
     ``schema_fields``: optional ``[(field_id, name)]`` or
     ``[(field_id, name, iceberg_type)]`` embedded as the table schema
     so equality_ids and partition types resolve.
     ``partition_spec``: optional ``[{"name", "type", "source-id"?,
-    "transform"?}]`` — data spec items then carry their manifest
-    partition values as ``{"path", "partition": {name: value}}``
-    (raw avro single-value encoding: dates as int days).
+    "transform"?}]`` — data items then carry their manifest partition
+    values as ``{"path", "partition": {name: value}}`` (raw avro
+    single-value encoding: dates as int days).
     ``collect_bounds``: optional column names whose per-file min/max
     are read from the parquet FOOTER statistics and written into the
     manifests as lower_bounds/upper_bounds (requires typed
     ``schema_fields``) — what a real writer records, enabling
-    scan_filter file skipping. Spec items may instead carry explicit
-    ``{"lower_bounds": {fid: bytes}, "upper_bounds": ...}``.
+    scan_filter file skipping.
     ``partition_specs``: optional MULTI-SPEC table (partition-spec
     evolution) — ``[{"spec-id": N, "fields": [same shape as
     partition_spec]}]``; snapshot dicts may then carry ``"spec_id"``
     to write that snapshot's manifest under a non-default spec
     (manifest-list field 502 records it). ``default_spec_id``
     defaults to the LAST spec's id (the evolved spec, like a real
-    table).
-    Returns the snapshot ids (1-based)."""
+    table). ``meta_extra``: extra top-level metadata keys (refs,
+    properties, table-uuid, ...).
+    Returns the snapshot ids."""
     from .avro_lite import write_container
     meta_dir = os.path.join(_local(table_dir), "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -1714,15 +1785,9 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
             raise ValueError(
                 f"collect_bounds columns {missing} not in schema_fields")
         wanted_bounds = {c: by_name[c] for c in collect_bounds}
-    bounds_cache: dict = {}
-
-    def bounds_of(path):
-        if path not in bounds_cache:
-            bounds_cache[path] = _footer_bounds(path, wanted_bounds)
-        return bounds_cache[path]
-
-    any_dvs = any(isinstance(s, dict) and s.get("dvs")
-                  for s in snapshots)
+    snapshots = [s if isinstance(s, dict) else {"data": s}
+                 for s in snapshots]
+    any_dvs = any(s.get("dvs") for s in snapshots)
     if format_version is None:
         # deletion vectors are a format-version 3 feature — a
         # v2-stamped table carrying them would make spec-compliant v2
@@ -1741,171 +1806,61 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
                 "deletion vectors require format-version 3 — a "
                 f"v{fv}-stamped table carrying them would resurrect "
                 "deleted rows under spec-compliant readers")
-    meta_extra = dict(meta_extra or {})
-    # v3 row lineage allocation: continue past a carried mark
-    next_row_id = int(meta_extra.pop("next-row-id", 0) or 0)
+    next_row_id = 0
     lineage_ids: dict = {}    # normalized path → (first_row_id, rows)
-    rows_cache: dict = {}
+    bounds_cache: dict = {}
 
-    def rows_of(path) -> int:
-        lp = _local(path)
-        if lp not in rows_cache:
-            import pyarrow.parquet as _pq
-            rows_cache[lp] = int(_pq.ParquetFile(lp).metadata.num_rows)
-        return rows_cache[lp]
-
-    def lineage_of(spec_item) -> tuple:
-        """(first_row_id, record_count) for a data spec item —
-        first appearance assigns the next range, later appearances
-        (carried-forward files) reuse it, explicit carries win."""
+    def data_entry(item, sid):
         nonlocal next_row_id
-        path = (spec_item["path"] if isinstance(spec_item, dict)
-                else spec_item)
-        key = _py_norm(_local(path))
-        if key not in lineage_ids:
-            rc = (spec_item.get("record_count")
-                  if isinstance(spec_item, dict) else None)
-            rc = int(rc) if rc else rows_of(path)
-            explicit = (spec_item.get("first_row_id")
-                        if isinstance(spec_item, dict) else None)
-            if explicit is not None:
-                lineage_ids[key] = (int(explicit), rc)
-                next_row_id = max(next_row_id, int(explicit) + rc)
-            else:
-                lineage_ids[key] = (next_row_id, rc)
-                next_row_id += rc
-        return lineage_ids[key]
+        d = item if isinstance(item, dict) else {"path": item}
+        if wanted_bounds and not (d.get("lower_bounds")
+                                  or d.get("upper_bounds")):
+            if d["path"] not in bounds_cache:
+                bounds_cache[d["path"]] = _footer_bounds(d["path"],
+                                                         wanted_bounds)
+            lo, hi = bounds_cache[d["path"]]
+            d = {**d, "lower_bounds": lo, "upper_bounds": hi}
+        frid, rc = None, 0
+        if fv >= 3:
+            key = _py_norm(_local(d["path"]))
+            if key not in lineage_ids:
+                frid, rc, next_row_id = _row_range(d, next_row_id)
+                lineage_ids[key] = (frid, rc)
+            frid, rc = lineage_ids[key]
+        return _manifest_entry(d, 0, sid, frid, rc)
 
     snap_entries = []
-    last_sid = 0
-    for i, spec in enumerate(snapshots, start=1):
-        operation = "append"
-        if isinstance(spec, dict):
-            files, dels = spec.get("data", []), spec.get("deletes", [])
-            eq_dels = spec.get("eq_deletes", [])
-            dv_items = spec.get("dvs", [])
-            operation = spec.get("operation") or "append"
-            # explicit id: commit_snapshot preserves ORIGINAL snapshot
-            # ids/sequence numbers across rebuilds — after
-            # expire_snapshots_local, positional renumbering would
-            # shift new data files BELOW carried equality deletes'
-            # seq and wrongly delete their rows
-            sid = int(spec.get("snapshot_id") or max(i, last_sid + 1))
-        else:
-            files, dels, eq_dels, dv_items = spec, [], [], []
-            sid = max(i, last_sid + 1)
-        if sid <= last_sid:
-            raise ValueError(
-                f"snapshot ids must be increasing: {sid} after {last_sid}")
-        last_sid = sid
-
-        def entry(p, content, equality_ids=None, seq=None,
-                  partition=None, lower=None, upper=None,
-                  first_row_id=None, record_count=0):
-            def kv(m):
-                if not m:
-                    return None
-                return [{"key": int(k), "value": v}
-                        for k, v in sorted(_bounds_map(m).items())]
-            return {"status": 1, "snapshot_id": seq or sid, "data_file": {
-                "content": content, "file_path": p,
-                "file_format": "PARQUET",
-                "record_count": int(record_count or 0),
-                "file_size_in_bytes": os.path.getsize(_local(p)),
-                "partition": partition,
-                "first_row_id": first_row_id,
-                "lower_bounds": kv(lower), "upper_bounds": kv(upper),
-                "equality_ids": ([int(x) for x in equality_ids]
-                                 if equality_ids else None)}}
-
-        def data_entry(spec_item):
-            # plain path (seq = this snapshot) or {"path", "seq",
-            # "partition", "lower_bounds"/"upper_bounds"} —
-            # carried-forward files keep their ORIGINAL sequence so
-            # equality-delete scoping stays correct across commits,
-            # plus their partition values and column bounds. On v3
-            # tables every data entry carries its EXPLICIT row-id
-            # range and real record_count (spec §Row Lineage)
-            frid, rc = lineage_of(spec_item) if fv >= 3 else (None, 0)
-            if isinstance(spec_item, dict):
-                lo = spec_item.get("lower_bounds")
-                hi = spec_item.get("upper_bounds")
-                if wanted_bounds and not (lo or hi):
-                    lo, hi = bounds_of(spec_item["path"])
-                return entry(spec_item["path"], 0,
-                             seq=spec_item.get("seq"),
-                             partition=spec_item.get("partition"),
-                             lower=lo, upper=hi,
-                             first_row_id=frid, record_count=rc)
-            lo, hi = bounds_of(spec_item) if wanted_bounds else (None, None)
-            return entry(spec_item, 0, lower=lo, upper=hi,
-                         first_row_id=frid, record_count=rc)
-
-        snap_spec = (int(spec.get("spec_id", default_sid))
-                     if isinstance(spec, dict) else default_sid)
+    for sid, spec in enumerate(snapshots, start=1):
+        snap_spec = int(spec.get("spec_id", default_sid))
         entry_schema = entry_schemas.get(snap_spec)
         if entry_schema is None:
             raise ValueError(
-                f"snapshot {i}: spec_id {snap_spec} not among the "
+                f"snapshot {sid}: spec_id {snap_spec} not among the "
                 f"declared partition_specs {sorted(entry_schemas)}")
-        manifest = os.path.join(meta_dir, f"manifest-{sid}.avro")
-        # a rebuilt snapshot keeps its HISTORICAL first-row-id
-        # (review finding: stamping the carried next-row-id seed on
-        # prior snapshots would record e.g. first-row-id 15 on the
-        # snapshot that assigned rows 0..14 — spec-wrong metadata a
-        # foreign reader may use as an inheritance base)
-        snap_first = None
-        if fv >= 3:
-            carried = (spec.get("first_row_id")
-                       if isinstance(spec, dict) else None)
-            snap_first = (int(carried) if carried is not None
-                          else next_row_id)
-        write_container(manifest, entry_schema,
-                        [data_entry(p) for p in files],
-                        extra_meta={"partition-spec-id": snap_spec})
-        mlist_rows = [{"manifest_path": manifest,
-                       "manifest_length": os.path.getsize(manifest),
-                       "partition_spec_id": snap_spec, "content": 0,
-                       "added_snapshot_id": sid,
-                       "first_row_id": snap_first}]
-        if dels or eq_dels or dv_items:
-            dmanifest = os.path.join(meta_dir,
-                                     f"manifest-{sid}-deletes.avro")
-
-            def dv_entry(d):
-                e = entry(d["path"], 1, seq=d.get("seq"))
-                e["data_file"].update({
-                    "file_format": "PUFFIN",
-                    "referenced_data_file": d["referenced_data_file"],
-                    "content_offset": int(d["content_offset"]),
-                    "content_size_in_bytes":
-                        int(d["content_size_in_bytes"])})
-                return e
-
-            write_container(
-                dmanifest, entry_schema,
-                [entry(p, 1) for p in dels]
-                + [entry(d["path"], 2, d.get("equality_ids"),
-                         d.get("seq")) for d in eq_dels]
-                + [dv_entry(d) for d in dv_items])
-            mlist_rows.append({"manifest_path": dmanifest,
-                               "manifest_length": os.path.getsize(dmanifest),
-                               "partition_spec_id": snap_spec, "content": 1,
-                               "added_snapshot_id": sid})
+        snap_first = next_row_id if fv >= 3 else None
+        rows = [_write_manifest(
+            os.path.join(meta_dir, f"manifest-{sid}.avro"), entry_schema,
+            snap_spec, [data_entry(p, sid) for p in spec.get("data", [])],
+            0, sid, snap_first)]
+        dels = ([_manifest_entry(p, 1, sid) for p in spec.get("deletes", [])]
+                + [_manifest_entry(d, 2, sid)
+                   for d in spec.get("eq_deletes", [])]
+                + [_manifest_entry(d, 1, sid) for d in spec.get("dvs", [])])
+        if dels:
+            rows.append(_write_manifest(
+                os.path.join(meta_dir, f"manifest-{sid}-deletes.avro"),
+                entry_schema, snap_spec, dels, 1, sid))
         mlist = os.path.join(meta_dir, f"snap-{sid}.avro")
-        write_container(mlist, _MANIFEST_FILE_SCHEMA, mlist_rows)
-        summary = {"operation": operation}
-        if isinstance(spec, dict) and spec.get("summary_extra"):
-            summary.update(spec["summary_extra"])
-        ts_ms = (int(spec.get("timestamp_ms", 0))
-                 if isinstance(spec, dict) else 0)
+        write_container(mlist, _MANIFEST_FILE_SCHEMA, rows)
+        summary = {"operation": spec.get("operation") or "append"}
+        summary.update(spec.get("summary_extra") or {})
         snap_entry = {"snapshot-id": sid, "sequence-number": sid,
-                      "timestamp-ms": ts_ms, "manifest-list": mlist,
-                      "summary": summary}
+                      "timestamp-ms": int(spec.get("timestamp_ms", 0)),
+                      "manifest-list": mlist, "summary": summary}
         if snap_first is not None:
             snap_entry["first-row-id"] = snap_first
         snap_entries.append(snap_entry)
-    n = last_sid or len(snapshots)
+    n = len(snapshots)
     schemas = []
     if schema_fields:
         schemas = [{"schema-id": 0, "type": "struct",
@@ -1936,24 +1891,14 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
             "default-spec-id": default_sid,
             "partition-specs": meta_specs,
             # spec-required allocation high-water mark: later writers
-            # (incl. real Iceberg) must never reuse a retired id.
-            # min_last_column_id carries a FOREIGN table's persisted
-            # mark through rebuild commits (review finding: a
-            # non-evolving rebuild recomputing purely from the schema
-            # would regress the mark below retired ids)
-            "last-column-id": max(
-                [int(min_last_column_id)]
-                + [int(f["id"]) for s in schemas
-                   for f in s.get("fields", []) if "id" in f])}
+            # (incl. real Iceberg) must never reuse a retired id
+            "last-column-id": max([0] + [int(f["id"]) for s in schemas
+                                         for f in s.get("fields", [])])}
     if fv >= 3:
         # spec §Row Lineage: the table-level allocation high-water
         # mark — later writers assign ids from here
         meta["next-row-id"] = next_row_id
-    if meta_extra:
-        # rebuild-surviving metadata the snapshot specs don't encode
-        # (e.g. the refs map — dropping it on every commit would
-        # silently delete the table's branches and tags)
-        meta.update(meta_extra)
+    meta.update(meta_extra or {})
     # shared publish: next non-colliding v<N>.metadata.json +
     # version-hint (readers follow the hint, so N is opaque)
     _publish_metadata(meta_dir, meta)
@@ -1966,10 +1911,11 @@ def append_snapshot(table_dir: str, new_files: list[str]) -> int:
     live file of the current snapshot plus ``new_files`` — Iceberg
     append semantics. Returns the new snapshot id.
 
-    Metadata-only: rewrites KB of manifests; data files are referenced
-    in place. Driver-side by design — a real catalog commit is also a
-    single-writer metadata swap; concurrent writers need a catalog
-    (the jar path), not this."""
+    Metadata-only: writes one manifest, one manifest list that extends
+    the current one, and one metadata JSON (commit_snapshot); data
+    files are referenced in place. Driver-side by design — a real
+    catalog commit is also a single-writer metadata swap; concurrent
+    writers need a catalog (the jar path), not this."""
     return commit_snapshot(table_dir, add_files=list(new_files))
 
 
@@ -1984,51 +1930,20 @@ _SPARK_TO_ICEBERG = {
 }
 
 
-def _evolved_schema_fields(schema_fields, df, floor_id: int = 0):
-    """schema_fields triples extended with ``df``'s NEW columns
-    (fresh field ids) — the write-side half of schema evolution.
-    Best-effort by design: unmappable Spark types and name collisions
-    with a different declared type are skipped, never raised — the
-    read side only applies the table schema when it matches the
-    files' physical types (_table_read_schema), so a skipped
-    evolution degrades to inference, not to wrong answers.
-    ``floor_id``: lowest id NOT to allocate below (the table's
-    last-column-id) — without it, a column dropped by a foreign
-    writer would get its retired id reused and old files' dead
-    values served as the new column."""
-    if df is None:
-        return schema_fields
-    out = list(schema_fields or [])
-    existing = {t[1] for t in out}
-    next_fid = max([int(t[0]) for t in out] + [int(floor_id)],
-                   default=0) + 1
-    for f in df.schema.fields:
-        if f.name in existing:
-            continue
-        it = _SPARK_TO_ICEBERG.get(f.dataType.simpleString())
-        if it is None:
-            continue
-        out.append((next_fid, f.name, it))
-        next_fid += 1
-    return out or None
-
-
 def _evolve_meta_schema(meta: dict, df) -> None:
-    """Schema evolution on the EXTEND path (multi-spec tables, round
-    10): append a NEW schema entry (fresh schema-id) consisting of
-    the current fields plus ``df``'s new columns under fresh field
-    ids, and point current-schema-id at it — the spec's add-column
-    evolution shape (prior schemas stay listed; older files null-fill
-    the new columns at read time). Best-effort exactly like
-    _evolved_schema_fields: unmappable Spark types are skipped, never
-    raised. In-place on ``meta``; the caller publishes."""
+    """Write-side schema evolution, the spec's add-column shape:
+    append a NEW schema entry (fresh schema-id) consisting of the
+    current fields plus ``df``'s new columns under fresh field ids,
+    and point current-schema-id at it (prior schemas stay listed;
+    older files null-fill the new columns at read time). A table
+    without a schema gets schema 0 holding ``df``'s columns.
+    Best-effort by design: unmappable Spark types are skipped, never
+    raised — the read side only applies the table schema when it
+    matches the files' physical types (_table_read_schema), so a
+    skipped evolution degrades to inference, not to wrong answers.
+    In-place on ``meta``; the caller publishes."""
     schemas = meta.get("schemas") or []
-    if not schemas:
-        return                # minimal fixture — no schema to evolve
-    cur_id = meta.get("current-schema-id")
-    cur = next((s for s in schemas if s.get("schema-id") == cur_id),
-               schemas[0])
-    fields = list(cur.get("fields", []))
+    fields = list(_current_schema(meta).get("fields", []))
     existing = {f.get("name") for f in fields}
     # fresh ids start past last-column-id AND every id across ALL
     # listed schemas, not just the current one: on a foreign table
@@ -2052,7 +1967,8 @@ def _evolve_meta_schema(meta: dict, df) -> None:
         next_fid += 1
     if not added:
         return
-    new_sid = max(int(s.get("schema-id") or 0) for s in schemas) + 1
+    new_sid = 1 + max((int(s.get("schema-id") or 0) for s in schemas),
+                      default=-1)
     meta["schemas"] = schemas + [
         {"schema-id": new_sid, "type": "struct",
          "fields": fields + added}]
@@ -2074,187 +1990,102 @@ def _publish_metadata(meta_dir: str, meta: dict) -> int:
     return nv
 
 
-def _append_snapshot_fast(table_dir: str, add_files: list, meta: dict,
-                          summary_extra: dict | None = None) -> int:
-    """O(1) APPEND commit — real Iceberg's append shape: write ONE
-    new manifest for the added files, a new manifest LIST that is the
-    current list's rows plus the new row, and a new metadata JSON
-    with the snapshot appended. No prior manifest is read or
-    rewritten, so a long-running streaming sink stays metadata-class
-    per batch instead of O(history). Only for unpartitioned
-    single-spec tables with no schema change and data-file adds only
-    — commit_snapshot routes here and falls back to the general
-    rebuild otherwise."""
-    from .avro_lite import read_container, write_container
-    tdir = _local(table_dir)
-    meta_dir = os.path.join(tdir, "metadata")
-    snaps = meta.get("snapshots", [])
-    cur = snaps[-1]
-    new_id = 1 + max(int(s["snapshot-id"]) for s in snaps)
-    entry_schema = _manifest_entry_schema(None)
-    # v3 row lineage (spec): the O(1) append still assigns each new
-    # file its explicit row-id range off the table's next-row-id mark
-    # — one footer read per ADDED file, never per history
-    fv = int(meta.get("format-version") or 1)
-    frid_base = int(meta.get("next-row-id") or 0) if fv >= 3 else None
-    running = frid_base or 0
-    entries = []
-    for p in add_files:
-        rc = 0
-        frid = None
-        if frid_base is not None:
-            import pyarrow.parquet as _pq
-            rc = int(_pq.ParquetFile(_local(p)).metadata.num_rows)
-            frid = running
-            running += rc
-        entries.append({"status": 1, "snapshot_id": new_id,
-                        "data_file": {
-            "content": 0, "file_path": p, "file_format": "PARQUET",
-            "record_count": rc,
-            "file_size_in_bytes": os.path.getsize(_local(p)),
-            "partition": None, "first_row_id": frid,
-            "lower_bounds": None, "upper_bounds": None,
-            "equality_ids": None}})
-    manifest = os.path.join(meta_dir, f"manifest-{new_id}.avro")
-    write_container(manifest, entry_schema, entries)
-    _, prior_rows = read_container(_local(cur["manifest-list"]))
-    mlist = os.path.join(meta_dir, f"snap-{new_id}.avro")
-    write_container(mlist, _MANIFEST_FILE_SCHEMA, prior_rows + [
-        {"manifest_path": manifest,
-         "manifest_length": os.path.getsize(manifest),
-         "partition_spec_id": int(meta.get("default-spec-id", 0)),
-         "content": 0, "added_snapshot_id": new_id,
-         "first_row_id": frid_base}])
-    ts_ms = max(int(time.time() * 1000),
-                max((int(s.get("timestamp-ms") or 0) for s in snaps),
-                    default=0))
-    summary = {"operation": "append"}
-    if summary_extra:
-        summary.update({str(k): str(v)
-                        for k, v in summary_extra.items()})
-    new_snap = {"snapshot-id": new_id, "sequence-number": new_id,
-                "timestamp-ms": ts_ms, "manifest-list": mlist,
-                "summary": summary}
-    if frid_base is not None:
-        new_snap["first-row-id"] = frid_base
-        meta["next-row-id"] = running
-    snaps.append(new_snap)
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = new_id
+def _publish_snapshot(table_dir: str, meta: dict, sid: int, mlist: str,
+                      summary: dict, first_row_id=None) -> int:
+    """Append snapshot ``sid`` (manifest list ``mlist``) to the
+    history, make it current and publish the metadata. The commit
+    timestamp never runs behind an earlier snapshot's, even under
+    clock skew, so timestamp time travel stays monotone."""
+    snaps = meta.get("snapshots") or []
+    snap = {"snapshot-id": sid, "sequence-number": sid,
+            "timestamp-ms": max([int(time.time() * 1000)]
+                                + [int(s.get("timestamp-ms") or 0)
+                                   for s in snaps]),
+            "manifest-list": mlist, "summary": summary}
+    if first_row_id is not None:
+        snap["first-row-id"] = first_row_id
+    meta["snapshots"] = snaps + [snap]
+    meta["current-snapshot-id"] = sid
     meta["last-sequence-number"] = max(
-        int(meta.get("last-sequence-number") or 0), new_id)
-    _publish_metadata(meta_dir, meta)
-    return new_id
+        int(meta.get("last-sequence-number") or 0), sid)
+    _publish_metadata(os.path.join(_local(table_dir), "metadata"), meta)
+    return sid
 
 
-def _extend_snapshot_multispec(table_dir: str, meta: dict,
-                               add_files: list,
-                               add_delete_files: list,
-                               add_eq_delete_files: list,
-                               replace: bool,
-                               summary_extra: dict | None) -> int:
-    """Commit on a table with EVOLVED partition specs (round 10):
-    write the NEW files' manifests under the CURRENT (default) spec
-    and reference every PRIOR manifest untouched — exactly how real
-    Iceberg commits on evolved tables. Older-spec manifests keep
-    their own partition records (the reader's per-spec grouping and
-    pruning already handle them), so nothing is re-encoded and the
-    old rebuild's null-partition corruption risk never arises. With
-    ``replace`` the new manifest list carries ONLY the new manifest
-    (the compaction shape — everything was rewritten under the
-    current spec). O(new files + prior manifest-list rows) per
-    commit."""
-    from .avro_lite import read_container, write_container
-    meta_dir = os.path.join(_local(table_dir), "metadata")
-    snaps = meta.get("snapshots", [])
-    cur = snaps[-1]
-    if "manifest-list" not in cur:
-        raise NotImplementedError(
-            "multi-spec commit over a v1 inline-manifest snapshot — "
-            "no manifest list to extend")
-    new_id = 1 + max(int(s["snapshot-id"]) for s in snaps)
-    default_sid = int(meta.get("default-spec-id", 0))
-    types = _schema_types(meta)
-    spec = _partition_spec_fields(meta)
-    spec_fields = [
-        {"name": f["name"],
-         "transform": f.get("transform", "identity"),
-         "source-id": f.get("source-id"),
-         "field-id": f.get("field-id"),
-         "type": _partition_result_type(
-             f.get("transform", "identity"),
-             types.get(int(f.get("source-id", -1)), "string"))}
-        for f in spec] if spec else None
-    entry_schema = _manifest_entry_schema(spec_fields)
+def _current_list_rows(meta: dict, snap: dict) -> list:
+    """``snap``'s manifest-list rows in the v2 list shape. A v1
+    snapshot with an inline ``manifests`` list (no manifest-list file)
+    lists those manifests as data rows; fields a v1 list may omit are
+    filled in."""
+    if "manifest-list" in snap:
+        rows = read_container(_local(snap["manifest-list"]))[1]
+    else:
+        rows = [{"manifest_path": p} for p in snap.get("manifests", [])]
+    base = {"partition_spec_id": int(meta.get("default-spec-id") or 0),
+            "content": 0, "added_snapshot_id": int(snap["snapshot-id"])}
+    out = []
+    for r in rows:
+        r = {**base, **{k: v for k, v in r.items() if v is not None}}
+        if "manifest_length" not in r:
+            r["manifest_length"] = os.path.getsize(_local(r["manifest_path"]))
+        out.append(r)
+    return out
 
-    def kv(m):
-        if not m:
-            return None
-        return [{"key": int(k), "value": v}
-                for k, v in sorted(_bounds_map(m).items())]
 
-    def entry(item, content, equality_ids=None, seq=None):
-        if isinstance(item, dict):
-            p = item["path"]
-            partition = item.get("partition")
-            lo, hi = item.get("lower_bounds"), item.get("upper_bounds")
-            equality_ids = equality_ids or item.get("equality_ids")
-            seq = seq or item.get("seq")
-        else:
-            p, partition, lo, hi = item, None, None, None
-        return {"status": 1, "snapshot_id": seq or new_id,
-                "data_file": {
-                    "content": content, "file_path": p,
-                    "file_format": "PARQUET", "record_count": 0,
-                    "file_size_in_bytes": os.path.getsize(_local(p)),
-                    "partition": partition,
-                    "lower_bounds": kv(lo), "upper_bounds": kv(hi),
-                    "equality_ids": ([int(x) for x in equality_ids]
-                                     if equality_ids else None)}}
+def _drop_superseded_dvs(rows: list, dvs: list, meta_dir: str,
+                         sid: int) -> list:
+    """Spec replacement rule: a new DV supersedes its data file's
+    earlier DV (carrying both would double-apply one and break the
+    one-DV-per-file rule). Each delete manifest holding a superseded
+    DV is copied under a new name without it (dropped when nothing
+    else is left); every other manifest is listed as it is."""
+    refs = {_py_norm(_local(d["referenced_data_file"])) for d in dvs}
 
-    mlist_rows = ([] if replace else
-                  list(read_container(_local(cur["manifest-list"]))[1]))
-    if add_files:
-        manifest = os.path.join(meta_dir, f"manifest-{new_id}.avro")
-        write_container(manifest, entry_schema,
-                        [entry(p, 0) for p in add_files],
-                        extra_meta={"partition-spec-id": default_sid})
-        mlist_rows.append({"manifest_path": manifest,
-                           "manifest_length": os.path.getsize(manifest),
-                           "partition_spec_id": default_sid,
-                           "content": 0, "added_snapshot_id": new_id})
-    if add_delete_files or add_eq_delete_files:
-        dmanifest = os.path.join(meta_dir,
-                                 f"manifest-{new_id}-deletes.avro")
-        write_container(
-            dmanifest, entry_schema,
-            [entry(p, 1) for p in add_delete_files]
-            + [entry(d, 2) for d in add_eq_delete_files],
-            extra_meta={"partition-spec-id": default_sid})
-        mlist_rows.append({"manifest_path": dmanifest,
-                           "manifest_length": os.path.getsize(dmanifest),
-                           "partition_spec_id": default_sid,
-                           "content": 1, "added_snapshot_id": new_id})
-    mlist = os.path.join(meta_dir, f"snap-{new_id}.avro")
-    write_container(mlist, _MANIFEST_FILE_SCHEMA, mlist_rows)
-    summary = {"operation": (
-        "replace" if replace
-        else "overwrite" if (add_delete_files or add_eq_delete_files)
-        else "append")}
-    if summary_extra:
-        summary.update({str(k): str(v) for k, v in summary_extra.items()})
-    ts_ms = max(int(time.time() * 1000),
-                max((int(s.get("timestamp-ms") or 0) for s in snaps),
-                    default=0))
-    snaps.append({"snapshot-id": new_id, "sequence-number": new_id,
-                  "timestamp-ms": ts_ms, "manifest-list": mlist,
-                  "summary": summary})
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = new_id
-    meta["last-sequence-number"] = max(
-        int(meta.get("last-sequence-number") or 0), new_id)
-    _publish_metadata(meta_dir, meta)
-    return new_id
+    def superseded(e):
+        f = e["data_file"]
+        return (str(f.get("file_format")).upper() == "PUFFIN"
+                and _py_norm(_local(f["referenced_data_file"])) in refs)
+    out = []
+    for k, row in enumerate(rows):
+        if row["content"] == 1:
+            mmeta, entries = read_container(_local(row["manifest_path"]))
+            keep = [e for e in entries if not superseded(e)]
+            if len(keep) < len(entries):
+                if not keep:
+                    continue
+                row = _copy_manifest(row, mmeta, keep, os.path.join(
+                    meta_dir, f"manifest-{sid}-dv{k}.avro"))
+        out.append(row)
+    return out
+
+
+def _upgrade_to_v3(rows: list, meta: dict, meta_dir: str,
+                   sid: int) -> list:
+    """One-time v2 → v3 upgrade (the first deletion vector): v3 needs
+    row lineage for the live data files, which v2 manifests lack
+    (and this writer's v2 entries carry record_count 0). Each current
+    data manifest without a first_row_id is copied under a new name
+    with explicit first_row_id ranges and real record counts; older
+    snapshots keep the v2 originals. Advances ``meta``'s
+    next-row-id."""
+    next_row_id = int(meta.get("next-row-id") or 0)
+    out = []
+    for k, row in enumerate(rows):
+        if row["content"] == 0 and row.get("first_row_id") is None:
+            mmeta, entries = read_container(_local(row["manifest_path"]))
+            first = next_row_id
+            for e in entries:
+                if e.get("status") == 2:     # DELETED
+                    continue
+                f = e["data_file"]
+                f["first_row_id"], f["record_count"], next_row_id = \
+                    _row_range({"path": f["file_path"]}, next_row_id)
+            row = _copy_manifest(
+                {**row, "first_row_id": first}, mmeta, entries,
+                os.path.join(meta_dir, f"manifest-{sid}-v3-{k}.avro"))
+        out.append(row)
+    meta["next-row-id"] = next_row_id
+    return out
 
 
 def commit_snapshot(table_dir: str, add_files: list | None = None,
@@ -2269,180 +2100,107 @@ def commit_snapshot(table_dir: str, add_files: list | None = None,
     ``add_delete_files``, current equality-delete files +
     ``add_eq_delete_files`` (dicts of ``{"path", "equality_ids"}``) —
     appends, deletes, or both atomically (the one-snapshot upsert
-    shape). Carried-forward files keep their original sequence
-    numbers. With ``replace`` the new snapshot is EXACTLY
+    shape). With ``replace`` the new snapshot is EXACTLY
     ``add_files`` with no delete files — the compaction commit shape.
     ``evolve_from_df``: a Spark DataFrame whose new columns extend
-    the table schema (write-side schema evolution; see
-    _evolved_schema_fields for the best-effort contract).
-    ``add_dv_files`` (round 11, format v3): deletion-vector dicts
-    ``{"path", "referenced_data_file", "content_offset",
+    the table schema (_evolve_meta_schema).
+    ``add_dv_files`` (format v3): deletion-vector dicts ``{"path",
+    "referenced_data_file", "content_offset",
     "content_size_in_bytes"}``; per the spec's replacement rule a new
     DV SUPERSEDES the referenced file's previous DV (callers merge —
-    add_deletion_vectors does), and committing any DV stamps the
-    table format-version 3. Metadata-only; returns the new snapshot
-    id."""
-    prior: list[dict] = []
-    schema_fields = None
-    partition_spec = None
-    if os.path.isdir(os.path.join(_local(table_dir), "metadata")):
-        meta = _read_table_metadata(table_dir)
-        _check_write_defaults(table_dir, meta, add_files)
-        if add_dv_files and len(meta.get("partition-specs") or []) > 1:
-            raise NotImplementedError(
-                "deletion-vector commits on a table with evolved "
-                "partition specs — the multispec extend path does "
-                "not write DV entries yet")
-        if len(meta.get("partition-specs") or []) > 1:
-            # EVOLVED partition specs (round 10): never rebuild —
-            # re-encoding older-spec manifests under the default
-            # spec would null their partition records and pruning
-            # would silently drop rows. Instead EXTEND: new manifests
-            # under the CURRENT spec, prior manifests untouched (the
-            # read side already groups and prunes per spec).
-            if evolve_from_df is not None:
-                # round 10: new columns EVOLVE the schema in place —
-                # a fresh schema entry with fresh field ids; prior
-                # manifests stay byte-untouched either way
-                _evolve_meta_schema(meta, evolve_from_df)
-            return _extend_snapshot_multispec(
-                table_dir, meta, list(add_files or []),
-                list(add_delete_files or []),
-                list(add_eq_delete_files or []), replace, summary_extra)
-        names = _field_names(table_dir)
-        types = _schema_types(meta)
-        if names:
-            schema_fields = [(fid, name, types.get(fid, "string"))
-                             for fid, name in sorted(names.items())]
-        # FAST PATH: a pure data-file append with no schema change on
-        # an unpartitioned table writes one manifest + one list +
-        # one metadata JSON (real Iceberg's append) — the O(history)
-        # rebuild below is only for shapes that must re-encode
-        if (add_files and not add_delete_files
-                and not add_eq_delete_files and not add_dv_files
-                and not replace
-                and meta.get("snapshots")
-                # v1 inline-manifest snapshots lack a manifest-list
-                # file to extend — those rebuild
-                and "manifest-list" in meta["snapshots"][-1]
-                and not _partition_spec_fields(meta)
-                and names
-                and (evolve_from_df is None
-                     or set(evolve_from_df.columns)
-                     <= set(names.values()))):
-            return _append_snapshot_fast(table_dir, list(add_files),
-                                         meta, summary_extra)
-        spec = _partition_spec_fields(meta)
-        if spec:
-            partition_spec = [
-                {"name": f["name"],
-                 "transform": f.get("transform", "identity"),
-                 "source-id": f.get("source-id"),
-                 "field-id": f.get("field-id"),
-                 # the manifest stores the TRANSFORM RESULT, not the
-                 # source value — bucket[N] yields int whatever the
-                 # source type
-                 "type": _partition_result_type(
-                     f.get("transform", "identity"),
-                     types.get(int(f.get("source-id", -1)), "string"))}
-                for f in spec]
-        for s in meta.get("snapshots", []):
-            d, dels, eqs, dvs_ = snapshot_files_full(
-                table_dir, s.get("snapshot-id"), with_dvs=True)
-            # keep the ORIGINAL snapshot id — positional renumbering
-            # after expire_snapshots_local would assign new data files
-            # a sequence BELOW carried equality deletes and silently
-            # delete their rows (and break time travel to kept ids)
-            summ = dict(s.get("summary") or {})
-            prior.append({"data": d, "deletes": dels, "eq_deletes": eqs,
-                          "dvs": dvs_,
-                          "snapshot_id": s.get("snapshot-id"),
-                          "operation": summ.pop("operation", None),
-                          # summary extras (e.g. merge-keys), the
-                          # commit timestamp and the v3 row-lineage
-                          # base survive the rebuild — losing them
-                          # would strip update pairing, timestamp
-                          # time travel, or stamp spec-wrong
-                          # first-row-id on history
-                          "summary_extra": summ,
-                          "first_row_id": s.get("first-row-id"),
-                          "timestamp_ms": s.get("timestamp-ms", 0)})
-    current = prior[-1] if prior else {"data": [], "deletes": [],
-                                       "eq_deletes": []}
-    new_id = 1 + max(
-        [int(p["snapshot_id"]) for p in prior if p.get("snapshot_id")],
-        default=0)
-    if replace:
-        # real writers stamp rewrite commits "replace" — incremental
-        # readers use it to skip pure rearrangements
-        new_snap = {"data": list(add_files or []), "deletes": [],
-                    "eq_deletes": [], "snapshot_id": new_id,
-                    "operation": "replace"}
-    else:
-        # a new DV supersedes the referenced file's previous DV
-        # (spec replacement rule — carrying both would double-apply
-        # one and violate the one-DV-per-file invariant)
-        new_refs = {_py_norm(_local(d["referenced_data_file"]))
-                    for d in (add_dv_files or [])}
-        kept_dvs = [d for d in current.get("dvs", [])
-                    if _py_norm(_local(d["referenced_data_file"]))
-                    not in new_refs]
-        new_snap = {
-            "data": current["data"] + list(add_files or []),
-            "deletes": current["deletes"] + list(add_delete_files or []),
-            "eq_deletes": (current["eq_deletes"]
-                           + list(add_eq_delete_files or [])),
-            "dvs": kept_dvs + list(add_dv_files or []),
-            "snapshot_id": new_id,
-            "operation": ("overwrite"
-                          if (add_delete_files or add_eq_delete_files
-                              or add_dv_files)
-                          else "append")}
-    if summary_extra:
-        new_snap["summary_extra"] = dict(summary_extra)
-    # real commit timestamp (monotone vs priors even under clock skew)
-    new_snap["timestamp_ms"] = max(
-        int(time.time() * 1000),
-        max([int(p.get("timestamp_ms") or 0) for p in prior],
-            default=0))
-    floor = 0
-    if os.path.isdir(os.path.join(_local(table_dir), "metadata")):
-        floor = max(
-            [int(meta.get("last-column-id") or 0)]
-            + [int(f["id"]) for s in (meta.get("schemas") or [])
-               for f in s.get("fields", []) if "id" in f])
-    schema_fields = _evolved_schema_fields(schema_fields,
-                                           evolve_from_df, floor)
-    extra = None
-    fv_pin = None
-    if os.path.isdir(os.path.join(_local(table_dir), "metadata")):
-        src_meta = _read_table_metadata(table_dir)
-        # never downgrade the source's format-version on a rebuild
-        # (review finding: a v3 table whose snapshot carried no DVs
-        # was re-stamped v2, dropping v3-only metadata under strict
-        # readers); v1 sources still rebuild as v2 — the rebuild
-        # writes v2 manifest-list shapes
-        fv_pin = max(int(src_meta.get("format-version") or 1), 2)
-        # preserve every top-level key the rebuild does not recompute
-        # (refs, table-uuid, properties, next-row-id — the row-id
-        # allocation seed — and any foreign keys this engine does not
-        # model) instead of silently dropping them
-        recomputed = {"format-version", "location",
-                      "last-sequence-number", "current-snapshot-id",
-                      "snapshots", "schemas", "current-schema-id",
-                      "default-spec-id", "partition-specs",
-                      "last-column-id"}
-        extra = {k: v for k, v in src_meta.items()
-                 if k not in recomputed} or None
-    if any(bool(s.get("dvs")) for s in prior + [new_snap]):
-        fv_pin = max(fv_pin or 2, 3)
-    ids = create_local_iceberg_table(table_dir, prior + [new_snap],
-                                     schema_fields=schema_fields,
-                                     partition_spec=partition_spec,
-                                     min_last_column_id=floor,
-                                     meta_extra=extra,
-                                     format_version=fv_pin)
-    return ids[-1]
+    add_deletion_vectors does), and committing a DV stamps the table
+    format-version 3.
+
+    Every commit on an existing table EXTENDS the manifest list, the
+    way real Iceberg commits: it writes at most one data manifest for
+    ``add_files`` (under the current partition spec), at most one
+    delete manifest, a new manifest list made of the current list's
+    rows plus the new ones (only the new ones with ``replace``), and
+    one metadata JSON. Earlier manifests and manifest lists are never
+    rewritten, so carried files keep their sequence numbers, partition
+    records and row-id ranges, and older snapshots read exactly as
+    before. Two cases copy a current manifest under a new name
+    instead: a delete manifest holding a superseded DV, and — once,
+    at the v2 → v3 upgrade — the data manifests that lack row
+    lineage. A table that does not exist yet is created
+    (create_local_iceberg_table). Metadata-only; returns the new
+    snapshot id."""
+    add_files = list(add_files or [])
+    deletes = list(add_delete_files or [])
+    eq_deletes = list(add_eq_delete_files or [])
+    dvs = list(add_dv_files or [])
+    operation = ("replace" if replace
+                 else "overwrite" if (deletes or eq_deletes or dvs)
+                 else "append")
+    meta_dir = os.path.join(_local(table_dir), "metadata")
+    if not os.path.isdir(meta_dir):
+        schema = {}
+        if evolve_from_df is not None:
+            _evolve_meta_schema(schema, evolve_from_df)
+        fields = [(f["id"], f["name"], f["type"])
+                  for f in _current_schema(schema).get("fields", [])]
+        return create_local_iceberg_table(
+            table_dir, [{"data": add_files, "deletes": deletes,
+                         "eq_deletes": eq_deletes, "dvs": dvs,
+                         "operation": operation,
+                         "summary_extra": summary_extra,
+                         "timestamp_ms": int(time.time() * 1000)}],
+            schema_fields=fields or None)[-1]
+    meta = _read_table_metadata(table_dir)
+    _check_write_defaults(table_dir, meta, add_files)
+    snaps = meta.get("snapshots") or []
+    sid = 1 + max((int(s["snapshot-id"]) for s in snaps), default=0)
+    rows = ([] if replace or not snaps
+            else _current_list_rows(meta, snaps[-1]))
+    # this writer emits v2 manifest-list shapes, so a v1 table is
+    # stamped 2; deletion vectors need 3
+    fv = max(int(meta.get("format-version") or 1), 2)
+    if dvs:
+        if fv < 3:
+            rows = _upgrade_to_v3(rows, meta, meta_dir, sid)
+            fv = 3
+        rows = _drop_superseded_dvs(rows, dvs, meta_dir, sid)
+    meta["format-version"] = fv
+    if evolve_from_df is not None:
+        _evolve_meta_schema(meta, evolve_from_df)
+    types = _schema_types(meta)
+    spec_id = int(meta.get("default-spec-id") or 0)
+    # the manifest stores each partition TRANSFORM RESULT, not the
+    # source value — bucket[N] yields int whatever the source type
+    entry_schema = _manifest_entry_schema([
+        {"name": f["name"], "field-id": f.get("field-id", 1000 + i),
+         "type": _partition_result_type(
+             f.get("transform", "identity"),
+             types.get(int(f.get("source-id", -1)), "string"))}
+        for i, f in enumerate(_partition_spec_fields(meta))])
+    first = int(meta.get("next-row-id") or 0) if fv >= 3 else None
+    if add_files:
+        entries = []
+        nxt = first
+        for item in add_files:
+            frid, rc = None, 0
+            if fv >= 3:
+                frid, rc, nxt = _row_range(item, nxt)
+            entries.append(_manifest_entry(item, 0, sid, frid, rc))
+        rows.append(_write_manifest(
+            os.path.join(meta_dir, f"manifest-{sid}.avro"), entry_schema,
+            spec_id, entries, 0, sid, first))
+        if fv >= 3:
+            meta["next-row-id"] = nxt
+    dels = ([_manifest_entry(p, 1, sid) for p in deletes]
+            + [_manifest_entry(d, 2, sid) for d in eq_deletes]
+            + [_manifest_entry(d, 1, sid) for d in dvs])
+    if dels:
+        rows.append(_write_manifest(
+            os.path.join(meta_dir, f"manifest-{sid}-deletes.avro"),
+            entry_schema, spec_id, dels, 1, sid))
+    from .avro_lite import write_container
+    mlist = os.path.join(meta_dir, f"snap-{sid}.avro")
+    write_container(mlist, _MANIFEST_FILE_SCHEMA, rows)
+    summary = {"operation": operation}
+    summary.update({str(k): str(v)
+                    for k, v in (summary_extra or {}).items()})
+    return _publish_snapshot(table_dir, meta, sid, mlist, summary, first)
 
 
 def _check_write_defaults(table_dir: str, meta: dict,
@@ -2516,22 +2274,10 @@ def restore_iceberg_local(table_dir: str, snapshot_id: int) -> int:
             f"restore to snapshot {snapshot_id} needs its manifest "
             f"list {tgt['manifest-list']}, which no longer exists "
             "(expired?)")
-    new_id = 1 + max(int(s["snapshot-id"]) for s in snaps)
-    ts_ms = max(int(time.time() * 1000),
-                max((int(s.get("timestamp-ms") or 0) for s in snaps),
-                    default=0))
-    snaps.append({"snapshot-id": new_id, "sequence-number": new_id,
-                  "timestamp-ms": ts_ms,
-                  "manifest-list": tgt["manifest-list"],
-                  "summary": {"operation": "rollback",
-                              "rolled-back-to": str(snapshot_id)}})
-    meta["snapshots"] = snaps
-    meta["current-snapshot-id"] = new_id
-    meta["last-sequence-number"] = max(
-        int(meta.get("last-sequence-number") or 0), new_id)
-    _publish_metadata(os.path.join(_local(table_dir), "metadata"),
-                      meta)
-    return new_id
+    return _publish_snapshot(
+        table_dir, meta, 1 + max(int(s["snapshot-id"]) for s in snaps),
+        tgt["manifest-list"],
+        {"operation": "rollback", "rolled-back-to": str(snapshot_id)})
 
 
 def rewrite_data_files_local(spark, table_dir: str,

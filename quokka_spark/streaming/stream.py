@@ -982,11 +982,12 @@ def streaming_write_iceberg(df: DataFrame, table: str,
     checkpoints too); a redelivered batch at or below the committed
     high-water mark for this ``app_id`` is a no-op
     (iceberg_local.last_txn_version), and the mark survives BOTH
-    rebuild-style commits (summary carry) and snapshot expiry
-    (expire_snapshots_local folds the latest mark per app into the
-    newest kept snapshot). Steady-state cost per batch is ONE new
-    manifest + list + metadata JSON (commit_snapshot's append fast
-    path), not an O(history) rebuild. The first batch creates the
+    later commits (they never rewrite an earlier snapshot) and
+    snapshot expiry (expire_snapshots_local folds the latest mark per
+    app into the newest kept snapshot). Steady-state cost per batch
+    is ONE new manifest + list + metadata JSON (commit_snapshot
+    extends the manifest list), not an O(history) rewrite. The first
+    batch creates the
     table; empty batches still advance the mark. Returns an
     un-started DataStreamWriter — pick the trigger and .start()."""
     aid = _sink_app_id(checkpoint_dir, app_id)

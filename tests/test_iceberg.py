@@ -125,7 +125,7 @@ def test_iceberg_branch_tag_refs(qc, spark, table, tmp_path,
     """Named snapshot references (spec §Snapshot References, round
     11): set_iceberg_ref creates a tag/branch, read_iceberg(ref=)
     resolves it (local dir via metadata, catalog via pyiceberg refs),
-    refs SURVIVE rebuild commits, expiry refuses to drop a
+    refs SURVIVE later commits, expiry refuses to drop a
     referenced snapshot until the ref is dropped, and unknown names
     list the table's refs."""
     from quokka_spark.sources.iceberg_local import (
@@ -140,7 +140,7 @@ def test_iceberg_branch_tag_refs(qc, spark, table, tmp_path,
     assert sorted(r["id"] for r in
                   qc.read_iceberg(tbl, ref="audit").df.collect()) \
         == list(range(25))
-    # a rebuild commit (position delete) must not drop the refs
+    # a later commit (position delete) must not drop the refs
     (a_path,), _ = snapshot_files(tbl, s1)
     add_position_deletes(tbl, {a_path: [0]})
     assert sorted(r["id"] for r in
@@ -1872,7 +1872,7 @@ def test_streaming_write_iceberg_exactly_once(spark, qc, tmp_path):
     """foreachBatch sink with the snapshot-summary handshake (round
     9): the first batch creates the table, a restarted stream with
     the same checkpoint appends only NEW batches, a redelivered batch
-    id is a no-op, and the mark survives rebuild-style commits."""
+    id is a no-op, and the mark survives later commits."""
     from quokka_spark.sources.iceberg_local import (append_snapshot,
                                                     last_txn_version)
     from quokka_spark.streaming.stream import streaming_write_iceberg
@@ -1913,7 +1913,7 @@ def test_streaming_write_iceberg_exactly_once(spark, qc, tmp_path):
     assert first_manifest
     m1 = first_manifest[0]
     mt = _os.stat(m1).st_mtime_ns
-    # the mark survives a rebuild-style commit (summary carry)
+    # the mark survives a later append
     extra = str(tmp_path / "x.parquet")
     spark.range(100, 101).coalesce(1).toPandas().to_parquet(extra)
     append_snapshot(tbl, [extra])
@@ -1926,10 +1926,7 @@ def test_streaming_write_iceberg_exactly_once(spark, qc, tmp_path):
     from quokka_spark.sources.iceberg_local import expire_snapshots_local
     expire_snapshots_local(tbl, keep_last=1)
     assert last_txn_version(tbl, "t") == last2
-    # ... and survives a REBUILD-shaped commit (position delete — the
-    # O(history) path that re-encodes every prior snapshot must carry
-    # summary extras; the plain append above took the fast path and
-    # does not exercise this)
+    # ... and survives a delete commit (position delete) too
     from quokka_spark.sources.iceberg_local import (add_position_deletes,
                                                     snapshot_files)
     (files, _) = snapshot_files(tbl)
@@ -1942,8 +1939,8 @@ def test_streaming_write_iceberg_exactly_once(spark, qc, tmp_path):
 def test_iceberg_timestamp_time_travel(spark, qc, tmp_path):
     """as-of-timestamp (round 9): resolve to the LATEST snapshot with
     timestamp-ms at-or-before the asked instant; commit_snapshot
-    stamps real times on new snapshots and PRESERVES prior
-    timestamps across its rebuild."""
+    stamps real times on new snapshots and leaves prior timestamps
+    as they are."""
     from quokka_spark.sources.iceberg_local import (append_snapshot,
                                                     snapshot_at_timestamp)
     a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
@@ -1963,7 +1960,7 @@ def test_iceberg_timestamp_time_travel(spark, qc, tmp_path):
         snapshot_at_timestamp(tbl, 999)
     with pytest.raises(ValueError, match="at most one"):
         qc.read_iceberg(tbl, snapshot=s1, as_of_timestamp=1500)
-    # a rebuild-style commit keeps prior timestamps and stamps now
+    # a later commit keeps prior timestamps and stamps now
     c = str(tmp_path / "c.parquet")
     spark.range(100, 102).coalesce(1).toPandas().to_parquet(c)
     s3 = append_snapshot(tbl, [c])
@@ -2011,8 +2008,8 @@ def test_iceberg_changes_upsert_pairs_updates(spark, qc, tmp_path,
     assert rows == [("insert", 7, 70.0),
                     ("update_postimage", 2, 99.0),
                     ("update_preimage", 2, 20.0)]
-    # the pairing survives a rebuild-style commit (summary extras are
-    # carried forward): append once more, then re-read the upsert
+    # the pairing survives a later commit (earlier summaries are
+    # never rewritten): append once more, then re-read the upsert
     b = str(tmp_path / "b.parquet")
     spark.range(100, 101).coalesce(1).toPandas().to_parquet(b)
     from quokka_spark.sources.iceberg_local import append_snapshot
@@ -2147,9 +2144,8 @@ def test_iceberg_schema_evolution_never_reuses_field_ids(spark, qc,
     m["last-column-id"] = 5
     with open(mpath, "w") as fh:
         _json.dump(m, fh)
-    # a NON-evolving rebuild commit (position delete) must carry the
-    # foreign mark forward, not recompute it from the schema's max id
-    # (review finding: it regressed 5 → 1)
+    # a NON-evolving commit (position delete) must carry the foreign
+    # mark forward, not recompute it from the schema's max id
     from quokka_spark.sources.iceberg_local import (add_position_deletes,
                                                     snapshot_files)
     (a_live,), _ = snapshot_files(tbl)
@@ -2293,11 +2289,11 @@ def test_iceberg_v3_row_lineage_lifecycle(spark, qc, tmp_path):
     range, stamps snapshot first-row-id and table next-row-id, and
     the reader serves _row_id = first_row_id + position and
     _last_updated_sequence_number = the file's data sequence. DV
-    commits delete rows WITHOUT renumbering survivors; rebuild
-    commits (position deletes, appends) keep prior files' ids and
-    allocate new files past the carried next-row-id mark; fv and
-    foreign metadata keys survive non-DV rebuilds (round-11 advisor
-    finding: a rebuild used to re-stamp v2 from DV presence)."""
+    commits delete rows WITHOUT renumbering survivors; later commits
+    (position deletes, appends) extend the manifest list, so prior
+    files keep their ids, and new files allocate past the
+    next-row-id mark; fv and foreign metadata keys survive non-DV
+    commits (a v3 table is never re-stamped v2)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2341,7 +2337,7 @@ def test_iceberg_v3_row_lineage_lifecycle(spark, qc, tmp_path):
         spark, tbl, with_lineage=True).collect())
     assert [r[1] for r in rows2] == list(range(2, 15))
 
-    # non-DV rebuild + append: fv/uuid/properties survive, the new
+    # non-DV commit + append: fv/uuid/properties survive, the new
     # file allocates [15, 17) past the mark, old ids stable
     f3 = str(tmp_path / "f3.parquet")
     pq.write_table(pa.table({"k": [200, 201], "v": [2.0, 2.0]}), f3)
@@ -2415,10 +2411,9 @@ def test_iceberg_v3_lineage_inheritance_from_manifest(spark, qc,
 
 
 def test_iceberg_v3_fast_append_assigns_lineage(spark, qc, tmp_path):
-    """The O(1) unpartitioned append (_append_snapshot_fast) on a v3
-    table assigns the new file an explicit row-id range off
-    next-row-id and advances the mark — a lineage table must not need
-    the O(history) rebuild for plain appends."""
+    """A plain append on a v3 table assigns the new file an explicit
+    row-id range off next-row-id and advances the mark, writing only
+    one manifest, one manifest list and one metadata JSON."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -2435,9 +2430,9 @@ def test_iceberg_v3_fast_append_assigns_lineage(spark, qc, tmp_path):
         tbl, [[f1]], schema_fields=[(1, "k", "long")],
         format_version=3)
     before = len(os.listdir(os.path.join(tbl, "metadata")))
-    commit_snapshot(tbl, add_files=[f2])     # routes to the fast path
+    commit_snapshot(tbl, add_files=[f2])
     after = len(os.listdir(os.path.join(tbl, "metadata")))
-    # fast path writes exactly manifest + list + metadata JSON
+    # exactly manifest + list + metadata JSON
     assert after - before == 3
     m = _read_table_metadata(tbl)
     assert m["format-version"] == 3 and m["next-row-id"] == 8
@@ -3056,3 +3051,195 @@ def test_iceberg_catalog_read_serves_defaults(spark, qc, tmp_path,
                    3: ("x", (30, "stored")), 4: (None, (40, None))}
     with pytest.raises(NotImplementedError, match="list/map"):
         qc.read_iceberg("db.listdef").df.collect()
+
+
+def _metadata_bytes(tbl):
+    """{path: bytes} of every file under the table's metadata/ except
+    version-hint.text (the one file a commit may overwrite)."""
+    out = {}
+    for dp, _, fs in os.walk(os.path.join(tbl, "metadata")):
+        for f in fs:
+            if f != "version-hint.text":
+                with open(os.path.join(dp, f), "rb") as fh:
+                    out[os.path.join(dp, f)] = fh.read()
+    return out
+
+
+def _rows_by_snapshot(spark, tbl):
+    """{snapshot id: sorted (k, v) rows} for every snapshot of the
+    table, read through ONE union so the check costs one Spark job."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from quokka_spark.sources.iceberg_local import (_read_table_metadata,
+                                                    read_iceberg_local)
+    ids = [s["snapshot-id"]
+           for s in _read_table_metadata(tbl)["snapshots"]]
+    df = reduce(lambda a, b: a.unionByName(b), [
+        read_iceberg_local(spark, tbl, snapshot_id=s)
+        .select("k", "v", F.lit(s).alias("sid")) for s in ids])
+    got = {s: [] for s in ids}
+    for r in df.collect():
+        got[r["sid"]].append((r["k"], r["v"]))
+    return {s: sorted(v) for s, v in got.items()}
+
+
+def test_iceberg_commits_leave_history_untouched(spark, tmp_path):
+    """Every commit EXTENDS the manifest list: on a 12-snapshot table,
+    an equality delete, a position delete, an upsert, a first deletion
+    vector (the v2 → v3 upgrade), a DV superseding it and a compaction
+    each leave every metadata file that existed before (all but
+    version-hint.text) byte-identical, and every older snapshot reads
+    the same rows as before the commit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quokka_spark.sources.iceberg_local import (
+        add_deletion_vectors, add_equality_deletes, add_position_deletes,
+        append_snapshot, rewrite_data_files_local, upsert_iceberg_local)
+    files = []
+    for i in range(12):
+        f = str(tmp_path / f"f{i}.parquet")
+        pq.write_table(pa.table({"k": [i * 10 + j for j in range(5)],
+                                 "v": [float(i)] * 5}), f)
+        files.append(f)
+    tbl = str(tmp_path / "tbl")
+    create_local_iceberg_table(tbl, [[files[0]]],
+                               schema_fields=[(1, "k", "long"),
+                                              (2, "v", "double")])
+    for f in files[1:]:
+        append_snapshot(tbl, [f])
+    steps = {
+        "equality delete": lambda: add_equality_deletes(
+            tbl, {"k": [1, 11]}, [1]),
+        "position delete": lambda: add_position_deletes(
+            tbl, {files[2]: [0, 1]}),
+        "upsert": lambda: upsert_iceberg_local(
+            spark, tbl, spark.createDataFrame(
+                [(30, 9.5), (999, 9.9)], "k long, v double"), ["k"]),
+        "first DV": lambda: add_deletion_vectors(tbl, {files[4]: [0]}),
+        "superseding DV": lambda: add_deletion_vectors(
+            tbl, {files[4]: [2]}),
+        "compaction": lambda: rewrite_data_files_local(spark, tbl),
+    }
+    rows = _rows_by_snapshot(spark, tbl)
+    for name, step in steps.items():
+        files_before, rows_before = _metadata_bytes(tbl), rows
+        step()
+        after = _metadata_bytes(tbl)
+        assert sorted(p for p, b in files_before.items()
+                      if after.get(p) != b) == [], name
+        rows = _rows_by_snapshot(spark, tbl)
+        assert {s: rows[s] for s in rows_before} == rows_before, name
+    want = {i * 10 + j: float(i) for i in range(12) for j in range(5)}
+    for k in (1, 11, 20, 21, 40, 42):
+        del want[k]
+    want.update({30: 9.5, 999: 9.9})
+    assert rows[max(rows)] == sorted(want.items())
+
+
+def test_iceberg_multispec_deletion_vectors(spark, qc, tmp_path):
+    """Deletion vectors on a table with EVOLVED partition specs: the
+    first DV upgrades the table to v3 by copying each current data
+    manifest under its own spec (partition records intact, so
+    per-spec pruning still holds), a second DV on another spec's file
+    applies too, and the pre-DV snapshot reads as before."""
+    import pandas as pd
+
+    from quokka_spark.sources.iceberg_local import (
+        _read_table_metadata, add_deletion_vectors, read_iceberg_local)
+    fa = str(tmp_path / "a.parquet")
+    fb = str(tmp_path / "b.parquet")
+    pd.DataFrame({"id": [1, 2], "p": ["x", "x"]}).to_parquet(fa)
+    pd.DataFrame({"id": [3, 4], "p": ["y", "y"]}).to_parquet(fb)
+    tbl = str(tmp_path / "evo")
+    pfield = {"name": "p", "type": "string", "source-id": 2,
+              "transform": "identity"}
+    create_local_iceberg_table(
+        tbl,
+        [{"data": [{"path": fa, "partition": {"p": "x"}}], "spec_id": 0},
+         {"data": [{"path": fb, "partition": {"p": "y"}}], "spec_id": 1}],
+        schema_fields=[(1, "id", "long"), (2, "p", "string")],
+        partition_specs=[{"spec-id": 0, "fields": [
+                              {**pfield, "field-id": 1000}]},
+                         {"spec-id": 1, "fields": [
+                              {**pfield, "field-id": 1001}]}])
+    # snapshot 2 spans both specs, like a real evolved table
+    meta_dir = os.path.join(tbl, "metadata")
+    _, rows1 = read_container(os.path.join(meta_dir, "snap-1.avro"))
+    _, rows2 = read_container(os.path.join(meta_dir, "snap-2.avro"))
+    write_container(os.path.join(meta_dir, "snap-2.avro"),
+                    _MANIFEST_FILE_SCHEMA, rows1 + rows2)
+
+    def ids(**kw):
+        return sorted(r["id"] for r in qc.read_iceberg(tbl, **kw)
+                      .df.collect())
+    add_deletion_vectors(tbl, {fa: [0]})
+    assert _read_table_metadata(tbl)["format-version"] == 3
+    assert ids() == [2, 3, 4]
+    dfx = qc.read_iceberg(tbl, partition_filter="p = 'x'").df
+    assert [r["id"] for r in dfx.collect()] == [2]
+    assert len(dfx.inputFiles()) == 1
+    add_deletion_vectors(tbl, {fb: [1]})
+    assert ids() == [2, 3]
+    assert ids(snapshot=2) == [1, 2, 3, 4]
+    # the upgrade gave every live row a distinct row id
+    rids = [r["_row_id"] for r in read_iceberg_local(
+        spark, tbl, with_lineage=True).collect()]
+    assert None not in rids and len(set(rids)) == 2
+
+
+def test_iceberg_commit_on_v1_inline_manifest_snapshot(qc, tmp_path):
+    """A hand-written format-v1 table whose snapshot lists its
+    manifests INLINE (``manifests``, no manifest-list file): a commit
+    lists those manifests as the prior rows of its new manifest list
+    and stamps format-version 2 (the list shape it writes); the v1
+    snapshot still reads, and its manifest is left untouched."""
+    import json as _json
+
+    import pandas as pd
+
+    from quokka_spark.sources.iceberg_local import (_read_table_metadata,
+                                                    add_position_deletes,
+                                                    append_snapshot)
+    a = str(tmp_path / "a.parquet")
+    b = str(tmp_path / "b.parquet")
+    pd.DataFrame({"id": range(0, 5)}).to_parquet(a)
+    pd.DataFrame({"id": range(5, 10)}).to_parquet(b)
+    tbl = str(tmp_path / "v1")
+    meta_dir = os.path.join(tbl, "metadata")
+    os.makedirs(meta_dir)
+    m1 = os.path.join(meta_dir, "m1.avro")
+    write_container(m1, _MANIFEST_ENTRY_SCHEMA, [
+        {"status": 1, "snapshot_id": 1, "data_file": {
+            "content": 0, "file_path": a, "file_format": "PARQUET",
+            "record_count": 5, "file_size_in_bytes": os.path.getsize(a)}}])
+    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
+        _json.dump({"format-version": 1, "location": tbl,
+                    "last-column-id": 1,
+                    "schema": {"type": "struct", "fields": [
+                        {"id": 1, "name": "id", "required": False,
+                         "type": "long"}]},
+                    "partition-spec": [], "current-snapshot-id": 1,
+                    "snapshots": [{"snapshot-id": 1, "timestamp-ms": 1000,
+                                   "manifests": [m1],
+                                   "summary": {"operation": "append"}}]},
+                   fh)
+    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
+        fh.write("1")
+    before = _metadata_bytes(tbl)
+
+    def ids(**kw):
+        return sorted(r["id"] for r in qc.read_iceberg(tbl, **kw)
+                      .df.collect())
+    assert ids() == list(range(5))
+    s2 = append_snapshot(tbl, [b])
+    assert ids() == list(range(10))
+    add_position_deletes(tbl, {a: [0]})
+    assert ids() == list(range(1, 10))
+    assert ids(snapshot=1) == list(range(5))
+    assert ids(snapshot=s2) == list(range(10))
+    assert _read_table_metadata(tbl)["format-version"] == 2
+    after = _metadata_bytes(tbl)
+    assert all(after[p] == b for p, b in before.items())
