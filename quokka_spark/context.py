@@ -92,6 +92,8 @@ class QuokkaContext:
         if spark is None:
             cpus = cluster.cpus if cluster else None
             spark = build_spark(cpus=cpus, extra_conf=config)
+        # a session passed in keeps its own static confs, among them
+        # the generated-code cache cap (session.CODEGEN_CACHE_ENTRIES)
         self.spark = spark
         self._observations: dict = {}
         try:

@@ -8,6 +8,20 @@ sized to the core count rather than Spark's legacy default of 200.
 At 100 TB these same knobs are what matter, with shuffle partitions
 scaled to ~2-3x total cores and `spark.sql.files.maxPartitionBytes`
 kept at 128-256 MB so scan tasks stay memory-bounded.
+
+A QuokkaContext is long-lived and runs the same query shapes again and
+again, so the session also sizes Spark's generated-code cache
+(`spark.sql.codegen.cache.maxEntries`, an LRU of compiled classes) to
+the engine's working set. Spark's default cap is 100 entries; one pass
+of the 22 TPC-H queries compiles about 255 distinct classes, and a
+cyclic working set larger than an LRU misses on every access, so with
+the default every repeated TPC-H query recompiles all of its code. With
+CODEGEN_CACHE_ENTRIES a repeated query compiles nothing and reuses
+bytecode the JVM has already JIT-compiled. The cap is a static SQL
+conf, and Spark builds the cache once per JVM, the first time it
+generates code: a session built outside build_spark and handed to
+QuokkaContext(spark=...) keeps its own cap (100 unless it set one),
+and changing the conf at runtime has no effect.
 """
 
 from __future__ import annotations
@@ -25,6 +39,16 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 500-file local read plans 1.10 s -> 0.13 s listed on the driver).
 SPARK_DISCOVERY_THRESHOLD_DEFAULT = 32
 LOCAL_DISCOVERY_THRESHOLD = 8192
+
+# spark.sql.codegen.cache.maxEntries (Spark's default: 100). Counted on
+# a session whose cache never evicts (sf0.01, 4 cores): one pass of the
+# 22 TPC-H queries compiles 255-261 distinct classes, one pass of the
+# whole __spark_entry__ registry (204 queries) about 2230, and a second
+# registry pass only 24 (queries that inline per-run literals). The
+# smallest power of two that holds the registry's set: 16x one TPC-H
+# pass. A cached class holds ~21 KB of JVM metaspace (233 TPC-H
+# classes: +4.9 MB), so a full cache costs ~86 MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _listing_threshold(input_root: str | None) -> int:
@@ -78,6 +102,10 @@ def build_spark(app_name: str = "quokka_spark", cpus: int | None = None,
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 str(_listing_threshold(
                     os.environ.get("SPARK_GRAFT_SF_DIR"))))
+        # static: only takes effect in the JVM's first session to
+        # generate code (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -1115,6 +1115,25 @@ def _dv_one_per_file(table_path: str, dvs: list) -> None:
         seen.add(ref)
 
 
+# spec §Position Delete Files fixes these two columns (an optional
+# ``row`` struct is never read), so the scan passes them instead of
+# running a Spark schema-inference job over the delete files
+_POS_DELETE_SCHEMA = "file_path string, pos long"
+
+
+def _pos_deletes_df(spark, paths: list):
+    """Distinct ``(__qs_dfp__, __qs_dpos__)`` pairs of the given
+    position-delete files (data file path normalized via _norm_path),
+    the anti-join shape _dv_positions_df also produces. Shared by the
+    snapshot read and the change stream."""
+    from pyspark.sql import functions as F
+    return (spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*[_local(p) for p in paths])
+            .select(_norm_path(F.col("file_path")).alias("__qs_dfp__"),
+                    F.col("pos").alias("__qs_dpos__"))
+            .distinct())
+
+
 def _dv_positions_df(spark, dvs: list):
     """``(__qs_dfp__, __qs_dpos__)`` frame of the given deletion
     vectors' deleted row positions (referenced file normalized via
@@ -1231,10 +1250,7 @@ def _live_df(spark, table_path: str, snapshot_id: int | None,
         # filter's exact semantics come from here
         df = df.filter(scan_filter)
     if deletes:
-        dd = (spark.read.parquet(*[_local(p) for p in deletes])
-              .select(_norm_path(F.col("file_path")).alias("__qs_dfp__"),
-                      F.col("pos").cast("long").alias("__qs_dpos__"))
-              .distinct())
+        dd = _pos_deletes_df(spark, deletes)
         df = df.join(dd, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
                      & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
                      "left_anti")
@@ -1632,7 +1648,7 @@ def _manifest_entry_schema(partition_spec: list | None) -> dict:
 
 
 def _manifest_entry(item, content: int, sid: int, first_row_id=None,
-                    record_count: int = 0) -> dict:
+                    record_count: int | None = None) -> dict:
     """One ADDED manifest entry for a file item: a plain path, or a
     dict with ``path`` and optional ``seq`` (the entry's data
     sequence number, default ``sid`` — carried files keep theirs so
@@ -1640,15 +1656,21 @@ def _manifest_entry(item, content: int, sid: int, first_row_id=None,
     ``lower_bounds``/``upper_bounds`` (``{field-id: bytes}``) and
     ``equality_ids``. A deletion-vector dict also carries
     ``referenced_data_file``/``content_offset``/
-    ``content_size_in_bytes`` and becomes a PUFFIN entry."""
+    ``content_size_in_bytes`` and becomes a PUFFIN entry.
+    ``record_count`` defaults to the item's (_record_count) for a
+    parquet data or delete file, as the spec requires on every format
+    version; a DV records 0."""
     d = item if isinstance(item, dict) else {"path": item}
+    if record_count is None:
+        record_count = (0 if "referenced_data_file" in d
+                        else _record_count(d))
 
     def kv(m):
         return ([{"key": int(k), "value": v}
                  for k, v in sorted(_bounds_map(m).items())]
                 if m else None)
     f = {"content": content, "file_path": d["path"],
-         "file_format": "PARQUET", "record_count": int(record_count or 0),
+         "file_format": "PARQUET", "record_count": int(record_count),
          "file_size_in_bytes": os.path.getsize(_local(d["path"])),
          "partition": d.get("partition"), "first_row_id": first_row_id,
          "lower_bounds": kv(d.get("lower_bounds")),
@@ -1663,18 +1685,25 @@ def _manifest_entry(item, content: int, sid: int, first_row_id=None,
     return {"status": 1, "snapshot_id": d.get("seq") or sid, "data_file": f}
 
 
-def _row_range(item, next_row_id: int) -> tuple:
-    """v3 row lineage of one data item (spec §Row Lineage):
-    ``(first_row_id, record_count, advanced next-row-id)``. An item
-    carrying an explicit ``first_row_id`` (and ``record_count``) keeps
-    it; any other takes the next range. The count defaults to the
-    parquet footer's — one KB read per file."""
-    d = item if isinstance(item, dict) else {"path": item}
+def _record_count(d: dict) -> int:
+    """A parquet file item's row count: its carried ``record_count``,
+    else the footer's ``num_rows`` — one KB read per file. A carried 0
+    counts as unknown: v2 entries this writer made before it recorded
+    counts carry 0."""
     rc = d.get("record_count")
     if not rc:
         import pyarrow.parquet as _pq
         rc = _pq.ParquetFile(_local(d["path"])).metadata.num_rows
-    rc = int(rc)
+    return int(rc)
+
+
+def _row_range(item, next_row_id: int) -> tuple:
+    """v3 row lineage of one data item (spec §Row Lineage):
+    ``(first_row_id, record_count, advanced next-row-id)``. An item
+    carrying an explicit ``first_row_id`` (and ``record_count``) keeps
+    it; any other takes the next range. The count is _record_count."""
+    d = item if isinstance(item, dict) else {"path": item}
+    rc = _record_count(d)
     if d.get("first_row_id") is None:
         return next_row_id, rc, next_row_id + rc
     frid = int(d["first_row_id"])
@@ -1735,11 +1764,13 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
     "content_size_in_bytes"}``. A snapshot dict may also carry
     ``operation``, ``summary_extra`` and ``timestamp_ms``.
     ``format_version`` defaults to 3 when any snapshot carries DVs,
-    else 2. Format-version 3 tables get spec §Row Lineage metadata:
-    each data file gets an explicit ``first_row_id`` range on first
-    appearance (reused when carried) and its real ``record_count``,
-    snapshots ``first-row-id``, data manifest-list rows
-    ``first_row_id``, and the table the ``next-row-id`` mark.
+    else 2. Every parquet data and delete entry records the file's
+    real ``record_count`` (footer, counted once per file).
+    Format-version 3 tables get spec §Row Lineage metadata: each data
+    file gets an explicit ``first_row_id`` range on first appearance
+    (reused when carried), snapshots ``first-row-id``, data
+    manifest-list rows ``first_row_id``, and the table the
+    ``next-row-id`` mark.
     ``schema_fields``: optional ``[(field_id, name)]`` or
     ``[(field_id, name, iceberg_type)]`` embedded as the table schema
     so equality_ids and partition types resolve.
@@ -1807,7 +1838,7 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
                 f"v{fv}-stamped table carrying them would resurrect "
                 "deleted rows under spec-compliant readers")
     next_row_id = 0
-    lineage_ids: dict = {}    # normalized path → (first_row_id, rows)
+    counted: dict = {}    # normalized path → (first_row_id, rows)
     bounds_cache: dict = {}
 
     def data_entry(item, sid):
@@ -1820,14 +1851,14 @@ def create_local_iceberg_table(table_dir: str, snapshots: list,
                                                          wanted_bounds)
             lo, hi = bounds_cache[d["path"]]
             d = {**d, "lower_bounds": lo, "upper_bounds": hi}
-        frid, rc = None, 0
-        if fv >= 3:
-            key = _py_norm(_local(d["path"]))
-            if key not in lineage_ids:
+        key = _py_norm(_local(d["path"]))
+        if key not in counted:
+            if fv >= 3:
                 frid, rc, next_row_id = _row_range(d, next_row_id)
-                lineage_ids[key] = (frid, rc)
-            frid, rc = lineage_ids[key]
-        return _manifest_entry(d, 0, sid, frid, rc)
+            else:
+                frid, rc = None, _record_count(d)
+            counted[key] = (frid, rc)
+        return _manifest_entry(d, 0, sid, *counted[key])
 
     snap_entries = []
     for sid, spec in enumerate(snapshots, start=1):
@@ -2062,11 +2093,11 @@ def _drop_superseded_dvs(rows: list, dvs: list, meta_dir: str,
 def _upgrade_to_v3(rows: list, meta: dict, meta_dir: str,
                    sid: int) -> list:
     """One-time v2 → v3 upgrade (the first deletion vector): v3 needs
-    row lineage for the live data files, which v2 manifests lack
-    (and this writer's v2 entries carry record_count 0). Each current
-    data manifest without a first_row_id is copied under a new name
-    with explicit first_row_id ranges and real record counts; older
-    snapshots keep the v2 originals. Advances ``meta``'s
+    row lineage for the live data files, which v2 manifests lack.
+    Each current data manifest without a first_row_id is copied under
+    a new name with explicit first_row_id ranges and record counts
+    re-read from the footers (v2 entries this writer made before it
+    recorded counts carry 0); older snapshots keep the v2 originals. Advances ``meta``'s
     next-row-id."""
     next_row_id = int(meta.get("next-row-id") or 0)
     out = []
@@ -2178,7 +2209,7 @@ def commit_snapshot(table_dir: str, add_files: list | None = None,
         entries = []
         nxt = first
         for item in add_files:
-            frid, rc = None, 0
+            frid, rc = None, None
             if fv >= 3:
                 frid, rc, nxt = _row_range(item, nxt)
             entries.append(_manifest_entry(item, 0, sid, frid, rc))
@@ -2808,11 +2839,7 @@ def read_iceberg_changes(spark, table_path: str,
         added_norm = {_py_norm(_local(p)): p for p in added}
         dd = None
         if new_pos:
-            dd = (spark.read.parquet(*[_local(p) for p in new_pos])
-                  .select(_norm_path(F.col("file_path"))
-                          .alias("__qs_dfp__"),
-                          F.col("pos").cast("long").alias("__qs_dpos__"))
-                  .distinct())
+            dd = _pos_deletes_df(spark, new_pos)
         if new_dvs:
             # newly deleted = cur blob minus the file's parent blob
             dv_dd = _dv_positions_df(spark, new_dvs)

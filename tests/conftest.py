@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import duckdb
 import numpy as np
@@ -69,6 +70,20 @@ def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
         df = df.sort_values(list(df.columns), na_position="first") \
                .reset_index(drop=True)
     return df
+
+
+def jobs_run_by(spark, fn):
+    """(fn(), ids of the Spark jobs it ran), counted by job group once
+    the listener bus has delivered every job start."""
+    sc = spark.sparkContext
+    group = f"jobs_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_matches_oracle(spark, name: str, sf_dir: str, atol: float = 1e-9):

@@ -339,6 +339,67 @@ def test_position_deletes_applied_and_time_travel(qc, spark, table):
     assert got3 == [2, 4, 5, 6, 8, 9] + list(range(10, 25)) + [100, 101, 102]
 
 
+def test_position_delete_read_runs_no_inference_job(spark, tmp_path):
+    """Position-delete files are scanned with the spec's fixed
+    (file_path string, pos long) schema: building a snapshot read of a
+    typed-schema table whose only deletes are position deletes runs no
+    Spark job."""
+    from conftest import jobs_run_by
+    from quokka_spark.sources.iceberg_local import (add_position_deletes,
+                                                    read_iceberg_local)
+    a = str(tmp_path / "a.parquet")
+    spark.range(0, 10).coalesce(1).toPandas().to_parquet(a)
+    tbl = str(tmp_path / "tbl")
+    create_local_iceberg_table(tbl, [[a]], schema_fields=[(1, "id", "long")])
+    add_position_deletes(tbl, {a: [0, 3, 7]})
+    df, jobs = jobs_run_by(spark, lambda: read_iceberg_local(spark, tbl))
+    assert jobs == []
+    assert sorted(r["id"] for r in df.collect()) == [1, 2, 4, 5, 6, 8, 9]
+
+
+def _manifest_record_counts(tbl):
+    """{(manifest content, file name): record_count} over the current
+    snapshot's manifests."""
+    import json
+    meta_dir = os.path.join(tbl, "metadata")
+    with open(os.path.join(meta_dir, "version-hint.text")) as f:
+        v = f.read().strip()
+    with open(os.path.join(meta_dir, f"v{v}.metadata.json")) as f:
+        meta = json.load(f)
+    snap = meta["snapshots"][-1]
+    out = {}
+    for row in read_container(snap["manifest-list"])[1]:
+        for e in read_container(row["manifest_path"])[1]:
+            f = e["data_file"]
+            out[(row["content"], os.path.basename(f["file_path"]))] = \
+                f["record_count"]
+    return out
+
+
+def test_v2_manifests_record_real_counts(spark, tmp_path):
+    """Format-v2 manifests record each parquet data and delete file's
+    real record_count (the spec requires it on every version), both
+    for a fresh table and for equality- and position-delete commits."""
+    from quokka_spark.sources.iceberg_local import (add_equality_deletes,
+                                                    add_position_deletes)
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    spark.range(0, 7).coalesce(1).toPandas().to_parquet(a)
+    spark.range(7, 12).coalesce(1).toPandas().to_parquet(b)
+    tbl = str(tmp_path / "tbl")
+    create_local_iceberg_table(tbl, [[a], [a, b]],
+                               schema_fields=[(1, "id", "long")])
+    assert _manifest_record_counts(tbl) == {(0, "a.parquet"): 7,
+                                            (0, "b.parquet"): 5}
+    add_equality_deletes(tbl, {"id": [1, 2, 8]}, equality_ids=[1])
+    counts = _manifest_record_counts(tbl)
+    assert {k: v for k, v in counts.items() if k[0] == 0} == {
+        (0, "a.parquet"): 7, (0, "b.parquet"): 5}
+    assert [v for k, v in counts.items() if k[0] == 1] == [3]
+    add_position_deletes(tbl, {a: [0, 4]})
+    counts = _manifest_record_counts(tbl)
+    assert sorted(v for k, v in counts.items() if k[0] == 1) == [2, 3]
+
+
 def test_equality_deletes_applied_and_time_travel(qc, table):
     """v2 equality deletes: add_equality_deletes commits a delete
     snapshot; the current read drops every matching row (null-safe

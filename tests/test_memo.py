@@ -18,12 +18,12 @@ import os
 import pathlib
 import sys
 import threading
-import uuid
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from conftest import jobs_run_by  # noqa: E402
 from quokka_spark.memo import MISS, Memo  # noqa: E402
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "quokka_spark"
@@ -118,20 +118,6 @@ def test_read_parquet_rewritten_file_reprobes_nanos_columns(qc, tmp_path):
     assert read() == ("timestamp", micros)
 
 
-def _jobs_run_by(spark, fn):
-    """(fn(), ids of the Spark jobs it ran), counted by job group once
-    the listener bus has delivered every job start."""
-    sc = spark.sparkContext
-    group = f"read_parquet_probe_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "read_parquet probe")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _footer_hits():
     from quokka_spark import memo
     return memo.stats().get("context.parquet_footers", {}).get("hits")
@@ -146,10 +132,10 @@ def test_read_parquet_reread_runs_no_inference_job(spark, qc, tmp_path):
 
     p = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"id": [1, 2, 3], "s": ["a", "b", "c"]}), p)
-    first, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(p).df)
+    first, jobs = jobs_run_by(spark, lambda: qc.read_parquet(p).df)
     assert jobs, "the first read should infer the schema with a job"
     hits = _footer_hits()
-    again, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(p).df)
+    again, jobs = jobs_run_by(spark, lambda: qc.read_parquet(p).df)
     assert jobs == []
     assert again.schema == first.schema
     assert _footer_hits() == hits + 1
@@ -206,7 +192,7 @@ def test_read_parquet_schema_memo_follows_file_and_confs(spark, qc,
     pq.write_table(pa.table({"id": [1, 2]}), str(d / "part-0.parquet"))
     for path in (str(d), str(d / "*.parquet")):
         qc.read_parquet(path)
-        df, jobs = _jobs_run_by(spark, lambda: qc.read_parquet(path).df)
+        df, jobs = jobs_run_by(spark, lambda: qc.read_parquet(path).df)
         assert jobs, f"{path}: a re-read should still infer with a job"
         assert df.columns == ["id"]
 
