@@ -4,11 +4,30 @@ Extension source (the reference reads csv/parquet/iceberg/lance;
 Delta rounds out the lakehouse trio). The Delta transaction log is
 the simplest of the table formats: ``_delta_log/<20-digit>.json``
 files of newline-delimited JSON actions (``protocol`` / ``metaData``
-/ ``add`` / ``remove``), replayed in version order — state is simply
-the set of added-and-not-removed files. That makes a spec-shaped
-local implementation ~150 lines:
+/ ``add`` / ``remove`` / ``txn`` / ``domainMetadata``), replayed in
+version order — state is simply the set of added-and-not-removed
+files plus the latest of each other kind.
 
-- :func:`read_delta_local` replays the log up to ``version`` (time
+ONE fold rebuilds that state: :func:`_snapshot` (the Delta Lake
+paper's snapshot, VLDB 2020 §3.2) lists the log once, reads one
+checkpoint candidate once and parses each later commit once, yielding
+files, metaData, protocol, txn marks and domain metadata together.
+Every reader and writer takes its state from it; a writer commits at
+the snapshot's version plus one, so a commit that landed meanwhile
+fails as a conflict. The checkpoint it starts from:
+
+1. the newest checkpoint version with a complete, readable candidate
+   (an unreadable or incomplete one falls back to older checkpoints,
+   then to the JSON history);
+2. within that version, a candidate carrying the ``txn`` and
+   ``protocol`` columns;
+3. one lacking them only when no sibling has them — the kinds it
+   lacks then come from the JSON history below it while that exists;
+4. over a cleaned history a missing protocol is the (1, 2) default
+   and missing txn marks are unknowable: ``last_txn_version`` raises,
+   reads still work.
+
+- :func:`read_delta_local` folds the log up to ``version`` (time
   travel) and hands the live file list to Spark's native parquet
   scan — pushdown/pruning work exactly as on raw parquet.
 - :func:`write_delta_local` commits Spark-written parquet as new
@@ -66,6 +85,7 @@ import os
 import re
 import time
 import uuid
+from typing import NamedTuple
 
 from ..memo import MISS, Memo
 
@@ -109,29 +129,24 @@ def _scan_log(table: str) -> tuple[list, dict]:
     return sorted(commits), {v: sorted(ps) for v, ps in checkpoints.items()}
 
 
-def _checkpoint_action_rows(path: str, columns=None):
-    """Yield action dicts ({action name: payload}) from ONE
-    checkpoint file — classic/multipart/v2-top-level parquet or the
-    v2 JSON flavor. ``columns`` prunes the parquet read (txn and
-    protocol lookups touch a handful of rows among potentially a
-    million adds); a parquet file lacking every asked column yields
-    nothing, exactly like the old schema check."""
+def _checkpoint_action_rows(path: str, columns=None) -> tuple:
+    """ONE checkpoint file → (the columns it carries, [action dict
+    ({action name: payload}), ...]) — classic/multipart/v2-top-level
+    parquet, or the v2 JSON flavor, whose inline actions carry every
+    kind (columns ``None``). ``columns`` prunes the parquet read: a
+    state-only fold touches a handful of rows among potentially a
+    million adds."""
     if path.endswith(".json"):
         with open(path) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    yield json.loads(line)
-        return
+            return None, [json.loads(ln) for ln in fh if ln.strip()]
     import pyarrow.parquet as pq
-    names = pq.read_schema(path).names
-    cols = ([c for c in columns if c in names]
-            if columns is not None else None)
-    if columns is not None and not cols:
-        return
-    t = pq.read_table(path, columns=cols)
-    for r in t.to_pylist():
-        yield {k: v for k, v in r.items() if v is not None}
+    with pq.ParquetFile(path) as pf:
+        names = pf.schema_arrow.names
+        cols = (None if columns is None
+                else [c for c in columns if c in names])
+        rows = pf.read(columns=cols).to_pylist() if cols != [] else []
+    return names, [{k: v for k, v in r.items() if v is not None}
+                   for r in rows]
 
 
 def list_versions(table: str) -> list:
@@ -177,84 +192,123 @@ def _checkpoint_candidates(paths: list) -> list:
     return out
 
 
-def _read_checkpoint(paths: list) -> tuple[dict, dict]:
-    """Load a checkpoint's full state: (live add-actions by path,
-    metaData dict). ``paths`` are every checkpoint file at one
-    version; they group into independent candidates
-    (_checkpoint_candidates) and the FIRST one that reads completely
-    wins — a candidate whose sidecar or part is missing falls back
-    to the next instead of failing the read. Multi-part candidates
-    concatenate their parts; V2 candidates read their top-level
-    non-file actions and then every ``sidecar`` parquet under
-    _delta_log/_sidecars/ (where the file actions live, per the V2
-    Checkpoint spec). Driver-side pyarrow read — a checkpoint row is
-    ~100 bytes of metadata per data file, so even a million-file
-    table is ~100 MB here; a distributed scan would be the next step
-    past that."""
+# the non-file columns a state-only fold (files=False) reads
+_STATE_COLUMNS = ["protocol", "metaData", "txn", "domainMetadata"]
+_DEFAULT_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
+
+
+def _fold_txns(txns: dict, marks) -> None:
+    """Raise each appId's high-water mark by the given ``txn`` actions."""
+    for x in marks:
+        if x and x.get("appId") is not None:
+            txns[x["appId"]] = max(txns.get(x["appId"], -1),
+                                   int(x["version"]))
+
+
+def _read_checkpoint(paths: list, files: bool) -> dict:
+    """One checkpoint version's state. ``paths`` group into
+    independent candidates (_checkpoint_candidates); the first that
+    reads completely AND carries the ``txn`` and ``protocol`` columns
+    wins, else the first readable one. State: ``live`` {path key:
+    add} (empty unless ``files``), ``meta``, ``protocol`` (None
+    without a row), ``txns`` (None without a txn column) and
+    ``domains`` — _snapshot fills what is None. Multi-part
+    candidates concatenate their parts; V2 candidates read their
+    top-level actions and, with ``files``, every ``sidecar`` parquet
+    under _delta_log/_sidecars/ (where the file actions live, per the
+    V2 Checkpoint spec). A candidate whose part or sidecar is missing
+    or unreadable falls back to the next; none readable raises.
+    Driver-side pyarrow — a checkpoint row is ~100 bytes of metadata
+    per data file."""
     cands = _checkpoint_candidates(paths)
     if not cands:
         raise FileNotFoundError(
             f"no complete checkpoint candidate among {paths}")
-    errors = []
+    errors, lacking = [], None
     for cand in cands:
+        st = {"live": {}, "meta": {}, "protocol": None, "txns": {},
+              "domains": {}}
+        absent: set = set()
         try:
-            return _read_checkpoint_candidate(cand)
-        except (FileNotFoundError, OSError, ValueError) as e:
+            for p in cand:
+                names, rows = _checkpoint_action_rows(
+                    p, None if files else _STATE_COLUMNS)
+                if names is not None:
+                    absent |= {"txn", "protocol"} - set(names)
+                sidecars = [r["sidecar"] for r in rows if r.get("sidecar")]
+                if files:
+                    sdir = os.path.join(os.path.dirname(p), "_sidecars")
+                    for sc in sidecars:
+                        # relative to _sidecars/; the spec allows
+                        # absolute paths too, possibly in the file: URI
+                        # form this codebase strips everywhere else
+                        sp = os.path.join(sdir, re.sub(
+                            "^file:/+", "/", sc.get("path") or ""))
+                        if not os.path.exists(sp):
+                            raise FileNotFoundError(
+                                f"{p}: sidecar {sc.get('path')!r} is "
+                                "missing — the checkpoint state is "
+                                "incomplete")
+                        rows = rows + _checkpoint_action_rows(sp)[1]
+                for r in rows:
+                    a, x = r.get("add"), r.get("protocol")
+                    if a and files:
+                        if isinstance(a.get("partitionValues"), list):
+                            # arrow map → list of pairs
+                            a["partitionValues"] = dict(a["partitionValues"])
+                        st["live"][a["path"]] = a
+                    if r.get("metaData"):
+                        st["meta"] = dict(r["metaData"])
+                    if x and x.get("minReaderVersion") is not None:
+                        st["protocol"] = {k: v for k, v in x.items()
+                                          if v is not None}
+                    _fold_txns(st["txns"], [r.get("txn")])
+                    d = r.get("domainMetadata")
+                    if d and d.get("domain"):
+                        st["domains"][d["domain"]] = dict(d)
+        except (OSError, ValueError) as e:
             errors.append(f"{[os.path.basename(p) for p in cand]}: "
                           f"{type(e).__name__}: {e}")
+            continue
+        if "txn" in absent:
+            st["txns"] = None
+        if not absent:
+            return st
+        lacking = lacking or st
+    if lacking:
+        return lacking
     raise FileNotFoundError(
         "every checkpoint candidate at this version failed to read: "
         + "; ".join(errors))
 
 
-def _read_checkpoint_candidate(paths: list) -> tuple[dict, dict]:
-    live, meta = {}, {}
-
-    def absorb(r):
-        nonlocal meta
-        m = r.get("metaData")
-        a = r.get("add")
-        if m:
-            meta = dict(m)
-            if isinstance(meta.get("configuration"), list):
-                # arrow map columns round-trip as pair lists
-                meta["configuration"] = dict(meta["configuration"])
-        if a:
-            pv = a.get("partitionValues")
-            if isinstance(pv, list):      # arrow map → list of pairs
-                a["partitionValues"] = dict(pv)
-            live[a["path"]] = a
-
-    for p in paths:
-        sidecars = []
-        for r in _checkpoint_action_rows(p):
-            sc = r.get("sidecar")
-            if sc:
-                sidecars.append(sc)
-                continue
-            absorb(r)
-        sdir = os.path.join(os.path.dirname(p), "_sidecars")
-        for sc in sidecars:
-            # the spec allows absolute sidecar paths, possibly in the
-            # file: URI form this codebase strips everywhere else
-            sp = re.sub("^file:/+", "/", sc.get("path") or "")
-            sp = sp if os.path.isabs(sp) else os.path.join(sdir, sp)
-            if not os.path.exists(sp):
-                raise FileNotFoundError(
-                    f"{p}: sidecar {sc.get('path')!r} is missing — "
-                    "the checkpoint state is incomplete")
-            for r in _checkpoint_action_rows(sp):
-                absorb(r)
-    return live, meta
+class _Snapshot(NamedTuple):
+    """The table state at one version (see _snapshot)."""
+    version: int
+    files: list | None     # absolute live data-file paths, sorted
+    meta: dict             # the metaData action
+    keys: list | None      # each file's add path key, aligned
+    adds: list | None      # each file's add action, aligned
+    protocol: dict
+    txns: dict | None      # {appId: high-water mark}; None = unknowable
+    domains: dict          # {domain: latest domainMetadata}, tombstones too
 
 
-def _replay(table: str, version: int | None):
-    """State at ``version`` (inclusive; None = latest): start from the
-    newest checkpoint ≤ version when one exists, then replay the
-    trailing JSON commits. Returns (live file paths, metaData dict,
-    add keys, add actions) — all four lists ALIGNED (same sort), so
-    upsert can remove by the exact key each file was added under."""
-    commits, checkpoints = _scan_log(table)
+def _snapshot(table: str, version: int | None = None,
+              files: bool = True, scan=None) -> _Snapshot:
+    """The state at ``version`` (inclusive; None = latest) — the ONE
+    fold behind every reader and writer (the Delta Lake paper's
+    snapshot: the newest usable checkpoint plus the JSON commits after
+    it, yielding every kind of action at once). Lists the log once
+    (``scan`` reuses a _scan_log listing), reads one checkpoint
+    candidate once (the rule in the module docstring) and parses each
+    tail commit once (_commit_parsed). ``files=False`` skips the
+    checkpoint's add column and sidecars for the state-only callers
+    (protocol checks, txn marks, the checkpoint interval); its
+    files/keys/adds are None. ``files``, ``keys`` and ``adds`` are
+    ALIGNED (same sort), so writers remove by the exact key each file
+    was added under."""
+    commits, checkpoints = scan or _scan_log(table)
     versions = sorted(set(commits) | set(checkpoints))
     if not versions:
         raise FileNotFoundError(f"empty _delta_log in {table}")
@@ -263,77 +317,75 @@ def _replay(table: str, version: int | None):
     if version not in versions:
         raise ValueError(
             f"version {version} not in table {table}; have {versions}")
-    live: dict = {}
-    meta: dict = {}
-    usable = sorted([v for v in checkpoints if v <= version],
-                    reverse=True)
-    base = -1
-    cp_err = None
+    have = set(commits)
+    st, base, cp_err = None, -1, None
     # newest-first with fallback (review finding): an unreadable
-    # checkpoint (e.g. a foreign writer's crash left only part 1 of
-    # a 2-part set) must not brick the table when an older
-    # checkpoint or the full JSON history can serve the same state —
-    # the spec tells readers to ignore incomplete checkpoints
-    for cv in usable:
+    # checkpoint (e.g. a foreign writer's crash left only part 1 of a
+    # 2-part set) must not brick the table when an older checkpoint
+    # or the full JSON history can serve the same state — the spec
+    # tells readers to ignore incomplete checkpoints
+    for cv in sorted((c for c in checkpoints if c <= version),
+                     reverse=True):
         try:
-            live, meta = _read_checkpoint(checkpoints[cv])
-            base = cv
-            cp_err = None
-            break
+            st = _read_checkpoint(checkpoints[cv], files)
         except (OSError, ValueError) as e:
             cp_err = e
-            live, meta = {}, {}
-    tail = [v for v in commits if base < v <= version]
-    # the replay must be gapless: checkpoint (or 0) .. version
-    expect = list(range(base + 1, version + 1))
-    if tail != expect:
+            continue
+        base, cp_err = cv, None
+        break
+    tail = range(base + 1, version + 1)
+    if not have.issuperset(tail):
         if cp_err is not None:
             # the JSON history cannot cover and every usable
             # checkpoint failed — the checkpoint error is the root
             # cause, surface it
             raise cp_err
-        missing = sorted(set(expect) - set(tail))
+        missing = sorted(set(tail) - have)
         raise FileNotFoundError(
             f"cannot reconstruct version {version} of {table}: JSON "
             f"commits {missing} are missing and no checkpoint at or "
             f"below covers them (log was cleaned up? write a newer "
             f"checkpoint first)")
-    root = table.removeprefix("file://")
+    st = st or {"live": {}, "meta": {}, "protocol": None, "txns": {},
+                "domains": {}}
+    # a foreign checkpoint without a protocol row or txn column takes
+    # those kinds from the JSON history below it while that exists;
+    # over a cleaned history the protocol is the (1, 2) default and
+    # the txn marks stay unknowable (None)
+    fill = [k for k in ("protocol", "txns") if st[k] is None]
+    if fill and base >= 0 and have.issuperset(range(base + 1)):
+        st["txns"] = {} if st["txns"] is None else st["txns"]
+        for v in range(base + 1):
+            c = _commit_parsed(table, v)
+            if "protocol" in fill and c.protocol is not None:
+                st["protocol"] = c.protocol
+            if "txns" in fill:
+                _fold_txns(st["txns"], c.txns)
+    live, meta, proto = st["live"], st["meta"], st["protocol"]
+    txns, domains = st["txns"], st["domains"]
     for v in tail:
-        # a commit is reconciled ATOMICALLY: buffer its file actions
-        # and apply removes before adds. The spec keys reconciliation
-        # by (path, dv uniqueId), so a DV-update commit may serialize
-        # the add (new DV) BEFORE the remove (old DV) of the same
-        # path — applied in file order that would pop the freshly
-        # added entry and silently drop every row of the file.
-        commit_adds: list = []
-        commit_removes: list = []
-        with open(_version_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    # an add carrying a deletionVector REPLACES the
-                    # path's previous add (the DV-update commit shape);
-                    # the scan applies the DV as a row-position
-                    # anti-join (see _apply_deletion_vectors)
-                    commit_adds.append(action["add"])
-                elif "remove" in action:
-                    commit_removes.append(action["remove"])
-        for r in commit_removes:
-            live.pop(r["path"], None)
-        for a in commit_adds:
-            live[a["path"]] = a
-    conf = meta.get("configuration") or {}
-    if isinstance(conf, list):  # arrow map → list of pairs
-        conf = dict(conf)
-        meta = dict(meta)
-        meta["configuration"] = conf
-    cm = conf.get("delta.columnMapping.mode")
+        c = _commit_parsed(table, v)
+        # a commit is reconciled ATOMICALLY: removes before adds. The
+        # spec keys reconciliation by (path, dv uniqueId), so a
+        # DV-update commit may serialize the add (new DV) BEFORE the
+        # remove (old DV) of the same path — applied in file order
+        # that would pop the freshly added entry and silently drop
+        # every row of the file. (An add carrying a deletionVector
+        # REPLACES the path's previous add; the scan applies the DV
+        # as a row-position anti-join, _apply_deletion_vectors.)
+        for k in c.removes:
+            live.pop(k, None)
+        live.update(c.adds)
+        meta = c.meta if c.meta is not None else meta
+        proto = c.protocol if c.protocol is not None else proto
+        if txns is not None:
+            _fold_txns(txns, c.txns)
+        for d in c.domains:
+            domains[d["domain"]] = dict(d)
+    if isinstance(meta.get("configuration"), list):
+        # arrow map → list of pairs
+        meta = dict(meta, configuration=dict(meta["configuration"]))
+    cm = (meta.get("configuration") or {}).get("delta.columnMapping.mode")
     if cm and cm not in ("none", "name", "id"):
         # name mode resolves via the schema's physicalName metadata
         # (_column_mapping); id mode via per-file parquet field ids
@@ -341,30 +393,45 @@ def _replay(table: str, version: int | None):
         raise NotImplementedError(
             f"delta.columnMapping.mode={cm!r} is not a protocol mode "
             "this reader knows (none/name/id)")
-    pairs = sorted(
-        ((k if os.path.isabs(k) else os.path.join(root, k)), k)
-        for k in live)
-    files = [f for f, _ in pairs]
-    keys = [k for _, k in pairs]
-    return files, meta, keys, [live[k] for k in keys]
+    proto = proto or dict(_DEFAULT_PROTOCOL)
+    if not files:
+        return _Snapshot(version, None, meta, None, None, proto, txns,
+                         domains)
+    root = table.removeprefix("file://")
+    pairs = sorted(((k if os.path.isabs(k) else os.path.join(root, k)), k)
+                   for k in live)
+    return _Snapshot(version, [f for f, _ in pairs], meta,
+                     [k for _, k in pairs], [live[k] for _, k in pairs],
+                     proto, txns, domains)
 
 
-def _commit_parsed(table: str, v: int) -> tuple[dict, dict,
-                                                dict | None, dict,
-                                                list]:
-    """ONE pass over a commit file → ({path: add}, {path: remove},
-    metaData | None, commitInfo, [cdc action, ...]) — the change feed
-    and streaming source need all of them per version, and separate
-    helpers would re-parse a 100k-add commit once per question. The
-    ``cdc`` actions (protocol: Change Data Files under _change_data/,
-    written by CDF-enabled writers for update/delete/merge commits)
-    matter ONLY to the change feed; replay and the batch scan ignore
-    them (they are dataChange=false by spec)."""
-    adds: dict = {}
-    removes: dict = {}
-    md = None
-    ci: dict = {}
-    cdcs: list = []
+def _replay(table: str, version: int | None):
+    """(files, metaData, keys, adds) of _snapshot — the 4-tuple view."""
+    s = _snapshot(table, version)
+    return s.files, s.meta, s.keys, s.adds
+
+
+class _Commit(NamedTuple):
+    """One parsed commit file (see _commit_parsed)."""
+    adds: dict             # {path: add}
+    removes: dict          # {path: remove}
+    meta: dict | None      # the commit's metaData action, if any
+    info: dict             # commitInfo (first-line convention) or {}
+    cdcs: list             # cdc actions (Change Data Files)
+    protocol: dict | None  # the commit's protocol action, if any
+    txns: list             # txn actions
+    domains: list          # domainMetadata actions
+
+
+def _commit_parsed(table: str, v: int) -> _Commit:
+    """ONE pass over a commit file → every action kind the fold, the
+    change feed and the streaming source need (separate helpers
+    would re-parse a 100k-add commit once per question). The ``cdc``
+    actions (protocol: Change Data Files under _change_data/, written
+    by CDF-enabled writers for update/delete/merge commits) matter
+    ONLY to the change feed; the fold and the batch scan ignore them
+    (they are dataChange=false by spec)."""
+    c = _Commit({}, {}, None, {}, [], None, [], [])
     first = True
     with open(_version_path(table, v)) as fh:
         for line in fh:
@@ -373,27 +440,24 @@ def _commit_parsed(table: str, v: int) -> tuple[dict, dict,
                 continue
             action = json.loads(line)
             if "add" in action:
-                adds[action["add"]["path"]] = action["add"]
+                c.adds[action["add"]["path"]] = action["add"]
             elif "remove" in action:
-                removes[action["remove"]["path"]] = action["remove"]
+                c.removes[action["remove"]["path"]] = action["remove"]
             elif "metaData" in action:
-                md = action["metaData"]
+                c = c._replace(meta=action["metaData"])
+            elif "protocol" in action:
+                c = c._replace(protocol=action["protocol"])
+            elif "txn" in action:
+                c.txns.append(action["txn"])
             elif "cdc" in action:
-                cdcs.append(action["cdc"])
+                c.cdcs.append(action["cdc"])
+            elif (action.get("domainMetadata") or {}).get("domain"):
+                c.domains.append(action["domainMetadata"])
             elif first and "commitInfo" in action:
                 # first-line convention only — see _commit_info
-                ci = action["commitInfo"] or {}
+                c = c._replace(info=action["commitInfo"] or {})
             first = False
-    return adds, removes, md, ci, cdcs
-
-
-def _commit_actions(table: str, v: int) -> tuple[dict, dict]:
-    """One commit's file actions, buffered: ({path: add}, {path:
-    remove}) — the per-commit parse shared by _replay, the change
-    stream and the streaming source (reconciliation is per-commit,
-    never per-line)."""
-    adds, removes, _, _, _ = _commit_parsed(table, v)
-    return adds, removes
+    return c
 
 
 def _to_epoch_ms(ts) -> int:
@@ -1088,11 +1152,23 @@ def read_delta_local(spark, table: str, version: int | None = None,
             raise ValueError(
                 "pass version OR timestamp_as_of, not both")
         version = version_at_timestamp(table, timestamp_as_of)
-    _check_read_protocol(_protocol_state(table, version))
-    files, meta, _, adds = _replay(table, version)
+    return _read_snapshot(spark, table, _snapshot(table, version),
+                          partition_filter, scan_filter,
+                          with_row_tracking)
+
+
+def _read_snapshot(spark, table: str, snap: _Snapshot,
+                   partition_filter: str | None = None,
+                   scan_filter: str | None = None,
+                   with_row_tracking: bool = False):
+    """read_delta_local over an already-folded snapshot — compaction
+    scans exactly the snapshot it commits over."""
+    _check_read_protocol(snap.protocol)
+    files, meta, adds = snap.files, snap.meta, snap.adds
     if not files:
         raise ValueError(
-            f"Delta table {table} has no live files at version {version}")
+            f"Delta table {table} has no live files at version "
+            f"{snap.version}")
     pcols, ptypes = _partition_schema(meta)
     # validate BEFORE any stats-pruning early return, so a bogus
     # partition_filter errors regardless of what scan_filter prunes
@@ -1334,9 +1410,8 @@ def _checkpoint_interval(table: str, version: int, actions: list) -> int:
     common no-metaData commit costs a lookup; any ``metaData``
     action flowing through _commit refreshes the entry (config
     changes only ever enter the log that way). First sight of an
-    existing table (or of one evicted since) resolves via one bounded
-    _replay — bounded because replay itself starts from the newest
-    checkpoint."""
+    existing table (or of one evicted since) resolves via one
+    state-only snapshot (files=False: no add column is read)."""
     key = os.path.abspath(_log_dir(table))
     for a in actions:
         m = a.get("metaData")
@@ -1345,7 +1420,8 @@ def _checkpoint_interval(table: str, version: int, actions: list) -> int:
     interval = _INTERVALS.get(key)
     if interval is MISS:
         try:
-            interval = _interval_of(_replay(table, version)[1])
+            interval = _interval_of(
+                _snapshot(table, version, files=False).meta)
         except Exception:
             return CHECKPOINT_INTERVAL_DEFAULT
         _INTERVALS.put(key, interval)
@@ -1367,9 +1443,10 @@ def _maybe_checkpoint(table: str, version: int, actions: list) -> None:
     streaming sink accumulates one JSON commit per batch and every
     ``last_txn_version`` handshake (and every read) replays O(total
     batches) JSON per batch, O(n²) over the sink's lifetime. With it,
-    _replay/_txn_state start from the newest checkpoint and read at
-    most ``interval`` trailing JSON files (test-pinned in
-    tests/test_delta_checkpoint_auto.py). Best-effort: the data
+    the fold (_snapshot) starts from the newest checkpoint and parses
+    at most ``interval`` trailing commits (test-pinned in
+    tests/test_delta_checkpoint_auto.py). The checkpoint writer takes
+    its own listing and snapshot of ``version``. Best-effort: the data
     commit already succeeded atomically, so a checkpoint failure
     warns instead of raising — the next interval boundary retries."""
     if version <= 0:
@@ -1419,17 +1496,18 @@ def _meta_actions(schema_json: str | None,
 
 
 # Incremental fold memo for _txn_state (the sink handshake would
-# otherwise re-read the WHOLE trailing JSON history on every probe — a
-# 50-batch sink run paid O(n^2) commit-file reads, and a long-running
+# otherwise re-read its trailing history on every probe — a 50-batch
+# sink run paid O(n^2) commit-file reads, and a long-running
 # exactly-once sink pays its full history per batch). Keyed by
 # (absolute table path, commit 0's metaData.id): the table's identity,
 # so a table dropped and recreated at the same path is a new key
 # whatever its commit files' inodes, sizes and mtimes. An entry is
 # (folded version, txns); a later probe folds only the commits AFTER
 # the folded version. Correct under: log cleanup (txn state at v is
-# immutable — removing older files cannot change it), gaps (the
-# gapless tail check runs on the incremental range too), and new
-# checkpoints (the cached state already covers their range).
+# immutable — removing older files cannot change it) and new
+# checkpoints (the cached state already covers their range); the memo
+# answers only where the log itself has no gap, so the loud-gap
+# contract is the fold's either way.
 _TXN_FOLDS = Memo("delta.txn_folds", cap=64)
 
 
@@ -1449,206 +1527,65 @@ def _table_id(table: str):
 
 
 def _fold_txn_commit(table: str, v: int, txns: dict) -> None:
-    with open(_version_path(table, v)) as fh:
-        for line in fh:
-            line = line.strip()
-            if not line:
-                continue
-            x = json.loads(line).get("txn")
-            if x and x.get("appId") is not None:
-                txns[x["appId"]] = max(
-                    txns.get(x["appId"], -1), int(x["version"]))
+    _fold_txns(txns, _commit_parsed(table, v).txns)
 
 
 def _txn_state(table: str, version: int | None = None,
-               _scan=None) -> dict:
+               scan=None) -> dict:
     """{appId: highest committed txn version} at ``version`` — the
-    idempotence handshake streaming sinks use. Starts from the newest
-    checkpoint's ``txn`` rows (persisted by write_checkpoint_local,
-    so log cleanup cannot forget a sink's progress) and applies the
-    trailing JSON commits' txn actions on top.
+    idempotence handshake streaming sinks use. The memo path folds
+    only the commits after a memoized fold (or, on a log without a
+    checkpoint yet, every commit); anything else is the snapshot's
+    txns (_snapshot with files=False: the checkpoint's ``txn`` rows,
+    persisted by write_checkpoint_local so log cleanup cannot forget
+    a sink's progress, plus the tail commits'). ``scan`` reuses a
+    _scan_log listing.
 
-    Loud on unknowable state (the same gapless contract as _replay):
-    a missing JSON tail, or a checkpoint without a ``txn`` column
-    hiding cleaned commits, raises instead of returning a mark that
-    may be too low — an under-reported high-water mark makes an
-    "exactly-once" sink double-commit."""
-    import pyarrow.parquet as pq
-    commits, checkpoints = _scan or _scan_log(table)
-    versions = sorted(set(commits) | set(checkpoints))
-    if not versions:
+    Loud on unknowable state (the fold's gapless contract): a missing
+    JSON tail, or a checkpoint without a ``txn`` column hiding cleaned
+    commits, raises instead of returning a mark that may be too low —
+    an under-reported high-water mark makes an "exactly-once" sink
+    double-commit."""
+    commits, checkpoints = scan = scan or _scan_log(table)
+    if not commits and not checkpoints:
         return {}
     if version is None:
-        version = versions[-1]
-    # The memo serves ONLY the checkpoint-free, fully-gapless case —
-    # the one where the full path re-reads the whole history and
-    # where its loud-gap / foreign-checkpoint contracts cannot be in
-    # play, so memoized and full behavior are identical by
-    # construction (a gap or a checkpoint falls through to the full
-    # path, a recreated table has a new key).
-    memo_key = cached = None
-    if not any(c <= version for c in checkpoints) \
-            and commits[:version + 1] == list(range(version + 1)):
+        version = max(commits[-1:] + list(checkpoints))
+    base = max((c for c in checkpoints if c <= version), default=-1)
+    have = set(commits)
+    key, cached, start = None, MISS, None
+    if have.issuperset(range(base + 1, version + 1)):
         tid = _table_id(table)
         if tid is not None:
-            memo_key = (os.path.abspath(table), tid)
-            cached = _TXN_FOLDS.get(memo_key)
-            if cached is not MISS and cached[0] <= version:
-                cv, txns = cached[0], dict(cached[1])
-                for v in range(cv + 1, version + 1):
-                    _fold_txn_commit(table, v, txns)
-                if version > cv:
-                    _TXN_FOLDS.put(memo_key, (version, dict(txns)))
-                return txns
-    txns: dict = {}
-    usable = [v for v in checkpoints if v <= version]
-    base = -1
-    if usable:
-        base = max(usable)
-        # candidate-aware like _read_checkpoint (round 11): prefer a
-        # candidate that CARRIES txn marks over demoting to a full
-        # JSON replay — a foreign txn-less classic next to this
-        # engine's v2 (txn inline) must use the v2, or every sink
-        # handshake degrades to O(full history) per batch (review
-        # finding); broken siblings fall back
-        chosen = None                 # the winning candidate's txn dict
-        demote_ok = False             # a txn-less candidate allows it
-        errors: list = []
-        for cand in _checkpoint_candidates(checkpoints[base]):
-            try:
-                # a v2 JSON checkpoint keeps non-file actions (incl.
-                # txn) inline — the format implies completeness; a
-                # PARQUET part lacking the txn column is a foreign
-                # checkpoint that never recorded sink marks
-                if any(not p.endswith(".json")
-                       and "txn" not in pq.read_schema(p).names
-                       for p in cand):
-                    # foreign checkpoint without txn rows: usable
-                    # only when the full JSON history below it still
-                    # exists — keep looking for a sibling WITH marks
-                    if set(commits).issuperset(range(base + 1)):
-                        demote_ok = True
-                        continue
-                    raise ValueError(
-                        f"checkpoint {base} of {table} carries "
-                        "no txn column but covers cleaned "
-                        "commits — the sink high-water mark is "
-                        "unknowable (idempotent sinks on this "
-                        "table may double-commit; "
-                        "write_checkpoint_local resets the "
-                        "marks to empty)")
-                t: dict = {}
-                for p in cand:
-                    # column-pruned read: txn rows are a handful
-                    # among potentially a million add rows
-                    for r in _checkpoint_action_rows(
-                            p, columns=["txn"]):
-                        x = r.get("txn")
-                        if x and x.get("appId") is not None:
-                            t[x["appId"]] = max(
-                                t.get(x["appId"], -1),
-                                int(x["version"]))
-                chosen = t
-                break
-            except (OSError, ValueError) as e:
-                errors.append(e)
-        if chosen is not None:
-            txns = chosen
-        elif demote_ok or set(commits).issuperset(range(base + 1)):
-            # no candidate yielded marks (txn-less, broken, or an
-            # incomplete multipart set with no siblings) but the
-            # full JSON history exists — replay it
-            base = -1
-        elif errors:
-            raise errors[-1]
-        else:
+            key = (os.path.abspath(table), tid)
+            cached = _TXN_FOLDS.get(key)
+        if cached is not MISS and cached[0] <= version \
+                and have.issuperset(range(cached[0] + 1, version + 1)):
+            start, txns = cached[0] + 1, dict(cached[1])
+        elif base < 0:
+            start, txns = 0, {}
+    if start is None:
+        try:
+            s = _snapshot(table, version, files=False, scan=scan)
+        except FileNotFoundError as e:
             raise FileNotFoundError(
-                f"no complete checkpoint candidate at version {base} "
-                f"of {table} and the JSON history below is cleaned")
-    tail = [v for v in commits if base < v <= version]
-    if tail != list(range(base + 1, version + 1)):
-        raise FileNotFoundError(
-            f"cannot reconstruct txn state of {table} at {version}: "
-            "JSON commits are missing and no checkpoint covers them")
-    for v in tail:
-        _fold_txn_commit(table, v, txns)
-    # a memoized fold newer than ``version`` (an older-version probe
-    # missed it) stays
-    if memo_key is not None and cached is MISS:
-        _TXN_FOLDS.put(memo_key, (version, dict(txns)))
+                f"cannot reconstruct txn state of {table} at {version}: "
+                f"{e}") from e
+        if s.txns is None:
+            raise ValueError(
+                f"a checkpoint of {table} at or below version {version} "
+                "carries no txn column but covers cleaned commits — the "
+                "sink high-water mark is unknowable (idempotent sinks on "
+                "this table may double-commit; write_checkpoint_local "
+                "resets the marks to empty)")
+        txns = dict(s.txns)
+    else:
+        for v in range(start, version + 1):
+            _fold_txn_commit(table, v, txns)
+    # a memoized fold newer than ``version`` (an older probe) stays
+    if key is not None and (cached is MISS or cached[0] < version):
+        _TXN_FOLDS.put(key, (version, dict(txns)))
     return txns
-
-
-def _protocol_state(table: str, version: int | None = None,
-                    _scan=None) -> dict:
-    """The table's current ``protocol`` action (default reader 1 /
-    writer 2): newest checkpoint's protocol row, then any later JSON
-    protocol actions win."""
-    commits, checkpoints = _scan or _scan_log(table)
-    versions = sorted(set(commits) | set(checkpoints))
-    proto = {"minReaderVersion": 1, "minWriterVersion": 2}
-    if not versions:
-        return proto
-    if version is None:
-        version = versions[-1]
-    usable = [v for v in checkpoints if v <= version]
-    base = -1
-    if usable:
-        base = max(usable)
-        # candidate-aware like _read_checkpoint (round 11): the first
-        # candidate that YIELDS a protocol row wins — a readable
-        # sibling without the row (foreign checkpoint missing the
-        # protocol column) must not stop the search, or the table's
-        # feature gates silently fall back to the (1,2) default
-        # (review finding); a broken sibling falls back too
-        errors: list = []
-        got = None
-        read_ok = False
-        for cand in _checkpoint_candidates(checkpoints[base]):
-            try:
-                g = None
-                for p in cand:
-                    for r in _checkpoint_action_rows(
-                            p, columns=["protocol"]):
-                        x = r.get("protocol")
-                        if x and x.get("minReaderVersion") is not None:
-                            g = {k: v for k, v in x.items()
-                                 if v is not None}
-                read_ok = True
-                if g:
-                    got = g
-                    break
-            except (OSError, ValueError) as e:
-                errors.append(e)
-        if got:
-            proto = got
-        elif set(commits).issuperset(range(base + 1)):
-            # no candidate carried the row (or none was readable —
-            # incl. an incomplete multipart set, empty candidates)
-            # but the FULL JSON history exists: replay it instead
-            base = -1
-        elif not read_ok:
-            raise (errors[-1] if errors else FileNotFoundError(
-                f"no complete checkpoint candidate at version {base} "
-                f"of {table} and the JSON history below is cleaned"))
-        # else: readable checkpoint without a protocol row over a
-        # cleaned history — a pre-features table; the (1,2) default
-        # plus any trailing JSON protocol actions is faithful
-    for v in commits:
-        if not (base < v <= version):
-            continue
-        with open(_version_path(table, v)) as fh:
-            for line in fh:
-                # substring-gated: protocol actions are one line in a
-                # potentially 100k-line commit — json-parsing every
-                # line here would double _replay's log cost on every
-                # read/write that validates the protocol
-                if '"protocol"' not in line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    proto = action["protocol"]
-    return proto
 
 
 # reader features this engine IMPLEMENTS (spec: a reader MUST refuse
@@ -1698,11 +1635,12 @@ def _check_read_protocol(proto: dict) -> None:
                 "could silently return wrong data")
 
 
-def _check_write_protocol(table: str, meta: dict | None,
+def _check_write_protocol(proto: dict, meta: dict | None,
                           data_change_removes: bool,
                           new_data: bool = True) -> None:
     """Spec compliance gate for writers, called by every public write
-    path BEFORE any data lands: refuse unknown writer versions/
+    path on its snapshot's ``protocol`` and ``meta`` BEFORE any data
+    lands: refuse unknown writer versions/
     features and enforce delta.appendOnly (no dataChange removes).
     Invariants / CHECK constraints / generated / identity columns
     are no longer refused here — the new-data write paths evaluate,
@@ -1715,7 +1653,6 @@ def _check_write_protocol(table: str, meta: dict | None,
     constrained tables too. Compaction also passes
     data_change_removes=False: appendOnly allows dataChange=false
     rearrangements."""
-    proto = _protocol_state(table)
     _check_read_protocol(proto)          # a writer reads first
     w = int(proto.get("minWriterVersion", 2))
     if w > 7:
@@ -2115,16 +2052,18 @@ def _legacy_features(proto: dict) -> tuple[list, list]:
 def last_txn_version(table: str, app_id: str):
     """The highest ``{"txn": {"appId", "version"}}`` committed for
     ``app_id``, or None — how an idempotent writer decides whether a
-    redelivered micro-batch was already committed. Only a
+    redelivered micro-batch was already committed. One log listing;
+    the marks come from the memoized incremental fold or a state-only
+    snapshot, so no checkpoint ``add`` column is ever read. Only a
     NOT-YET-EXISTING table maps to None; an unknowable state (gapped
-    log, txn-less foreign checkpoint) propagates _txn_state's loud
-    error — swallowing it would re-enable the double-commit the loud
-    contract exists to prevent."""
+    log, txn-less foreign checkpoint over cleaned commits) propagates
+    _txn_state's loud error — swallowing it would re-enable the
+    double-commit the loud contract exists to prevent."""
     try:
-        _scan_log(table)
+        scan = _scan_log(table)
     except FileNotFoundError:
         return None  # table does not exist yet — first commit
-    return _txn_state(table).get(app_id)
+    return _txn_state(table, scan=scan).get(app_id)
 
 
 def delete_rows_delta_local(table: str, deletes: dict,
@@ -2145,8 +2084,9 @@ def delete_rows_delta_local(table: str, deletes: dict,
     row-level deletes); that scan needs a SparkSession (``spark`` or
     the active one)."""
     from .dv import dv_row_indexes, write_dv_file
-    files, meta, keys, adds = _replay(table, None)
-    _check_write_protocol(table, meta, data_change_removes=True,
+    snap = _snapshot(table)
+    files, meta, keys, adds = snap.files, snap.meta, snap.keys, snap.adds
+    _check_write_protocol(snap.protocol, meta, data_change_removes=True,
                           new_data=False)
     root = table.removeprefix("file://")
     conf = meta.get("configuration") or {}
@@ -2189,7 +2129,7 @@ def delete_rows_delta_local(table: str, deletes: dict,
     # without the upgrade, spec-compliant external readers accept the
     # table at protocol 1, IGNORE the deletionVector field, and
     # silently resurrect every deleted row
-    proto = _protocol_state(table)
+    proto = snap.protocol
     if "deletionVectors" not in (proto.get("readerFeatures") or []):
         # crossing to reader 3 / writer 7: ONLY listed features are
         # honored there, so features the old legacy version numbers
@@ -2245,9 +2185,10 @@ def delete_rows_delta_local(table: str, deletes: dict,
     if cdf_on and new_positions:
         actions += _delete_cdc_actions(spark, root, meta,
                                        new_positions, by_abs)
-    version = list_versions(table)[-1] + 1
-    _commit(table, version, actions)
-    return version
+    # commit over the version read: a commit that landed meanwhile
+    # makes _commit refuse instead of being silently built over
+    _commit(table, snap.version + 1, actions)
+    return snap.version + 1
 
 
 def _delete_cdc_actions(spark, root: str, meta: dict,
@@ -2359,14 +2300,15 @@ def restore_delta_local(table: str, version: int) -> int:
     cannot be scanned would be strictly worse than refusing."""
     from .dv import dv_file_path
     root = table.removeprefix("file://")
-    cur_files, cur_meta, cur_keys, cur_adds = _replay(table, None)
-    _check_write_protocol(table, cur_meta, data_change_removes=True,
-                          new_data=False)
-    tgt_files, tgt_meta, tgt_keys, tgt_adds = _replay(table, version)
-    cur = dict(zip(cur_keys, cur_adds))
-    tgt = dict(zip(tgt_keys, tgt_adds))
+    scan = _scan_log(table)
+    now = _snapshot(table, scan=scan)
+    _check_write_protocol(now.protocol, now.meta,
+                          data_change_removes=True, new_data=False)
+    then = _snapshot(table, version, scan=scan)
+    cur = dict(zip(now.keys, now.adds))
+    tgt = dict(zip(then.keys, then.adds))
     missing = []
-    for f, a in zip(tgt_files, tgt_adds):
+    for f, a in zip(then.files, then.adds):
         if not os.path.exists(f):
             missing.append(f)
         dv = a.get("deletionVector")
@@ -2379,8 +2321,8 @@ def restore_delta_local(table: str, version: int) -> int:
             f"longer exist (vacuumed?): {missing[:5]}")
     ts = int(time.time() * 1000)
     actions: list = []
-    if tgt_meta is not None and tgt_meta != cur_meta:
-        actions.append({"metaData": tgt_meta})
+    if then.meta != now.meta:
+        actions.append({"metaData": then.meta})
 
     def _same(a, b):
         return a.get("deletionVector") == b.get("deletionVector")
@@ -2395,9 +2337,9 @@ def restore_delta_local(table: str, version: int) -> int:
             na = dict(a)
             na["dataChange"] = True
             actions.append({"add": na})
-    newv = list_versions(table)[-1] + 1
+    newv = now.version + 1
     if not actions:
-        return newv - 1                # already at the target state
+        return now.version             # already at the target state
     actions.insert(0, {"commitInfo": {
         "timestamp": ts, "operation": "RESTORE",
         "operationParameters": {"version": str(version)}}})
@@ -2470,63 +2412,18 @@ def _cp_add_payload(k: str, a: dict) -> dict:
                 else int(a["defaultRowCommitVersion"]))}
 
 
-def _domain_metadata(table: str, version: int | None = None) -> dict:
-    """Latest ``domainMetadata`` action per domain at ``version``
-    (protocol §Domain Metadata), TOMBSTONES INCLUDED (``removed``
-    true) — callers filter. Replays from the newest usable checkpoint
-    (classic parquet, multipart, or v2 top-level — domain metadata is
-    a non-file action, never in sidecars) plus the trailing JSON
-    commits; KB-scale driver work."""
-    commits, checkpoints = _scan_log(table)
-    versions = sorted(set(commits) | set(checkpoints))
-    if not versions:
-        return {}
-    if version is None:
-        version = versions[-1]
-    out: dict = {}
-    base = -1
-    for cv in sorted([v for v in checkpoints if v <= version],
-                     reverse=True):
-        done = False
-        for cand in _checkpoint_candidates(checkpoints[cv]):
-            try:
-                got: dict = {}
-                for p in cand:
-                    for r in _checkpoint_action_rows(
-                            p, columns=["domainMetadata"]):
-                        d = r.get("domainMetadata")
-                        if d and d.get("domain"):
-                            got[d["domain"]] = dict(d)
-                out, base, done = got, cv, True
-                break
-            except (OSError, ValueError):
-                continue
-        if done:
-            break
-    for v in [c for c in commits if base < c <= version]:
-        with open(_version_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                d = action.get("domainMetadata")
-                if d and d.get("domain"):
-                    out[d["domain"]] = dict(d)
-    return out
-
-
-def _row_tracking_base(table: str, proto: dict) -> int | None:
-    """The next row id to assign, or None when the table does not
-    carry the rowTracking writer feature. The high-water mark lives
-    in the ``delta.rowTracking`` domain's configuration
+def _row_tracking_base(snap: _Snapshot) -> int | None:
+    """The next row id to assign, or None when the snapshot's table
+    does not carry the rowTracking writer feature. The high-water
+    mark lives in the ``delta.rowTracking`` domain's configuration
     (rowIdHighWaterMark; -1 before any assignment)."""
+    proto = snap.protocol
     w = int(proto.get("minWriterVersion", 2))
     feats = (set(proto.get("writerFeatures") or []) if w == 7
              else set())
     if "rowTracking" not in feats:
         return None
-    dm = _domain_metadata(table).get("delta.rowTracking")
+    dm = snap.domains.get("delta.rowTracking")
     hwm = -1
     if dm and not dm.get("removed"):
         try:
@@ -2553,8 +2450,9 @@ def write_v2_checkpoint_local(table: str,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    _check_write_protocol(table, None, data_change_removes=False)
-    cur = _protocol_state(table)
+    snap = _snapshot(table)
+    cur = snap.protocol
+    _check_write_protocol(cur, None, data_change_removes=False)
     feats = set(cur.get("readerFeatures") or [])
     if "v2Checkpoint" not in feats \
             or int(cur.get("minReaderVersion", 1)) < 3:
@@ -2564,20 +2462,20 @@ def write_v2_checkpoint_local(table: str,
                 "needs the table to already declare the v2Checkpoint "
                 "feature — call with version=None to auto-upgrade")
         lr, lw = _legacy_features(cur)
-        _commit(table, list_versions(table)[-1] + 1, [{"protocol": {
+        proto = {
             "minReaderVersion": 3, "minWriterVersion": 7,
             "readerFeatures": sorted(set(
                 (cur.get("readerFeatures") or []) + lr
                 + ["v2Checkpoint"])),
             "writerFeatures": sorted(set(
                 (cur.get("writerFeatures") or []) + lw
-                + ["v2Checkpoint"]))}}])
-    scan = _scan_log(table)
-    commits, checkpoints = scan
-    versions = sorted(set(commits) | set(checkpoints))
-    if version is None:
-        version = versions[-1]
-    _, meta, keys, adds = _replay(table, version)
+                + ["v2Checkpoint"]))}
+        _commit(table, snap.version + 1, [{"protocol": proto}])
+        # the upgrade commit changes nothing but the protocol
+        snap = snap._replace(version=snap.version + 1, protocol=proto)
+    if version not in (None, snap.version):
+        snap = _snapshot(table, version)
+    version = snap.version
     types = _cp_arrow_types()
     log = _log_dir(table)
     sdir = os.path.join(log, "_sidecars")
@@ -2587,21 +2485,18 @@ def write_v2_checkpoint_local(table: str,
     pq.write_table(
         pa.Table.from_pylist(
             [{"add": _cp_add_payload(k, a)}
-             for k, a in zip(keys, adds)],
+             for k, a in zip(snap.keys, snap.adds)],
             schema=pa.schema([("add", types["add"])])), sp)
-    proto = _protocol_state(table, version, _scan=scan)
-    try:
-        txns = sorted(_txn_state(table, version, _scan=scan).items())
-    except ValueError:
-        txns = []
     acts = [{"checkpointMetadata": {"version": version}},
-            {"protocol": proto},
-            {"metaData": meta}]
+            {"protocol": snap.protocol},
+            {"metaData": snap.meta}]
+    # an UNKNOWABLE prior txn state resets to empty, as in
+    # write_checkpoint_local
     acts += [{"txn": {"appId": a_, "version": int(v_),
-                      "lastUpdated": 0}} for a_, v_ in txns]
+                      "lastUpdated": 0}}
+             for a_, v_ in sorted((snap.txns or {}).items())]
     acts += [{"domainMetadata": dict(d)} for d in sorted(
-        _domain_metadata(table, version).values(),
-        key=lambda x: x["domain"])]
+        snap.domains.values(), key=lambda x: x["domain"])]
     acts.append({"sidecar": {"path": sname,
                              "sizeInBytes": os.path.getsize(sp),
                              "modificationTime": 0}})
@@ -2614,88 +2509,68 @@ def write_v2_checkpoint_local(table: str,
     os.replace(tmp, cp)
     with open(os.path.join(log, "_last_checkpoint"), "w") as fh:
         json.dump({"version": version,
-                   "size": len(acts) + len(keys)}, fh)
+                   "size": len(acts) + len(snap.keys)}, fh)
     return version
 
 
 def write_checkpoint_local(table: str, version: int | None = None) -> int:
     """Write a spec-shaped checkpoint parquet for ``version`` (None =
-    latest) plus the ``_last_checkpoint`` pointer. After this the JSON
-    commits at or below the checkpoint are no longer needed to read
-    any version ≥ the checkpoint — the log-cleanup contract long-lived
-    tables rely on (Delta checkpoints every 10 commits by default).
-    Returns the checkpointed version."""
+    latest) plus the ``_last_checkpoint`` pointer — the state of one
+    snapshot (_snapshot). After this the JSON commits at or below the
+    checkpoint are no longer needed to read any version ≥ the
+    checkpoint — the log-cleanup contract long-lived tables rely on
+    (Delta checkpoints every 10 commits by default). Returns the
+    checkpointed version."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # a checkpoint persists REPLAYED state with a fixed action schema
-    # (protocol/metaData/txn/add): on a table using features this
-    # engine doesn't implement it would snapshot misread state and
-    # DROP the unknown features' auxiliary actions — after log
-    # cleanup that broken state becomes authoritative. Refuse like
+    snap = _snapshot(table, version)
+    version, meta, proto = snap.version, snap.meta, snap.protocol
+    # a checkpoint persists FOLDED state with a fixed action schema
+    # (protocol/metaData/txn/domainMetadata/add): on a table using
+    # features this engine doesn't implement it would snapshot misread
+    # state and DROP the unknown features' auxiliary actions — after
+    # log cleanup that broken state becomes authoritative. Refuse like
     # every other write path (no meta → usage checks don't apply;
     # _maybe_checkpoint catches this and skips, warning).
-    _check_write_protocol(table, None, data_change_removes=False)
-    scan = _scan_log(table)
-    commits, checkpoints = scan
-    versions = sorted(set(commits) | set(checkpoints))
-    if version is None:
-        version = versions[-1]
-    _, meta, keys, adds = _replay(table, version)
+    _check_write_protocol(proto, None, data_change_removes=False)
     types = _cp_arrow_types()
-    pv_t, add_t = types["pv"], types["add"]
-    meta_t, proto_t, txn_t = types["meta"], types["proto"], types["txn"]
-    cur_proto = _protocol_state(table, version, _scan=scan)
     rows = [{"protocol": {
-                "minReaderVersion": int(cur_proto.get("minReaderVersion",
-                                                      1)),
-                "minWriterVersion": int(cur_proto.get("minWriterVersion",
-                                                      2)),
-                "readerFeatures": cur_proto.get("readerFeatures"),
-                "writerFeatures": cur_proto.get("writerFeatures")},
-             "metaData": None, "add": None, "txn": None},
-            {"protocol": None,
-             "metaData": {
+                "minReaderVersion": int(proto.get("minReaderVersion", 1)),
+                "minWriterVersion": int(proto.get("minWriterVersion", 2)),
+                "readerFeatures": proto.get("readerFeatures"),
+                "writerFeatures": proto.get("writerFeatures")}},
+            {"metaData": {
                  "id": meta.get("id", str(uuid.uuid4())),
                  "format": {"provider": "parquet"},
                  "schemaString": meta.get("schemaString", "{}"),
                  "partitionColumns": meta.get("partitionColumns") or [],
                  "configuration": meta.get("configuration") or {},
                  "createdTime": meta.get("createdTime",
-                                         int(time.time() * 1000))},
-             "add": None, "txn": None}]
+                                         int(time.time() * 1000))}}]
     # persist sink progress: without these rows, log cleanup would
     # erase an idempotent writer's high-water mark and a restarted
     # stream could double-commit. An UNKNOWABLE prior state (txn-less
     # foreign checkpoint over cleaned commits) resets to empty — the
     # marks are already lost; a fresh checkpoint at least
     # re-establishes a consistent state going forward.
-    try:
-        txn_rows = sorted(_txn_state(table, version,
-                                    _scan=scan).items())
-    except ValueError:
-        txn_rows = []
-    for app_id, tv in txn_rows:
-        rows.append({"protocol": None, "metaData": None, "add": None,
-                     "txn": {"appId": app_id, "version": int(tv),
-                             "lastUpdated": 0}})
+    rows += [{"txn": {"appId": app_id, "version": int(tv),
+                      "lastUpdated": 0}}
+             for app_id, tv in sorted((snap.txns or {}).items())]
     # domain metadata (round 12): a checkpoint is the authoritative
     # state after log cleanup — dropping domains would erase e.g. the
     # row-tracking high-water mark; tombstones persist per spec
-    for d in sorted(_domain_metadata(table, version).values(),
-                    key=lambda x: x["domain"]):
-        rows.append({"protocol": None, "metaData": None, "add": None,
-                     "txn": None,
-                     "domainMetadata": {
-                         "domain": d["domain"],
-                         "configuration": d.get("configuration"),
-                         "removed": bool(d.get("removed"))}})
-    for k, a in zip(keys, adds):
-        rows.append({"protocol": None, "metaData": None,
-                     "add": _cp_add_payload(k, a)})
+    rows += [{"domainMetadata": {"domain": d["domain"],
+                                 "configuration": d.get("configuration"),
+                                 "removed": bool(d.get("removed"))}}
+             for d in sorted(snap.domains.values(),
+                             key=lambda x: x["domain"])]
+    rows += [{"add": _cp_add_payload(k, a)}
+             for k, a in zip(snap.keys, snap.adds)]
     tbl = pa.Table.from_pylist(rows, schema=pa.schema(
-        [("protocol", proto_t), ("metaData", meta_t), ("add", add_t),
-         ("txn", txn_t), ("domainMetadata", types["dm"])]))
+        [("protocol", types["proto"]), ("metaData", types["meta"]),
+         ("add", types["add"]), ("txn", types["txn"]),
+         ("domainMetadata", types["dm"])]))
     cp = os.path.join(_log_dir(table), f"{version:020d}.checkpoint.parquet")
     tmp = cp + f".tmp-{uuid.uuid4().hex}"
     pq.write_table(tbl, tmp)
@@ -2925,19 +2800,20 @@ def write_delta_local(df, table: str, mode: str = "append",
              else list(partition_by or []))
     root = table.removeprefix("file://")
     try:
-        versions = list_versions(table)
-    except FileNotFoundError:
-        versions = []
-    version = (versions[-1] + 1) if versions else 0
+        commits, checkpoints = _scan_log(table)
+    except FileNotFoundError:              # a new table
+        commits, checkpoints = [], {}
+    snap = (_snapshot(table, scan=(commits, checkpoints))
+            if commits or checkpoints else None)
+    version = snap.version + 1 if snap else 0
     # validate + resolve schema/partition evolution BEFORE the
     # distributed write: a refused commit must not burn a full data
     # write and orphan its directory
-    live_keys: list = []
     evolve: list = []
     ident_updates: dict = {}
-    if version > 0:
-        _, meta, live_keys, _ = _replay(table, None)
-        _check_write_protocol(table, meta,
+    if snap:
+        meta = snap.meta
+        _check_write_protocol(snap.protocol, meta,
                               data_change_removes=(mode == "overwrite"))
         # identity allocation, generated-column computation, and
         # constraint/invariant validation in ONE distributed
@@ -3012,10 +2888,10 @@ def write_delta_local(df, table: str, mode: str = "append",
         if ia:
             actions.append(ia)
     ts = int(time.time() * 1000)
-    if mode == "overwrite" and versions:
+    if mode == "overwrite" and snap:
         # remove by the exact path KEY each add used (absolute for
         # referenced-in-place files, relative for table-local data)
-        for k in live_keys:
+        for k in snap.keys:
             actions.append({"remove": {"path": k,
                                        "deletionTimestamp": ts,
                                        "dataChange": True}})
@@ -3023,9 +2899,7 @@ def write_delta_local(df, table: str, mode: str = "append",
     # file a fresh baseRowId range off the domain high-water mark and
     # advance the mark IN THE SAME COMMIT (losing the mark would hand
     # the next writer the same range — duplicate row ids)
-    next_rid = None
-    if version > 0:
-        next_rid = _row_tracking_base(table, _protocol_state(table))
+    next_rid = _row_tracking_base(snap) if snap else None
     for p in new_files:
         act = _add_action(
             root, p, _hive_partition_values(data_dir, p) if pcols else None,
@@ -3081,16 +2955,17 @@ def compact_delta_local(spark, table: str,
     names (no field ids in id mode — they are not schema fields,
     and the reader resolves them by name)."""
     import math
-    files, meta, keys, _ = _replay(table, None)
+    snap = _snapshot(table)
+    meta = snap.meta
     # compaction removes are dataChange=false — allowed on appendOnly
-    _check_write_protocol(table, meta, data_change_removes=False,
+    _check_write_protocol(snap.protocol, meta, data_change_removes=False,
                           new_data=False)
-    if not files:
+    if not snap.files:
         raise ValueError(f"Delta table {table} has no live files")
     root = table.removeprefix("file://")
     pcols = meta.get("partitionColumns") or []
     cm = _cm_mode(meta)
-    rt_base = _row_tracking_base(table, _protocol_state(table))
+    rt_base = _row_tracking_base(snap)
     meta_update = None
     mat_rid = mat_rcv = None
     if rt_base is not None:
@@ -3106,11 +2981,11 @@ def compact_delta_local(spark, table: str,
                  "materializedRowCommitVersionColumnName"] = mat_rcv
             meta_update = dict(meta)
             meta_update["configuration"] = conf
-        df = (read_delta_local(spark, table, with_row_tracking=True)
+        df = (_read_snapshot(spark, table, snap, with_row_tracking=True)
               .withColumnRenamed("_row_id", mat_rid)
               .withColumnRenamed("_row_commit_version", mat_rcv))
     else:
-        df = read_delta_local(spark, table)
+        df = _read_snapshot(spark, table, snap)
     if cm != "none":
         # the mapped read surfaced LOGICAL names; rewritten files must
         # carry the physical ones (footer stats then key physically —
@@ -3133,12 +3008,12 @@ def compact_delta_local(spark, table: str,
     new_files = sorted(
         os.path.join(dp, f) for dp, _, fs in os.walk(data_dir)
         for f in fs if f.endswith(".parquet"))
-    version = list_versions(table)[-1] + 1
+    version = snap.version + 1         # a commit meanwhile conflicts
     ts = int(time.time() * 1000)
     actions: list = []
     if meta_update is not None:
         actions.append({"metaData": meta_update})
-    for k in keys:
+    for k in snap.keys:
         actions.append({"remove": {"path": k, "deletionTimestamp": ts,
                                    "dataChange": False}})
     next_rid = rt_base
@@ -3178,11 +3053,12 @@ def vacuum_delta_local(table: str, keep_last: int = 1) -> int:
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root = os.path.abspath(table.removeprefix("file://"))
-    versions = list_versions(table)
-    kept = versions[-keep_last:]
+    scan = _scan_log(table)
+    kept = sorted(set(scan[0]) | set(scan[1]))[-keep_last:]
     referenced = set()
     for v in kept:
-        files, _, _, adds = _replay(table, v)
+        s = _snapshot(table, v, scan=scan)
+        files, adds = s.files, s.adds
         referenced |= {os.path.abspath(f) for f in files}
         for a in adds:
             dv = a.get("deletionVector")
@@ -3251,8 +3127,10 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
     from pyspark.sql import functions as F
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     root = table.removeprefix("file://")
-    files, meta, live_keys, adds = _replay(table, None)
-    _check_write_protocol(table, meta, data_change_removes=True)
+    snap = _snapshot(table)
+    files, meta, live_keys, adds = (snap.files, snap.meta, snap.keys,
+                                    snap.adds)
+    _check_write_protocol(snap.protocol, meta, data_change_removes=True)
     # row tracking (round 12): the merge PRESERVES row identity the
     # jar's way — survivors and single-match updated rows materialize
     # their ids into the rewritten/appended files (reader coalesces
@@ -3262,7 +3140,7 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
     # materialized columns are PHYSICAL names per protocol and pass
     # through the physical projection literally; the id-mode live
     # scan carries positions and reads them by name.
-    rt_base = _row_tracking_base(table, _protocol_state(table))
+    rt_base = _row_tracking_base(snap)
     mat_rid = mat_rcv = None
     meta_update = None
     if rt_base is not None:
@@ -3406,7 +3284,10 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
         return urlparse(u).path if u.startswith("file:") else u
 
     affected_set = {_plain(a) for a in affected}
-    version = list_versions(table)[-1] + 1
+    # commit over the version read: a commit that landed during the
+    # scan (say, a DV delete of a row this rewrite would carry) makes
+    # _commit refuse instead of being silently built over
+    version = snap.version + 1
     ts = int(time.time() * 1000)
     actions: list = []
     tag = uuid.uuid4().hex[:12]
@@ -3673,16 +3554,18 @@ def read_delta_changes(spark, table: str,
             to_version = version_at_timestamp(table, to_timestamp)
         except TimestampAfterLatestError:
             to_version = None              # → versions[-1] below
-    versions = list_versions(table)
-    if to_version is None:
-        to_version = versions[-1]
-    _check_read_protocol(_protocol_state(table, to_version))
+    # one listing serves both snapshots (the end state's schema and
+    # protocol, the pre-range live set)
+    scan = _scan_log(table)
+    end = _snapshot(table, to_version, files=False, scan=scan)
+    to_version = end.version
+    _check_read_protocol(end.protocol)
     if from_version > to_version:
         raise ValueError(f"from_version {from_version} > to_version "
                          f"{to_version}")
     # the replay needs the JSON commit BODIES — a checkpoint-only
     # version (its commit cleaned up) cannot contribute change rows
-    json_commits = set(_scan_log(table)[0])
+    json_commits = set(scan[0])
     missing = [v for v in range(from_version, to_version + 1)
                if v not in json_commits]
     if missing:
@@ -3696,11 +3579,10 @@ def read_delta_changes(spark, table: str,
     # evolution must surface the newest columns (null-filled for
     # pre-evolution files), exactly like the batch reader and the
     # streaming source
-    _, meta, _, _ = _replay(table, to_version)
+    meta = end.meta
     if from_version > 0:
-        _, cur_meta, pre_keys, pre_adds = _replay(table,
-                                                  from_version - 1)
-        pre_live = dict(zip(pre_keys, pre_adds))
+        pre = _snapshot(table, from_version - 1, scan=scan)
+        cur_meta, pre_live = pre.meta, dict(zip(pre.keys, pre.adds))
     else:
         cur_meta, pre_live = None, {}
     end_cm = _cm_mode(meta)
@@ -3977,14 +3859,14 @@ def read_delta_changes(spark, table: str,
         # PRE-commit scheme for the delete/DV sides whose files
         # predate the change
         prev_state = dict(state)
-        adds, removes, commit_md, commit_ci, cdcs = _commit_parsed(
-            table, v)
-        if commit_md is not None:
+        c = _commit_parsed(table, v)
+        adds, removes, cdcs = c.adds, c.removes, c.cdcs
+        if c.meta is not None:
             # a run stays open across interrupting commits (their own
             # parts read their own files) until the table state its
             # scan reads under changes
             feed.flush()
-        _set_meta(commit_md)
+        _set_meta(c.meta)
         if cdcs:
             # Change Data Files are AUTHORITATIVE for their commit
             # (the jar's CDF reader rule): read them instead of
@@ -4030,7 +3912,7 @@ def read_delta_changes(spark, table: str,
         # pairing pass; without them it stays delete + insert
         kc = None
         if ins_df is not None and del_df is not None:
-            raw = (commit_ci.get("operationParameters")
+            raw = (c.info.get("operationParameters")
                    or {}).get("keyColumns")
             if raw:
                 try:

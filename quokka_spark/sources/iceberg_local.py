@@ -1659,10 +1659,12 @@ def _manifest_entry(item, content: int, sid: int, first_row_id=None,
     ``content_size_in_bytes`` and becomes a PUFFIN entry.
     ``record_count`` defaults to the item's (_record_count) for a
     parquet data or delete file, as the spec requires on every format
-    version; a DV records 0."""
+    version; a DV records its carried ``record_count``, the vector's
+    cardinality."""
     d = item if isinstance(item, dict) else {"path": item}
     if record_count is None:
-        record_count = (0 if "referenced_data_file" in d
+        record_count = (d.get("record_count", 0)
+                        if "referenced_data_file" in d
                         else _record_count(d))
 
     def kv(m):
@@ -2137,7 +2139,8 @@ def commit_snapshot(table_dir: str, add_files: list | None = None,
     the table schema (_evolve_meta_schema).
     ``add_dv_files`` (format v3): deletion-vector dicts ``{"path",
     "referenced_data_file", "content_offset",
-    "content_size_in_bytes"}``; per the spec's replacement rule a new
+    "content_size_in_bytes", "record_count"}`` (record_count: the
+    vector's cardinality); per the spec's replacement rule a new
     DV SUPERSEDES the referenced file's previous DV (callers merge —
     add_deletion_vectors does), and committing a DV stamps the table
     format-version 3.
@@ -2612,7 +2615,8 @@ def add_deletion_vectors(table_dir: str,
     return commit_snapshot(table_dir, add_dv_files=[
         {"path": ppath, "referenced_data_file": p,
          "content_offset": info[p]["content_offset"],
-         "content_size_in_bytes": info[p]["content_size_in_bytes"]}
+         "content_size_in_bytes": info[p]["content_size_in_bytes"],
+         "record_count": info[p]["cardinality"]}
         for p in sorted(dv_map)])
 
 

@@ -9,7 +9,7 @@ partition per data file, read executor-side as Arrow batches (the
 file's own deletion vector applied), so a growing table tails
 incrementally with the driver touching only the batch's JSON commits
 per trigger (the pre-batch live set is carried forward in reader
-state; a full replay happens once per (re)start).
+state; a full snapshot is taken once per (re)start).
 
 Delta's streaming-source contract is append-only. Versions that
 change existing data refuse by default, with the REAL semantics per
@@ -68,12 +68,12 @@ def _table_of(options: dict) -> str:
 
 class DeltaStreamReader(DataSourceStreamReader):
     def __init__(self, table: str, schema, options: dict):
-        from quokka_spark.sources.delta_local import (_cm_mode,
+        from quokka_spark.sources.delta_local import (_check_read_protocol,
+                                                      _cm_mode,
                                                       _column_mapping,
                                                       _id_mapping,
                                                       _partition_schema,
-                                                      _replay,
-                                                      list_versions)
+                                                      _snapshot)
         self.table = table
         self.fields = [f.name for f in schema.fields]
         self.field_types = {f.name: f.dataType for f in schema.fields}
@@ -82,16 +82,14 @@ class DeltaStreamReader(DataSourceStreamReader):
         self.ignore_changes = str(
             options.get("ignore_changes", "false")).lower() == "true"
         self.start_version = int(options.get("starting_version", 0))
-        latest = list_versions(table)[-1]
-        if self.start_version > latest:
+        snap = _snapshot(table, files=False)
+        if self.start_version > snap.version:
             raise ValueError(
                 f"starting_version {self.start_version} is beyond the "
-                f"log's latest version {latest} — refusing (the "
+                f"log's latest version {snap.version} — refusing (the "
                 "committed offset would regress below it)")
-        from quokka_spark.sources.delta_local import (
-            _check_read_protocol, _protocol_state)
-        _check_read_protocol(_protocol_state(table))
-        _, meta, _, _ = _replay(table, None)
+        _check_read_protocol(snap.protocol)
+        meta = snap.meta
         # partitioned tables: partition values live in the LOG; each
         # input partition ships its file's values (LOGICAL-keyed,
         # resolved driver-side under the partition spec ACTIVE at that
@@ -128,7 +126,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         self.tz = (sess.conf.get("spark.sql.session.timeZone")
                    if sess else "UTC")
         # pre-batch live set + ACTIVE partition columns, carried
-        # forward across triggers so the full _replay happens once
+        # forward across triggers so the full snapshot happens once
         # per (re)start, not per trigger
         self._live_at: int | None = None
         self._live: set = set()
@@ -146,23 +144,25 @@ class DeltaStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         from quokka_spark.sources.delta_local import (
-            _check_read_protocol, _protocol_state, list_versions)
+            _check_read_protocol, _snapshot)
         # per-trigger, not just at construction: a foreign writer can
         # UPGRADE the protocol mid-stream to a feature this reader
         # lacks — serving later micro-batches anyway would silently
-        # misread exactly what the gate exists to prevent
-        _check_read_protocol(_protocol_state(self.table))
-        return {"version": list_versions(self.table)[-1]}
+        # misread exactly what the gate exists to prevent. One
+        # state-only snapshot: one listing, no add column read.
+        snap = _snapshot(self.table, files=False)
+        _check_read_protocol(snap.protocol)
+        return {"version": snap.version}
 
-    def _live_before(self, v0: int) -> set:
+    def _live_before(self, v0: int, scan) -> set:
         if self._live_at == v0:
             return self._live
         if v0 >= 0:
             from quokka_spark.sources.delta_local import (
-                _partition_schema, _replay)
-            _, m0, live_keys, _ = _replay(self.table, v0)
-            live = set(live_keys)
-            self._cur_pcols = _partition_schema(m0)[0]
+                _partition_schema, _snapshot)
+            snap = _snapshot(self.table, v0, scan=scan)
+            live = set(snap.keys)
+            self._cur_pcols = _partition_schema(snap.meta)[0]
         else:
             live = set()
             self._cur_pcols = []
@@ -178,17 +178,19 @@ class DeltaStreamReader(DataSourceStreamReader):
         v0, v1 = int(start["version"]), int(end["version"])
         if v1 <= v0:
             return []
-        commits = set(_scan_log(self.table)[0])
+        scan = _scan_log(self.table)
+        commits = set(scan[0])
         missing = [v for v in range(v0 + 1, v1 + 1) if v not in commits]
         if missing:
             raise ValueError(
                 f"versions {missing[:5]} have no JSON commit (cleaned "
                 "up?) — the stream would lose changes")
-        live = set(self._live_before(v0))
+        live = set(self._live_before(v0, scan))
         cur_pcols = list(self._cur_pcols)
         parts = []
         for v in range(v0 + 1, v1 + 1):
-            adds, removes, md, _ci, _cdc = _commit_parsed(self.table, v)
+            c = _commit_parsed(self.table, v)
+            adds, removes, md = c.adds, c.removes, c.meta
             if md is not None:
                 # fold the ACTIVE partition spec forward — this
                 # commit's files already follow the new scheme
@@ -326,8 +328,8 @@ class DeltaStreamDataSource(DataSource):
     def schema(self):
         from pyspark.sql.types import StructType
 
-        from quokka_spark.sources.delta_local import _replay
-        _, meta, _, _ = _replay(_table_of(self.options), None)
+        from quokka_spark.sources.delta_local import _snapshot
+        meta = _snapshot(_table_of(self.options), files=False).meta
         try:
             full = StructType.fromJson(json.loads(meta["schemaString"]))
         except (KeyError, ValueError, TypeError) as e:

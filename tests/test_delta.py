@@ -1048,7 +1048,7 @@ def test_delta_dv_protocol_upgrade_folds_legacy_features(
     readers stop honoring it."""
     import json as _json
 
-    from quokka_spark.sources.delta_local import (_commit, _protocol_state,
+    from quokka_spark.sources.delta_local import (_commit, _snapshot,
                                                   delete_rows_delta_local,
                                                   write_delta_local)
     tbl = str(tmp_path / "pf")
@@ -1057,7 +1057,7 @@ def test_delta_dv_protocol_upgrade_folds_legacy_features(
                                    "minWriterVersion": 5}}])
     f = qc.read_delta(tbl).df.inputFiles()[0].removeprefix("file:")
     delete_rows_delta_local(tbl, {f: [0]})
-    proto = _protocol_state(tbl)
+    proto = _snapshot(tbl).protocol
     assert proto["minReaderVersion"] == 3
     assert set(proto["readerFeatures"]) >= {"columnMapping",
                                             "deletionVectors"}
@@ -1988,7 +1988,7 @@ def test_delta_changes_upsert_null_keys_stay_delete_insert(
         write_delta_local(
             spark.createDataFrame([(None, 20.0), (2, 20.0)],
                                   "id long, v double").coalesce(1), tbl)
-        adds0, _, _, _, _ = _commit_parsed(tbl, 0)
+        adds0 = _commit_parsed(tbl, 0).adds
         (apath,) = adds0
         # the "rewritten" file: both rows changed, so NOTHING cancels
         # and the NULL-key preimage survives into the pairing
@@ -2895,12 +2895,12 @@ def test_delta_protocol_feature_gates(spark, qc, tmp_path):
                          "writerFeatures": ["rowTracking",
                                             "domainMetadata"]})
     write_delta_local(one, t2b, mode="append")
-    from quokka_spark.sources.delta_local import (_domain_metadata,
+    from quokka_spark.sources.delta_local import (_snapshot,
                                                   read_delta_local)
     rows_rt = [(r["id"], r["_row_id"]) for r in read_delta_local(
         spark, t2b, with_row_tracking=True).collect()]
     assert rows_rt == [(1, 0)]
-    dm = _domain_metadata(t2b)["delta.rowTracking"]
+    dm = _snapshot(t2b).domains["delta.rowTracking"]
     assert _json.loads(dm["configuration"])["rowIdHighWaterMark"] == 0
     # appendOnly: append + compaction OK; rewrites refuse
     t3 = mk("p_ao", {"minReaderVersion": 1, "minWriterVersion": 2},
@@ -4179,7 +4179,7 @@ def test_delta_row_tracking_reads(spark, qc, tmp_path):
     # APPENDS maintain row tracking (round 12): fresh baseRowId range
     # past the domain high-water mark, defaultRowCommitVersion = the
     # commit, and the mark advances in the same commit
-    from quokka_spark.sources.delta_local import (_domain_metadata,
+    from quokka_spark.sources.delta_local import (_snapshot,
                                                   compact_delta_local,
                                                   upsert_delta_local,
                                                   write_checkpoint_local)
@@ -4193,7 +4193,7 @@ def test_delta_row_tracking_reads(spark, qc, tmp_path):
     assert sorted((got2[500][0], got2[501][0])) == [18, 19]
     assert got2[500][1] == v and got2[501][1] == v
     assert got2[(3)][0] == 3                 # old ids untouched
-    dm = _domain_metadata(tbl)["delta.rowTracking"]
+    dm = _snapshot(tbl).domains["delta.rowTracking"]
     assert _json.loads(dm["configuration"])["rowIdHighWaterMark"] == 19
 
     # a CHECKPOINT persists the domain mark and the per-add bases:
@@ -4242,7 +4242,7 @@ def test_delta_row_tracking_reads(spark, qc, tmp_path):
     assert after == before
     plain2 = qc.read_delta(tbl).df
     assert not [c for c in plain2.columns if c.startswith("_")]
-    dm2 = _domain_metadata(tbl)["delta.rowTracking"]
+    dm2 = _snapshot(tbl).domains["delta.rowTracking"]
     assert _json.loads(dm2["configuration"])["rowIdHighWaterMark"] \
         > 20
 

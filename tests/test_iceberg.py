@@ -84,6 +84,9 @@ def test_iceberg_v3_deletion_vectors(qc, spark, table, tmp_path):
     (a_path,), _ = snapshot_files(tbl, s1)          # a.parquet: 0..9
     add_deletion_vectors(tbl, {a_path: [0, 3, 7]})
     assert int(_read_table_metadata(tbl)["format-version"]) == 3
+    # a DV manifest entry records the vector's cardinality
+    assert [n for (c, f), n in _manifest_record_counts(tbl).items()
+            if f.endswith(".puffin")] == [3]
     got = sorted(r["id"] for r in qc.read_iceberg(tbl).df.collect())
     assert got == [1, 2, 4, 5, 6, 8, 9] + list(range(10, 25))
     # pre-DV snapshot untouched
@@ -95,6 +98,8 @@ def test_iceberg_v3_deletion_vectors(qc, spark, table, tmp_path):
     assert got2 == [2, 4, 5, 6, 8, 9] + list(range(10, 25))
     _, _, _, dvs = snapshot_files_full(tbl, None, with_dvs=True)
     assert len(dvs) == 1
+    assert [n for (c, f), n in _manifest_record_counts(tbl).items()
+            if f.endswith(".puffin")] == [4]
     # appends on the DV table carry the vectors forward
     c = str(tmp_path / "c.parquet")
     spark.range(100, 103).coalesce(1).toPandas().to_parquet(c)
