@@ -284,45 +284,18 @@ def read_iceberg_catalog(spark, table: str, snapshot: int | None = None,
     if files and (pos_apply or eq_apply or dv_files):
         from pyspark.sql import functions as F
 
-        from .iceberg_local import _norm_path, _py_norm
+        from .iceberg_local import _dv_positions_df, _norm_path, _py_norm
         df = (df.withColumn("__qs_fp__",
                             _norm_path(F.col("_metadata.file_path")))
               .withColumn("__qs_pos__",
                           F.col("_metadata.row_index")))
         if dv_files:
-            # same executor-side decode + (file, position) anti-join
-            # as the local reader's v3 path; descriptors only on the
-            # driver, blob decode (O(deleted rows)) on the executors
-            rows = sorted((_py_norm(ref),
-                           pf.removeprefix("file://"), off, sz)
-                          for ref, pf, off, sz in dv_files)
-            dd = spark.createDataFrame(
-                rows, "__qs_dfp__ string, __qs_pf__ string, "
-                      "__qs_off__ long, __qs_sz__ long")
-            par = min(len(rows),
-                      spark.sparkContext.defaultParallelism)
-            if par > 1:
-                dd = dd.repartition(par)
-
-            def _decode_dvs(batches):
-                import pandas as pd
-
-                from quokka_spark.sources.puffin import \
-                    read_puffin_dv_blob
-                for pdf in batches:
-                    for ref, pf, off, sz in zip(
-                            pdf["__qs_dfp__"], pdf["__qs_pf__"],
-                            pdf["__qs_off__"], pdf["__qs_sz__"]):
-                        idx = read_puffin_dv_blob(pf, int(off),
-                                                  int(sz))
-                        yield pd.DataFrame(
-                            {"__qs_dfp__": pd.Series(
-                                [ref] * len(idx), dtype="object"),
-                             "__qs_dpos__": pd.array(idx,
-                                                     dtype="int64")})
-
-            dd = dd.mapInPandas(
-                _decode_dvs, "__qs_dfp__ string, __qs_dpos__ long")
+            # the local reader's executor-side decode and (file,
+            # position) anti-join; descriptors only on the driver
+            dd = _dv_positions_df(spark, [
+                {"referenced_data_file": ref, "path": pf,
+                 "content_offset": off, "content_size_in_bytes": sz}
+                for ref, pf, off, sz in dv_files])
             df = df.join(
                 dd, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
                 & (F.col("__qs_pos__") == F.col("__qs_dpos__")),

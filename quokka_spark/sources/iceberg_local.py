@@ -20,12 +20,12 @@ Scope (documented, test-enforced):
 - format-version 1 and 2 tables, including v2 POSITION deletes
   (applied as a distributed anti-join on ``_metadata`` file/row
   position — see read_iceberg_local) and v2 EQUALITY deletes
-  (content=2: each delete file's ``equality_ids`` columns anti-join
-  the data rows null-safely, restricted to data files with a LOWER
-  sequence number than the delete, per spec — the Flink-CDC write
-  shape). Field ids resolve through the table schema; when the
-  metadata carries no schema (minimal fixtures), the delete file's
-  own column names are used.
+  (content=2: the delete files of each ``equality_ids`` set anti-join
+  the data rows null-safely in one join, restricted to data files
+  with a LOWER sequence number than a matching delete, per spec —
+  the Flink-CDC write shape; _eq_deletes_df). Field ids resolve
+  through the table schema; when the metadata carries no schema
+  (minimal fixtures), the delete file's own column names are used.
 - metadata must be locally readable (``file://`` or plain paths);
   data files pass through to Spark untouched, so remote data behind a
   mounted path works.
@@ -50,11 +50,14 @@ Format reference: the public Iceberg table spec
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
 import re
 import struct
 import time
+from types import SimpleNamespace
+from typing import NamedTuple
 
 from .avro_lite import read_container
 
@@ -95,7 +98,7 @@ def _read_table_metadata(table_path: str) -> dict:
         # v3 DELETION VECTORS (puffin) and row lineage read
         # end-to-end (rounds 11-12); TOP-LEVEL primitive column
         # DEFAULT VALUES are SERVED on reads (round 12 —
-        # _field_defaults + the per-file presence split in _live_df),
+        # _field_defaults + the per-file presence split in _scan_data),
         # and so are primitive defaults on STRUCT sub-fields at any
         # struct depth (round 13 — spec §Default values applies
         # recursively; the scan splices them with withField under
@@ -198,24 +201,15 @@ def _arrow_has_path(sch, parts):
     return True
 
 
-def _apply_initial_defaults(df, meta: dict, paths: list, fp_col):
+def _apply_defaults(df, defaults: dict, paths: list, fp_col):
     """Serve v3 initial-defaults on a scan of ``paths`` (spec
     §Default values): rows of files written BEFORE a defaulted
     column existed read as the default; files that carry the column
     serve stored values, genuinely-null included (a blanket coalesce
     would be wrong). Presence is per FILE — one KB footer read each,
-    driver-side, only for tables that declare defaults. ``fp_col``
-    is the normalized file-path Column of ``df``. Shared by the
-    snapshot read (_live_df) and the change stream (_scan) so the
-    two can never diverge (review finding: the CDF path null-filled
-    what the snapshot path served)."""
-    return _apply_defaults(df, _field_defaults(meta), paths, fp_col)
-
-
-def _apply_defaults(df, defaults: dict, paths: list, fp_col):
-    """Core of _apply_initial_defaults, shared with the CATALOG
-    reader (round 13): ``defaults`` maps dotted column paths to
-    (JSON value, iceberg type string)."""
+    driver-side, only for tables that declare defaults. ``defaults``:
+    _field_defaults; ``fp_col``: the normalized file-path Column of
+    ``df``. Used by _scan_data and the CATALOG reader (round 13)."""
     from pyspark.sql import functions as F
     if not defaults:
         return df
@@ -324,7 +318,31 @@ def snapshot_files_full(table_path: str,
     The default 3-tuple form REFUSES a DV-carrying snapshot instead
     of silently dropping the vectors (every legacy caller would
     resurrect the deleted rows)."""
-    meta = _read_table_metadata(table_path)
+    inv = _inventory(_read_table_metadata(table_path), snapshot_id)
+    if with_dvs:
+        return inv
+    if inv.dvs:
+        raise NotImplementedError(
+            f"{table_path}: snapshot carries v3 deletion vectors — "
+            "this caller predates DV support (dropping them would "
+            "resurrect deleted rows); read via read_iceberg_local, "
+            "or pass with_dvs=True and apply them")
+    return inv[:3]
+
+
+class _Inventory(NamedTuple):       # see snapshot_files_full
+    data: list
+    pos: list
+    eq: list
+    dvs: list
+
+
+_NO_FILES = _Inventory([], [], [], [])
+
+
+def _inventory(meta: dict, snapshot_id: int | None) -> _Inventory:
+    """A snapshot's inventory from read metadata: the one manifest
+    walk (manifest list, then each manifest) behind every reader."""
     snap = _pick_snapshot(meta, snapshot_id)
     data: list[dict] = []
     pos_deletes: list[str] = []
@@ -426,15 +444,7 @@ def snapshot_files_full(table_path: str,
                                  _bounds_map(df.get("lower_bounds")),
                              "upper_bounds":
                                  _bounds_map(df.get("upper_bounds"))})
-    if with_dvs:
-        return data, pos_deletes, eq_deletes, dvs
-    if dvs:
-        raise NotImplementedError(
-            f"{table_path}: snapshot carries v3 deletion vectors — "
-            "this caller predates DV support (dropping them would "
-            "resurrect deleted rows); read via read_iceberg_local, "
-            "or pass with_dvs=True and apply them")
-    return data, pos_deletes, eq_deletes
+    return _Inventory(data, pos_deletes, eq_deletes, dvs)
 
 
 def _bounds_map(raw) -> dict:
@@ -918,14 +928,9 @@ def _norm_path(c):
     return F.regexp_replace(c, "^file:/*", "/")
 
 
-def _field_names(table_path: str) -> dict:
-    """field-id → column-name map from the table metadata's current
-    schema ({} when the metadata carries no schema — minimal local
-    fixtures)."""
-    return _field_names_of(_read_table_metadata(table_path))
-
-
 def _field_names_of(meta: dict) -> dict:
+    """field-id → column-name map of the current schema ({} when the
+    metadata carries no schema — minimal local fixtures)."""
     return {int(f["id"]): f["name"]
             for f in _current_schema(meta).get("fields", [])
             if "id" in f and "name" in f}
@@ -1103,16 +1108,50 @@ def drop_iceberg_ref(table_dir: str, name: str) -> None:
                       meta)
 
 
-def _dv_one_per_file(table_path: str, dvs: list) -> None:
-    seen: set = set()
+def _dvs_by_ref(dvs: list) -> dict:
+    """{normalized referenced data file: DV} of one snapshot; a
+    second DV on one file (the spec allows one) refuses rather than
+    collapsing last-one-wins."""
+    out: dict = {}
     for d in dvs:
         ref = _py_norm(_local(d["referenced_data_file"]))
-        if ref in seen:
+        if ref in out:
             raise ValueError(
-                f"{table_path}: data file {ref} is referenced by "
-                "two deletion vectors in one snapshot — the spec "
-                "allows at most one; table is corrupt")
-        seen.add(ref)
+                f"data file {ref} is referenced by two deletion "
+                "vectors in one snapshot — the spec allows at most "
+                "one; table is corrupt")
+        out[ref] = d
+    return out
+
+
+def _snapshot_diff(par: _Inventory, cur: _Inventory):
+    """The one snapshot-vs-parent diff, shared by read_iceberg_changes
+    and the streaming source: data entries added/removed (by path),
+    new position-delete paths, equality-delete entries and DVs, the
+    parent DVs those DVs supersede, and the live data files whose DV
+    disappeared. Files match by manifest path; a DV is new when its
+    data file had none in the parent or the blob moved."""
+    par_paths = {d["path"] for d in par.data}
+    cur_paths = {d["path"] for d in cur.data}
+    par_pos, par_eq = set(par.pos), {d["path"] for d in par.eq}
+    cur_dvs, par_dvs = _dvs_by_ref(cur.dvs), _dvs_by_ref(par.dvs)
+    new_dvs = {r: d for r, d in sorted(cur_dvs.items())
+               if (par_dvs.get(r, {}).get("path"),
+                   par_dvs.get(r, {}).get("content_offset"))
+               != (d["path"], d["content_offset"])}
+    live = {_py_norm(_local(p)) for p in cur_paths}
+    return SimpleNamespace(
+        added=sorted((d for d in cur.data if d["path"] not in par_paths),
+                     key=lambda d: d["path"]),
+        removed=sorted((d for d in par.data
+                        if d["path"] not in cur_paths),
+                       key=lambda d: d["path"]),
+        new_pos=[p for p in cur.pos if p not in par_pos],
+        new_eq=[d for d in cur.eq if d["path"] not in par_eq],
+        new_dvs=list(new_dvs.values()),
+        prior_dvs=[par_dvs[r] for r in new_dvs if r in par_dvs],
+        dropped_dvs=sorted(r for r in par_dvs
+                           if r not in cur_dvs and r in live))
 
 
 # spec §Position Delete Files fixes these two columns (an optional
@@ -1172,60 +1211,149 @@ def _dv_positions_df(spark, dvs: list):
                           "__qs_dfp__ string, __qs_dpos__ long")
 
 
+# the reserved v3 row-lineage columns (spec §Row Lineage) that files
+# rewritten by lineage-preserving engines materialize
+_LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
+# a data row's address: normalized file path, row position, and the
+# file's data sequence number (_scan_data with address/seq)
+_ADDRESS = ("__qs_fp__", "__qs_pos__", "__qs_seq__")
+
+
+def _scan_data(spark, meta: dict, entries: list, address: bool = False,
+               seq: bool = False, lineage: bool = False):
+    """The one scan of Iceberg data files (inventory ``entries``). It
+    reads under the TABLE schema (_table_read_schema), so
+    pre-evolution files surface evolved columns as null and scans
+    union cleanly; drops the reserved lineage columns (with
+    ``lineage`` they join the read schema instead, so a materialized
+    value can win); and serves v3 initial-defaults. ``address`` adds
+    ``__qs_fp__``/``__qs_pos__``; ``seq`` (with ``address``) joins a
+    KB-scale broadcast of path → ``__qs_seq__`` (and, with
+    ``lineage``, ``__qs_frid__``, the file's first_row_id)."""
+    from pyspark.sql import functions as F
+    paths = [_local(e["path"]) for e in entries]
+    rs = _table_read_schema(meta, paths[0])
+    if rs is not None and lineage:
+        from pyspark.sql.types import LongType, StructField
+        for c in _LINEAGE_COLS:
+            rs = rs.add(StructField(c, LongType(), True))
+    df = (spark.read.schema(rs) if rs is not None
+          else spark.read).parquet(*paths)
+    if not lineage:
+        df = df.drop(*_LINEAGE_COLS)
+    fp = _norm_path(F.col("_metadata.file_path"))
+    df = _apply_defaults(df, _field_defaults(meta), paths, fp)
+    if address:
+        df = (df.withColumn("__qs_fp__", fp)
+              .withColumn("__qs_pos__", F.col("_metadata.row_index")))
+    if seq:
+        rows = [(_py_norm(p), int(e["seq"]), e.get("first_row_id"))
+                for p, e in zip(paths, entries)]
+        files = spark.createDataFrame(
+            rows, "__qs_sfp__ string, __qs_seq__ long, __qs_frid__ long")
+        df = (df.join(F.broadcast(files if lineage
+                                  else files.drop("__qs_frid__")),
+                      F.col("__qs_fp__") == F.col("__qs_sfp__"), "left")
+              .drop("__qs_sfp__"))
+    return df
+
+
+def _eq_deletes_df(spark, meta: dict, eq_deletes: list) -> list:
+    """``[(frame, match)]``, one per resolved equality-column set: ONE
+    scan of the set's delete files under the columns' declared (else
+    footer) types, keeping each distinct key (``__qs_eq_<c>__``) with
+    its MAX sequence number ``__qs_dseq__``. A row is deleted iff a
+    matching delete is newer than its file (spec §Scan Planning), so
+    ``match`` — null-safe key equality and ``__qs_seq__ <
+    __qs_dseq__`` — applies the set in one join. Columns resolve from
+    ``equality_ids`` via the table schema, else from the file's own
+    columns; a file lacking one refuses (KB footer read), since the
+    explicit schema would null-fill it and delete NULL-key rows."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_type
+    names = _field_names_of(meta)
+    declared = {f["name"]: _iceberg_type_ddl(f.get("type"))
+                for f in _current_schema(meta).get("fields", [])
+                if "name" in f}
+    groups: dict = {}
+    for d in eq_deletes:
+        path = _local(d["path"])
+        foot = pq.read_schema(path)
+        ids = d.get("equality_ids") or []
+        cols = ([names[i] for i in ids]
+                if ids and all(i in names for i in ids) else foot.names)
+        missing = [c for c in cols if c not in foot.names]
+        if missing:
+            raise ValueError(
+                f"equality-delete file {path} lacks its equality "
+                f"column(s) {missing} — table is corrupt")
+        key = tuple((c, declared.get(c)
+                     or from_arrow_type(foot.field(c).type).simpleString())
+                    for c in cols)
+        groups.setdefault(key, []).append((path, int(d["seq"])))
+    out = []
+    for key, files in sorted(groups.items()):
+        cols = [c for c, _ in key]
+        seqs = spark.createDataFrame(
+            [(_py_norm(p), s) for p, s in files],
+            "__qs_efp__ string, __qs_dseq__ long")
+        dd = (spark.read.schema(", ".join(f"`{c}` {t}" for c, t in key))
+              .parquet(*[p for p, _ in files])
+              .withColumn("__qs_efp__",
+                          _norm_path(F.col("_metadata.file_path")))
+              .join(F.broadcast(seqs), "__qs_efp__")
+              .groupBy(*cols)
+              .agg(F.max("__qs_dseq__").alias("__qs_dseq__"))
+              .select(*[F.col(c).alias(f"__qs_eq_{c}__") for c in cols],
+                      "__qs_dseq__"))
+        match = F.col("__qs_seq__") < F.col("__qs_dseq__")
+        for c in cols:
+            match = match & F.col(c).eqNullSafe(F.col(f"__qs_eq_{c}__"))
+        out.append((dd, match))
+    return out
+
+
 def _live_df(spark, table_path: str, snapshot_id: int | None,
              keep_position: bool = False,
              partition_filter: str | None = None,
              scan_filter: str | None = None,
-             with_lineage: bool = False):
+             with_lineage: bool = False, meta: dict | None = None,
+             inv: _Inventory | None = None):
     """Live rows of a snapshot with position AND equality deletes
-    applied; with ``keep_position`` the normalized (__qs_fp__,
-    __qs_pos__) columns survive — the upsert path needs them to
-    address matched rows. ``partition_filter`` prunes the data-file
-    list from the manifests' partition values before the scan;
-    ``scan_filter`` skips files whose manifest column bounds refute it
-    and then applies row-level. ``with_lineage`` (round 12, spec §Row
+    applied; with ``keep_position`` each row's address (_ADDRESS)
+    survives — the upsert addresses matched rows by it, the change
+    stream matches deletes against it. ``meta``/``inv``: the table
+    metadata and the snapshot's inventory when the caller holds
+    them. ``partition_filter`` prunes the data-file list from the
+    manifests' partition values before the scan; ``scan_filter``
+    skips files whose manifest column bounds refute it and then
+    applies row-level. ``with_lineage`` (round 12, spec §Row
     Lineage) appends the v3 metadata columns ``_row_id`` (the file's
     first_row_id + row position — null when the file carries no
     lineage) and ``_last_updated_sequence_number`` (the file's data
-    sequence number): one KB-scale broadcast of (path → first_row_id,
-    seq) joined onto the scan, pure arithmetic per row. Files
-    REWRITTEN by lineage-preserving engines materialize the two as
-    physical columns; per spec a non-null materialized value wins
-    over the inherited one (coalesce)."""
+    sequence number), pure arithmetic per row over the scan's
+    per-file broadcast. Files REWRITTEN by lineage-preserving
+    engines materialize the two as physical columns; per spec a
+    non-null materialized value wins (coalesce)."""
     from pyspark.sql import functions as F
-    entries, deletes, eq_deletes, dvs = snapshot_files_full(
-        table_path, snapshot_id, with_dvs=True)
-    meta = _read_table_metadata(table_path)
+    if meta is None:
+        meta = _read_table_metadata(table_path)
+    entries, deletes, eq_deletes, dvs = (
+        _inventory(meta, snapshot_id) if inv is None else inv)
     spec_names = []
     if partition_filter:
         entries = _prune_entries(spark, entries, meta, partition_filter)
         spec_names = [f["name"] for f in _partition_spec_fields(meta)]
     if scan_filter:
         entries = _prune_by_bounds(entries, meta, scan_filter)
-    paths = [d["path"] for d in entries]
-    if not paths:
+    if not entries:
         raise ValueError(f"{table_path}: snapshot has no data files"
                          + (f" matching {partition_filter or scan_filter!r}"
                             if (partition_filter or scan_filter) else ""))
-    rs = _table_read_schema(meta, paths[0])
-    if rs is not None and with_lineage:
-        # rewritten v3 files materialize the lineage columns — put
-        # them in the read schema so coalesce can prefer them; files
-        # without them null-fill and fall back to the inherited value
-        from pyspark.sql.types import LongType, StructField
-        for c in ("_row_id", "_last_updated_sequence_number"):
-            rs = rs.add(StructField(c, LongType(), True))
-    df = ((spark.read.schema(rs).parquet(*paths)
-           if rs is not None else spark.read.parquet(*paths))
-          .withColumn("__qs_fp__", _norm_path(F.col("_metadata.file_path")))
-          .withColumn("__qs_pos__", F.col("_metadata.row_index")))
-    if not with_lineage:
-        # a plain read of a table whose rewritten files materialize
-        # the reserved lineage columns must not surface them (they
-        # can only appear here via schema inference)
-        df = df.drop("_row_id", "_last_updated_sequence_number")
-    df = _apply_initial_defaults(df, meta, [d["path"] for d in entries],
-                                 F.col("__qs_fp__"))
+    df = _scan_data(spark, meta, entries, address=True,
+                    seq=bool(keep_position or with_lineage or eq_deletes),
+                    lineage=with_lineage)
     if partition_filter:
         from .pruning import parse_conjuncts
         atoms = parse_conjuncts(partition_filter)
@@ -1249,64 +1377,21 @@ def _live_df(spark, table_path: str, snapshot_id: int | None,
         # (files are dropped only on a proven-empty range), so the
         # filter's exact semantics come from here
         df = df.filter(scan_filter)
+    at = ((F.col("__qs_fp__") == F.col("__qs_dfp__"))
+          & (F.col("__qs_pos__") == F.col("__qs_dpos__")))
     if deletes:
-        dd = _pos_deletes_df(spark, deletes)
-        df = df.join(dd, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                     & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                     "left_anti")
+        df = df.join(_pos_deletes_df(spark, deletes), at, "left_anti")
     if dvs:
         # v3 deletion vectors (round 11): same (file, position)
         # anti-join as position deletes; the puffin blob decode runs
-        # executor-side (_dv_positions_df). Spec: at most ONE DV per
-        # data file per snapshot — duplicates mean a corrupt table,
-        # refuse rather than guess (union could mask a writer that
-        # forgot to merge).
-        _dv_one_per_file(table_path, dvs)
-        dd = _dv_positions_df(spark, dvs)
-        df = df.join(dd, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                     & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                     "left_anti")
-    if eq_deletes:
-        # each data row carries its file's sequence number (a tiny
-        # broadcast path→seq map): an equality delete only removes
-        # rows from files with a STRICTLY LOWER sequence (spec §Scan
-        # Planning — a delete never applies to rows committed with or
-        # after it)
-        names = _field_names(table_path)
-        seq_df = spark.createDataFrame(
-            [(_py_norm(d["path"]), int(d["seq"])) for d in entries],
-            "__qs_sfp__ string, __qs_seq__ long")
-        df = (df.join(F.broadcast(seq_df),
-                      F.col("__qs_fp__") == F.col("__qs_sfp__"), "left")
-              .drop("__qs_sfp__"))
-        # group delete files sharing (seq, equality_ids): one distinct
-        # + one null-safe anti-join per group, fully distributed
-        groups: dict = {}
-        for d in eq_deletes:
-            groups.setdefault(
-                (d["seq"], tuple(d["equality_ids"])), []).append(d["path"])
-        for (seq, ids), files in sorted(groups.items()):
-            dd = spark.read.parquet(*[_local(p) for p in files])
-            cols = [names[i] for i in ids] if ids and all(
-                i in names for i in ids) else list(dd.columns)
-            dd = dd.select(*[F.col(c).alias(f"__qs_eq_{c}__")
-                             for c in cols]).distinct()
-            cond = F.col("__qs_seq__") < F.lit(int(seq))
-            for c in cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__qs_eq_{c}__"))
-            df = df.join(dd, cond, "left_anti")
-        df = df.drop("__qs_seq__")
+        # executor-side (_dv_positions_df)
+        _dvs_by_ref(dvs)
+        df = df.join(_dv_positions_df(spark, dvs), at, "left_anti")
+    for dd, match in _eq_deletes_df(spark, meta, eq_deletes):
+        df = df.join(dd, match, "left_anti")
     if with_lineage:
-        lin = spark.createDataFrame(
-            [(_py_norm(d["path"]),
-              (None if d.get("first_row_id") is None
-               else int(d["first_row_id"])),
-              int(d["seq"])) for d in entries],
-            "__qs_lfp__ string, __qs_frid__ long, __qs_lseq__ long")
-        df = df.join(F.broadcast(lin),
-                     F.col("__qs_fp__") == F.col("__qs_lfp__"), "left")
         rid = F.col("__qs_frid__") + F.col("__qs_pos__")
-        seqc = F.col("__qs_lseq__")
+        seqc = F.col("__qs_seq__")
         if "_row_id" in df.columns:           # materialized by a rewrite
             df = df.withColumnRenamed("_row_id", "__qs_mrid__")
             rid = F.coalesce(F.col("__qs_mrid__"), rid)
@@ -1317,9 +1402,8 @@ def _live_df(spark, table_path: str, snapshot_id: int | None,
         df = (df.withColumn("_row_id", rid.cast("long"))
               .withColumn("_last_updated_sequence_number",
                           seqc.cast("long"))
-              .drop("__qs_lfp__", "__qs_frid__", "__qs_lseq__",
-                    "__qs_mrid__", "__qs_mseq__"))
-    return df if keep_position else df.drop("__qs_fp__", "__qs_pos__")
+              .drop("__qs_frid__", "__qs_mrid__", "__qs_mseq__"))
+    return df if keep_position else df.drop(*_ADDRESS)
 
 
 def last_txn_version(table_path: str, app_id: str):
@@ -1349,18 +1433,24 @@ def snapshot_at_timestamp(table_path: str, ts) -> int:
     whose ``timestamp-ms`` is <= ``ts`` (epoch ms, ISO string, or
     datetime) — the same rule the runtime jar applies. A timestamp
     before the first snapshot refuses."""
+    return _snapshot_for_timestamp(_read_table_metadata(table_path), ts)
+
+
+def _snapshot_for_timestamp(meta: dict, ts,
+                            at_or_after: bool = False) -> int:
+    """snapshot_at_timestamp over read metadata; with ``at_or_after``
+    snapshot_at_or_after_timestamp's mirror rule."""
     from .delta_local import _to_epoch_ms
     ts_ms = _to_epoch_ms(ts)
-    meta = _read_table_metadata(table_path)
-    best = None
-    for s in meta.get("snapshots", []):
-        if int(s.get("timestamp-ms") or 0) <= ts_ms:
-            best = s.get("snapshot-id")
-    if best is None:
+    ok = (lambda t: t >= ts_ms) if at_or_after else (lambda t: t <= ts_ms)
+    hits = [int(s.get("snapshot-id")) for s in meta.get("snapshots", [])
+            if ok(int(s.get("timestamp-ms") or 0))]
+    if not hits:
         raise ValueError(
-            f"as_of_timestamp {ts!r} is before the table's first "
-            "snapshot")
-    return int(best)
+            f"from_timestamp {ts!r} is after the table's newest snapshot"
+            if at_or_after else f"as_of_timestamp {ts!r} is before the "
+            "table's first snapshot")
+    return hits[0] if at_or_after else hits[-1]
 
 
 def read_iceberg_local(spark, table_path: str, snapshot_id: int | None = None,
@@ -1368,24 +1458,13 @@ def read_iceberg_local(spark, table_path: str, snapshot_id: int | None = None,
                        scan_filter: str | None = None,
                        as_of_timestamp=None,
                        with_lineage: bool = False):
-    if as_of_timestamp is not None:
-        if snapshot_id is not None:
-            raise ValueError(
-                "pass snapshot_id OR as_of_timestamp, not both")
-        snapshot_id = snapshot_at_timestamp(table_path, as_of_timestamp)
-    return _read_iceberg_local(spark, table_path, snapshot_id,
-                               partition_filter, scan_filter,
-                               with_lineage=with_lineage)
-
-
-def _read_iceberg_local(spark, table_path: str, snapshot_id: int | None = None,
-                        partition_filter: str | None = None,
-                        scan_filter: str | None = None,
-                        with_lineage: bool = False):
     """Spark DataFrame over a local Iceberg table's live data files,
-    with v2 POSITION deletes applied as an anti-join on (file, row
-    position) and v2 EQUALITY deletes as sequence-scoped null-safe
-    anti-joins on their ``equality_ids`` columns.
+    with v2 POSITION deletes and v3 deletion vectors applied as an
+    anti-join on (file, row position) and v2 EQUALITY deletes as ONE
+    sequence-scoped null-safe anti-join per ``equality_ids`` set,
+    whatever the number of delete commits (_eq_deletes_df). Building
+    it reads the metadata JSON once and runs no Spark job when the
+    table schema types the data files.
 
     ``partition_filter`` (SQL over identity-partition columns) prunes
     the file list from the MANIFESTS' per-file partition values before
@@ -1400,18 +1479,23 @@ def _read_iceberg_local(spark, table_path: str, snapshot_id: int | None = None,
     pruning. Unsupported predicate shapes just skip the file-level
     step (the row filter still runs).
 
-    Both delete applications are fully distributed: data files feed
+    Every delete application is fully distributed: data files feed
     Spark's native parquet scan with ``_metadata.file_path`` /
     ``row_index`` (no Python, no driver materialization), delete files
     are their own parquet scans, and the anti-joins broadcast the
     delete sets when small (AQE) or sort-merge when not — delete rows
-    never pass through the driver. The only driver-side piece is the
-    KB-scale (file path → sequence number) map equality scoping
-    needs."""
+    never pass through the driver. The driver-side pieces are KB:
+    path → sequence-number maps and one footer per delete file."""
+    meta = _read_table_metadata(table_path)
+    if as_of_timestamp is not None:
+        if snapshot_id is not None:
+            raise ValueError(
+                "pass snapshot_id OR as_of_timestamp, not both")
+        snapshot_id = _snapshot_for_timestamp(meta, as_of_timestamp)
     return _live_df(spark, table_path, snapshot_id,
                     partition_filter=partition_filter,
                     scan_filter=scan_filter,
-                    with_lineage=with_lineage)
+                    with_lineage=with_lineage, meta=meta)
 
 
 def upsert_iceberg_local(spark, table_dir: str, df, key_cols,
@@ -1448,7 +1532,7 @@ def upsert_iceberg_local(spark, table_dir: str, df, key_cols,
                and "next-row-id" in meta)
     df_evolve = df        # schema evolution must never see _row_id
     live = _live_df(spark, table_dir, None, keep_position=True,
-                    with_lineage=lineage)
+                    with_lineage=lineage, meta=meta)
     batch_keys = df.select(*keys).distinct()
     matched = (live.join(batch_keys, keys, "left_semi")
                .select(F.col("__qs_fp__").alias("file_path"),
@@ -2356,7 +2440,8 @@ def rewrite_data_files_local(spark, table_dir: str,
             "transform — the manifest partition values are transform "
             "RESULTS this reader cannot recompute; use the runtime jar")
     fv = int(meta.get("format-version") or 1)
-    df = _live_df(spark, table_dir, None, with_lineage=fv >= 3)
+    df = _live_df(spark, table_dir, None, with_lineage=fv >= 3,
+                  meta=meta)
     n = df.count()
     parts = max(1, math.ceil(n / target_file_rows))
     tdir = _local(table_dir)
@@ -2465,8 +2550,7 @@ def expire_snapshots_local(table_dir: str, keep_last: int = 1,
     referenced: set = set()
     if delete_orphans:
         for s in kept:
-            d, dels, eqs, dvs_ = snapshot_files_full(
-                table_dir, s.get("snapshot-id"), with_dvs=True)
+            d, dels, eqs, dvs_ = _inventory(meta, s.get("snapshot-id"))
             referenced |= {os.path.abspath(_local(e["path"])) for e in d}
             referenced |= {os.path.abspath(_local(p)) for p in dels}
             referenced |= {os.path.abspath(_local(e["path"]))
@@ -2586,11 +2670,9 @@ def add_deletion_vectors(table_dir: str,
     from .puffin import read_puffin_dv_blob, write_puffin_dv
     tdir = _local(table_dir)
     meta = _read_table_metadata(table_dir)
-    data, _pos, _eqs, dvs = snapshot_files_full(table_dir, None,
-                                                with_dvs=True)
+    data, _pos, _eqs, dvs = _inventory(meta, None)
     live = {_py_norm(_local(d["path"])): d["path"] for d in data}
-    by_ref = {_py_norm(_local(d["referenced_data_file"])): d
-              for d in dvs}
+    by_ref = _dvs_by_ref(dvs)
     dv_map: dict = {}
     for p, positions in deletes.items():
         ref = _py_norm(_local(p))
@@ -2630,14 +2712,8 @@ def snapshot_at_or_after_timestamp(table_path: str, ts) -> int:
     :func:`snapshot_at_timestamp`: the EARLIEST snapshot whose
     ``timestamp-ms`` is >= ``ts``. A timestamp past the newest
     snapshot refuses — an empty stream would hide a units typo."""
-    from .delta_local import _to_epoch_ms
-    ts_ms = _to_epoch_ms(ts)
-    meta = _read_table_metadata(table_path)
-    for s in meta.get("snapshots", []):
-        if int(s.get("timestamp-ms") or 0) >= ts_ms:
-            return int(s.get("snapshot-id"))
-    raise ValueError(
-        f"from_timestamp {ts!r} is after the table's newest snapshot")
+    return _snapshot_for_timestamp(_read_table_metadata(table_path), ts,
+                                   at_or_after=True)
 
 
 def read_iceberg_changes(spark, table_path: str,
@@ -2672,8 +2748,11 @@ def read_iceberg_changes(spark, table_path: str,
     key metadata it keeps the standard delete(old rows) +
     insert(new rows) decomposition.
 
-    Driver cost: manifest reads per snapshot in the range (KB-scale);
-    every row-bearing step is a distributed scan. Timestamp bounds
+    Driver cost: one metadata-JSON read and one KB-scale inventory
+    per snapshot in the range plus one for its parent, carried
+    forward into each _snapshot_diff; a position-delete or DV
+    snapshot runs one small plan-build job (the referenced-file
+    distinct). Row-bearing steps are distributed scans. Timestamp bounds
     (round 10) mirror the Delta CDF rule: ``from_timestamp`` picks
     the earliest snapshot at-or-after (past-newest refuses),
     ``to_timestamp`` the latest at-or-before (clamps at newest)."""
@@ -2687,14 +2766,14 @@ def read_iceberg_changes(spark, table_path: str,
     if to_snapshot is not None and to_timestamp is not None:
         raise ValueError("pass at most one of to_snapshot / "
                          "to_timestamp")
+    meta = _read_table_metadata(table_path)
     if from_timestamp is not None:
-        from_snapshot = snapshot_at_or_after_timestamp(table_path,
-                                                       from_timestamp)
+        from_snapshot = _snapshot_for_timestamp(meta, from_timestamp,
+                                                at_or_after=True)
     if to_timestamp is not None:
         # latest at-or-before: clamps at the newest snapshot,
         # refuses before-first — snapshot_at_timestamp's own rule
-        to_snapshot = snapshot_at_timestamp(table_path, to_timestamp)
-    meta = _read_table_metadata(table_path)
+        to_snapshot = _snapshot_for_timestamp(meta, to_timestamp)
     snaps = meta.get("snapshots", [])
     ids = [s.get("snapshot-id") for s in snaps]
     if to_snapshot is None:
@@ -2707,33 +2786,12 @@ def read_iceberg_changes(spark, table_path: str,
     if i0 > i1:
         raise ValueError(f"from_snapshot {from_snapshot} is newer than "
                          f"to_snapshot {to_snapshot}")
-    names = _field_names_of(meta)
     feed = ChangeFeed(spark, "_snapshot_id", "long")
 
-    def _scan(paths):
-        # the TABLE read schema, not per-file inference: pre-evolution
-        # files surface evolved columns as null, exactly like the
-        # normal read path, and the parts union cleanly. Merge-written
-        # v3 files MATERIALIZE the reserved lineage columns — never
-        # table columns, so they must not leak into the change stream
-        # (they can only appear via the inference fallback). v3
-        # initial-defaults apply through the SAME helper as the
-        # snapshot read (review finding: the stream otherwise
-        # null-filled what read_iceberg served).
-        fs = [_local(p) for p in sorted(paths)]
-        rs = _table_read_schema(meta, fs[0])
-        out = (spark.read.schema(rs).parquet(*fs)
-               if rs is not None else spark.read.parquet(*fs)
-               .drop("_row_id", "_last_updated_sequence_number"))
-        return _apply_initial_defaults(
-            out, meta, fs, _norm_path(F.col("_metadata.file_path")))
-
-    def _scan_at(paths):
-        # raw rows addressed by (file, position) for delete matching
-        return (_scan(paths)
-                .withColumn("__qs_fp__", _norm_path(
-                    F.col("_metadata.file_path")))
-                .withColumn("__qs_pos__", F.col("_metadata.row_index")))
+    def _scan(entries, address=False):
+        return _scan_data(spark, meta,
+                          sorted(entries, key=lambda e: e["path"]),
+                          address=address, seq=address)
 
     # consecutive insert-only snapshots coalesce into one run
     # (changes.py). It never has to flush early: every ``_scan`` reads
@@ -2741,67 +2799,36 @@ def read_iceberg_changes(spark, table_path: str,
     # across interrupting snapshots. The path keys follow THIS
     # module's convention (_py_norm/_norm_path), not abspath:
     # externally-written manifests may store file:/ single-slash URIs.
-    def _run_scan(paths, keep_path):
-        df = _scan(paths)
+    def _run_scan(entries, keep_path):
+        df = _scan(entries)
         return (df.withColumn("__qs_if__", _norm_path(
             F.col("_metadata.file_path"))) if keep_path else df)
 
     inserts = feed.run(_run_scan, "__qs_if__",
-                       lambda p: _py_norm(_local(p)))
+                       lambda e: _py_norm(_local(e["path"])))
 
+    inv = _inventory(meta, ids[i0 - 1]) if i0 > 0 else _NO_FILES
     for pos in range(i0, i1 + 1):
         sid = ids[pos]
         op = (snaps[pos].get("summary") or {}).get("operation")
-        cur_d, cur_p, cur_e, cur_v = snapshot_files_full(
-            table_path, sid, with_dvs=True)
-        if pos > 0:
-            par_d, par_p, par_e, par_v = snapshot_files_full(
-                table_path, ids[pos - 1], with_dvs=True)
-        else:
-            par_d, par_p, par_e, par_v = [], [], [], []
-        cur_paths = {d["path"]: d for d in cur_d}
-        par_paths = {d["path"]: d for d in par_d}
-        added = [p for p in cur_paths if p not in par_paths]
-        removed = [p for p in par_paths if p not in cur_paths]
-        new_pos = [p for p in cur_p if p not in set(par_p)]
-        par_eq_paths = {d["path"] for d in par_e}
-        new_eq = [d for d in cur_e if d["path"] not in par_eq_paths]
-        # v3 deletion vectors: a DV is NEW when its referenced file
-        # had none before, CHANGED when the blob moved (supersede
-        # rule) — either way the change rows are cur-minus-parent
-        # positions, the Delta CDF DV-diff shape
-        _dv_one_per_file(table_path, cur_v)
-        _dv_one_per_file(table_path, par_v)   # a corrupt parent would
-        # otherwise collapse silently in the dict (last wins) and the
-        # diff re-emit already-dead positions as phantom deletes
-        cur_by_ref = {_py_norm(_local(d["referenced_data_file"])): d
-                      for d in cur_v}
-        par_by_ref = {_py_norm(_local(d["referenced_data_file"])): d
-                      for d in par_v}
-        new_dvs = [d for ref, d in sorted(cur_by_ref.items())
-                   if par_by_ref.get(ref) is None
-                   or (par_by_ref[ref]["path"],
-                       par_by_ref[ref]["content_offset"])
-                   != (d["path"], d["content_offset"])]
+        par, inv = inv, _inventory(meta, sid)
+        d = _snapshot_diff(par, inv)
+        has_del = bool(d.new_pos or d.new_eq or d.new_dvs)
         if op == "replace":
-            if new_pos or new_eq or new_dvs:
+            if has_del:
                 raise ValueError(
                     f"snapshot {sid}: stamped 'replace' but adds "
                     "delete files — malformed rewrite")
             continue        # contributes nothing; the run stays open
         # a DV disappearing while its data file stays live would
         # RESURRECT rows — not an insert/delete the stream can emit
-        live_norm = {_py_norm(_local(p)) for p in cur_paths}
-        gone = [r for r in par_by_ref
-                if r not in cur_by_ref and r in live_norm]
-        if gone:
+        if d.dropped_dvs:
             raise NotImplementedError(
                 f"snapshot {sid} drops the deletion vector of a "
-                f"still-live data file ({sorted(gone)[:3]}) — the "
+                f"still-live data file ({d.dropped_dvs[:3]}) — the "
                 "resurrected rows have no change-stream shape")
-        if added and not removed and not new_pos and not new_eq \
-                and not new_dvs:
-            inserts.add(int(sid), added)
+        if d.added and not d.removed and not has_del:
+            inserts.add(int(sid), d.added)
             continue
         # UPDATE pairing (round 9): an upsert snapshot that declares
         # its MERGE keys in the summary (upsert_iceberg_local stamps
@@ -2811,48 +2838,44 @@ def read_iceberg_changes(spark, table_path: str,
         # else) pairs; anything mixed keeps the raw decomposition.
         pair_kc = None
         mk_raw = (snaps[pos].get("summary") or {}).get("merge-keys")
-        if mk_raw and added and new_pos and not removed \
-                and not new_eq and not new_dvs:
+        if mk_raw and d.added and d.new_pos and not d.removed \
+                and not d.new_eq and not d.new_dvs:
             try:
                 pair_kc = list(json.loads(mk_raw))
             except (ValueError, TypeError):
                 pair_kc = None
-        ins_df = _scan(added) if added else None
+        ins_df = _scan(d.added) if d.added else None
         if pair_kc and not all(k in ins_df.columns for k in pair_kc):
             pair_kc = None             # schema drift: fall back
-        if removed:
-            if par_p or par_e or par_v:
+        if d.removed:
+            if par.pos or par.eq or par.dvs:
                 raise NotImplementedError(
                     f"snapshot {sid} removes data files while the "
                     "parent carries delete files — reconstructing "
                     "each removed file's surviving rows is not "
                     "supported here (compact first)")
-            feed.add(_scan(removed), "delete", int(sid))
-        if added and not pair_kc:
+            feed.add(_scan(d.removed), "delete", int(sid))
+        if d.added and not pair_kc:
             feed.add(ins_df, "insert", int(sid))
         # parent LIVE rows (full delete stack applied) are the match
         # target whenever the parent carries delete files — matching
         # raw files would re-report rows already deleted earlier
         # (phantom deletes); when the parent is delete-free, a raw
-        # scan bounded to the referenced files is cheaper and equal
+        # scan of the parent's files is cheaper and equal
         par_live = None
-        if (new_pos or new_eq or new_dvs) and pos > 0 \
-                and (par_p or par_e or par_v):
-            par_live = _live_df(spark, table_path, ids[pos - 1],
-                                keep_position=True)
-        added_norm = {_py_norm(_local(p)): p for p in added}
+        if has_del and (par.pos or par.eq or par.dvs):
+            par_live = _live_df(spark, table_path, None,
+                                keep_position=True, meta=meta, inv=par)
+        added_norm = {_py_norm(_local(e["path"])): e for e in d.added}
         dd = None
-        if new_pos:
-            dd = _pos_deletes_df(spark, new_pos)
-        if new_dvs:
+        if d.new_pos:
+            dd = _pos_deletes_df(spark, d.new_pos)
+        if d.new_dvs:
             # newly deleted = cur blob minus the file's parent blob
-            dv_dd = _dv_positions_df(spark, new_dvs)
-            prior = [par_by_ref[r] for r in sorted(
-                {_py_norm(_local(d["referenced_data_file"]))
-                 for d in new_dvs} & set(par_by_ref))]
-            if prior:
+            dv_dd = _dv_positions_df(spark, d.new_dvs)
+            if d.prior_dvs:
                 dv_dd = dv_dd.join(
-                    _dv_positions_df(spark, prior),
+                    _dv_positions_df(spark, d.prior_dvs),
                     ["__qs_dfp__", "__qs_dpos__"], "left_anti")
             dd = dv_dd if dd is None else dd.unionByName(dv_dd)
         if dd is not None:
@@ -2870,23 +2893,21 @@ def read_iceberg_changes(spark, table_path: str,
                     targets.append(par_live.where(
                         F.col("__qs_fp__").isin(sorted(old_refs))))
                 else:
-                    old_files = [p for p in par_paths
-                                 if _py_norm(_local(p)) in old_refs]
+                    old_files = [e for e in par.data
+                                 if _py_norm(_local(e["path"])) in old_refs]
                     if old_files:
-                        targets.append(_scan_at(old_files))
+                        targets.append(_scan(old_files, address=True))
             new_refs = [added_norm[n] for n in ref_norm
                         if n in added_norm]
             if new_refs:
                 # brand-new files can carry no prior deletes: raw scan
-                targets.append(_scan_at(new_refs))
+                targets.append(_scan(new_refs, address=True))
             if targets:
-                tgt = targets[0]
-                for t in targets[1:]:
-                    tgt = tgt.unionByName(t)
+                tgt = functools.reduce(lambda a, b: a.unionByName(b), targets)
                 scan = (tgt.join(
                     dd, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
                     & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                    "left_semi").drop("__qs_fp__", "__qs_pos__"))
+                    "left_semi").drop(*_ADDRESS))
                 if pair_kc:
                     feed.pair(int(sid), pair_kc, scan, ins_df)
                     pair_kc = None     # consumed
@@ -2897,27 +2918,13 @@ def read_iceberg_changes(spark, table_path: str,
             # scan (e.g. every referenced file vanished) — fall back
             # to the plain insert so no rows are lost
             feed.add(ins_df, "insert", int(sid))
-        for d in new_eq:
-            older = {_py_norm(_local(e["path"])) for e in par_d
-                     if int(e["seq"]) < int(d["seq"])}
-            if not older:
-                continue
-            dd = spark.read.parquet(_local(d["path"]))
-            ids_ = d.get("equality_ids") or []
-            cols = [names[i] for i in ids_] if ids_ and all(
-                i in names for i in ids_) else list(dd.columns)
-            dd = dd.select(*[F.col(c).alias(f"__qs_eq_{c}__")
-                             for c in cols]).distinct()
-            if par_live is not None:
-                tgt = par_live.where(F.col("__qs_fp__")
-                                     .isin(sorted(older)))
-            else:
-                tgt = _scan_at([p for p in par_paths
-                                if _py_norm(_local(p)) in older])
-            cond = None
-            for c in cols:
-                eq = F.col(c).eqNullSafe(F.col(f"__qs_eq_{c}__"))
-                cond = eq if cond is None else cond & eq
-            feed.add(tgt.join(dd, cond, "left_semi")
-                     .drop("__qs_fp__", "__qs_pos__"), "delete", int(sid))
-    return feed.result(lambda: _live_df(spark, table_path, to_snapshot))
+        if d.new_eq and par.data:
+            # the parent's rows that the new equality deletes match,
+            # scoped to older data files inside the join
+            tgt = (par_live if par_live is not None
+                   else _scan(par.data, address=True))
+            for eq_dd, match in _eq_deletes_df(spark, meta, d.new_eq):
+                feed.add(tgt.join(eq_dd, match, "left_semi")
+                         .drop(*_ADDRESS), "delete", int(sid))
+    return feed.result(lambda: _live_df(spark, table_path, to_snapshot,
+                                        meta=meta, inv=inv))

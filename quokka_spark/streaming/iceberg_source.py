@@ -15,6 +15,10 @@ file, read executor-side as Arrow batches. Append-only contract:
   ``ignore_changes=true``, which streams the snapshot's new files in
   full (surviving rows re-transmitted — the ignoreChanges contract).
 
+Each snapshot is compared with its parent by the batch change
+reader's own diff (iceberg_local._snapshot_diff), the parent's
+inventory carried forward, one metadata read per batch plan.
+
 ``starting_snapshot=<id>`` begins the stream AT that snapshot
 (default: the first), refusing ids the table does not have."""
 
@@ -34,12 +38,13 @@ def _table_of(options: dict) -> str:
 
 
 def _snapshot_ids(table: str) -> tuple:
+    """(snapshot ids in list order, the table metadata) — one read."""
     from quokka_spark.sources.iceberg_local import _read_table_metadata
     meta = _read_table_metadata(table)
     snaps = meta.get("snapshots", [])
     if not snaps:
         raise ValueError(f"{table}: no snapshots (empty table)")
-    return [s.get("snapshot-id") for s in snaps], snaps
+    return [s.get("snapshot-id") for s in snaps], meta
 
 
 class IcebergStreamReader(DataSourceStreamReader):
@@ -88,9 +93,10 @@ class IcebergStreamReader(DataSourceStreamReader):
                 "position; restart the stream from a fresh checkpoint")
 
     def partitions(self, start: dict, end: dict):
-        from quokka_spark.sources.iceberg_local import snapshot_files_full
+        from quokka_spark.sources.iceberg_local import (
+            _NO_FILES, _inventory, _snapshot_diff)
         p0, p1 = int(start["pos"]), int(end["pos"])
-        ids, snaps = _snapshot_ids(self.table)
+        ids, meta = _snapshot_ids(self.table)
         # alignment BEFORE the empty-range early return: an expired
         # list can shift the same position onto a different snapshot
         self._check_offset(start, ids)
@@ -98,54 +104,37 @@ class IcebergStreamReader(DataSourceStreamReader):
         if p1 <= p0:
             return []
         parts = []
-        par_d, par_p, par_e, par_v = ([], [], [], []) if p0 < 0 else \
-            snapshot_files_full(self.table, ids[p0], with_dvs=True)
+        inv = _inventory(meta, ids[p0]) if p0 >= 0 else _NO_FILES
         for pos in range(p0 + 1, p1 + 1):
             sid = ids[pos]
-            op = (snaps[pos].get("summary") or {}).get("operation")
-            cur_d, cur_p, cur_e, cur_v = snapshot_files_full(
-                self.table, sid, with_dvs=True)
-            cur_paths = {d["path"] for d in cur_d}
-            par_paths = {d["path"] for d in par_d}
-            added = sorted(cur_paths - par_paths)
-            removed = sorted(par_paths - cur_paths)
-            par_pos = set(par_p)
-            new_pos_files = [p for p in cur_p if p not in par_pos]
-            par_eq = {d["path"] for d in par_e}
-            new_eq = [d for d in cur_e if d["path"] not in par_eq]
-            # v3 deletion vectors: a new or superseded blob is a
-            # row-delete like any other delete file (round 11)
-            par_dv = {(d["path"], d.get("content_offset"))
-                      for d in par_v}
-            new_dvs = [d for d in cur_v
-                       if (d["path"], d.get("content_offset"))
-                       not in par_dv]
+            op = (meta["snapshots"][pos].get("summary") or {}) \
+                .get("operation")
+            par, inv = inv, _inventory(meta, sid)
             if op == "replace":
-                pass                       # rearrangement: invisible
-            else:
-                has_del = bool(new_pos_files or new_eq or new_dvs)
-                # per-shape contract, aligned with the Delta sibling:
-                # - pure delete (delete files or file drops, NO new
-                #   data) → ignore_deletes (or ignore_changes) skips;
-                # - anything adding data alongside deletes/removals
-                #   (the upsert/overwrite shapes) → ignore_changes,
-                #   because the added files re-transmit updated rows
-                if (has_del or removed) and added \
-                        and not self.ignore_changes:
-                    raise ValueError(
-                        f"snapshot {sid} rewrites data (new files + "
-                        "deletes/removals: upsert/overwrite) — pass "
-                        "ignore_changes=true to stream the new files "
-                        "(updated rows WILL appear twice)")
-                if (has_del or removed) and not added and not (
-                        self.ignore_deletes or self.ignore_changes):
-                    raise ValueError(
-                        f"snapshot {sid} only deletes rows/files — a "
-                        "streaming source is append-only; pass "
-                        "ignore_deletes=true to skip delete snapshots")
-                for p in added:
-                    parts.append(InputPartition(p))
-            par_d, par_p, par_e, par_v = cur_d, cur_p, cur_e, cur_v
+                continue                   # rearrangement: invisible
+            d = _snapshot_diff(par, inv)
+            # delete files of any kind (a new or superseded DV is a
+            # row-delete too) or file removals. Per-shape contract,
+            # aligned with the Delta sibling:
+            # - pure delete (NO new data) → ignore_deletes (or
+            #   ignore_changes) skips;
+            # - anything adding data alongside deletes/removals
+            #   (the upsert/overwrite shapes) → ignore_changes,
+            #   because the added files re-transmit updated rows
+            dels = d.removed or d.new_pos or d.new_eq or d.new_dvs
+            if dels and d.added and not self.ignore_changes:
+                raise ValueError(
+                    f"snapshot {sid} rewrites data (new files + "
+                    "deletes/removals: upsert/overwrite) — pass "
+                    "ignore_changes=true to stream the new files "
+                    "(updated rows WILL appear twice)")
+            if dels and not d.added and not (
+                    self.ignore_deletes or self.ignore_changes):
+                raise ValueError(
+                    f"snapshot {sid} only deletes rows/files — a "
+                    "streaming source is append-only; pass "
+                    "ignore_deletes=true to skip delete snapshots")
+            parts += [InputPartition(e["path"]) for e in d.added]
         return parts
 
     def read(self, partition):

@@ -477,6 +477,24 @@ def test_equality_deletes_field_ids_resolve_via_schema(qc, spark, tmp_path):
         equality_ids=[2])
     got2 = sorted(r["k"] for r in qc.read_iceberg(tbl).df.collect())
     assert got2 == [2]
+    # the delete frame reads under the declared column types: an
+    # INT32 delete column under a declared long column still deletes
+    typed = str(tmp_path / "eqtyped")
+    create_local_iceberg_table(typed, [[d]], schema_fields=[
+        (1, "k", "long"), (2, "s", "string")])
+    add_equality_deletes(
+        typed, pa.table({"k": pa.array([1], pa.int32())}),
+        equality_ids=[1])
+    assert sorted(r["k"] for r in qc.read_iceberg(typed).df.collect()) \
+        == [2, 3, 4]
+    # a delete file lacking its equality column refuses: read under
+    # the declared schema it would null-fill and delete every row
+    # whose s IS NULL
+    add_equality_deletes(
+        typed, pa.table({"k": pa.array([2], pa.int64())}),
+        equality_ids=[2])
+    with pytest.raises(ValueError, match="lacks its equality column"):
+        qc.read_iceberg(typed).df.collect()
 
 
 def test_non_iceberg_dir_keeps_gated_jar_error(qc, tmp_path):
@@ -1024,7 +1042,8 @@ def test_iceberg_catalog_deletes_match_local_reader(spark, qc, table,
     local writer, served through the catalog planner's task shape
     (each eq delete attached only to data files with strictly lower
     sequence, which is what pyiceberg's planner enforces)."""
-    from quokka_spark.sources.iceberg_local import (_field_names,
+    from quokka_spark.sources.iceberg_local import (_field_names_of,
+                                                    _read_table_metadata,
                                                     add_equality_deletes,
                                                     add_position_deletes,
                                                     snapshot_files,
@@ -1039,7 +1058,8 @@ def test_iceberg_catalog_deletes_match_local_reader(spark, qc, table,
     # the minimal fixture's metadata carries no schema fields, so
     # equality ids cannot resolve to names — both readers then fall
     # back to the delete file's own columns, the same contract
-    fid = {v: k for k, v in _field_names(tbl).items()}
+    fid = {v: k for k, v in
+           _field_names_of(_read_table_metadata(tbl)).items()}
     sch = ([("id", "long", fid["id"])] if "id" in fid
            else [("id", "long")])
     deletes = [{"path": p, "content": 1} for p in pos]
