@@ -13,7 +13,6 @@ import stat
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .datastream import DataStream
 from .memo import MISS, Memo
@@ -77,6 +76,24 @@ def _nanos_timestamp_columns(path: str) -> list:
             if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns"]
 
 
+def _parquet_footer(spark, path: str, options: dict) -> tuple:
+    """(the schema Spark infers for parquet ``path`` under
+    ``options``, None unless a local regular file; its TIMESTAMP(NANOS)
+    columns), memoized in ``_PARQUET_FOOTERS``: read_parquet and the
+    Hudi base scan (sources/hudi_local) resolve schemas here."""
+    sig = _stat_signature(path)
+    key = (path, sig, tuple(sorted(options.items())),
+           tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    footer = _PARQUET_FOOTERS.get(key)
+    if footer is MISS:
+        # the probe frame is dropped, so its schema is the memo's own
+        schema = (spark.read.options(**options).parquet(path).schema
+                  if sig is not None and sig[-1] else None)
+        footer = (schema, _nanos_timestamp_columns(path))
+        _PARQUET_FOOTERS.put(key, footer)
+    return footer
+
+
 class LocalCluster:
     """API-parity placeholder: the reference distinguishes
     LocalCluster/EC2Cluster (pyquokka/utils.py); under Spark the cluster
@@ -128,21 +145,10 @@ class QuokkaContext:
         options and schema confs passes it to the reader, which then
         runs no job. Directories, globs and remote URIs let Spark
         infer on every read."""
-        sig = _stat_signature(path)
-        key = (path, sig, tuple(sorted(options.items())),
-               tuple(self.spark.conf.get(k, None) for k in _SCHEMA_CONFS))
-        footer = _PARQUET_FOOTERS.get(key)
-        schema = None if footer is MISS else footer[0]
+        schema, nanos = _parquet_footer(self.spark, path, options)
         reader = self.spark.read.options(**options)
         df = (reader if schema is None else reader.schema(schema)).parquet(path)
-        if footer is MISS:
-            # a copy: df.schema is the caller's, and StructType.add
-            # mutates in place
-            schema = (T.StructType.fromJson(df.schema.jsonValue())
-                      if sig is not None and sig[-1] else None)
-            footer = (schema, _nanos_timestamp_columns(path))
-            _PARQUET_FOOTERS.put(key, footer)
-        for c in footer[1]:
+        for c in nanos:
             # nanosAsLong read the column as int64 nanos; restore a
             # timestamp (µs truncation — matches DuckDB/Arrow semantics)
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -394,9 +400,14 @@ class QuokkaContext:
         invisible; delete deltacommits need ignore_deletes;
         insert_overwrite needs ignore_changes. See
         streaming/hudi_source.py."""
+        from .sources.hudi_local import _table_schema, _Timeline
         from .streaming.hudi_source import HudiStreamDataSource
         self.spark.dataSource.register(HudiStreamDataSource)
+        # the batch reader's table schema, from the driver's footer
+        # memo (the source's own schema() runs in a Python worker)
+        schema = _table_schema(self.spark, _Timeline(table).live())
         r = (self.spark.readStream.format("hudi_local_stream")
+             .schema(schema)
              .option("ignore_deletes", str(ignore_deletes).lower())
              .option("ignore_changes", str(ignore_changes).lower()))
         if starting_instant is not None:
@@ -661,12 +672,10 @@ class QuokkaContext:
     def hudi_history(self, table: str) -> DataStream:
         """Completed timeline: one row per write instant —
         (instant, action, operation). Metadata-only."""
-        from .sources.hudi_local import (_read_commit_json,
-                                         completed_instants)
-        rows = []
-        for ts, action, path in completed_instants(table):
-            commit = _read_commit_json(table, path)
-            rows.append((ts, action, commit.get("operationType")))
+        from .sources.hudi_local import _Timeline
+        tl = _Timeline(table)
+        rows = [(c.ts, c.action, c.op)
+                for c in map(tl.commit, range(len(tl.instants)))]
         df = self.spark.createDataFrame(
             rows, "instant string, action string, operation string")
         return DataStream(self, df, materialized=True)

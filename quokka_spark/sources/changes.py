@@ -215,12 +215,10 @@ class ChangeFeed:
             F.explode(F.sequence(F.lit(1), reps)).alias("__qs_rep__")
         ).drop("__qs_rep__")
 
-    def result(self, empty, align: bool = False):
+    def result(self, empty):
         """Union of every part. With no parts: ``empty()`` (a frame of
         the table's data columns) tagged and emptied, so the result is
-        typed even for a range without changes. ``align`` casts each
-        later part to the first part's column types (Hudi log records
-        decode with Avro types)."""
+        typed even for a range without changes."""
         self.flush()
         for (keys, cols), (slot, sides) in self.pairings.items():
             self.parts[slot] = self._pairing(list(keys), list(cols), sides)
@@ -228,10 +226,5 @@ class ChangeFeed:
             return self.tag(empty(), self.insert_type, 0).limit(0)
         out = self.parts[0]
         for p in self.parts[1:]:
-            if align:
-                tgt = {f.name: f.dataType for f in out.schema.fields}
-                p = p.select(*[F.col(c).cast(tgt[c]).alias(c)
-                               if c in tgt else F.col(c)
-                               for c in p.columns])
             out = out.unionByName(p)
         return out

@@ -19,9 +19,8 @@ path) of every file written; ``<instant>.replacecommit`` additionally
 lists ``partitionToReplaceFileIds`` — groups whose previous slices
 are dead (clustering / insert_overwrite); ``<instant>.deltacommit``
 is the MoR write action (new base files for inserts, log files for
-updates/deletes). Reading therefore never lists data directories:
-the timeline IS the source of truth, exactly like the Delta log
-replay in delta_local.
+updates/deletes). Reading never lists data directories: the
+timeline IS the source of truth, as the log is in delta_local.
 
 MoR read = one distributed union-merge, Spark-first: base parquet
 rows (version 0) union the log records (version = commit instant,
@@ -38,10 +37,8 @@ Scope (documented, test-enforced):
 - log files decode per file in EITHER shape, dispatched on the
   leading bytes: plain Avro object container files (this module's
   own MoR writer) or REAL HoodieLogFormat block framing (#HUDI#
-  magic, version-1 blocks — sources/hudi_logfmt.py, round 9).
-  Framed rollback command blocks apply within their file; delete/
-  hfile/parquet/cdc blocks and cross-file rollbacks refuse with
-  typed errors rather than risking a silent misread.
+  magic, version-1 blocks — sources/hudi_logfmt.py); unsupported
+  blocks refuse typed rather than risking a silent misread.
 - completed instants only (``*.commit`` / ``*.replacecommit`` /
   ``*.deltacommit``); inflight/requested markers are ignored per the
   timeline contract.
@@ -49,6 +46,25 @@ Scope (documented, test-enforced):
   (through deltacommits too: an earlier ``as_of`` sees fewer logs).
 - the ``_hoodie_*`` meta columns travel with the data files untouched
   (drop them with a select, as on a real Hudi scan).
+
+One timeline fold (``_Timeline``) serves every reader, writer and
+table service, the streaming source (streaming/hudi_source.py) and
+``QuokkaContext.hudi_history``: a public call reads
+``hoodie.properties`` once, lists the timeline once
+(``completed_instants``) and parses each instant's JSON at most once,
+into write stats with absolute paths, replaced file ids,
+operationType and extraMetadata. ``_Timeline.replay`` applies the
+instants onto the live file slices and classifies each one's writes
+(new bases, logs, rewrites of live groups): the slices serve reads,
+writers, restore and clean; the classification serves
+read_hudi_incremental and the stream source.
+
+One base scan (``_scan_bases``) reads base files under the TABLE
+schema: the schema Spark infers for the newest live base file
+(highest base instant, then path), from read_parquet's footer memo
+(``context._parquet_footer``); older bases null-fill newer columns.
+Base files are never rewritten in place, so only the first read over
+a newest base runs an inference job.
 """
 
 from __future__ import annotations
@@ -58,6 +74,7 @@ import os
 import re
 import time
 import uuid
+from collections import namedtuple
 
 
 def _local(path: str) -> str:
@@ -70,13 +87,18 @@ def _timeline_dir(table: str) -> str:
     return os.path.join(_local(table), ".hoodie")
 
 
-def _table_props(table: str) -> dict:
-    props = os.path.join(_timeline_dir(table), "hoodie.properties")
-    if not os.path.exists(props):
-        raise FileNotFoundError(
-            f"{table}: no .hoodie/hoodie.properties — not a Hudi table")
+def _read_props(table: str) -> dict | None:
+    """hoodie.properties as a dict; None when absent (a properties-less
+    local fixture, 0.x shaped). Table versions BEYOND 1.x refuse typed
+    here, so no replay can silently see an empty timeline for a
+    future layout."""
+    path = os.path.join(_timeline_dir(table), "hoodie.properties")
+    try:
+        fh = open(path)
+    except FileNotFoundError:
+        return None
     out = {}
-    with open(props) as fh:
+    with fh:
         for line in fh:
             line = line.strip()
             if line and not line.startswith("#") and "=" in line:
@@ -84,8 +106,6 @@ def _table_props(table: str) -> dict:
                 out[k.strip()] = v.strip()
     tv = out.get("hoodie.table.version")
     if tv and tv.isdigit() and int(tv) > 8:
-        # beyond hudi 1.x: refuse typed rather than misread a future
-        # timeline layout as empty
         raise NotImplementedError(
             f"{table}: hoodie.table.version {tv} — this reader "
             "implements the 0.x (<= 6) and 1.x (7/8) timeline "
@@ -93,37 +113,30 @@ def _table_props(table: str) -> dict:
     return out
 
 
-def _table_version(table: str) -> int:
-    """hoodie.table.version as an int (6 and below = the 0.x layout,
-    7/8 = the 1.x layout); properties-less local fixtures are
-    0.x-shaped."""
-    try:
-        tv = _table_props(table).get("hoodie.table.version", "")
-    except FileNotFoundError:
-        return 6
-    return int(tv) if tv.isdigit() else 6
-
-
-def _refuse_1x_writes(table: str, op: str) -> None:
-    """1.x tables are READ-ONLY here (round 13 — CoW snapshot +
-    time-travel + incremental reads): this engine's writers emit
-    0.x-shaped instants in the 0.x location, which a 1.x timeline
-    would never replay — refuse typed instead of committing
-    invisible instants (or truncating/cleaning a layout whose
-    completion-time semantics they do not model)."""
-    if _table_version(table) >= 7:
-        raise NotImplementedError(
-            f"{table}: {op} on a hoodie.table.version >= 7 (hudi "
-            "1.x) table — this engine writes the 0.x timeline "
-            "layout only; use a 1.x writer")
-
-
-def _table_type(table: str) -> str:
-    return _table_props(table).get("hoodie.table.type", "COPY_ON_WRITE")
-
-
-def _is_log(path: str) -> bool:
-    return ".log." in os.path.basename(path)
+def _list_instants(table: str) -> list:
+    tdir = _timeline_dir(table)
+    if not os.path.isdir(tdir):
+        raise FileNotFoundError(
+            f"{table}: no .hoodie/ directory — not a Hudi table")
+    # hudi 1.x (table version 7/8): the ACTIVE timeline lives under
+    # .hoodie/timeline/ as <requested>_<completion>.<action>, and 1.x
+    # visibility is COMPLETION-time-based, so 1.x entries are KEYED by
+    # their completion time — replay order, as_of, incremental ranges
+    # and history then follow the 1.x contract with no special cases.
+    # The 0.x pattern is accepted inside timeline/ too (bridge tables);
+    # an instant in BOTH layouts (mid-upgrade copy) counts once, the
+    # timeline/ copy winning — double-replay would double-count rows.
+    by_req: dict = {}
+    ldir = os.path.join(tdir, "timeline")
+    for d in [tdir] + ([ldir] if os.path.isdir(ldir) else []):
+        for f in os.listdir(d):
+            m = re.fullmatch(
+                r"(\d+)(?:_(\d+))?\.(commit|replacecommit|deltacommit)",
+                f)
+            if m and (d == ldir or not m.group(2)):
+                by_req[m.group(1)] = (m.group(2) or m.group(1),
+                                      m.group(3), os.path.join(d, f))
+    return sorted(by_req.values(), key=lambda t: int(t[0]))
 
 
 def completed_instants(table: str) -> list:
@@ -134,144 +147,221 @@ def completed_instants(table: str) -> list:
     actions only — clean/rollback/savepoint don't change the live
     file set this reader computes (cleans delete files only older
     than every live slice)."""
-    tdir = _timeline_dir(table)
-    if not os.path.isdir(tdir):
-        raise FileNotFoundError(
-            f"{table}: no .hoodie/ directory — not a Hudi table")
-    # version gate at THIS chokepoint (every timeline replay shares
-    # it): _table_props refuses table versions BEYOND 1.x typed, so
-    # no replay-only path (history, incremental, txn marks) can
-    # silently see an empty timeline for a future layout
-    try:
-        _table_props(table)
-    except FileNotFoundError:
-        pass            # properties-less local fixture — 0.x shaped
-    # hudi 1.x (table version 7/8, round 13): the ACTIVE timeline
-    # moved under .hoodie/timeline/ and completed instants carry the
-    # COMPLETION time in the name — <requested>_<completion>.<action>.
-    # 1.x visibility semantics are COMPLETION-time-based (an
-    # instant's effects become readable when it COMPLETES, and
-    # time-travel / incremental boundaries compare completion
-    # times), so 1.x entries are KEYED by their completion time —
-    # every consumer (replay order, as_of, incremental ranges,
-    # history) then follows the 1.x contract with no special cases.
-    # The 0.x pattern is accepted inside timeline/ too (bridge
-    # tables); an instant present in BOTH layouts (mid-upgrade copy)
-    # counts once, the timeline/ copy winning — double-replay would
-    # double-count incremental rows.
-    by_req: dict = {}
-    for f in os.listdir(tdir):
-        m = re.fullmatch(r"(\d+)\.(commit|replacecommit|deltacommit)", f)
-        if m:
-            by_req[m.group(1)] = (m.group(1), m.group(2),
-                                  os.path.join(tdir, f))
-    ldir = os.path.join(tdir, "timeline")
-    if os.path.isdir(ldir):
-        for f in os.listdir(ldir):
-            m = re.fullmatch(
-                r"(\d+)(?:_(\d+))?\.(commit|replacecommit|deltacommit)",
-                f)
-            if m:
-                by_req[m.group(1)] = (m.group(2) or m.group(1),
-                                      m.group(3),
-                                      os.path.join(ldir, f))
-    return sorted(by_req.values(), key=lambda t: int(t[0]))
+    _read_props(table)              # the version gate
+    return _list_instants(table)
 
 
-def _read_commit_json(table: str, path: str) -> dict:
-    """Parse an instant file's HoodieCommitMetadata JSON; non-JSON
-    bytes (hudi 1.x can serialize timeline metadata as avro) refuse
-    typed at EVERY consumer — snapshot replay, incremental reads,
-    history, txn marks, the streaming source — never a raw decode
-    error."""
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except (UnicodeDecodeError, json.JSONDecodeError) as e:
-        raise NotImplementedError(
-            f"{table}: instant {os.path.basename(path)} carries "
-            "non-JSON commit metadata (avro-serialized timeline "
-            "metadata) — this reader parses JSON "
-            "HoodieCommitMetadata only") from e
+def _is_log(path: str) -> bool:
+    return ".log." in os.path.basename(path)
 
 
-def _file_slices(table: str, as_of: str | None = None) -> dict:
-    """(partition, fileId) → {"base": path|None, "base_instant": ts,
-    "logs": [path, ...]} — the live file slice per group at ``as_of``
-    (None = latest): replay the completed write instants in timeline
-    order; a parquet write starts a FRESH slice (superseding the
-    group's previous base AND its logs — the compaction contract), a
-    log write appends to the current slice, a replacecommit kills the
-    group."""
-    ttype = _table_type(table)
-    if ttype == "MERGE_ON_READ" and _table_version(table) >= 7:
-        # 1.x MoR stays gated (round 13): log-format blocks and the
-        # compaction/completion-time semantics changed in 1.x —
-        # merging 0.x-style would serve wrong snapshots
-        raise NotImplementedError(
-            f"{table}: MERGE_ON_READ under the hudi 1.x timeline — "
-            "this reader serves 1.x COPY_ON_WRITE only; read MoR "
-            "with a 1.x-aware engine")
-    root = _local(table)
-    slices: dict = {}
-    seen_any = False
-    for ts, action, path in completed_instants(table):
-        if as_of is not None and int(ts) > int(as_of):
-            continue
-        if action == "deltacommit" and ttype != "MERGE_ON_READ":
+# one parsed completed instant: ``op`` its operationType, ``extra``
+# its extraMetadata, ``writes`` [((partition, fileId), absolute path)]
+# over its base and log files, ``replaced`` the (partition, fileId)
+# groups a replacecommit retires
+_Commit = namedtuple("_Commit", "ts action op extra writes replaced")
+
+
+class _Timeline:
+    """The timeline fold of one public call: hoodie.properties read
+    once, the completed instants listed once, and each instant's JSON
+    parsed at most once, on first use (``last_txn_version`` walks
+    newest-first and stops early)."""
+
+    def __init__(self, table: str):
+        self.table = table
+        self.props = _read_props(table)
+        self.instants = _list_instants(table)
+        self._commits: dict = {}
+
+    def prop(self, key: str, default: str = "") -> str:
+        if self.props is None:
+            raise FileNotFoundError(
+                f"{self.table}: no .hoodie/hoodie.properties — not a "
+                "Hudi table")
+        return self.props.get(key, default)
+
+    @property
+    def table_type(self) -> str:
+        return self.prop("hoodie.table.type", "COPY_ON_WRITE")
+
+    @property
+    def version(self) -> int:
+        """6 and below = the 0.x layout, 7/8 = the 1.x layout."""
+        tv = (self.props or {}).get("hoodie.table.version", "")
+        return int(tv) if tv.isdigit() else 6
+
+    def recordkey_fields(self) -> list[str]:
+        rk = self.prop("hoodie.table.recordkey.fields")
+        keys = [k.strip() for k in rk.split(",") if k.strip()]
+        if not keys:
+            raise ValueError(
+                f"{self.table}: MERGE_ON_READ merge needs "
+                "hoodie.table.recordkey.fields in hoodie.properties — "
+                "without the record key, log records cannot be "
+                "matched to base rows")
+        return keys
+
+    def upto(self, as_of) -> int:
+        """How many instants complete at or before ``as_of``."""
+        if as_of is None:
+            return len(self.instants)
+        return sum(1 for ts, _, _ in self.instants if int(ts) <= int(as_of))
+
+    def commit(self, pos: int) -> _Commit:
+        c = self._commits.get(pos)
+        if c is None:
+            ts, action, path = self.instants[pos]
+            try:
+                with open(path) as fh:
+                    doc = json.load(fh)
+            except (UnicodeDecodeError, json.JSONDecodeError) as e:
+                # hudi 1.x can serialize timeline metadata as avro
+                raise NotImplementedError(
+                    f"{self.table}: instant {os.path.basename(path)} "
+                    "carries non-JSON commit metadata (avro-serialized "
+                    "timeline metadata) — this reader parses JSON "
+                    "HoodieCommitMetadata only") from e
+            root = _local(self.table)
+            writes = [((part, st["fileId"]),
+                       os.path.abspath(os.path.join(root, st["path"])))
+                      for part, stats in
+                      (doc.get("partitionToWriteStats") or {}).items()
+                      for st in stats]
+            replaced = [(part, fid) for part, fids in
+                        (doc.get("partitionToReplaceFileIds")
+                         or {}).items() for fid in fids] \
+                if action == "replacecommit" else []
+            c = self._commits[pos] = _Commit(
+                ts, action, doc.get("operationType"),
+                doc.get("extraMetadata") or {}, writes, replaced)
+        return c
+
+    def replay(self, slices: dict, start: int = 0, stop: int | None = None):
+        """Apply instants ``[start, stop)`` in order onto ``slices``
+        ((partition, fileId) → {"base": path|None, "base_instant": ts,
+        "logs": [path, ...]}, updated in place; {} with start 0) and
+        yield (position, commit, new base files, log files, live groups
+        whose base it rewrote) after each. A replacecommit retires its
+        groups first; a base file starts a FRESH slice, superseding the
+        group's base AND logs (the compaction contract); a log file
+        appends to the group's current slice."""
+        for pos in range(start, len(self.instants) if stop is None
+                         else stop):
+            c = self.commit(pos)
+            for key in c.replaced:
+                slices.pop(key, None)
+            new, logs, rewritten = [], [], []
+            for key, p in c.writes:
+                if _is_log(p):
+                    logs.append(p)
+                    slices.setdefault(
+                        key, {"base": None, "base_instant": c.ts,
+                              "logs": []})["logs"].append(p)
+                    continue
+                if key in slices:
+                    rewritten.append(key)
+                else:
+                    new.append(p)
+                slices[key] = {"base": p, "base_instant": c.ts, "logs": []}
+            yield pos, c, new, logs, rewritten
+
+    def live(self, as_of: str | None = None) -> dict:
+        """The live file slice per group at ``as_of`` (None = latest)."""
+        ttype = self.table_type
+        if ttype == "MERGE_ON_READ" and self.version >= 7:
+            # 1.x MoR stays gated (round 13): log-format blocks and the
+            # compaction/completion-time semantics changed in 1.x —
+            # merging 0.x-style would serve wrong snapshots
+            raise NotImplementedError(
+                f"{self.table}: MERGE_ON_READ under the hudi 1.x "
+                "timeline — this reader serves 1.x COPY_ON_WRITE only; "
+                "read MoR with a 1.x-aware engine")
+        stop = self.upto(as_of)
+        if ttype != "MERGE_ON_READ" and any(
+                action == "deltacommit"
+                for _, action, _ in self.instants[:stop]):
             raise NotImplementedError(
                 "deltacommit in a COPY_ON_WRITE timeline — a CoW "
                 "table has no log files to merge; the table's "
                 "hoodie.properties and its timeline disagree")
-        seen_any = True
-        commit = _read_commit_json(table, path)
-        if action == "replacecommit":
-            for part, fids in (commit.get("partitionToReplaceFileIds")
-                               or {}).items():
-                for fid in fids:
-                    slices.pop((part, fid), None)
-        for part, stats in (commit.get("partitionToWriteStats")
-                            or {}).items():
-            for st in stats:
-                p = st["path"]
-                p = p if os.path.isabs(p) else os.path.join(root, p)
-                key = (part, st["fileId"])
-                if _is_log(p):
-                    slices.setdefault(
-                        key, {"base": None, "base_instant": ts,
-                              "logs": []})["logs"].append(p)
-                else:
-                    slices[key] = {"base": p, "base_instant": ts,
-                                   "logs": []}
-    if not seen_any:
-        raise ValueError(
-            f"{table}: no completed commit at or before {as_of!r}"
-            if as_of is not None else
-            f"{table}: timeline has no completed commits (empty table)")
-    return slices
+        if not stop:
+            raise ValueError(
+                f"{self.table}: no completed commit at or before "
+                f"{as_of!r}" if as_of is not None else
+                f"{self.table}: timeline has no completed commits "
+                "(empty table)")
+        slices: dict = {}
+        for _ in self.replay(slices, stop=stop):
+            pass
+        return slices
+
+
+def _live_paths(slices: dict) -> list[str]:
+    return [p for s in slices.values()
+            for p in ([s["base"]] if s["base"] else []) + s["logs"]]
 
 
 def hudi_live_files(table: str, as_of: str | None = None) -> list[str]:
     """Every live file path (base parquet AND log files) at ``as_of``
     — the reference set the cleaner must not delete."""
-    out = []
-    for s in _file_slices(table, as_of).values():
-        if s["base"]:
-            out.append(s["base"])
-        out.extend(s["logs"])
-    return sorted(out)
+    return sorted(_live_paths(_Timeline(table).live(as_of)))
 
 
-def _recordkey_fields(table: str) -> list[str]:
-    rk = _table_props(table).get("hoodie.table.recordkey.fields", "")
-    keys = [k.strip() for k in rk.split(",") if k.strip()]
-    if not keys:
+def _newest_base(slices: dict) -> str:
+    """The newest live base file (highest base instant, then path),
+    whose schema is the table's."""
+    bases = [(int(s["base_instant"]), s["base"])
+             for s in slices.values() if s["base"]]
+    if not bases:
+        raise ValueError("no live base file — the table schema is "
+                         "read from the newest one")
+    return max(bases)[1]
+
+
+def _table_schema(spark, slices: dict):
+    """What Spark infers for the newest live base file, through
+    read_parquet's footer memo."""
+    from ..context import _parquet_footer
+    newest = _newest_base(slices)
+    # no schema: not a local regular file — Spark infers, or names the
+    # missing path
+    return _parquet_footer(spark, newest, {})[0] \
+        or _scan_bases(spark, [newest], None).schema
+
+
+def _scan_bases(spark, files, schema):
+    """The one base-file scan: a native parquet scan (pushdown and
+    pruning as on raw parquet) under the table ``schema``, so it runs
+    no inference job and columns a file predates read as null."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*sorted(files))
+
+
+def _log_payload(log_df, schema, meta=()) -> list:
+    """Columns casting a log scan's payload (Avro-typed) to the table
+    ``schema``; a log lacking a table or ``meta`` column refuses."""
+    from pyspark.sql import functions as F
+    missing = [c for c in schema.names + list(meta)
+               if c not in log_df.columns]
+    if missing:
         raise ValueError(
-            f"{table}: MERGE_ON_READ merge needs "
-            "hoodie.table.recordkey.fields in hoodie.properties — "
-            "without the record key, log records cannot be matched "
-            "to base rows")
-    return keys
+            f"log files are missing columns {missing} — every log "
+            "record must carry the full row payload plus "
+            "_hoodie_commit_time")
+    return [F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in schema.fields]
+
+
+def _log_schema(schema) -> dict:
+    """The Avro record of a log file over the table ``schema``: the
+    row payload plus the spec's payload meta fields."""
+    from .avro_source import _spark_to_avro_field
+    return {"type": "record", "name": "row", "fields": (
+        [{"name": f.name, "type": _spark_to_avro_field(f)[0]}
+         for f in schema.fields]
+        + [{"name": "_hoodie_commit_time", "type": ["null", "string"]},
+           {"name": "_hoodie_is_deleted", "type": ["null", "boolean"]}])}
 
 
 def _merge_logs(spark, base_df, log_groups: list[list[str]],
@@ -292,38 +382,24 @@ def _merge_logs(spark, base_df, log_groups: list[list[str]],
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .avro_source import _spark_to_avro_field, spark_read_avro
+    from .avro_source import spark_read_avro
     # spark_read_avro dispatches per file between plain Avro
     # containers (this engine's own logs) and HoodieLogFormat block
     # framing (real hudi-writer logs, sources/hudi_logfmt) — both
     # shapes merge through the same window plan. fallback_schema
     # covers the every-log-is-a-hard-delete-block shape (no payload
     # schema anywhere in the logs): tombstones then type under the
-    # BASE schema via the writer's own field mapping.
-    fallback = {"type": "record", "name": "row", "fields": (
-        [{"name": f.name, "type": _spark_to_avro_field(f)[0]}
-         for f in base_df.schema.fields]
-        + [{"name": "_hoodie_commit_time", "type": ["null", "string"]},
-           {"name": "_hoodie_is_deleted", "type": ["null", "boolean"]}])}
-    log_df = spark_read_avro(spark, None, groups=log_groups,
-                             key_fields=keys, fallback_schema=fallback)
-    data_cols = base_df.columns
-    missing = [c for c in data_cols + ["_hoodie_commit_time"]
-               if c not in log_df.columns]
-    if missing:
-        raise ValueError(
-            f"log files are missing columns {missing} — every log "
-            "record must carry the full row payload plus "
-            "_hoodie_commit_time")
-    base_types = {f.name: f.dataType for f in base_df.schema.fields}
+    # BASE schema via the writer's own log record schema.
+    log_df = spark_read_avro(spark, None, groups=log_groups, key_fields=keys,
+                             fallback_schema=_log_schema(base_df.schema))
     lg = log_df.select(
-        *[F.col(c).cast(base_types[c]).alias(c) for c in data_cols],
+        *_log_payload(log_df, base_df.schema, ["_hoodie_commit_time"]),
         F.col("_hoodie_commit_time").cast("long").alias("__qs_ord"),
         (F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False))
          if "_hoodie_is_deleted" in log_df.columns
          else F.lit(False)).alias("__qs_del"))
     bs = base_df.select(
-        *data_cols,
+        *base_df.columns,
         F.lit(0).cast("long").alias("__qs_ord"),
         F.lit(False).alias("__qs_del"))
     w = Window.partitionBy(*[F.col(k) for k in keys]) \
@@ -384,8 +460,12 @@ def read_hudi_local(spark, table: str, as_of: str | None = None):
     the single-shuffle record-key merge (_merge_logs). Either way the
     timeline replay stays a KB-scale driver step; at 100 TB every
     row-bearing path is distributed."""
-    slices = _file_slices(table, as_of)
-    bases = sorted(s["base"] for s in slices.values() if s["base"])
+    return _read_live(spark, _Timeline(table), as_of)
+
+
+def _read_live(spark, tl: _Timeline, as_of: str | None = None):
+    slices = tl.live(as_of)
+    bases = [s["base"] for s in slices.values() if s["base"]]
     # one group per slice, files in timeline (append) order — the
     # rollback scope the decode needs (sorted stably for determinism)
     log_groups = sorted(s["logs"] for s in slices.values() if s["logs"])
@@ -399,12 +479,12 @@ def read_hudi_local(spark, table: str, as_of: str | None = None):
             "means a foreign layout this reader has not been "
             "validated on")
     if not bases:
-        raise ValueError(f"Hudi table {table} has no live files "
+        raise ValueError(f"Hudi table {tl.table} has no live files "
                          f"(everything replaced) at {as_of!r}")
-    df = spark.read.parquet(*bases)
+    df = _scan_bases(spark, bases, _table_schema(spark, slices))
     if not log_groups:
         return df
-    return _merge_logs(spark, df, log_groups, _recordkey_fields(table))
+    return _merge_logs(spark, df, log_groups, tl.recordkey_fields())
 
 
 # ----------------------------------------------------------------------
@@ -429,11 +509,10 @@ def _write_properties(table: str, table_type: str = "COPY_ON_WRITE",
             fh.write("\n".join(lines) + "\n")
 
 
-def _next_instant(table: str) -> str:
+def _next_instant(tl: _Timeline) -> str:
     """A strictly increasing (NUMERICALLY — the ordering replay uses)
     instant timestamp (Hudi uses yyyyMMddHHmmssSSS)."""
-    prev = [int(ts) for ts, _, _ in completed_instants(table)] \
-        if os.path.isdir(_timeline_dir(table)) else []
+    prev = [int(ts) for ts, _, _ in tl.instants]
     now = int(time.strftime("%Y%m%d%H%M%S") + "000")
     top = max(prev) if prev else 0
     return str(now if now > top else top + 1)
@@ -450,20 +529,32 @@ def commit_hudi_local(table: str, writes: dict, replaces: dict | None = None,
     don't depend on the caller's cwd). Returns the instant
     timestamp."""
     _write_properties(table)
-    if _table_type(table) != "COPY_ON_WRITE":
+    tl = _Timeline(table)
+    if tl.table_type != "COPY_ON_WRITE":
         raise NotImplementedError(
             "committing CoW instants into a MERGE_ON_READ timeline — "
             "use upsert_hudi_mor_local / write_hudi_mor_local")
-    ts = instant or _next_instant(table)
+    ts = instant or _next_instant(tl)
     action = "replacecommit" if replaces else "commit"
-    return _commit_instant(table, writes, replaces, ts, action)
+    return _commit_instant(tl, writes, replaces, ts, action)
 
 
-def _commit_instant(table: str, writes: dict, replaces: dict | None,
+def _refuse_1x_writes(tl: _Timeline, op: str) -> None:
+    """1.x tables are READ-ONLY here: this engine's writers emit 0.x
+    instants in the 0.x location, which a 1.x timeline never replays,
+    and restore/clean do not model its completion-time semantics."""
+    if tl.version >= 7:
+        raise NotImplementedError(
+            f"{tl.table}: {op} on a hoodie.table.version >= 7 (hudi "
+            "1.x) table — this engine writes the 0.x timeline "
+            "layout only; use a 1.x writer")
+
+
+def _commit_instant(tl: _Timeline, writes: dict, replaces: dict | None,
                     ts: str, action: str,
                     operation: str | None = None,
                     extra_meta: dict | None = None) -> str:
-    _refuse_1x_writes(table, "commit")
+    _refuse_1x_writes(tl, "commit")
     doc = {"partitionToWriteStats": {
         part: [{"fileId": fid, "path": os.path.abspath(_local(p)),
                 "numWrites": None, "prevCommit": None}
@@ -484,7 +575,7 @@ def _commit_instant(table: str, writes: dict, replaces: dict | None,
         # readers use it to tell data-changing replacecommits from
         # pure rearrangements
         doc["operationType"] = operation
-    tdir = _timeline_dir(table)
+    tdir = _timeline_dir(tl.table)
     tmp = os.path.join(tdir, f".{ts}.{action}.tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as fh:
         json.dump(doc, fh)
@@ -504,24 +595,20 @@ def restore_hudi_local(table: str, instant: str) -> list:
     longer exist (a clean may have reclaimed a superseded base the
     restore would resurrect). Returns the removed instant
     timestamps."""
-    _refuse_1x_writes(table, "restore")
-    insts = completed_instants(table)
-    if not any(ts == str(instant) for ts, _, _ in insts):
+    tl = _Timeline(table)
+    _refuse_1x_writes(tl, "restore")
+    if not any(ts == str(instant) for ts, _, _ in tl.instants):
         raise ValueError(
             f"instant {instant!r} is not a completed write instant "
             f"of {table}")
     # the restored state must be fully scannable — validate first
-    slices = _file_slices(table, as_of=str(instant))
-    missing = [s["base"] for s in slices.values()
-               if s["base"] and not os.path.exists(s["base"])]
-    missing += [p for s in slices.values() for p in s["logs"]
-                if not os.path.exists(p)]
+    live = _live_paths(tl.live(as_of=str(instant)))
+    missing = [p for p in live if not os.path.exists(p)]
     if missing:
         raise ValueError(
             f"restore to {instant} needs files that no longer exist "
             f"(cleaned?): {missing[:5]}")
-    root = _local(table)
-    abs_root = os.path.abspath(root)
+    abs_root = os.path.abspath(_local(table))
     # paths the RESTORED state references must survive — real hudi
     # writers append blocks to a SHARED log file across deltacommits
     # (rollover only on size), so a post-target instant's writeStats
@@ -532,31 +619,20 @@ def restore_hudi_local(table: str, instant: str) -> list:
     # blocks appended, exactly what real hudi's restore writes, and
     # the slice decode already honors them. A shared container-format
     # log cannot take a command block: refuse BEFORE mutating.
-    keep = {os.path.abspath(s["base"]) for s in slices.values()
-            if s["base"]}
-    keep |= {os.path.abspath(p) for s in slices.values()
-             for p in s["logs"]}
-    to_remove = [(ts, action, path) for ts, action, path in insts
-                 if int(ts) > int(instant)]
-    plans = []                      # (instant ts, [paths to delete])
-    shared: dict = {}               # shared log path -> [instant ts]
-    for ts, action, path in to_remove:
-        commit = _read_commit_json(table, path)
+    keep = set(live)
+    plans = []              # (instant ts, instant file, [paths to delete])
+    shared: dict = {}       # shared log path -> [instant ts]
+    for pos in range(tl.upto(instant), len(tl.instants)):
+        c = tl.commit(pos)
         dels = []
-        for part, stats in (commit.get("partitionToWriteStats")
-                            or {}).items():
-            for st in stats:
-                p = st["path"]
-                p = p if os.path.isabs(p) else os.path.join(root, p)
-                ap = os.path.abspath(p)
-                inside = os.path.commonpath([abs_root, ap]) == abs_root
-                if not inside:
-                    continue
-                if ap in keep:
-                    shared.setdefault(ap, []).append(ts)
-                else:
-                    dels.append(ap)
-        plans.append((ts, path, dels))
+        for _key, ap in c.writes:
+            if os.path.commonpath([abs_root, ap]) != abs_root:
+                continue
+            if ap in keep:
+                shared.setdefault(ap, []).append(c.ts)
+            else:
+                dels.append(ap)
+        plans.append((c.ts, tl.instants[pos][2], dels))
     for ap in shared:
         with open(ap, "rb") as fh:
             framed = fh.read(6) == b"#HUDI#"
@@ -596,13 +672,14 @@ def compact_hudi_local(spark, table: str,
     native commit shape. Time travel still sees the old layout.
     Returns the instant timestamp."""
     import math
-    df = read_hudi_local(spark, table)
+    tl = _Timeline(table)
+    df = _read_live(spark, tl)
     n = df.count()
     parts = max(1, math.ceil(n / target_file_rows))
     # MoR included: a clustering replacecommit folds base+log slices
     # into fresh right-sized base groups (the read above already
     # merged the logs), exactly the spec's clustering service
-    return _write_base_files(df.repartition(parts), table,
+    return _write_base_files(df.repartition(parts), tl,
                              "overwrite", "commit", operation="cluster")
 
 
@@ -616,15 +693,18 @@ def clean_hudi_local(table: str, keep_last: int = 1) -> int:
     deleted."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    _refuse_1x_writes(table, "clean")
-    root = os.path.abspath(_local(table))
-    instants = [ts for ts, _, _ in completed_instants(table)]
-    if not instants:
+    tl = _Timeline(table)
+    _refuse_1x_writes(tl, "clean")
+    if not tl.instants:
         return 0
+    # one replay, collecting the live set after each kept instant
+    first_kept = len(tl.instants) - keep_last
     referenced: set = set()
-    for ts in instants[-keep_last:]:
-        referenced |= {os.path.abspath(p)
-                       for p in hudi_live_files(table, as_of=ts)}
+    slices: dict = {}
+    for pos, *_ in tl.replay(slices):
+        if pos >= first_kept:
+            referenced.update(_live_paths(slices))
+    root = os.path.abspath(_local(table))
     deleted = 0
     for dp, _, fs in os.walk(root):
         if ".hoodie" in dp:
@@ -649,11 +729,12 @@ def write_hudi_local(df, table: str, mode: str = "append",
     extraMetadata map (the streaming sink's idempotence handshake)."""
     assert mode in ("append", "overwrite"), mode
     _write_properties(table)
-    if _table_type(table) != "COPY_ON_WRITE":
+    tl = _Timeline(table)
+    if tl.table_type != "COPY_ON_WRITE":
         raise NotImplementedError(
             "CoW-append into a MERGE_ON_READ table — use "
             "write_hudi_mor_local / upsert_hudi_mor_local")
-    return _write_base_files(df, table, mode, "commit",
+    return _write_base_files(df, tl, mode, "commit",
                              extra_meta=extra_meta)
 
 
@@ -668,12 +749,11 @@ def last_txn_version(table: str, app_id: str):
     missing table maps to None; corrupt commit JSON propagates loudly
     (mapping it to None would re-commit committed batches)."""
     try:
-        instants = completed_instants(table)
+        tl = _Timeline(table)
     except FileNotFoundError:
         return None
-    for _ts, _action, path in reversed(instants):
-        doc = _read_commit_json(table, path)
-        em = doc.get("extraMetadata") or {}
+    for pos in reversed(range(len(tl.instants))):
+        em = tl.commit(pos).extra
         if em.get("qs.txn.appId") == str(app_id) \
                 and em.get("qs.txn.version") is not None:
             return int(em["qs.txn.version"])
@@ -694,7 +774,7 @@ def _stamp_base_files(data_dir: str, ts: str) -> list:
     return items
 
 
-def _write_base_files(df, table: str, mode: str, base_action: str,
+def _write_base_files(df, tl: _Timeline, mode: str, base_action: str,
                       operation: str | None = None,
                       extra_meta: dict | None = None) -> str:
     """Write ``df`` as new parquet file groups committed under
@@ -702,15 +782,14 @@ def _write_base_files(df, table: str, mode: str, base_action: str,
     insert); mode="overwrite" retires every previously live group via
     a replacecommit (insert_overwrite / clustering — legal on both
     table types)."""
-    root = _local(table)
-    ts = _next_instant(table)
-    data_dir = os.path.join(root, f"data-{ts}")
+    ts = _next_instant(tl)
+    data_dir = os.path.join(_local(tl.table), f"data-{ts}")
     df.write.parquet(data_dir)
     items = _stamp_base_files(data_dir, ts)
     replaces = None
     if mode == "overwrite":
         try:
-            live = _file_slices(table, as_of=str(int(ts) - 1))
+            live = tl.live()
         except ValueError:          # empty timeline: nothing to retire
             live = {}
         replaces = {}
@@ -720,7 +799,7 @@ def _write_base_files(df, table: str, mode: str, base_action: str,
     action = "replacecommit" if replaces else base_action
     if operation is None:
         operation = "insert_overwrite" if mode == "overwrite" else "insert"
-    return _commit_instant(table, {"": items}, replaces, ts, action,
+    return _commit_instant(tl, {"": items}, replaces, ts, action,
                            operation=operation, extra_meta=extra_meta)
 
 # ----------------------------------------------------------------------
@@ -738,45 +817,50 @@ def write_hudi_mor_local(df, table: str, recordkey: str,
     the instant timestamp."""
     assert mode in ("append", "overwrite"), mode
     _write_properties(table, "MERGE_ON_READ", recordkey=recordkey)
-    if _table_type(table) != "MERGE_ON_READ":
+    tl = _Timeline(table)
+    if tl.table_type != "MERGE_ON_READ":
         raise ValueError(
-            f"{table} exists as a {_table_type(table)} table — "
+            f"{table} exists as a {tl.table_type} table — "
             "write_hudi_mor_local is for MERGE_ON_READ")
-    have = _recordkey_fields(table)
+    have = tl.recordkey_fields()
     want = [k.strip() for k in recordkey.split(",") if k.strip()]
     if have != want:
         raise ValueError(
             f"{table}: recordkey {want} does not match the table's "
             f"established {have}")
     _check_no_reserved_cols(df.columns)
-    # the unique-key contract is enforced at WRITE time (loud gate —
-    # duplicate or null keys would read fine until the first upsert,
-    # then the merge window silently collapses them): null keys, dups
-    # within the batch, and (for append) overlap with live rows
-    from pyspark.sql import functions as F
-    null_pred = " OR ".join(f"{k} IS NULL" for k in have)
-    if df.where(null_pred).limit(1).count():
-        raise ValueError(f"record key columns {have} contain NULLs")
-    dup = df.groupBy(*have).count().where("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"bulk-load batch is not key-unique (e.g. {dup[0]})")
+    _check_keys(df, have, "bulk-load batch")
+    # an append must not overlap live record keys either
     if mode == "append":
         try:
-            slices = _file_slices(table)
+            slices = tl.live()
         except ValueError:           # empty timeline: first load
             slices = {}
-        bases = sorted(s["base"] for s in slices.values() if s["base"])
+        bases = [s["base"] for s in slices.values() if s["base"]]
         if bases:
-            existing = (df.sparkSession.read.parquet(*bases)
-                        .select(*have))
+            spark = df.sparkSession
+            existing = _scan_bases(spark, bases, _table_schema(
+                spark, slices)).select(*have)
             clash = df.select(*have).join(existing, have, "inner") \
                 .limit(1).count()
             if clash:
                 raise ValueError(
                     "append batch overlaps live record keys — "
                     "upsert_hudi_mor_local is the update path")
-    return _write_base_files(df, table, mode, "deltacommit")
+    return _write_base_files(df, tl, mode, "deltacommit")
+
+
+def _check_keys(df, keys: list, batch: str) -> None:
+    """The unique-key contract, enforced at WRITE time (loud gate —
+    NULL or duplicate keys would read fine until the first upsert,
+    then the merge window silently collapses them)."""
+    null_pred = " OR ".join(f"{k} IS NULL" for k in keys)
+    if df.where(null_pred).limit(1).count():
+        raise ValueError(f"record key columns {keys} contain NULLs")
+    dup = df.groupBy(*keys).count().where("count > 1").limit(1).collect()
+    if dup:
+        raise ValueError(f"{batch} is not key-unique (e.g. {dup[0]}) — "
+                         "precombine duplicates first")
 
 
 def _check_no_reserved_cols(cols) -> None:
@@ -815,19 +899,20 @@ def upsert_hudi_mor_local(spark, table: str, df,
     from pyspark.sql import functions as F
 
     from .avro_source import _spark_to_avro_field
-    if _table_type(table) != "MERGE_ON_READ":
+    tl = _Timeline(table)
+    if tl.table_type != "MERGE_ON_READ":
         raise ValueError(f"{table} is not a MERGE_ON_READ table")
-    keys = _recordkey_fields(table)
+    keys = tl.recordkey_fields()
     root = _local(table)
-    ts = _next_instant(table)
-    slices = _file_slices(table)
+    ts = _next_instant(tl)
+    slices = tl.live()
     bases = {s["base"]: (part_fid, s["base_instant"])
              for part_fid, s in slices.items() if s["base"]}
     if not bases:
         raise ValueError(f"{table}: no base files — bulk-load with "
                          "write_hudi_mor_local first")
 
-    base_df = spark.read.parquet(*sorted(bases))
+    base_df = _scan_bases(spark, bases, _table_schema(spark, slices))
     data_schema = base_df.schema
     data_cols = base_df.columns
     _check_no_reserved_cols(data_cols)
@@ -855,18 +940,7 @@ def upsert_hudi_mor_local(spark, table: str, df,
     # write are three separate jobs — a nondeterministic input could
     # pass the gate then produce same-key log records
     df = df.localCheckpoint()
-
-    null_pred = " OR ".join(f"{k} IS NULL" for k in keys)
-    if df.where(null_pred).limit(1).count():
-        raise ValueError(
-            f"record key columns {keys} contain NULLs — null-keyed "
-            "rows would route to new groups unmatchably and later "
-            "collapse in the merge window")
-    dup = df.groupBy(*keys).count().where("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"input batch is not key-unique (e.g. {dup[0]}) — "
-            "precombine duplicates before upserting")
+    _check_keys(df, keys, "input batch")
 
     # KB-scale (one row per live base file) → broadcast; the scan's
     # _metadata.file_path is a URI — normalize to the plain path the
@@ -882,18 +956,11 @@ def upsert_hudi_mor_local(spark, table: str, df,
              .select(*keys, "__qs_fid", "__qs_bi"))
     matched = df.join(keyed, keys, "inner")
 
-    fields = [(f.name, *_spark_to_avro_field(f))
+    fields = [(f.name, _spark_to_avro_field(f)[1])
               for f in data_schema.fields]
-    avro_schema = {
-        "type": "record", "name": "row",
-        "fields": ([{"name": n, "type": sch} for n, sch, _ in fields]
-                   + [{"name": "_hoodie_commit_time",
-                       "type": ["null", "string"]},
-                      {"name": "_hoodie_is_deleted",
-                       "type": ["null", "boolean"]}])}
     log_dir = os.path.join(root, f"delta-{ts}")
     os.makedirs(log_dir, exist_ok=True)
-    schema_json = _json.dumps(avro_schema)
+    schema_json = _json.dumps(_log_schema(data_schema))
     tombstone = bool(delete)
 
     def _write_logs(batches):
@@ -922,7 +989,7 @@ def upsert_hudi_mor_local(spark, table: str, df,
             n = len(raw["__qs_fid"])
             for i in range(n):
                 rec = {name: record_value(raw[name][i], fn)
-                       for name, _s, fn in fields}
+                       for name, fn in fields}
                 rec["_hoodie_commit_time"] = ts
                 rec["_hoodie_is_deleted"] = tombstone or None
                 key = (raw["__qs_fid"][i], raw["__qs_bi"][i])
@@ -956,7 +1023,7 @@ def upsert_hudi_mor_local(spark, table: str, df,
             return None      # every key unknown: documented no-op
         raise ValueError("upsert matched no rows and inserted none "
                          "(empty input batch?)")
-    return _commit_instant(table, {"": items}, None, ts, "deltacommit",
+    return _commit_instant(tl, {"": items}, None, ts, "deltacommit",
                            operation="delete" if delete else "upsert")
 
 
@@ -964,49 +1031,69 @@ def upsert_hudi_mor_local(spark, table: str, df,
 # incremental reads (round 8) — Hudi's headline consumption mode
 # ----------------------------------------------------------------------
 
+def _writes_rows(c: _Commit, rewritten: list) -> bool:
+    """Whether instant ``c`` wrote rows a change reader must emit: a
+    clustering replacecommit is a pure rearrangement. Refuses the
+    shapes whose changed rows are not reconstructible from this
+    layout (see read_hudi_incremental)."""
+    if c.action == "replacecommit":
+        if c.op == "cluster":
+            return False
+        if c.op != "insert_overwrite":
+            raise NotImplementedError(
+                f"instant {c.ts}: replacecommit without a known "
+                "operationType — cannot tell clustering (no "
+                "changes) from insert_overwrite (all-new rows)")
+    elif rewritten:
+        raise NotImplementedError(
+            f"instant {c.ts}: a base file was rewritten for live "
+            f"group(s) {rewritten[:3]} — its rows mix "
+            "changed and carried-over records, and these files "
+            "carry no _hoodie_commit_time meta column to filter by")
+    return True
+
+
 def read_hudi_incremental(spark, table: str, begin: str,
                           end: str | None = None):
     """Rows written in instants ``[begin, end]`` (inclusive) — the
     incremental-query mode real Hudi pipelines chain on. Output = the
     table's data columns plus ``_change_type`` ('upsert' | 'delete')
-    and ``_commit_instant``.
-
-    Per instant, from the timeline alone:
-    - ``commit``/``deltacommit`` parquet writes of NEW file groups →
-      their rows are upserts;
+    and ``_commit_instant``. Per instant, from the timeline alone:
+    - parquet writes of NEW file groups → their rows, as upserts;
     - deltacommit LOG files → the records themselves (full-row
-      payloads), tombstones (``_hoodie_is_deleted``) as deletes, the
-      rest as upserts — each already stamped with its commit time;
-    - ``replacecommit`` with operationType "cluster" (compaction) →
-      NOTHING (pure rearrangement);
-    - ``replacecommit`` with operationType "insert_overwrite" → the
-      new files' rows as upserts (retired rows are not signaled —
-      matching Hudi's incremental contract, which exposes deletes
-      only via tombstone payloads).
-    Shapes whose changed rows are NOT reconstructible from this
-    layout refuse loudly: a commit re-adding an existing file group
-    (the rewritten base mixes changed and carried-over rows; real
-    Hudi filters them by the ``_hoodie_commit_time`` meta column its
-    files embed and ours don't), and foreign replacecommits without
-    an operationType.
-
-    Driver cost: the usual KB-scale timeline replay; row-bearing
-    steps are native parquet scans and the distributed Avro log scan."""
+      payloads), tombstones (``_hoodie_is_deleted``) as deletes;
+    - a clustering replacecommit → nothing; an insert_overwrite → the
+      new files' rows as upserts (retired rows are not signaled, as
+      in Hudi's incremental contract).
+    A commit re-adding a live file group (its base mixes changed and
+    carried-over rows, and these files carry no _hoodie_commit_time
+    to filter by) and a replacecommit without an operationType refuse
+    (``_writes_rows``). Row-bearing steps are native parquet scans
+    under the table schema at ``end`` and the distributed Avro log
+    scan, cast to that schema."""
     from pyspark.sql import functions as F
 
+    from .avro_source import spark_read_avro
     from .changes import ChangeFeed
     from .delta_local import _plain_path_col
 
-    instants = completed_instants(table)
-    if not instants:
+    tl = _Timeline(table)
+    if not tl.instants:
         raise ValueError(f"{table}: empty timeline")
     if end is None:
-        end = instants[-1][0]
+        end = tl.instants[-1][0]
     if int(begin) > int(end):
         raise ValueError(f"begin {begin} is newer than end {end} — a "
                          "reversed range would silently return no "
                          "changes")
-    live_groups: set = set()
+    slices: dict = {}
+    changed = []                     # (instant, new base files, logs)
+    for _pos, c, new, logs, rewritten in tl.replay(slices,
+                                                   stop=tl.upto(end)):
+        if int(c.ts) >= int(begin) and _writes_rows(c, rewritten) \
+                and (new or logs):
+            changed.append((c.ts, new, logs))
+    schema = _table_schema(spark, slices)
     feed = ChangeFeed(spark, "_commit_instant", "string",
                       insert_type="upsert")
 
@@ -1014,78 +1101,28 @@ def read_hudi_incremental(spark, table: str, begin: str,
     # one run (changes.py); no timeline state changes the base scan,
     # so the run stays open across log-bearing instants
     def _bases(files, keep_path):
-        df = spark.read.parquet(*sorted(files))
+        df = _scan_bases(spark, files, schema)
         return df.withColumn("__qs_bf__", _plain_path_col()) \
             if keep_path else df
 
     bases = feed.run(_bases, "__qs_bf__", os.path.abspath)
-
-    for ts, action, path in instants:
-        if int(ts) > int(end):
-            break
-        in_range = int(ts) >= int(begin)
-        commit = _read_commit_json(table, path)
-        op = commit.get("operationType")
-        root = _local(table)
-        new_bases, logs = [], []
-        touched_existing = []
-        for part, stats in (commit.get("partitionToWriteStats")
-                            or {}).items():
-            for st in stats:
-                p = st["path"]
-                p = p if os.path.isabs(p) else os.path.join(root, p)
-                key = (part, st["fileId"])
-                if _is_log(p):
-                    logs.append(p)
-                elif key in live_groups:
-                    touched_existing.append(key)
-                else:
-                    new_bases.append(p)
-                live_groups.add(key)
-        if action == "replacecommit":
-            for part, fids in (commit.get("partitionToReplaceFileIds")
-                               or {}).items():
-                live_groups -= {(part, f) for f in fids}
-            live_groups |= set(touched_existing)
-        if not in_range:
+    for ts, new, logs in changed:
+        if not logs:
+            bases.add(ts, new)
             continue
-        if action == "replacecommit":
-            if op == "cluster":
-                continue                 # pure rearrangement
-            if op != "insert_overwrite":
-                raise NotImplementedError(
-                    f"instant {ts}: replacecommit without a known "
-                    "operationType — cannot tell clustering (no "
-                    "changes) from insert_overwrite (all-new rows)")
-        elif touched_existing:
-            raise NotImplementedError(
-                f"instant {ts}: a base file was rewritten for live "
-                f"group(s) {touched_existing[:3]} — its rows mix "
-                "changed and carried-over records, and these files "
-                "carry no _hoodie_commit_time meta column to filter "
-                "by")
-        if new_bases and not logs:
-            bases.add(ts, new_bases)
-            continue
-        if new_bases:
-            feed.add(spark.read.parquet(*sorted(new_bases)), "upsert", ts)
-        if logs:
-            from .avro_source import spark_read_avro
-            # key_fields let delete-block tombstones decode into
-            # _change_type='delete' rows (key columns + commit time,
-            # other columns null — deletes are signaled by key)
-            lg = spark_read_avro(spark, sorted(logs),
-                                 key_fields=_recordkey_fields(table))
-            data_cols = [c for c in lg.columns
-                         if not c.startswith("_hoodie_")]
-            ctype = F.when(
-                F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False)),
-                F.lit("delete")).otherwise(F.lit("upsert")) \
-                if "_hoodie_is_deleted" in lg.columns else F.lit("upsert")
-            # one select: the tombstone flag must evaluate BEFORE the
-            # meta columns drop
-            feed.add(lg.select(*data_cols, ctype.alias("_change_type")),
-                     None, ts)
-    # align log-record types to the base schema where both appear
-    return feed.result(lambda: read_hudi_local(spark, table, as_of=end),
-                       align=True)
+        if new:
+            feed.add(_scan_bases(spark, new, schema), "upsert", ts)
+        # key_fields let delete-block tombstones decode into
+        # _change_type='delete' rows (key columns + commit time,
+        # other columns null — deletes are signaled by key)
+        lg = spark_read_avro(spark, sorted(logs),
+                             key_fields=tl.recordkey_fields())
+        ctype = F.when(
+            F.coalesce(F.col("_hoodie_is_deleted"), F.lit(False)),
+            F.lit("delete")).otherwise(F.lit("upsert")) \
+            if "_hoodie_is_deleted" in lg.columns else F.lit("upsert")
+        # one select: the tombstone flag must evaluate BEFORE the
+        # meta columns drop
+        feed.add(lg.select(*_log_payload(lg, schema),
+                           ctype.alias("_change_type")), None, ts)
+    return feed.result(lambda: spark.createDataFrame([], schema))

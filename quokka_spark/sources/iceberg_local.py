@@ -1043,7 +1043,9 @@ def _arrow_type_ok(ityp: str, at) -> bool:
     if ityp == "int":
         return pa.types.is_integer(at) and at.bit_width <= 32
     if ityp == "long":
-        return pa.types.is_int64(at)
+        # int -> long is an allowed promotion; Spark reads INT32 (and
+        # the narrower signed ints stored as INT32) under bigint
+        return pa.types.is_signed_integer(at)
     if ityp == "float":
         return pa.types.is_float32(at)
     if ityp == "double":

@@ -22,7 +22,12 @@ Append-only contract per instant shape:
 - a base file rewritten for a live group (no meta columns to filter
   by) → refuse always, like read_hudi_incremental.
 
-``starting_instant=<ts>`` begins the stream AT that instant."""
+``starting_instant=<ts>`` begins the stream AT that instant.
+
+The timeline walk is hudi_local's ``_Timeline.replay`` (the
+classification read_hudi_incremental uses), its live slices carried
+to the next trigger. The columns are the batch reader's table schema
+(the newest live base file's); older bases null-fill newer columns."""
 
 from __future__ import annotations
 
@@ -53,10 +58,10 @@ class HudiStreamReader(DataSourceStreamReader):
         instants = completed_instants(table)
         if not instants:
             raise ValueError(f"{table}: empty timeline")
-        # pre-batch live set carried across triggers (full timeline
+        # pre-batch live slices carried across triggers (full timeline
         # replay once per (re)start, matching the Delta sibling)
         self._live_at: int | None = None
-        self._live: set = set()
+        self._live: dict = {}
         start = options.get("starting_instant")
         if start is not None:
             ts_list = [ts for ts, _, _ in instants]
@@ -100,93 +105,51 @@ class HudiStreamReader(DataSourceStreamReader):
         return pos
 
     def partitions(self, start: dict, end: dict):
-        from quokka_spark.sources.hudi_local import (
-            _is_log, _read_commit_json, completed_instants)
-        instants = completed_instants(self.table)
-        p0 = self._check_offset(start, instants)
-        p1 = self._check_offset(end, instants)
+        from quokka_spark.sources.hudi_local import _Timeline, _writes_rows
+        tl = _Timeline(self.table)
+        p0 = self._check_offset(start, tl.instants)
+        p1 = self._check_offset(end, tl.instants)
         if p1 <= p0:
             return []
-        if p1 >= len(instants):
+        if p1 >= len(tl.instants):
             raise ValueError(
                 f"offset pos {p1} is beyond the timeline "
-                f"({len(instants)} instants) — timeline rewritten?")
-        # groups live BEFORE the batch (to spot rewrites of live
-        # bases), carried forward so the replay runs once per
-        # (re)start, not per trigger
-        if self._live_at == p0:
-            live = set(self._live)
-        else:
-            live = set()
-            for ts, action, path in instants[:p0 + 1]:
-                commit = _read_commit_json(self.table, path)
-                if action == "replacecommit":
-                    for part, fids in (
-                            commit.get("partitionToReplaceFileIds")
-                            or {}).items():
-                        live -= {(part, f) for f in fids}
-                for part, stats in (commit.get("partitionToWriteStats")
-                                    or {}).items():
-                    live |= {(part, st["fileId"]) for st in stats}
+                f"({len(tl.instants)} instants) — timeline rewritten?")
+        # the slices live BEFORE the batch (to spot rewrites of live
+        # bases) are carried forward, so the replay runs once per
+        # (re)start, not per trigger; a refusal mid-batch drops them
+        carried = self._live_at == p0
+        slices = self._live if carried else {}
+        self._live_at = None
         parts = []
-        for pos in range(p0 + 1, p1 + 1):
-            ts, action, path = instants[pos]
-            commit = _read_commit_json(self.table, path)
-            op = commit.get("operationType")
-            bases, logs, touched = [], [], []
-            for part, stats in (commit.get("partitionToWriteStats")
-                                or {}).items():
-                for st in stats:
-                    p = st["path"]
-                    p = p if os.path.isabs(p) \
-                        else os.path.join(self.table, p)
-                    key = (part, st["fileId"])
-                    if _is_log(p):
-                        logs.append(p)
-                    elif key in live:
-                        touched.append(key)
-                    else:
-                        bases.append(p)
-                    live.add(key)
-            if action == "replacecommit":
-                for part, fids in (commit.get("partitionToReplaceFileIds")
-                                   or {}).items():
-                    live -= {(part, f) for f in fids}
-                live |= set(touched)
-                if op == "cluster":
-                    continue
-                if op != "insert_overwrite":
-                    raise ValueError(
-                        f"instant {ts}: replacecommit without a known "
-                        "operationType — cannot tell clustering from "
-                        "insert_overwrite")
-                if not self.ignore_changes:
-                    raise ValueError(
-                        f"instant {ts}: insert_overwrite — pass "
-                        "ignore_changes=true to stream its new files "
-                        "(surviving rows WILL be re-transmitted)")
-            elif touched:
+        for pos, c, bases, logs, rewritten in tl.replay(
+                slices, p0 + 1 if carried else 0, p1 + 1):
+            if pos <= p0 or not _writes_rows(c, rewritten):
+                continue
+            if c.action == "replacecommit" and not self.ignore_changes:
                 raise ValueError(
-                    f"instant {ts}: a base file was rewritten for "
-                    f"live group(s) {touched[:3]} — changed rows are "
-                    "not reconstructible without meta columns")
-            if op == "delete" and not (self.ignore_deletes
-                                        or self.ignore_changes):
+                    f"instant {c.ts}: insert_overwrite — pass "
+                    "ignore_changes=true to stream its new files "
+                    "(surviving rows WILL be re-transmitted)")
+            if c.op == "delete" and not (self.ignore_deletes
+                                         or self.ignore_changes):
                 raise ValueError(
-                    f"instant {ts}: a delete deltacommit — a "
+                    f"instant {c.ts}: a delete deltacommit — a "
                     "streaming source is append-only; pass "
                     "ignore_deletes=true to skip the tombstones")
-            for p in sorted(bases):
-                parts.append(InputPartition(("base", p)))
-            for p in sorted(logs):
-                parts.append(InputPartition(("log", p)))
-        self._live_at, self._live = p1, live
+            # framed logs decode DELETE-block tombstones by record key
+            keys = tl.recordkey_fields() if logs else None
+            parts += [InputPartition(("base", p, None))
+                      for p in sorted(bases)]
+            parts += [InputPartition(("log", p, keys))
+                      for p in sorted(logs)]
+        self._live_at, self._live = p1, slices
         return parts
 
     def read(self, partition):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
-        kind, path = partition.value
+        kind, path, keys = partition.value
         if kind == "base":
             import pyarrow.parquet as pq
             have = set(pq.read_schema(path).names)
@@ -217,12 +180,10 @@ class HudiStreamReader(DataSourceStreamReader):
             # table's record-key fields let DELETE-block tombstones
             # decode — they hit the same refuse-or-skip gate as
             # soft-delete payload rows below
-            from quokka_spark.sources.hudi_local import \
-                _recordkey_fields
             from quokka_spark.sources.hudi_logfmt import \
                 read_log_records_bytes
             lsch, records = read_log_records_bytes(
-                data, name=path, key_fields=_recordkey_fields(self.table))
+                data, name=path, key_fields=keys)
             # lsch is None only when the file carries delete blocks
             # and no data block — nothing but tombstones to validate
             declared = ({f["name"] for f in lsch["fields"]}
@@ -288,22 +249,16 @@ class HudiStreamDataSource(DataSource):
         return "hudi_local_stream"
 
     def schema(self):
-        from quokka_spark.sources.hudi_local import _file_slices
-        table = _table_of(self.options)
-        slices = _file_slices(table)
-        bases = [(s["base_instant"], s["base"])
-                 for s in slices.values() if s["base"]]
-        if not bases:
-            raise ValueError(
-                f"{table}: no base files — the streaming source "
-                "derives its schema from them")
-        # the NEWEST base file is authoritative (base names start
-        # with a random fileId, so a lexicographic pick would be
-        # arbitrary when bulk loads drifted); older files null-fill
+        """The newest live base file's schema (the batch reader's rule),
+        read with pyarrow: Spark calls this in a Python worker, which
+        has no session and no footer memo. read_hudi_stream passes the
+        batch schema instead, and Spark then skips this call."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
-        newest = max(bases, key=lambda t: (int(t[0]), t[1]))[1]
-        return from_arrow_schema(pq.read_schema(newest))
+
+        from quokka_spark.sources.hudi_local import _newest_base, _Timeline
+        tl = _Timeline(_table_of(self.options))
+        return from_arrow_schema(pq.read_schema(_newest_base(tl.live())))
 
     def streamReader(self, schema):
         return HudiStreamReader(_table_of(self.options), schema,

@@ -1422,3 +1422,131 @@ def test_hudi_1x_cow_timeline(spark, qc, tmp_path):
         fh.write(b"Obj\x01\x02\x16avro.schema")
     with pytest.raises(NotImplementedError, match="non-JSON"):
         qc.read_hudi(v8).df.collect()
+
+
+def test_hudi_read_schema_is_the_newest_base(spark, qc, tmp_path):
+    """The table schema is the newest live base file's: a column a
+    later append added reads back (null for the older rows) on a CoW
+    table and on a log-free MoR table, with the same columns as the
+    stream source. A MoR log written before the column was added
+    refuses loudly (the merge's missing-column check) instead of
+    serving the table without the column."""
+    from quokka_spark.sources.hudi_local import (upsert_hudi_mor_local,
+                                                 write_hudi_mor_local)
+    old = spark.range(0, 3).coalesce(1)
+    new = spark.range(10, 12).selectExpr(
+        "id", "cast(id as double) as v").coalesce(1)
+    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
+    write_hudi_local(old, cow)
+    write_hudi_local(new, cow, mode="append")
+    write_hudi_mor_local(old, mor, recordkey="id")
+    write_hudi_mor_local(new, mor, recordkey="id", mode="append")
+    for tbl in (cow, mor):
+        df = qc.read_hudi(tbl).df
+        assert df.columns == ["id", "v"]
+        assert sorted(tuple(r) for r in df.collect()) == \
+            [(0, None), (1, None), (2, None), (10, 10.0), (11, 11.0)]
+        assert qc.read_hudi_stream(tbl).columns == df.columns
+    logged = str(tmp_path / "logged")
+    write_hudi_mor_local(old, logged, recordkey="id")
+    upsert_hudi_mor_local(spark, logged,
+                          spark.createDataFrame([(1,)], "id long"))
+    write_hudi_mor_local(new, logged, recordkey="id", mode="append")
+    with pytest.raises(ValueError, match=r"missing columns \['v'\]"):
+        qc.read_hudi(logged)
+
+
+def test_hudi_calls_fold_the_timeline_once(spark, qc, tmp_path,
+                                          monkeypatch):
+    """read_hudi_local, read_hudi_incremental and
+    upsert_hudi_mor_local each read hoodie.properties once, list the
+    timeline once and parse each instant's JSON at most once. A second
+    snapshot read of an unchanged table builds with no Spark job: the
+    base scan's schema comes from the footer memo."""
+    import builtins
+    import re
+
+    from conftest import jobs_run_by
+    from quokka_spark.sources import hudi_local as hl
+    tbl = _mor_table(spark, tmp_path, n=6)
+    sch = "id long, v double, tag string"
+    hl.upsert_hudi_mor_local(spark, tbl, spark.createDataFrame(
+        [(3, 30.5, "U"), (30, 3.0, "N")], sch))
+    instant = re.compile(r"\d+(_\d+)?\.(commit|deltacommit|replacecommit)")
+    seen: dict = {}
+    real_open, real_listdir = builtins.open, os.listdir
+
+    def counted_open(f, mode="r", *a, **kw):
+        name = os.path.basename(str(f))
+        if "r" in mode and (name == "hoodie.properties"
+                            or instant.fullmatch(name)):
+            seen[name] = seen.get(name, 0) + 1
+        return real_open(f, mode, *a, **kw)
+
+    def counted_listdir(path="."):
+        if os.path.basename(str(path).rstrip("/")) in (".hoodie",
+                                                       "timeline"):
+            seen["listdir"] = seen.get("listdir", 0) + 1
+        return real_listdir(path)
+
+    last = hl.completed_instants(tbl)[-1][0]
+    calls = [("read", lambda: hl.read_hudi_local(spark, tbl)),
+             ("incremental",
+              lambda: hl.read_hudi_incremental(spark, tbl, last)),
+             ("upsert", lambda: hl.upsert_hudi_mor_local(
+                 spark, tbl, spark.createDataFrame([(4, 4.5, "U")], sch)))]
+    monkeypatch.setattr(builtins, "open", counted_open)
+    monkeypatch.setattr(os, "listdir", counted_listdir)
+    for name, call in calls:
+        seen.clear()
+        call()
+        assert seen.pop("hoodie.properties", 0) == 1, name
+        assert seen.pop("listdir", 0) == 1, name
+        assert seen and max(seen.values()) == 1, (name, seen)
+    monkeypatch.undo()
+    hl.read_hudi_local(spark, tbl)
+    df, jobs = jobs_run_by(spark, lambda: hl.read_hudi_local(spark, tbl))
+    assert jobs == []
+    got = {r["id"]: r["v"] for r in df.collect()}
+    assert len(got) == 7 and got[3] == 30.5 and got[4] == 4.5
+
+
+def test_one_timeline_fold_one_base_scan():
+    """Only the fold (_Timeline) parses instant JSON and reads its
+    write stats (the writer's _commit_instant builds them), Spark
+    reads parquet only in _scan_bases, and the stream source and
+    QuokkaContext walk no timeline of their own: the stream replays
+    through _Timeline.replay. A second walk or scan shows up here."""
+    import ast
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "quokka_spark"
+    stats, parses, scans, replays = set(), set(), set(), set()
+    for rel in ("sources/hudi_local.py", "streaming/hudi_source.py",
+                "context.py"):
+        for top in ast.parse((pkg / rel).read_text()).body:
+            where = (rel, getattr(top, "name", None))
+            for node in ast.walk(top):
+                if isinstance(node, ast.Constant) and node.value in (
+                        "partitionToWriteStats",
+                        "partitionToReplaceFileIds"):
+                    stats.add(where)
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                if isinstance(fn, ast.Attribute) and fn.attr == "load" \
+                        and getattr(fn.value, "id", None) == "json":
+                    parses.add(where)
+                if isinstance(fn, ast.Attribute) and fn.attr == "replay":
+                    replays.add(rel)
+                # every .parquet(...) call that is not a DataFrame write
+                if isinstance(fn, ast.Attribute) and fn.attr == "parquet" \
+                        and not any(isinstance(n, ast.Attribute)
+                                    and n.attr == "write"
+                                    for n in ast.walk(fn.value)):
+                    scans.add(where)
+    assert stats == {("sources/hudi_local.py", "_Timeline"),
+                     ("sources/hudi_local.py", "_commit_instant")}
+    assert parses == {("sources/hudi_local.py", "_Timeline")}
+    assert {s for s in scans if s[0] != "context.py"} == \
+        {("sources/hudi_local.py", "_scan_bases")}
+    assert "streaming/hudi_source.py" in replays

@@ -1807,6 +1807,24 @@ def test_iceberg_schema_evolution_added_column(qc, spark, tmp_path):
     assert got.columns == ["id", "score"]
     rows = {r["id"]: r["score"] for r in got.collect()}
     assert rows == {1: None, 2: None, 3: 1.5}
+    # a file storing INT32 under a declared long (the spec's int ->
+    # long promotion) reads under the table schema too: no inference
+    # job while building, and the column is bigint
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from conftest import jobs_run_by
+    from quokka_spark.sources.iceberg_local import read_iceberg_local
+    c = str(tmp_path / "c.parquet")
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32())}), c)
+    promoted = str(tmp_path / "promoted")
+    create_local_iceberg_table(promoted, [[c]],
+                               schema_fields=[(1, "k", "long")])
+    got, jobs = jobs_run_by(spark,
+                            lambda: read_iceberg_local(spark, promoted))
+    assert jobs == []
+    assert got.schema.simpleString() == "struct<k:bigint>"
+    assert sorted(r["k"] for r in got.collect()) == [1, 2]
 
 
 def test_iceberg_partial_fixture_schema_keeps_inference(qc, spark,
