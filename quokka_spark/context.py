@@ -400,14 +400,9 @@ class QuokkaContext:
         invisible; delete deltacommits need ignore_deletes;
         insert_overwrite needs ignore_changes. See
         streaming/hudi_source.py."""
-        from .sources.hudi_local import _table_schema, _Timeline
         from .streaming.hudi_source import HudiStreamDataSource
         self.spark.dataSource.register(HudiStreamDataSource)
-        # the batch reader's table schema, from the driver's footer
-        # memo (the source's own schema() runs in a Python worker)
-        schema = _table_schema(self.spark, _Timeline(table).live())
         r = (self.spark.readStream.format("hudi_local_stream")
-             .schema(schema)
              .option("ignore_deletes", str(ignore_deletes).lower())
              .option("ignore_changes", str(ignore_changes).lower()))
         if starting_instant is not None:

@@ -19,8 +19,9 @@ path) of every file written; ``<instant>.replacecommit`` additionally
 lists ``partitionToReplaceFileIds`` — groups whose previous slices
 are dead (clustering / insert_overwrite); ``<instant>.deltacommit``
 is the MoR write action (new base files for inserts, log files for
-updates/deletes). Reading never lists data directories: the
-timeline IS the source of truth, as the log is in delta_local.
+updates/deletes). Reading therefore never lists data directories:
+the timeline IS the source of truth, exactly like the Delta log
+replay in delta_local.
 
 MoR read = one distributed union-merge, Spark-first: base parquet
 rows (version 0) union the log records (version = commit instant,
@@ -37,8 +38,10 @@ Scope (documented, test-enforced):
 - log files decode per file in EITHER shape, dispatched on the
   leading bytes: plain Avro object container files (this module's
   own MoR writer) or REAL HoodieLogFormat block framing (#HUDI#
-  magic, version-1 blocks — sources/hudi_logfmt.py); unsupported
-  blocks refuse typed rather than risking a silent misread.
+  magic, version-1 blocks — sources/hudi_logfmt.py, round 9).
+  Framed rollback command blocks apply within their file; delete/
+  hfile/parquet/cdc blocks and cross-file rollbacks refuse with
+  typed errors rather than risking a silent misread.
 - completed instants only (``*.commit`` / ``*.replacecommit`` /
   ``*.deltacommit``); inflight/requested markers are ignored per the
   timeline contract.
@@ -118,14 +121,19 @@ def _list_instants(table: str) -> list:
     if not os.path.isdir(tdir):
         raise FileNotFoundError(
             f"{table}: no .hoodie/ directory — not a Hudi table")
-    # hudi 1.x (table version 7/8): the ACTIVE timeline lives under
-    # .hoodie/timeline/ as <requested>_<completion>.<action>, and 1.x
-    # visibility is COMPLETION-time-based, so 1.x entries are KEYED by
-    # their completion time — replay order, as_of, incremental ranges
-    # and history then follow the 1.x contract with no special cases.
-    # The 0.x pattern is accepted inside timeline/ too (bridge tables);
-    # an instant in BOTH layouts (mid-upgrade copy) counts once, the
-    # timeline/ copy winning — double-replay would double-count rows.
+    # hudi 1.x (table version 7/8, round 13): the ACTIVE timeline
+    # moved under .hoodie/timeline/ and completed instants carry the
+    # COMPLETION time in the name — <requested>_<completion>.<action>.
+    # 1.x visibility semantics are COMPLETION-time-based (an
+    # instant's effects become readable when it COMPLETES, and
+    # time-travel / incremental boundaries compare completion
+    # times), so 1.x entries are KEYED by their completion time —
+    # every consumer (replay order, as_of, incremental ranges,
+    # history) then follows the 1.x contract with no special cases.
+    # The 0.x pattern is accepted inside timeline/ too (bridge
+    # tables); an instant present in BOTH layouts (mid-upgrade copy)
+    # counts once, the timeline/ copy winning — double-replay would
+    # double-count incremental rows.
     by_req: dict = {}
     ldir = os.path.join(tdir, "timeline")
     for d in [tdir] + ([ldir] if os.path.isdir(ldir) else []):
@@ -266,10 +274,20 @@ class _Timeline:
                 slices[key] = {"base": p, "base_instant": c.ts, "logs": []}
             yield pos, c, new, logs, rewritten
 
+    def refuse_cow_logs(self, stop: int | None = None) -> None:
+        """Refuse a deltacommit among the first ``stop`` instants of a
+        COPY_ON_WRITE table (and a table without hoodie.properties)."""
+        if self.table_type != "MERGE_ON_READ" and any(
+                action == "deltacommit"
+                for _, action, _ in self.instants[:stop]):
+            raise NotImplementedError(
+                "deltacommit in a COPY_ON_WRITE timeline — a CoW "
+                "table has no log files to merge; the table's "
+                "hoodie.properties and its timeline disagree")
+
     def live(self, as_of: str | None = None) -> dict:
         """The live file slice per group at ``as_of`` (None = latest)."""
-        ttype = self.table_type
-        if ttype == "MERGE_ON_READ" and self.version >= 7:
+        if self.table_type == "MERGE_ON_READ" and self.version >= 7:
             # 1.x MoR stays gated (round 13): log-format blocks and the
             # compaction/completion-time semantics changed in 1.x —
             # merging 0.x-style would serve wrong snapshots
@@ -278,13 +296,7 @@ class _Timeline:
                 "timeline — this reader serves 1.x COPY_ON_WRITE only; "
                 "read MoR with a 1.x-aware engine")
         stop = self.upto(as_of)
-        if ttype != "MERGE_ON_READ" and any(
-                action == "deltacommit"
-                for _, action, _ in self.instants[:stop]):
-            raise NotImplementedError(
-                "deltacommit in a COPY_ON_WRITE timeline — a CoW "
-                "table has no log files to merge; the table's "
-                "hoodie.properties and its timeline disagree")
+        self.refuse_cow_logs(stop)
         if not stop:
             raise ValueError(
                 f"{self.table}: no completed commit at or before "
@@ -540,9 +552,12 @@ def commit_hudi_local(table: str, writes: dict, replaces: dict | None = None,
 
 
 def _refuse_1x_writes(tl: _Timeline, op: str) -> None:
-    """1.x tables are READ-ONLY here: this engine's writers emit 0.x
-    instants in the 0.x location, which a 1.x timeline never replays,
-    and restore/clean do not model its completion-time semantics."""
+    """1.x tables are READ-ONLY here (round 13 — CoW snapshot +
+    time-travel + incremental reads): this engine's writers emit
+    0.x-shaped instants in the 0.x location, which a 1.x timeline
+    would never replay — refuse typed instead of committing
+    invisible instants (or truncating/cleaning a layout whose
+    completion-time semantics they do not model)."""
     if tl.version >= 7:
         raise NotImplementedError(
             f"{tl.table}: {op} on a hoodie.table.version >= 7 (hudi "
@@ -697,6 +712,8 @@ def clean_hudi_local(table: str, keep_last: int = 1) -> int:
     _refuse_1x_writes(tl, "clean")
     if not tl.instants:
         return 0
+    # an inconsistent table refuses before anything is deleted
+    tl.refuse_cow_logs()
     # one replay, collecting the live set after each kept instant
     first_kept = len(tl.instants) - keep_last
     referenced: set = set()
@@ -1058,19 +1075,30 @@ def read_hudi_incremental(spark, table: str, begin: str,
     """Rows written in instants ``[begin, end]`` (inclusive) — the
     incremental-query mode real Hudi pipelines chain on. Output = the
     table's data columns plus ``_change_type`` ('upsert' | 'delete')
-    and ``_commit_instant``. Per instant, from the timeline alone:
-    - parquet writes of NEW file groups → their rows, as upserts;
+    and ``_commit_instant``.
+
+    Per instant, from the timeline alone:
+    - ``commit``/``deltacommit`` parquet writes of NEW file groups →
+      their rows are upserts;
     - deltacommit LOG files → the records themselves (full-row
-      payloads), tombstones (``_hoodie_is_deleted``) as deletes;
-    - a clustering replacecommit → nothing; an insert_overwrite → the
-      new files' rows as upserts (retired rows are not signaled, as
-      in Hudi's incremental contract).
-    A commit re-adding a live file group (its base mixes changed and
-    carried-over rows, and these files carry no _hoodie_commit_time
-    to filter by) and a replacecommit without an operationType refuse
-    (``_writes_rows``). Row-bearing steps are native parquet scans
-    under the table schema at ``end`` and the distributed Avro log
-    scan, cast to that schema."""
+      payloads), tombstones (``_hoodie_is_deleted``) as deletes, the
+      rest as upserts — each already stamped with its commit time;
+    - ``replacecommit`` with operationType "cluster" (compaction) →
+      NOTHING (pure rearrangement);
+    - ``replacecommit`` with operationType "insert_overwrite" → the
+      new files' rows as upserts (retired rows are not signaled —
+      matching Hudi's incremental contract, which exposes deletes
+      only via tombstone payloads).
+    Shapes whose changed rows are NOT reconstructible from this
+    layout refuse loudly: a commit re-adding an existing file group
+    (the rewritten base mixes changed and carried-over rows; real
+    Hudi filters them by the ``_hoodie_commit_time`` meta column its
+    files embed and ours don't), and foreign replacecommits without
+    an operationType.
+
+    Driver cost: the usual KB-scale timeline replay; row-bearing
+    steps are native parquet scans under the table schema and the
+    distributed Avro log scan, cast to that schema."""
     from pyspark.sql import functions as F
 
     from .avro_source import spark_read_avro

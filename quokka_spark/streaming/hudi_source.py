@@ -26,8 +26,8 @@ Append-only contract per instant shape:
 
 The timeline walk is hudi_local's ``_Timeline.replay`` (the
 classification read_hudi_incremental uses), its live slices carried
-to the next trigger. The columns are the batch reader's table schema
-(the newest live base file's); older bases null-fill newer columns."""
+to the next trigger. The columns follow the batch reader's rule (the
+newest live base file's schema); older bases null-fill newer columns."""
 
 from __future__ import annotations
 
@@ -251,8 +251,7 @@ class HudiStreamDataSource(DataSource):
     def schema(self):
         """The newest live base file's schema (the batch reader's rule),
         read with pyarrow: Spark calls this in a Python worker, which
-        has no session and no footer memo. read_hudi_stream passes the
-        batch schema instead, and Spark then skips this call."""
+        has no session and no footer memo."""
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 

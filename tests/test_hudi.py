@@ -9,7 +9,8 @@ import pytest
 
 from conftest import SF_SMOKE
 
-from quokka_spark.sources.hudi_local import (commit_hudi_local,
+from quokka_spark.sources.hudi_local import (clean_hudi_local,
+                                             commit_hudi_local,
                                              hudi_live_files,
                                              write_hudi_local)
 
@@ -131,6 +132,16 @@ def test_hudi_mor_edges_gated(spark, qc, tmp_path):
         fh.write("hoodie.table.type=COPY_ON_WRITE\n")
     with pytest.raises(NotImplementedError, match="deltacommit"):
         qc.read_hudi(tbl)
+    # so is a clean of that table, or of one without properties,
+    # before it deletes anything
+    stray = os.path.join(tbl, "stray.parquet")
+    pd.DataFrame({"id": [2]}).to_parquet(stray)
+    with pytest.raises(NotImplementedError, match="deltacommit"):
+        clean_hudi_local(tbl)
+    os.unlink(props)
+    with pytest.raises(FileNotFoundError, match="not a Hudi table"):
+        clean_hudi_local(tbl)
+    assert os.path.exists(stray)
 
 
 def test_hudi_not_a_table_is_clear_error(qc, tmp_path):
