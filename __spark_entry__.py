@@ -8390,7 +8390,7 @@ FROM live GROUP BY g
 def src_delta_rt_cm(spark, sf_dir):
     """Delta ROW TRACKING x ID-mode COLUMN MAPPING composed (round
     13 — round-12 verdict #4 plus the id-mode unlock;
-    delta_local._id_mode_scan's position-carrying path +
+    delta_local._scan_files' id-mode position-carrying path +
     upsert_delta_local's materializing rewrite): customer splits
     into even keys (baseRowId 0) and odd keys (baseRowId = n_even),
     both key-sorted, stored under OPAQUE physical names with parquet

@@ -27,6 +27,15 @@ fails as a conflict. The checkpoint it starts from:
    and missing txn marks are unknowable: ``last_txn_version`` raises,
    reads still work.
 
+ONE data-file scan, :func:`_scan_files`, reads the rows: the
+snapshot read (and so compaction), the upsert's survivor scan, the
+DV-delete change files and every change-feed part (inserts, deletes,
+DV deltas, Change Data Files) call it. It reads under the log's
+schema and decides the column-mapping mode, the deletion-vector
+anti-join, the partition rejoin and row tracking inside; callers ask
+only for the extra columns they need (file path, row index, literal
+columns).
+
 - :func:`read_delta_local` folds the log up to ``version`` (time
   travel) and hands the live file list to Spark's native parquet
   scan — pushdown/pruning work exactly as on raw parquet.
@@ -66,15 +75,13 @@ PARTITIONED mapped tables read/write/compact/stream in BOTH modes
 (hive directories and partitionValues key by the PHYSICAL
 partition-column name — the SCHEMA's physicalName, stable across
 files even in id mode since partition columns never live in the
-data files), and MERGE upserts work in both modes too (physical
-scan → logical match → physical rewrite; round 10's id-mode
-survivor scan resolves each file by its parquet field ids), and the
-CHANGE FEED (read_delta_changes) handles BOTH modes — id mode routes
-every change part through the same grouped field-id scan.
+data files), and MERGE upserts and the CHANGE FEED
+(read_delta_changes) work in both modes too, through the same scan
+(physical scan → logical match → physical rewrite).
 ``metaData.schemaString`` is written spec-correctly (it IS Spark's
-schema JSON) and read back for partition-column types; data columns
-trust the parquet footers, which is what Spark's scan enforces
-anyway.
+schema JSON) and read back as the scan's read schema and for
+partition-column types; only a minimal log without one leaves the
+data columns to Spark's footer inference.
 """
 
 from __future__ import annotations
@@ -778,102 +785,28 @@ def _file_id_layout(f: str) -> dict:
     return id2name
 
 
-def _id_mode_scan(spark, files, adds, idmap, root, with_path=False,
-                  with_pos=False, apply_dv=True, extra_cols=()):
-    """id-mode scan: resolve each file's columns by the PARQUET FIELD
-    IDS in its footer (one KB-scale footer read per file on FIRST
-    touch — repeat scans hit the bounded layout memo and pay only an
-    os.stat), group files sharing a resolved id→name layout, scan
-    each group natively, rename to the logical schema and union.
-    Files may legitimately disagree on physical names (id mode exists
-    for exactly that); a file missing a schema field id refuses
-    loudly — guessing by name would read the wrong column.
-    ``with_path`` adds a ``__qs_path__`` plain-path column (the
-    partition rejoin / upsert survivor-scan hook); ``with_pos`` adds
-    the ``_metadata.row_index`` as ``__qs_pos__`` and ``apply_dv=
-    False`` keeps deleted rows — the change feed's DV-diff part needs
-    the RAW rows to semi-join its new-minus-old positions against.
-    ``extra_cols``: (name, DataType) pairs of UNMAPPED columns stored
-    literally in the files (the change feed's ``_change_type`` in
-    _change_data files — not a schema field, so it has no field id);
-    they read and select by name verbatim."""
-    from pyspark.sql.types import StructField, StructType
-
-    from pyspark.sql import functions as F
-    groups: dict = {}
-    for f, a in zip(files, adds):
-        id2name = _file_id_layout(f)
-        if not id2name:
-            raise ValueError(
-                f"{f}: parquet schema carries no field ids at all — "
-                "id-mode column resolution is impossible for this "
-                "file (foreign writer?)")
-        # a file may lack SOME schema ids — that is ordinary schema
-        # evolution (the column was added after the file was written)
-        # and null-fills, exactly like unmapped evolution; only an
-        # id-less file refuses above
-        key = tuple(sorted((i, id2name.get(i)) for i in idmap))
-        groups.setdefault(key, []).append((f, a))
-    parts = []
-    for key, pairs in sorted(groups.items(),
-                             key=lambda kv: str(kv[0])):
-        phys = dict(key)
-        gf = [f for f, _ in pairs]
-        ga = [a for _, a in pairs]
-        rs = StructType([StructField(phys[i], dt, True)
-                         for i, (_n, dt) in sorted(idmap.items())
-                         if phys[i] is not None]
-                        + [StructField(n, dt, True)
-                           for n, dt in extra_cols])
-        d = spark.read.schema(rs).parquet(*gf)
-        # materialize path/position BEFORE the DV anti-join: the
-        # join output no longer resolves the scan's _metadata
-        # pseudo-column, and positions must be the FILE positions
-        # (DV survivors keep their original row_index)
-        if with_path:
-            d = d.withColumn("__qs_path__", _plain_path_col())
-        if with_pos:
-            d = d.withColumn("__qs_pos__",
-                             F.col("_metadata.row_index"))
-        if apply_dv:
-            d = _apply_deletion_vectors(spark, d, gf, ga, root)
-        cols = [(F.col(phys[i]) if phys[i] is not None
-                 else F.lit(None).cast(dt)).alias(n)
-                for i, (n, dt) in sorted(idmap.items())] \
-            + [F.col(n) for n, _dt in extra_cols]
-        if with_path:
-            cols.append(F.col("__qs_path__"))
-        if with_pos:
-            cols.append(F.col("__qs_pos__"))
-        parts.append(d.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _log_read_schema(meta: dict, pcols: list, cmap: dict | None = None):
-    """The table's Spark read schema from the log's ``schemaString``,
-    MINUS partition columns (they live in the log, not the files), or
-    None when the log carries no usable schema (minimal fixtures —
-    fall back to inference). Reading with the LOG's schema, not a
-    sampled file's, is what makes schema evolution sound: a column
-    added in a later version must surface (null for older files)
-    even when inference happens to sample an old file — and it skips
-    the footer-sampling pass entirely, which is not free at 100 TB
-    file counts. With ``cmap`` (columnMapping name mode) the read
-    schema uses the PHYSICAL parquet names; the caller renames back
-    to logical after the scan."""
-    from pyspark.sql.types import StructField, StructType
+def _log_schema(meta: dict):
+    """The table schema parsed from the log's ``schemaString``, or
+    None when the log carries no usable one (minimal fixtures)."""
+    from pyspark.sql.types import StructType
     try:
-        full = StructType.fromJson(json.loads(meta["schemaString"]))
+        return StructType.fromJson(json.loads(meta["schemaString"]))
     except (KeyError, ValueError, TypeError):
         return None
-    drop = set(pcols or [])
-    fields = [StructField(cmap[f.name] if cmap else f.name,
-                          f.dataType, f.nullable)
-              for f in full.fields if f.name not in drop]
-    return StructType(fields) if fields else None
+
+
+def _empty_frame(spark, meta: dict, row_tracking: bool = False):
+    """The typed empty result: the log schema, plus ``_row_id`` /
+    ``_row_commit_version`` when row tracking is asked for (empty and
+    non-empty results carry the same columns); None when the log has
+    no usable schema — the caller then scans and lets Spark infer."""
+    schema = _log_schema(meta)
+    if schema is None or not schema.fields:
+        return None
+    if row_tracking:
+        schema = schema.add("_row_id", "long") \
+                       .add("_row_commit_version", "long")
+    return spark.createDataFrame([], schema)
 
 
 def _partition_schema(meta: dict):
@@ -929,19 +862,17 @@ def partition_value_py(s, dtype, tz_name: str = "UTC"):
         "spec string decoding wired up")
 
 
-def _partition_values_frame(spark, files, adds, pcols, ptypes,
-                            pv_key=None):
+def _partition_values_frame(spark, files, adds, pcols, ptypes, pv_key):
     """Tiny broadcast-side frame (``__qs_path__``, *typed LOGICAL
     partition columns*) mapping each file's absolute path to its add
-    action's partitionValues — the partition rejoin shared by the
-    partitioned scan, the change feed, and the upsert rewrite.
+    action's partitionValues — the one scan's partition rejoin and
+    partition pruning (_scan_files).
     ``pv_key`` maps logical → the partitionValues KEY (physical name
-    on mapped tables); identity by default. O(#files) driver rows,
+    on mapped tables). O(#files) driver rows,
     all string-typed then cast (inference would crash on an all-null
     column, e.g. every file under __HIVE_DEFAULT_PARTITION__)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
-    pv_key = pv_key or {c: c for c in pcols}
     rows = [(os.path.abspath(f),
              *[a.get("partitionValues", {}).get(pv_key[c])
                for c in pcols])
@@ -1063,8 +994,7 @@ def _rt_col_names(meta: dict) -> tuple:
                      "materializedRowCommitVersionColumnName"))
 
 
-def _apply_row_tracking(spark, df, files, adds, meta,
-                        fp_col=None, pos_col=None):
+def _apply_row_tracking(spark, df, files, adds, meta):
     """Serve the ROW TRACKING metadata columns (protocol §Row
     Tracking, round 12 — the Delta analog of Iceberg v3 row lineage):
     ``_row_id`` = the add action's baseRowId + the row's position,
@@ -1074,12 +1004,9 @@ def _apply_row_tracking(spark, df, files, adds, meta,
     UPDATE/MERGE under the jar store per-row values there). One
     KB-scale broadcast of (path → baseRowId, defaultRowCommitVersion)
     joined onto the scan; pure arithmetic per row. DV-deleted rows
-    are already gone and survivors keep position-stable ids.
-    ``fp_col``/``pos_col`` (round 13): names of existing plain-path /
-    row-position columns to use instead of deriving them from
-    ``_metadata`` — the id-mode scan's unioned frame has no metadata
-    columns but carries ``__qs_path__``/``__qs_pos__``; the named
-    columns are preserved, the derived ones dropped as before."""
+    are already gone and survivors keep position-stable ids. ``df``
+    is the scan's frame: it carries the plain path ``__qs_path__``
+    and the file row index ``__qs_pos__`` (see _scan_files)."""
     from pyspark.sql import functions as F
     mat_rid, mat_rcv = _rt_col_names(meta)
     if not (mat_rid or mat_rcv
@@ -1097,20 +1024,9 @@ def _apply_row_tracking(spark, df, files, adds, meta,
             for f, a in zip(files, adds)]
     m = spark.createDataFrame(
         rows, "__qs_rtp__ string, __qs_brid__ long, __qs_dcv__ long")
-    drop = ["__qs_rtp__", "__qs_brid__", "__qs_dcv__",
-            "__qs_mrid__", "__qs_mrcv__"]
-    if fp_col is None:
-        df = df.withColumn("__qs_rtfp__", _plain_path_col())
-        fp_col = "__qs_rtfp__"
-        drop.append("__qs_rtfp__")
-    if pos_col is None:
-        df = df.withColumn("__qs_rtpos__",
-                           F.col("_metadata.row_index"))
-        pos_col = "__qs_rtpos__"
-        drop.append("__qs_rtpos__")
     df = df.join(F.broadcast(m),
-                 F.col(fp_col) == F.col("__qs_rtp__"), "left")
-    rid = F.col("__qs_brid__") + F.col(pos_col)
+                 F.col("__qs_path__") == F.col("__qs_rtp__"), "left")
+    rid = F.col("__qs_brid__") + F.col("__qs_pos__")
     rcv = F.col("__qs_dcv__")
     if mat_rid and mat_rid in df.columns:
         df = df.withColumnRenamed(mat_rid, "__qs_mrid__")
@@ -1120,7 +1036,143 @@ def _apply_row_tracking(spark, df, files, adds, meta,
         rcv = F.coalesce(F.col("__qs_mrcv__"), rcv)
     return (df.withColumn("_row_id", rid.cast("long"))
             .withColumn("_row_commit_version", rcv.cast("long"))
-            .drop(*drop))
+            .drop("__qs_rtp__", "__qs_brid__", "__qs_dcv__",
+                  "__qs_mrid__", "__qs_mrcv__"))
+
+
+def _scan_files(spark, root: str, meta: dict, files: list, adds: list,
+                pcols: list, ptypes: dict, *, path: bool = False,
+                pos: bool = False, dv: bool = True, extra=(),
+                row_tracking: bool = False,
+                partition_filter: str | None = None):
+    """The ONE Delta data-file scan, behind the snapshot read (and so
+    compaction), the upsert, the DV-delete change files and every
+    change-feed part: ``files`` — with their ``adds`` (add or cdc
+    actions) — through Spark's native parquet scan, returned under
+    ``meta``'s LOGICAL schema, in schema order.
+
+    - The read schema is the log's ``schemaString`` minus the
+      partition columns: a column a later version added surfaces
+      (null for older files) and no footer-sampling job runs. Without
+      a schemaString (minimal fixtures) Spark infers.
+    - Column mapping is decided here. Name mode reads the schema's
+      physicalName and renames. Id mode resolves each file by the
+      parquet field ids in its footer (memoized, see _ID_LAYOUT),
+      groups files sharing a layout, scans each group and unions:
+      files may disagree on physical names, a file without field ids
+      refuses, a missing id null-fills like unmapped evolution.
+    - Deletion vectors drop their rows unless ``dv=False`` (the
+      change feed and the DV-delete change files pick raw positions
+      themselves).
+    - ``pcols``/``ptypes`` is the partition scheme the files were
+      written under — an argument because the change feed reads
+      removed files under the pre-commit scheme. Partition values
+      rejoin typed from each action's partitionValues, keyed by the
+      schema's physicalName on mapped tables. ``partition_filter``
+      prunes the file list first (log-level pruning); when nothing
+      is left the result is the typed empty frame.
+    - On request, after the schema columns: ``extra`` (name,
+      DataType) columns stored literally in the files (the
+      ``_change_type`` of Change Data Files), ``__qs_path__`` (the
+      plain absolute path), ``__qs_pos__`` (the file row index,
+      taken before the DV join) and, with ``row_tracking``,
+      ``_row_id``/``_row_commit_version``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType
+    cm = _cm_mode(meta)
+    if pcols:
+        pv_key = ({f.name: p for f, p in _mapped_fields(
+                      meta, cm, "delta.columnMapping.physicalName")}
+                  if cm != "none" else {c: c for c in pcols})
+        mapping = _partition_values_frame(spark, files, adds, pcols,
+                                          ptypes, pv_key)
+        if partition_filter:
+            keep = {r["__qs_path__"]
+                    for r in mapping.filter(partition_filter)
+                    .select("__qs_path__").collect()}
+            kept = [(f, a) for f, a in zip(files, adds)
+                    if os.path.abspath(f) in keep]
+            if not kept:
+                return _empty_frame(spark, meta, row_tracking)
+            files, adds = [f for f, _ in kept], [a for _, a in kept]
+    mat = [c for c in _rt_col_names(meta) if c]
+    # row tracking reads the MATERIALIZED columns (configuration-named
+    # physical columns, never schema fields) literally by name
+    lits = list(extra) + ([(c, LongType()) for c in mat]
+                          if row_tracking else [])
+    need_path = path or bool(pcols) or row_tracking
+    need_pos = pos or row_tracking
+    fid = ({f.name: int(i) for f, i in _mapped_fields(
+        meta, "id", "delta.columnMapping.id")} if cm == "id" else None)
+    phys = _column_mapping(meta) or {}
+    schema = _log_schema(meta)
+    data = (None if schema is None
+            else [f for f in schema.fields if f.name not in pcols])
+    # groups: (layout [(logical, physical | None, StructField)], files,
+    # adds); a None layout lets Spark infer
+    groups = [(None if data is None else
+               [(d.name, phys.get(d.name, d.name), d) for d in data],
+               files, adds)]
+    if fid:
+        by_key: dict = {}
+        for f, a in zip(files, adds):
+            id2name = _file_id_layout(f)
+            if not id2name:
+                raise ValueError(
+                    f"{f}: parquet schema carries no field ids at all — "
+                    "id-mode column resolution is impossible for this "
+                    "file (foreign writer?)")
+            key = tuple(sorted((fid[d.name], id2name.get(fid[d.name]))
+                               for d in data))
+            by_key.setdefault(key, []).append((f, a))
+        groups = [([(d.name, dict(key)[fid[d.name]], d) for d in data],
+                   [f for f, _ in pairs], [a for _, a in pairs])
+                  for key, pairs in sorted(by_key.items(),
+                                           key=lambda kv: str(kv[0]))]
+    parts = []
+    for layout, gf, ga in groups:
+        if layout is None:
+            d = spark.read.parquet(*gf)
+            skip = {n for n, _ in extra} | set(mat)
+            layout = [(c, c, None) for c in d.columns if c not in skip]
+            glits = [(n, t) for n, t in lits if n in d.columns]
+        else:
+            glits = lits
+            d = spark.read.schema(StructType(
+                [StructField(p, f.dataType, f.nullable)
+                 for _, p, f in layout if p is not None]
+                + [StructField(n, t, True) for n, t in lits])
+            ).parquet(*gf)
+        # path and position BEFORE the DV anti-join: positions must be
+        # the FILE positions, and a union does not resolve _metadata
+        hidden = []
+        if need_path:
+            d = d.withColumn("__qs_path__", _plain_path_col())
+            hidden.append("__qs_path__")
+        if need_pos:
+            d = d.withColumn("__qs_pos__", F.col("_metadata.row_index"))
+            hidden.append("__qs_pos__")
+        if dv:
+            d = _apply_deletion_vectors(spark, d, gf, ga, root)
+        parts.append(d.select(
+            *[(F.col(p) if p is not None
+               else F.lit(None).cast(f.dataType)).alias(n)
+              for n, p, f in layout],
+            *[n for n, _ in glits], *hidden))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    if row_tracking:
+        out = _apply_row_tracking(spark, out, files, adds, meta)
+    if pcols:
+        out = out.join(F.broadcast(mapping), "__qs_path__")
+    names = ([f.name for f in schema.fields] if schema is not None
+             else [n for n, _, _ in layout] + list(pcols))
+    return out.select(
+        *names, *[n for n, _ in extra],
+        *(["__qs_path__"] if path else []),
+        *(["__qs_pos__"] if pos else []),
+        *(["_row_id", "_row_commit_version"] if row_tracking else []))
 
 
 def read_delta_local(spark, table: str, version: int | None = None,
@@ -1174,214 +1226,37 @@ def _read_snapshot(spark, table: str, snap: _Snapshot,
     # partition_filter errors regardless of what scan_filter prunes
     if partition_filter and not pcols:
         raise ValueError("partition_filter on an unpartitioned table")
-    cmap = _column_mapping(meta)
-    idmap = _id_mapping(meta)
-    if idmap:
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, StructType
-        root = table.removeprefix("file://")
-        # row tracking under ID mode (round 13): the per-file-group
-        # scan carries __qs_path__/__qs_pos__ and reads the
-        # MATERIALIZED columns literally by their configured names
-        # (they are physical columns outside the schema, so they
-        # have no field ids); the shared arithmetic then serves
-        # _row_id/_row_commit_version exactly like the plain path
-        rt_extra = ()
-        if with_row_tracking:
-            rt_extra = tuple((c, LongType())
-                             for c in _rt_col_names(meta) if c)
-        # id-mode data skipping (round 13): stats keys are each
-        # file's OWN physical names, so the logical filter column
-        # resolves per file — logical name → schema field id → that
-        # file's footer layout (already read + memoized for
-        # the scan's grouping). Missing layouts/stats keep the file;
-        # the row-level filter below keeps semantics exact either way
-        if scan_filter:
-            name_to_fid = {nd[0]: i for i, nd in idmap.items()}
+    if scan_filter:
+        if _cm_mode(meta) == "id":
+            # id-mode stats key by each file's OWN physical names:
+            # logical name → schema field id → that file's footer
+            # layout (memoized, the scan reads it anyway). A missing
+            # layout keeps the file; the row filter stays exact
+            fid = {f.name: int(i) for f, i in _mapped_fields(
+                meta, "id", "delta.columnMapping.id")}
 
-            def _per_file_cmap(f):
+            def stats_keys(f):
                 try:
                     layout = _file_id_layout(f)
                 except Exception:
                     return {}
-                return {ln: layout[fid]
-                        for ln, fid in name_to_fid.items()
-                        if layout.get(fid)}
-            pf, pa_ = _prune_by_stats(files, adds, scan_filter,
-                                      cmap=_per_file_cmap)
-            if pf:
-                files, adds = pf, pa_
-            else:
-                full = StructType.fromJson(
-                    json.loads(meta["schemaString"]))
-                if full.fields:
-                    if with_row_tracking:
-                        full = full.add("_row_id", "long") \
-                                   .add("_row_commit_version", "long")
-                    return spark.createDataFrame([], full)
-        if not pcols:
-            df = _id_mode_scan(spark, files, adds, idmap, root,
-                               with_path=with_row_tracking,
-                               with_pos=with_row_tracking,
-                               extra_cols=rt_extra)
-            if with_row_tracking:
-                df = _apply_row_tracking(
-                    spark, df, files, adds, meta,
-                    fp_col="__qs_path__", pos_col="__qs_pos__")
-                df = df.drop("__qs_path__", "__qs_pos__")
-            return df.filter(scan_filter) if scan_filter else df
-        # PARTITIONED id mode (round 10): partition columns never
-        # live in the data files, so only DATA columns resolve by
-        # per-file field ids; partitionValues key by the SCHEMA's
-        # physicalName — stable across files (only data columns may
-        # vary physically in id mode), exactly like name mode
-        phys = {f.name: p for f, p in _mapped_fields(
-            meta, "id", "delta.columnMapping.physicalName")}
-        pv_key = {c: phys[c] for c in pcols}
-        mapping = _partition_values_frame(spark, files, adds, pcols,
-                                          ptypes, pv_key)
-        if partition_filter:
-            keep = {r["__qs_path__"]
-                    for r in mapping.filter(partition_filter)
-                    .select("__qs_path__").collect()}
-            kept = [(f, a) for f, a in zip(files, adds)
-                    if os.path.abspath(f) in keep]
-            files = [f for f, _ in kept]
-            adds = [a for _, a in kept]
-            if not files:
-                full = StructType.fromJson(
-                    json.loads(meta["schemaString"]))
-                if with_row_tracking:
-                    # empty results carry the SAME schema as
-                    # non-empty ones (review finding)
-                    full = full.add("_row_id", "long") \
-                               .add("_row_commit_version", "long")
-                return spark.createDataFrame([], full)
-        data_idmap = {i: nd for i, nd in idmap.items()
-                      if nd[0] not in pcols}
-        df = _id_mode_scan(spark, files, adds, data_idmap, root,
-                           with_path=True,
-                           with_pos=with_row_tracking,
-                           extra_cols=rt_extra)
-        if with_row_tracking:
-            df = _apply_row_tracking(
-                spark, df, files, adds, meta,
-                fp_col="__qs_path__", pos_col="__qs_pos__")
-            df = df.drop("__qs_pos__")
-        df = df.join(F.broadcast(mapping), "__qs_path__") \
-               .drop("__qs_path__")
-        full = StructType.fromJson(json.loads(meta["schemaString"]))
-        df = df.select(*([f.name for f in full.fields]
-                         + (["_row_id", "_row_commit_version"]
-                            if with_row_tracking else [])))
-        return df.filter(scan_filter) if scan_filter else df
-
-    def _empty_typed():
-        from pyspark.sql.types import StructType
-        try:
-            full = StructType.fromJson(json.loads(meta["schemaString"]))
-        except (KeyError, ValueError):
-            return None
-        if not full.fields:
-            return None
-        if with_row_tracking:
-            # empty results carry the SAME schema as non-empty ones
-            full = full.add("_row_id", "long") \
-                       .add("_row_commit_version", "long")
-        return spark.createDataFrame([], full)
-
-    if scan_filter:
-        pf, pa_ = _prune_by_stats(files, adds, scan_filter, cmap=cmap)
+                return {n: layout[i] for n, i in fid.items()
+                        if layout.get(i)}
+        else:
+            stats_keys = _column_mapping(meta)
+        pf, pa_ = _prune_by_stats(files, adds, scan_filter,
+                                  cmap=stats_keys)
         if pf:
             files, adds = pf, pa_
         else:
-            empty = _empty_typed()
+            empty = _empty_frame(spark, meta, with_row_tracking)
             if empty is not None:
                 return empty
             # schema unknown: keep the files; the row filter below
             # still yields the correct (empty) result
-    root = table.removeprefix("file://")
-    rs = _log_read_schema(meta, pcols, cmap=cmap)
-    if with_row_tracking and rs is not None:
-        # the MATERIALIZED row-tracking columns (configuration-named
-        # physical columns, never in schemaString) must be in the
-        # read schema so coalesce can prefer them; files without them
-        # null-fill and fall back to baseRowId arithmetic
-        from pyspark.sql.types import LongType, StructField
-        for c in _rt_col_names(meta):
-            if c and c not in rs.fieldNames():
-                rs = rs.add(StructField(c, LongType(), True))
-    if not pcols:
-        df = (spark.read.schema(rs).parquet(*files)
-              if rs is not None else spark.read.parquet(*files))
-        df = _apply_deletion_vectors(spark, df, files, adds, root)
-        if with_row_tracking:
-            df = _apply_row_tracking(spark, df, files, adds, meta)
-        elif rs is None:
-            # inference fallback: configured MATERIALIZED row-tracking
-            # columns are metadata, never table columns — a plain
-            # read must not surface them
-            df = df.drop(*[c for c in _rt_col_names(meta) if c])
-        if cmap:
-            # physical parquet names → the logical schema the user
-            # queries; the row filter below then sees logical names
-            from pyspark.sql import functions as F
-            df = df.select(*([F.col(phys).alias(logical)
-                              for logical, phys in cmap.items()]
-                             + (["_row_id", "_row_commit_version"]
-                                if with_row_tracking else [])))
-        return df.filter(scan_filter) if scan_filter else df
-    from pyspark.sql import functions as F
-
-    # one tiny mapping frame: (absolute file path, *typed values).
-    # On a name-mapped table the partitionValues map keys by the
-    # PHYSICAL partition-column name, per the protocol's column-
-    # mapping rules — fetch by it, alias logical.
-    pv_key = {c: (cmap[c] if cmap else c) for c in pcols}
-    mapping = _partition_values_frame(spark, files, adds, pcols,
-                                      ptypes, pv_key)
-    if partition_filter:
-        keep = {r["__qs_path__"]
-                for r in mapping.filter(partition_filter)
-                .select("__qs_path__").collect()}
-        kept_pairs = [(f, a) for f, a in zip(files, adds)
-                      if os.path.abspath(f) in keep]
-        files = [f for f, _ in kept_pairs]
-        adds = [a for _, a in kept_pairs]
-        if not files:
-            # empty-but-typed result with the full table schema
-            # (plus the row-tracking columns when requested — empty
-            # and non-empty results must agree)
-            from pyspark.sql.types import StructType
-            full = StructType.fromJson(json.loads(meta["schemaString"]))
-            if with_row_tracking:
-                full = full.add("_row_id", "long") \
-                           .add("_row_commit_version", "long")
-            return spark.createDataFrame([], full)
-    # _metadata.file_path is a percent-ENCODED URI ("file:/…%2F…");
-    # decode to the plain filesystem path the log/map uses. A literal
-    # '+' in a path is a '+' in the URI (Hadoop encodes space as %20,
-    # never '+'), but url_decode is form-decoding — protect it first.
-    df = (spark.read.schema(rs).parquet(*files)
-          if rs is not None else spark.read.parquet(*files))
-    df = _apply_deletion_vectors(spark, df, files, adds, root)
-    if with_row_tracking:
-        df = _apply_row_tracking(spark, df, files, adds, meta)
-    df = df.withColumn("__qs_path__", _plain_path_col())
-    rt_cols = ["_row_id", "_row_commit_version"] \
-        if with_row_tracking else []
-    if cmap:
-        # physical parquet names → logical for the DATA columns
-        # (partition columns join back under logical names below)
-        df = df.select("__qs_path__", *rt_cols,
-                       *[F.col(cmap[l]).alias(l)
-                         for l in cmap if l not in pcols])
-    df = df.join(F.broadcast(mapping), "__qs_path__").drop("__qs_path__")
-    # present columns in table-schema order (partition cols last in
-    # the files, spec order in the schemaString)
-    from pyspark.sql.types import StructType
-    full = StructType.fromJson(json.loads(meta["schemaString"]))
-    df = df.select(*[f.name for f in full.fields], *rt_cols)
+    df = _scan_files(spark, table.removeprefix("file://"), meta, files,
+                     adds, pcols, ptypes, row_tracking=with_row_tracking,
+                     partition_filter=partition_filter)
     return df.filter(scan_filter) if scan_filter else df
 
 
@@ -2197,16 +2072,12 @@ def _delete_cdc_actions(spark, root: str, meta: dict,
     table (round 10): scan the NEWLY deleted (file, position) rows —
     a distributed (path, row_index) semi-join, never a driver row
     path — and write them under _change_data/ with
-    ``_change_type='delete'``. The change files follow data-file
-    rules: physical column names on name-mapped tables; on id-mode
-    tables (round 11) the pre-image rows resolve through the grouped
-    field-id scan (each deleted file read by its OWN physical
-    layout, raw — the positions being emitted are exactly the rows
-    the new DV hides) and the change files land under the CURRENT
-    schema's physicalName with parquet field ids stamped, the same
-    convention the upsert path's cdc emission uses and _cdc_scan
-    already resolves. Partition values ride in the cdc actions
-    (hive layout), never in the files. The caller validates the
+    ``_change_type='delete'``. The rows come from the one scan, raw
+    (``dv=False`` — the positions being emitted are exactly the rows
+    the new DV hides; id mode reads each file by its OWN field-id
+    layout); the files are written like the upsert's change files
+    (_write_change_files: physical names, field ids in id mode,
+    partition values in the hive layout). The caller validates the
     preconditions (a live SparkSession) BEFORE writing any DV file —
     see delete_rows_delta_local — so a refusal never orphans on-disk
     state."""
@@ -2214,75 +2085,51 @@ def _delete_cdc_actions(spark, root: str, meta: dict,
 
     from pyspark.sql import functions as F
     pcols, ptypes = _partition_schema(meta)
-    cmap = _column_mapping(meta)
-    idmap = _id_mapping(meta)
     files = sorted(new_positions)
-    adds = [by_abs[f][1] for f in files]
     pos = spark.createDataFrame(
         [(f, int(p)) for f in files for p in new_positions[f]],
         "__qs_dfp__ string, __qs_dpos__ long")
-    if idmap:
-        data_idmap = {i: nd for i, nd in idmap.items()
-                      if nd[0] not in pcols}
-        scan = (_id_mode_scan(spark, files, adds, data_idmap, root,
-                              with_path=True, with_pos=True,
-                              apply_dv=False)
-                .withColumnRenamed("__qs_path__", "__qs_fp__"))
-    else:
-        rs = _log_read_schema(meta, pcols, cmap=cmap)
-        scan = (spark.read.schema(rs).parquet(*files)
-                if rs is not None else spark.read.parquet(*files))
-        scan = (scan.withColumn("__qs_fp__", _plain_path_col())
-                .withColumn("__qs_pos__",
-                            F.col("_metadata.row_index")))
-    scan = scan.join(pos, (F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                     & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
-                     "left_semi").drop("__qs_pos__")
-    id_mapping = None
-    if idmap:
-        # id-mode scan output is LOGICAL — rename to the current
-        # schema's physical layout + stamp field ids, keeping the
-        # path key and _change_type-to-be out of the mapping
-        scan, id_mapping = _physical_projection(
-            scan.withColumn("_change_type", F.lit("delete")),
-            meta, "id", passthrough=("_change_type", "__qs_fp__"))
-    out_pcols = []
-    if pcols:
-        if id_mapping:
-            pv_key = {c: id_mapping[c][0] for c in pcols}
-        elif cmap:
-            pv_key = {c: cmap[c] for c in pcols}
-        else:
-            pv_key = {c: c for c in pcols}
-        out_pcols = [pv_key[c] for c in pcols]
-        mapping = (_partition_values_frame(spark, files, adds, pcols,
-                                           ptypes, pv_key)
-                   .withColumnRenamed("__qs_path__", "__qs_fp__"))
-        # the change files' hive layout keys by the PHYSICAL name,
-        # like every mapped write
-        mapping = mapping.select(
-            "__qs_fp__", *[F.col(c).alias(pv_key[c]) for c in pcols])
-        scan = scan.join(F.broadcast(mapping), "__qs_fp__")
-    scan = scan.drop("__qs_fp__")
-    if not idmap:
-        scan = scan.withColumn("_change_type", F.lit("delete"))
-    d = os.path.join(root, "_change_data",
-                     f"cdc-{_uuid.uuid4().hex[:12]}")
-    w = scan.write
+    scan = (_scan_files(spark, root, meta, files,
+                        [by_abs[f][1] for f in files], pcols, ptypes,
+                        path=True, pos=True, dv=False)
+            .join(pos, (F.col("__qs_path__") == F.col("__qs_dfp__"))
+                  & (F.col("__qs_pos__") == F.col("__qs_dpos__")),
+                  "left_semi")
+            .drop("__qs_path__", "__qs_pos__")
+            .withColumn("_change_type", F.lit("delete")))
+    return _write_change_files(root, scan, meta, pcols,
+                               _uuid.uuid4().hex[:12])
+
+
+def _write_change_files(root: str, frame, meta: dict, pcols: list,
+                        tag: str) -> list:
+    """Write a LOGICAL change frame (data columns plus
+    ``_change_type``) as Change Data Files under
+    ``_change_data/cdc-<tag>`` and return their ``cdc`` actions
+    (dataChange=false). The files follow data-file rules: the
+    schema's physical names on mapped tables (field ids too in id
+    mode; ``_change_type`` is not a schema field and keeps its name),
+    and partition values ride in hive directories under the physical
+    partition names, never in the files."""
+    cm = _cm_mode(meta)
+    out_pcols = pcols
+    if cm != "none":
+        frame, mapping = _physical_projection(
+            frame, meta, cm, passthrough=("_change_type",))
+        out_pcols = [mapping[c][0] for c in pcols]
+    d = os.path.join(root, "_change_data", f"cdc-{tag}")
+    w = frame.write
     if out_pcols:
         w = w.partitionBy(*out_pcols)
     w.parquet(d)
-    out = []
-    for p in sorted(os.path.join(dp, f)
-                    for dp, _, fs in os.walk(d)
-                    for f in fs if f.endswith(".parquet")):
-        out.append({"cdc": {
-            "path": os.path.relpath(p, root),
-            "partitionValues": (_hive_partition_values(d, p)
-                                if pcols else {}),
-            "size": os.path.getsize(p),
-            "dataChange": False}})
-    return out
+    return [{"cdc": {"path": os.path.relpath(p, root),
+                     "partitionValues": (_hive_partition_values(d, p)
+                                         if pcols else {}),
+                     "size": os.path.getsize(p),
+                     "dataChange": False}}
+            for p in sorted(os.path.join(dp, f)
+                            for dp, _, fs in os.walk(d)
+                            for f in fs if f.endswith(".parquet"))]
 
 
 def restore_delta_local(table: str, version: int) -> int:
@@ -3107,7 +2954,7 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
     swap atomically; time travel sees the pre-upsert state).
 
     Distributed end to end: the affected-file set comes from a
-    semi-join of the live scan's ``_metadata.file_path`` against the
+    semi-join of the live scan's file paths against the
     incoming keys (only file PATHS reach the driver, KBs); the
     surviving-row rewrite is an anti-join executed by Spark's parquet
     writer. The rewrite cost is proportional to the affected files —
@@ -3122,7 +2969,7 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
     shape). MAPPED tables upsert in BOTH modes (name round 9, id
     round 10): physical scan → logical match → physical rewrite; id
     mode's survivor scan resolves each file by its parquet field ids
-    (the grouped _id_mode_scan), and the rewrite stamps fresh ids."""
+    (_scan_files), and the rewrite stamps fresh ids."""
     import uuid
     from pyspark.sql import functions as F
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
@@ -3138,8 +2985,8 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
     # multi-row replacements take fresh ids, as the spec permits.
     # column mapping composes in BOTH modes (round 13): the
     # materialized columns are PHYSICAL names per protocol and pass
-    # through the physical projection literally; the id-mode live
-    # scan carries positions and reads them by name.
+    # through the physical projection literally; the live scan reads
+    # them by name.
     rt_base = _row_tracking_base(snap)
     mat_rid = mat_rcv = None
     meta_update = None
@@ -3169,94 +3016,11 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
             f"upsert batch is missing partition column(s) "
             f"{[c for c in pcols if c not in df.columns]}")
     cm = _cm_mode(meta)
-    cmap = _column_mapping(meta)
-    idmap = _id_mapping(meta)
-    if idmap:
-        # id mode (round 10): files may each use different physical
-        # names, so the survivor scan resolves per file by parquet
-        # field ids; partition columns (never in the files) rejoin
-        # below under the SCHEMA's stable physicalName. Row tracking
-        # (round 13): positions + literal-name materialized columns
-        # ride the per-file-group scan, same arithmetic as the plain
-        # path.
-        from pyspark.sql.types import LongType
-        data_idmap = {i: nd for i, nd in idmap.items()
-                      if nd[0] not in pcols}
-        rt_extra = tuple((c, LongType())
-                         for c in (mat_rid, mat_rcv) if c) \
-            if rt_base is not None else ()
-        live = _id_mode_scan(spark, files, adds, data_idmap, root,
-                             with_path=True,
-                             with_pos=rt_base is not None,
-                             extra_cols=rt_extra)
-        if rt_base is not None:
-            live = _apply_row_tracking(
-                spark, live, files, adds, meta,
-                fp_col="__qs_path__", pos_col="__qs_pos__") \
-                .drop("__qs_pos__")
-            # names GENERATED this commit are not in the replayed
-            # meta, so _apply_row_tracking left their null-read
-            # columns in place — drop them (no-op when the meta
-            # already configured them: they were consumed above),
-            # else the survivor rename to the same name would
-            # produce an ambiguous duplicate
-            live = live.drop(*[c for c, _ in rt_extra])
-        live = live.withColumn("__qs_file__", F.col("__qs_path__"))
-        if not pcols:
-            live = live.drop("__qs_path__")
-    else:
-        # scan with the LOG's schema: after schema evolution,
-        # inference could sample a pre-evolution file and the
-        # survivor rewrite would silently drop the newer columns
-        # from rewritten files
-        rs = _log_read_schema(meta, pcols, cmap=cmap)
-        if rt_base is not None and rs is not None:
-            # materialized row-tracking columns must be readable so
-            # survivors keep ids a previous rewrite already pinned
-            from pyspark.sql.types import LongType, StructField
-            for c in (mat_rid, mat_rcv):
-                if c not in rs.fieldNames():
-                    rs = rs.add(StructField(c, LongType(), True))
-        live = (spark.read.schema(rs).parquet(*files)
-                if rs is not None else spark.read.parquet(*files))
-        # DV-deleted rows must not survive into rewritten files
-        live = _apply_deletion_vectors(spark, live, files, adds, root) \
-            .withColumn("__qs_file__", F.col("_metadata.file_path"))
-        if rt_base is not None:
-            live = _apply_row_tracking(spark, live, files, adds, meta)
-            # names GENERATED this commit are not in the replayed
-            # meta, so _apply_row_tracking left their null-read
-            # columns in place (review finding: the first MERGE on
-            # an unconfigured rowTracking table crashed with
-            # COLUMN_ALREADY_EXISTS at the survivor rename) — drop
-            # them; no-op when the meta already configured them
-            live = live.drop(*[c for c in (mat_rid, mat_rcv) if c])
-        if pcols:
-            live = live.withColumn("__qs_path__", _plain_path_col())
-        if cmap:
-            # name mode (round 9): rename physical → logical for the
-            # key match; row-tracking metadata columns (round 13)
-            # ride along under their literal names
-            keep = ["__qs_file__"] + (["__qs_path__"] if pcols else []) \
-                + (["_row_id", "_row_commit_version"]
-                   if rt_base is not None else [])
-            live = live.select(*keep,
-                               *[F.col(cmap[l]).alias(l) for l in cmap
-                                 if l not in pcols])
-    if pcols:
-        # partitioned tables (round 9): rejoin the log's partition
-        # values so the key match and the survivor rewrite see the
-        # full logical row (survivors re-partition by them below)
-        if cm != "none":
-            phys = {f.name: p for f, p in _mapped_fields(
-                meta, cm, "delta.columnMapping.physicalName")}
-            pv_key = {c: phys[c] for c in pcols}
-        else:
-            pv_key = {c: c for c in pcols}
-        live = (live.join(F.broadcast(_partition_values_frame(
-                    spark, files, adds, pcols, ptypes, pv_key)),
-                    "__qs_path__")
-                .drop("__qs_path__"))
+    # the live rows under the logical schema (partition values
+    # rejoined, DV-deleted rows gone, row ids served on rowTracking
+    # tables), each with the plain path of the file holding it
+    live = _scan_files(spark, root, meta, files, adds, pcols, ptypes,
+                       path=True, row_tracking=rt_base is not None)
     new_keys = df.select(*keys).distinct()
     if rt_base is not None:
         # single-match updated rows keep their id: semi-join bounds
@@ -3273,17 +3037,9 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
                    .where("__qs_bn__ = 1").drop("__qs_bn__"))
         df = (df.join(old_ids, keys, "left")
               .withColumn(mat_rcv, F.lit(None).cast("long")))
-    affected = [r["__qs_file__"]
+    affected = [r["__qs_path__"]
                 for r in (live.join(new_keys, keys, "left_semi")
-                          .select("__qs_file__").distinct().collect())]
-
-    def _plain(u: str) -> str:
-        # _metadata.file_path is a URI ("file:/tmp/..." — scheme with
-        # a SINGLE slash); compare as filesystem paths
-        from urllib.parse import urlparse
-        return urlparse(u).path if u.startswith("file:") else u
-
-    affected_set = {_plain(a) for a in affected}
+                          .select("__qs_path__").distinct().collect())]
     # commit over the version read: a commit that landed during the
     # scan (say, a DV delete of a row this rewrite would carry) makes
     # _commit refuse instead of being silently built over
@@ -3328,9 +3084,9 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
                     _pq.ParquetFile(p).metadata.num_rows)
             actions.append(act)
 
-    if affected_set:
-        survivors = (live.filter(F.col("__qs_file__").isin(list(affected)))
-                     .drop("__qs_file__")
+    if affected:
+        survivors = (live.filter(F.col("__qs_path__").isin(affected))
+                     .drop("__qs_path__")
                      .join(new_keys, keys, "left_anti"))
         if rt_base is not None:
             # survivors keep BOTH their id and their last-updated
@@ -3341,9 +3097,9 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
                                             mat_rcv))
         _write_and_add(survivors, f"data-{tag}-rewrite")
         # remove by the exact key each file was added under
+        affected_set = set(affected)
         for k, fpath in zip(live_keys, files):
-            if _plain(fpath) in affected_set \
-                    or os.path.abspath(fpath) in affected_set:
+            if os.path.abspath(fpath) in affected_set:
                 actions.append({"remove": {"path": k,
                                            "deletionTimestamp": ts,
                                            "dataChange": True}})
@@ -3369,11 +3125,10 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
             "_row_id", "_row_commit_version")
         df_cdc = df if rt_base is None else df.drop(mat_rid, mat_rcv)
         if affected:
-            base = live_cdc.filter(
-                F.col("__qs_file__").isin(list(affected)))
+            base = live_cdc.filter(F.col("__qs_path__").isin(affected))
             mk = base.select(*keys).join(new_keys, keys,
                                          "left_semi").distinct()
-            pre = (base.drop("__qs_file__")
+            pre = (base.drop("__qs_path__")
                    .join(mk, keys, "left_semi")
                    .withColumn("_change_type",
                                F.lit("update_preimage")))
@@ -3385,25 +3140,7 @@ def upsert_delta_local(spark, table: str, df, key_cols) -> int:
             cdc = pre.unionByName(post).unionByName(ins)
         else:
             cdc = df_cdc.withColumn("_change_type", F.lit("insert"))
-        d = os.path.join(root, "_change_data", f"cdc-{tag}")
-        out_pcols = pcols
-        if cm != "none":
-            cdc, mapping = _physical_projection(
-                cdc, meta, cm, passthrough=("_change_type",))
-            out_pcols = [mapping[c][0] for c in pcols]
-        w = cdc.write
-        if out_pcols:
-            w = w.partitionBy(*out_pcols)
-        w.parquet(d)
-        for p in sorted(os.path.join(dp, f)
-                        for dp, _, fs in os.walk(d)
-                        for f in fs if f.endswith(".parquet")):
-            actions.append({"cdc": {
-                "path": os.path.relpath(p, root),
-                "partitionValues": (_hive_partition_values(d, p)
-                                    if pcols else {}),
-                "size": os.path.getsize(p),
-                "dataChange": False}})
+        actions += _write_change_files(root, cdc, meta, pcols, tag)
     # an explicit identity value beyond the high-water mark advances
     # it in this same commit
     mu_actions = []
@@ -3530,6 +3267,7 @@ def read_delta_changes(spark, table: str,
     import json as _json
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
 
     from .changes import ChangeFeed
 
@@ -3585,121 +3323,47 @@ def read_delta_changes(spark, table: str,
         cur_meta, pre_live = pre.meta, dict(zip(pre.keys, pre.adds))
     else:
         cur_meta, pre_live = None, {}
+    # every part scans under the END meta (schema and column mapping:
+    # a mapping only grows, so its physical names cover every version)
+    # and the partition scheme its files were written under
     end_cm = _cm_mode(meta)
-    # name-mode mapping (round 9): the END meta's mapping is a
-    # superset of every version's (physical names never change for an
-    # existing column; later columns null-fill in older files)
-    cmap = _column_mapping(meta)
-    # id-mode mapping (round 10): data columns resolve PER FILE by
-    # parquet field ids (the grouped _id_mode_scan — the same engine
-    # as the batch reader and the upsert survivor scan); partition
-    # columns never live in the data files, so partitionValues key by
-    # the SCHEMA's stable physicalName, exactly like the batch path
-    idmap = _id_mapping(meta)
-    id_phys = ({f.name: p for f, p in _mapped_fields(
-        meta, "id", "delta.columnMapping.physicalName")}
-        if idmap else None)
     root = table.removeprefix("file://")
-    # output column order: the to_version schema (None for minimal
-    # fixtures → whatever the scans infer)
-    try:
-        from pyspark.sql.types import StructType
-        schema_cols = [f.name for f in StructType.fromJson(
-            json.loads(meta["schemaString"])).fields]
-    except (KeyError, ValueError, TypeError):
-        schema_cols = None
-    # PER-VERSION partition metadata (round 9): partition values live
-    # in the LOG and the active partitionColumns can CHANGE inside the
-    # range (an overwrite may repartition), so each version's scan
-    # reads with the columns ITS files store and rejoins the rest as
-    # typed columns from its adds' partitionValues — tracked by
-    # folding metaData actions forward, one KB-scale check per commit
-    state = {"pcols": [], "ptypes": {}, "rs": None}
 
-    def _set_meta(m):
+    def _scheme(m, prev):
+        # PER-VERSION partition metadata (round 9): partition values
+        # live in the LOG and the active partitionColumns can CHANGE
+        # inside the range (an overwrite may repartition), so the
+        # scheme folds forward with each metaData action
         if m is None:
-            return
+            return prev
         if _cm_mode(m) != end_cm:
             raise NotImplementedError(
                 "read_delta_changes: the range crosses a columnMapping "
                 "MODE change — unsupported")
-        pc, pt = _partition_schema(m)
-        state["pcols"], state["ptypes"] = pc, pt
-        # scan with the to_version schema MINUS this version's
-        # partition columns — evolution null-fill + no rejoin clash;
-        # physical names on mapped tables (id mode resolves per file
-        # instead — _id_mode_scan builds each group's own schema)
-        state["rs"] = (None if idmap
-                       else _log_read_schema(meta, pc, cmap=cmap))
+        return _partition_schema(m)
 
-    _set_meta(cur_meta)
-
-    def _scan_raw(files, st):
-        rs = st["rs"]
-        return (spark.read.schema(rs).parquet(*files)
-                if rs is not None else spark.read.parquet(*files))
+    scheme = _scheme(cur_meta, ([], {}))
 
     def _abs(k):
         return k if os.path.isabs(k) else os.path.join(root, k)
 
-    def _rejoin(df, files_, adds_, st, on="__qs_path__"):
-        """Join the typed partition values of ``files_`` (from their
-        actions, keyed by physical name on mapped tables) back onto
-        ``df`` by its plain-path column ``on``."""
-        if not st["pcols"]:
-            return df
-        pv_key = ({c: id_phys[c] for c in st["pcols"]} if idmap
-                  else {c: (cmap[c] if cmap else c) for c in st["pcols"]})
-        mapping = _partition_values_frame(
-            spark, files_, adds_, st["pcols"], st["ptypes"], pv_key)
-        if on != "__qs_path__":
-            mapping = mapping.withColumnRenamed("__qs_path__", on)
-        return df.join(F.broadcast(mapping), on)
-
-    def _part(files_, adds_, st, keep_path=False):
-        """One change part: DV filter FIRST (it reads _metadata off
-        the raw scan), then the name-mapping rename and the partition
-        rejoin project the full logical schema. ``st`` is the
-        partition scheme the part's FILES were written under — the
-        post-commit scheme for the insert side, the PRE-commit scheme
-        for the delete/DV sides (a repartitioning overwrite removes
-        files whose partitionValues key by the old scheme).
-        ``keep_path`` retains ``__qs_path__`` for the coalesced
-        insert path's per-file version stamping."""
-        if idmap:
-            # id mode: per-file field-id resolution (DVs applied per
-            # layout group inside the scan)
-            data_idmap = {i: nd for i, nd in idmap.items()
-                          if nd[0] not in st["pcols"]}
-            df = _id_mode_scan(spark, files_, adds_, data_idmap,
-                               root, with_path=True)
-        else:
-            df = _apply_deletion_vectors(spark, _scan_raw(files_, st),
-                                         files_, adds_, root)
-            if not st["pcols"] and not cmap:
-                return (df.withColumn("__qs_path__", _plain_path_col())
-                        if keep_path else df)
-            df = df.withColumn("__qs_path__", _plain_path_col())
-            if cmap:
-                df = df.select("__qs_path__",
-                               *[F.col(cmap[l]).alias(l) for l in cmap
-                                 if l not in st["pcols"]])
-        df = _rejoin(df, files_, adds_, st)
-        if keep_path:
-            return (df.select("__qs_path__", *schema_cols)
-                    if schema_cols else df)
-        df = df.drop("__qs_path__")
-        return df.select(*schema_cols) if schema_cols else df
+    def _part(files_, adds_, st, **kw):
+        # ``st``: the partition scheme the part's FILES were written
+        # under — the post-commit scheme for the insert side, the
+        # PRE-commit scheme for the delete/DV sides (a repartitioning
+        # overwrite removes files whose partitionValues key by the old
+        # scheme)
+        return _scan_files(spark, root, meta, files_, adds_, *st, **kw)
 
     feed = ChangeFeed(spark, "_commit_version", "long",
                       cancel=_cancel_survivors)
     # a streaming sink's history is hundreds of consecutive pure-insert
     # commits: they coalesce into one run (changes.py), items are
-    # (path, add) pairs
+    # (path, add) pairs; a run flushes before the scheme changes
     inserts = feed.run(
         lambda items, keep: _part([f for f, _ in items],
-                                  [a for _, a in items], state,
-                                  keep_path=keep),
+                                  [a for _, a in items], scheme,
+                                  path=keep),
         "__qs_path__", lambda item: os.path.abspath(item[0]))
 
     def _dv_delta_rows(v, pairs, st):
@@ -3761,87 +3425,30 @@ def read_delta_changes(spark, table: str,
         positions = dd.mapInPandas(
             _decode,
             "__qs_dfp__ string, __qs_dpos__ long, __qs_kind__ string")
-        files = [r[0] for r in rows]
-
-        new_adds = [na for _, na, _ in pairs]
-        at_pos = ((F.col("__qs_fp__") == F.col("__qs_dfp__"))
-                  & (F.col("__qs_pos__") == F.col("__qs_dpos__")))
-        if idmap:
-            # id mode: RAW per-file-resolved rows (apply_dv=False —
-            # the join below picks exactly the DV-delta positions,
-            # tagged delete/insert), then the same rejoin as _part
-            data_idmap = {i: nd for i, nd in idmap.items()
-                          if nd[0] not in st["pcols"]}
-            scan = (_id_mode_scan(spark, files, new_adds, data_idmap,
-                                  root, with_path=True, with_pos=True,
-                                  apply_dv=False)
-                    .withColumnRenamed("__qs_path__", "__qs_fp__")
-                    .join(positions, at_pos, "inner"))
-        else:
-            scan = (_scan_raw(files, st)
-                    .withColumn("__qs_fp__", _plain_path_col())
-                    .withColumn("__qs_pos__", F.col("_metadata.row_index"))
-                    .join(positions, at_pos, "inner"))
-            if cmap:
-                scan = scan.select(
-                    "__qs_fp__", "__qs_kind__",
-                    *[F.col(cmap[l]).alias(l) for l in cmap
-                      if l not in st["pcols"]])
-        scan = _rejoin(scan, files, new_adds, st, "__qs_fp__").drop(
-            "__qs_fp__", "__qs_pos__", "__qs_dfp__", "__qs_dpos__")
-        cols = (schema_cols if schema_cols
-                else [c for c in scan.columns if c != "__qs_kind__"])
-        feed.add(scan.select(*cols,
-                             F.col("__qs_kind__").alias("_change_type")),
+        # RAW rows (dv=False): the join picks exactly the DV-delta
+        # positions, tagged delete/insert
+        scan = _part([r[0] for r in rows], [na for _, na, _ in pairs], st,
+                     path=True, pos=True, dv=False)
+        cols = scan.columns[:-2]
+        feed.add(scan.join(positions,
+                           (F.col("__qs_path__") == F.col("__qs_dfp__"))
+                           & (F.col("__qs_pos__") == F.col("__qs_dpos__")))
+                 .select(*cols, F.col("__qs_kind__").alias("_change_type")),
                  None, v)
 
-    def _cdc_scan(cdcs, st, keep_path=False):
-        """Change Data Files of ONE commit (protocol ``cdc`` actions,
-        round 10 — CDF-writer interop): the files under _change_data/
-        already carry the exact change rows plus a literal
-        ``_change_type`` column, so they scan directly — mapped
-        tables translate data columns (name mode by rename, id mode
-        per file by field ids; _change_type is NOT a schema field and
-        reads by name), partition values rejoin from the cdc actions'
-        partitionValues exactly like adds. ``keep_path`` (round 13)
-        also returns ``__qs_path__`` for the coalesced run's per-file
-        version stamp."""
-        from pyspark.sql.types import StringType, StructField, StructType
-        files_ = [_abs(c["path"]) for c in cdcs]
-        ct = [("_change_type", StringType())]
-        if idmap:
-            data_idmap = {i: nd for i, nd in idmap.items()
-                          if nd[0] not in st["pcols"]}
-            df = _id_mode_scan(spark, files_, cdcs, data_idmap, root,
-                               with_path=True, apply_dv=False,
-                               extra_cols=ct)
-        else:
-            rs = st["rs"]
-            if rs is not None:
-                rs = StructType(list(rs.fields) + [
-                    StructField("_change_type", StringType(), True)])
-                df = spark.read.schema(rs).parquet(*files_)
-            else:
-                df = spark.read.parquet(*files_)
-            df = df.withColumn("__qs_path__", _plain_path_col())
-            if cmap:
-                df = df.select(
-                    "__qs_path__", "_change_type",
-                    *[F.col(cmap[l]).alias(l) for l in cmap
-                      if l not in st["pcols"]])
-        df = _rejoin(df, files_, cdcs, st)
-        cols = (schema_cols if schema_cols
-                else [c for c in df.columns
-                      if c not in ("_change_type", "__qs_path__")])
-        return df.select(*(["__qs_path__"] if keep_path else []), *cols,
-                         "_change_type")
-
-    # Change Data Files coalesce like inserts; the run keeps each
-    # file's literal _change_type and stamps only the version
-    cdc_run = feed.run(lambda cs, keep: _cdc_scan(cs, state, keep),
-                       "__qs_path__",
-                       lambda c: os.path.abspath(_abs(c["path"])),
-                       keep_ctype=True)
+    # Change Data Files of ONE commit (protocol ``cdc`` actions, round
+    # 10 — CDF-writer interop) already carry the exact change rows
+    # plus a literal ``_change_type`` column (not a schema field: it
+    # reads by name); their partition values rejoin from the cdc
+    # actions' partitionValues exactly like adds. They coalesce like
+    # inserts; the run keeps each file's literal _change_type and
+    # stamps only the version
+    cdc_run = feed.run(
+        lambda cs, keep: _part([_abs(c["path"]) for c in cs], cs, scheme,
+                               path=keep, dv=False,
+                               extra=(("_change_type", StringType()),)),
+        "__qs_path__", lambda c: os.path.abspath(_abs(c["path"])),
+        keep_ctype=True)
 
     def _roll(adds, removes):
         # the pre-state moves forward by the commit's file actions
@@ -3858,7 +3465,7 @@ def read_delta_changes(spark, table: str,
         # under the new scheme in the same version), keeping the
         # PRE-commit scheme for the delete/DV sides whose files
         # predate the change
-        prev_state = dict(state)
+        prev_scheme = scheme
         c = _commit_parsed(table, v)
         adds, removes, cdcs = c.adds, c.removes, c.cdcs
         if c.meta is not None:
@@ -3866,7 +3473,7 @@ def read_delta_changes(spark, table: str,
             # parts read their own files) until the table state its
             # scan reads under changes
             feed.flush()
-        _set_meta(c.meta)
+        scheme = _scheme(c.meta, scheme)
         if cdcs:
             # Change Data Files are AUTHORITATIVE for their commit
             # (the jar's CDF reader rule): read them instead of
@@ -3902,9 +3509,9 @@ def read_delta_changes(spark, table: str,
             inserts.add(v, zip(ins_files, ins_adds))
             _roll(adds, removes)
             continue
-        ins_df = _part(ins_files, ins_adds, state) if ins_files \
+        ins_df = _part(ins_files, ins_adds, scheme) if ins_files \
             else None
-        del_df = _part(del_files, del_adds, prev_state) if del_files \
+        del_df = _part(del_files, del_adds, prev_scheme) if del_files \
             else None
         # UPDATE pairing (round 9): a rewrite that declares its MERGE
         # key columns (commitInfo.operationParameters.keyColumns —
@@ -3929,17 +3536,14 @@ def read_delta_changes(spark, table: str,
             if del_df is not None:
                 feed.add(del_df, "delete", v)
         if dv_pairs:
-            _dv_delta_rows(v, dv_pairs, prev_state)
+            _dv_delta_rows(v, dv_pairs, prev_scheme)
         _roll(adds, removes)
 
     def _empty():
         # the LOG's schema when it has one (a metadata-only range has
         # no live files for a scan to type from)
-        try:
-            from pyspark.sql.types import StructType
-            return spark.createDataFrame([], StructType.fromJson(
-                json.loads(meta["schemaString"])))
-        except (KeyError, ValueError, TypeError):
-            return read_delta_local(spark, table, to_version)
+        empty = _empty_frame(spark, meta)
+        return (read_delta_local(spark, table, to_version)
+                if empty is None else empty)
 
     return feed.result(_empty)

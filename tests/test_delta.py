@@ -2267,7 +2267,9 @@ def test_delta_changes_cdc_actions(spark, qc, tmp_path):
     here CHANGES values: a no-op re-apply pairs pre/postimage in cdc,
     like the jar, while byte-identical rows cancel in the log-only
     reconstruction), batch reads ignore cdc actions, and vacuum keeps
-    the kept versions' cdc files."""
+    the kept versions' cdc files. A DV delete on a name-mapped,
+    partitioned CDF table writes its change files under the physical
+    names."""
     import json as _json
 
     from quokka_spark.sources.delta_local import (_commit,
@@ -2275,26 +2277,40 @@ def test_delta_changes_cdc_actions(spark, qc, tmp_path):
                                                   vacuum_delta_local,
                                                   write_delta_local)
 
-    def mk(name, cdf):
+    def mk(name, cdf, mapped=False):
+        # mapped: columnMapping.mode=name, partitioned by p
         tbl = str(tmp_path / name)
         os.makedirs(tbl)
         conf = {"delta.enableChangeDataFeed": "true"} if cdf else {}
+        fields = [("id", "long", "col-a1"), ("v", "double", "col-b2")]
+        if mapped:
+            conf.update({"delta.columnMapping.mode": "name",
+                         "delta.columnMapping.maxColumnId": "3"})
+            fields.append(("p", "string", "col-p3"))
         _commit(tbl, 0, [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}},
+            {"protocol": {"minReaderVersion": 2 if mapped else 1,
+                          "minWriterVersion": 5 if mapped else 4}},
             {"metaData": {"id": "t", "format": {"provider": "parquet",
                                                 "options": {}},
                           "schemaString": _json.dumps(
                               {"type": "struct", "fields": [
-                                  {"name": "id", "type": "long",
-                                   "nullable": True, "metadata": {}},
-                                  {"name": "v", "type": "double",
-                                   "nullable": True, "metadata": {}}]}),
-                          "partitionColumns": [],
+                                  {"name": n, "type": t, "nullable": True,
+                                   "metadata": {
+                                       "delta.columnMapping.physicalName":
+                                           ph,
+                                       "delta.columnMapping.id": i + 1}
+                                   if mapped else {}}
+                                  for i, (n, t, ph) in enumerate(fields)]}),
+                          "partitionColumns": ["p"] if mapped else [],
                           "configuration": conf, "createdTime": 0}}])
-        write_delta_local(
-            spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)],
-                                  "id long, v double").coalesce(1),
-            tbl, mode="append")
+        rows = spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)],
+                                     "id long, v double")
+        if mapped:
+            write_delta_local(
+                rows.selectExpr("*", "if(id = 1, 'a', 'b') AS p")
+                .coalesce(1), tbl, mode="append")
+            return tbl
+        write_delta_local(rows.coalesce(1), tbl, mode="append")
         upsert_delta_local(
             spark, tbl,
             spark.createDataFrame([(2, 22.0), (9, 9.0)],
@@ -2342,11 +2358,11 @@ def test_delta_changes_cdc_actions(spark, qc, tmp_path):
 
     from quokka_spark.sources.delta_local import delete_rows_delta_local
 
-    def del3(tbl):
+    def del3(tbl, id_col="id"):
         for uri in qc.read_delta(tbl).df.inputFiles():
             f = uri.removeprefix("file:")
-            ids = pq.read_table(f, columns=["id"]) \
-                .column("id").to_pylist()
+            ids = pq.read_table(f, columns=[id_col]) \
+                .column(id_col).to_pylist()
             if 3 in ids:
                 delete_rows_delta_local(tbl, {f: [ids.index(3)]},
                                         spark=spark)
@@ -2372,6 +2388,25 @@ def test_delta_changes_cdc_actions(spark, qc, tmp_path):
                    for r in qc.read_delta_changes(cdf_tbl, 3, 3)
                    .df.collect())
     assert rows2 == dd
+    # the same DV delete on a name-mapped, partitioned CDF table: the
+    # change file carries the physical names (the partition value in
+    # a hive directory under the physical partition name), and the
+    # feed equals the twin's DV-diff reconstruction
+    m_cdf, m_plain = mk("cm_on", True, True), mk("cm_off", False, True)
+    del3(m_cdf, "col-a1")
+    del3(m_plain, "col-a1")
+    with open(os.path.join(m_cdf, "_delta_log", f"{2:020d}.json")) as fh:
+        cdc_acts = [a["cdc"] for a in map(_json.loads, fh) if "cdc" in a]
+    assert [a["partitionValues"] for a in cdc_acts] == [{"col-p3": "b"}]
+    assert set(pq.read_schema(os.path.join(m_cdf, cdc_acts[0]["path"]))
+               .names) == {"col-a1", "col-b2", "_change_type"}
+    mrows = sorted((r["_change_type"], r["id"], r["v"], r["p"])
+                   for r in qc.read_delta_changes(m_cdf, 2, 2)
+                   .df.collect())
+    assert mrows == [("delete", 3, 3.0, "b")]
+    assert mrows == sorted((r["_change_type"], r["id"], r["v"], r["p"])
+                           for r in qc.read_delta_changes(m_plain, 2, 2)
+                           .df.collect())
 
 
 def test_delta_changes_cdc_actions_foreign_and_mapped(spark, qc,
@@ -3028,7 +3063,7 @@ def test_delta_id_mode_dv_delete_precondition_no_orphans(spark, qc,
                                                          tmp_path):
     """An id-mode CDF table containing a file WITHOUT parquet field
     ids refuses the DV delete BEFORE any .bin lands (review finding:
-    the late _id_mode_scan failure inside cdc emission would orphan
+    the late id-mode scan failure inside cdc emission would orphan
     freshly written deletion vectors)."""
     from quokka_spark.sources.delta_local import delete_rows_delta_local
     tbl = _id_mode_table(tmp_path, [

@@ -5,8 +5,9 @@ log listing, one read of one checkpoint candidate, one parse of each
 tail commit. Pinned here: the traffic of a read, of an append and of
 the sink handshake on a checkpointed table; writers committing at the
 version they read plus one, so a commit that lands meanwhile
-conflicts instead of being built over; and an ast guard that keeps
-checkpoint reads inside the fold.
+conflicts instead of being built over; an ast guard that keeps
+checkpoint reads inside the fold, and one that keeps every Delta
+data-file read inside the one scan.
 """
 import ast
 import os
@@ -123,3 +124,31 @@ def test_checkpoint_reads_only_inside_the_fold():
                 if name in found:
                     found[name].add(f"{rel}:{owner}")
     assert found == allowed
+
+
+def test_one_data_file_scan():
+    """Inside delta_local.py, Spark reads parquet in one function,
+    _scan_files, and only it applies deletion vectors and rejoins
+    partition values: the snapshot read, the upsert, the DV-delete
+    change files and the change feed all call it. A second scan
+    would show up here."""
+    tree = ast.parse((PKG / "sources/delta_local.py").read_text())
+    readers, callers = set(), {"_apply_deletion_vectors": set(),
+                               "_partition_values_frame": set()}
+    for top in tree.body:
+        for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Attribute) and f.attr == "parquet" \
+                    and any(isinstance(n, ast.Attribute)
+                            and n.attr == "read"
+                            for n in ast.walk(f.value)):
+                readers.add(top.name)
+            if getattr(f, "id", None) in callers:
+                callers[f.id].add(top.name)
+    assert readers == {"_scan_files"}
+    assert callers == {"_apply_deletion_vectors": {"_scan_files"},
+                       "_partition_values_frame": {"_scan_files"}}
+    defs = {t.name for t in tree.body if isinstance(t, ast.FunctionDef)}
+    assert "_id_mode_scan" not in defs
